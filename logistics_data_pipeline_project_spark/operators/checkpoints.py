@@ -16,6 +16,11 @@ operators were measured 4x slower a few invocations into a session.
 checkpoint exists. Never free a checkpoint that a still-referenced
 DataFrame depends on — its lineage was truncated to those very blocks and
 any later action fails with CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND.
+
+Writes through ``plans.materialize.TableStore`` need no checkpoint: every
+commit lands in a fresh version directory and the snapshot being read is
+only garbage-collected after the pointer swap, so a plan over a table's
+own files can overwrite it directly and pins nothing.
 """
 
 from __future__ import annotations
@@ -27,7 +32,6 @@ from pyspark.sql import DataFrame
 __all__ = [
     "tracked_local_checkpoint",
     "free_checkpoints",
-    "checkpointed_write",
     "persistent_rdd_ids",
     "release_residual_checkpoints",
     "released_checkpoints",
@@ -35,13 +39,12 @@ __all__ = [
 
 # The pinned-id attribution diffs the JVM-GLOBAL persistent-RDD registry
 # around the checkpoint call; two concurrent checkpointers in one session
-# (e.g. two streaming queries both inside checkpointed_write, or a
-# parallel driver thread) would capture each other's ids and later free
-# blocks a live DataFrame's truncated lineage depends on
-# (CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND). Serializing diff+checkpoint under
-# one process-wide lock makes the attribution exact; the critical section
-# is the checkpoint job itself, which these callers run back-to-back
-# anyway.
+# (e.g. two iterative operators on parallel driver threads) would capture
+# each other's ids and later free blocks a live DataFrame's truncated
+# lineage depends on (CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND). Serializing
+# diff+checkpoint under one process-wide lock makes the attribution exact;
+# the critical section is the checkpoint job itself, which these callers
+# run back-to-back anyway.
 _TRACK_LOCK = threading.Lock()
 
 
@@ -152,17 +155,3 @@ class released_checkpoints:
         release_residual_checkpoints(self._spark, self._baseline or set())
         return False
 
-
-def checkpointed_write(df: DataFrame, write_fn) -> None:
-    """Checkpoint ``df`` eagerly, hand the checkpointed frame to
-    ``write_fn`` (typically a TableStore overwrite — the checkpoint cuts
-    lineage to the snapshot files the write is about to unlink), then
-    free the blocks: after the data is durably written the checkpoint is
-    dead weight. This is the write-scoped discipline for the store and
-    streaming foreachBatch paths, where the 30-min default cleaner
-    interval would otherwise leak one checkpoint PER BATCH."""
-    ck, ids = tracked_local_checkpoint(df)
-    try:
-        write_fn(ck)
-    finally:
-        free_checkpoints(df.sparkSession, ids)

@@ -21,7 +21,6 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, functions as F
 
-from ..operators.checkpoints import checkpointed_write
 from .materialize import TableStore
 
 #: Merge functions for decomposable partial aggregates.
@@ -112,10 +111,7 @@ def incremental_rollup(
     merged = merged.withColumn(
         wm_col, F.lit(gmax).cast(dict(merged.dtypes)[wm_col])
     )
-    # checkpoint cuts lineage to the store's previous snapshot files
-    # before the atomic swap (same discipline as streaming/upsert.py);
-    # blocks are freed once the write lands
-    checkpointed_write(merged, lambda ck: store.overwrite(name, ck))
+    store.overwrite(name, merged)
     return store.read(name)
 
 
@@ -194,5 +190,5 @@ def incremental_join_rollup(
     merged = update.groupBy(*keys).agg(
         *[_MERGE[kind](F.col(col)).alias(col) for col, kind in measures.items()]
     )
-    checkpointed_write(merged, lambda ck: store.overwrite(name, ck))
+    store.overwrite(name, merged)
     return store.read(name)

@@ -7,6 +7,9 @@ files (SURVEY §7 Phase 2):
 
 - every write lands in a NEW immutable version directory
   (``warehouse/name/v_000001`` …) that is invisible to readers,
+- the read schema (``_SCHEMA.json``, every level nullable — exactly what
+  parquet read-back yields) and optional metadata (``_META.json``) are
+  written into that directory, so ``read`` needs no footer-inference job,
 - a one-line ``_LATEST`` pointer file is then swapped atomically
   (``os.replace``) — readers see either the old or the new snapshot,
   never a partial write,
@@ -18,13 +21,20 @@ files (SURVEY §7 Phase 2):
 version's files and adds the appended part files next to them — O(files)
 metadata, zero data copy, and the previous snapshot stays intact.
 
+A write never touches the directory it may be reading from (the next
+version is always a fresh directory, and GC runs after the pointer swap),
+so a model may overwrite its own table with a plan over its current
+snapshot without checkpointing it first.
+
 An incremental model can therefore safely read its own previous state
 while computing the next one, and a bad batch is undone in O(1). The API
 (read/exists/overwrite/append/versions/rollback) is format agnostic so a
 lakehouse format can back it without touching callers.
 
 Pre-versioning layouts (parquet files directly under ``warehouse/name``)
-are migrated into ``v_000001`` on the next write.
+are migrated into ``v_000001`` on the next write. Directories without
+``_SCHEMA.json`` (those layouts, or versions written before the schema was
+committed) are read with schema inference.
 """
 
 from __future__ import annotations
@@ -35,13 +45,41 @@ import shutil
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
-
-from ..operators.checkpoints import checkpointed_write
+from pyspark.sql.types import ArrayType, DataType, MapType, StructField, StructType
 
 _POINTER = "_LATEST"
 _VPREFIX = "v_"
 _META = "_META.json"
 _STATS = "_STATS.json"
+_SCHEMA = "_SCHEMA.json"
+
+
+def _dump_json(vdir: str, fname: str, obj) -> None:
+    with open(os.path.join(vdir, fname), "w") as f:
+        json.dump(obj, f)
+
+
+def _load_json(vdir: str, fname: str):
+    """The committed JSON file's content, or None if it was never written."""
+    p = os.path.join(vdir, fname)
+    if not os.path.isfile(p):
+        return None
+    with open(p) as f:
+        return json.load(f)
+
+
+def _nullable(t: DataType) -> DataType:
+    """``t`` with every level nullable — the schema Spark reads back from
+    parquet whatever nullability was written (Scala ``asNullable``)."""
+    if isinstance(t, StructType):
+        return StructType(
+            [StructField(f.name, _nullable(f.dataType), True, f.metadata) for f in t]
+        )
+    if isinstance(t, ArrayType):
+        return ArrayType(_nullable(t.elementType), True)
+    if isinstance(t, MapType):
+        return MapType(_nullable(t.keyType), _nullable(t.valueType), True)
+    return t
 
 
 class TableStore:
@@ -144,9 +182,19 @@ class TableStore:
             return True
         return self.current_version(name) is not None
 
+    def _reader(self, vdir: str):
+        """A parquet reader carrying ``vdir``'s committed schema, which
+        spares Spark the footer-reading inference job; directories without
+        one fall back to inference."""
+        schema = _load_json(vdir, _SCHEMA)
+        if schema is None:
+            return self.spark.read
+        return self.spark.read.schema(StructType.fromJson(schema))
+
     def read(self, name: str, version: int | None = None) -> DataFrame:
         """Read the current snapshot, or time-travel to ``version``."""
-        return self.spark.read.parquet(self._resolve(name, version))
+        vdir = self._resolve(name, version)
+        return self._reader(vdir).parquet(vdir)
 
     def overwrite(
         self, name: str, df: DataFrame, meta: dict | None = None
@@ -156,8 +204,9 @@ class TableStore:
         ``meta`` (a small JSON-able dict, e.g. a stream's last applied
         batch id) is written INTO the version directory before the pointer
         swap, so it commits atomically with the data — readers can never
-        see a snapshot without its metadata or vice versa. Spark ignores
-        ``_``-prefixed files, so the parquet scan is unaffected."""
+        see a snapshot without its metadata or vice versa. The read schema
+        commits the same way. Spark ignores ``_``-prefixed files, so the
+        parquet scan is unaffected."""
         if self._has_legacy_files(name):
             self._migrate_legacy(name)
         os.makedirs(self._table_dir(name), exist_ok=True)
@@ -166,20 +215,17 @@ class TableStore:
         # the version dir is invisible to readers until the pointer swap,
         # so Spark can write it in place; a crash leaves an uncommitted
         # orphan dir that the next write's numbering skips and GC removes
-        df.write.mode("overwrite").parquet(self._vdir(name, nxt))
+        vdir = self._vdir(name, nxt)
+        df.write.mode("overwrite").parquet(vdir)
+        _dump_json(vdir, _SCHEMA, _nullable(df.schema).jsonValue())
         if meta is not None:
-            with open(os.path.join(self._vdir(name, nxt), _META), "w") as f:
-                json.dump(meta, f)
+            _dump_json(vdir, _META, meta)
         self._commit_pointer(name, nxt)
         self._gc(name)
 
     def meta(self, name: str, version: int | None = None) -> dict:
         """The snapshot's committed metadata dict ({} if none was given)."""
-        p = os.path.join(self._resolve(name, version), _META)
-        if os.path.isfile(p):
-            with open(p) as f:
-                return json.load(f)
-        return {}
+        return _load_json(self._resolve(name, version), _META) or {}
 
     def append(
         self, name: str, df: DataFrame, meta: dict | None = None
@@ -208,20 +254,17 @@ class TableStore:
         if meta is None:
             meta = self.meta(name) or None
         current = self.read(name)
-        # nullability is not drift: parquet read-back is always nullable,
-        # so a stricter incoming column appends safely — only name/type
-        # differences force the unionByName rewrite (which would also
-        # needlessly drop file stats and rewrite the whole table)
+        # nullability (at any nesting level) is not drift: parquet
+        # read-back is always nullable, so a stricter incoming column
+        # appends safely — only name/type differences force the unionByName
+        # rewrite (which would also needlessly drop file stats and rewrite
+        # the whole table)
         def _lax(schema):
-            return [(f.name, f.dataType) for f in schema.fields]
+            return [(f.name, _nullable(f.dataType)) for f in schema.fields]
 
         if _lax(current.schema) != _lax(df.schema):
             evolved = current.unionByName(df, allowMissingColumns=True)
-            # checkpoint cuts lineage to the snapshot being replaced;
-            # blocks are freed as soon as the write lands
-            checkpointed_write(
-                evolved, lambda ck: self.overwrite(name, ck, meta=meta)
-            )
+            self.overwrite(name, evolved, meta=meta)
             return
         vs = self.versions(name)
         nxt = vs[-1] + 1
@@ -233,9 +276,10 @@ class TableStore:
                 os.link(os.path.join(src, f), os.path.join(dst, f))
                 carried.add(f)
         df.write.mode("append").parquet(dst)
+        # the schema matched the current snapshot's, so it carries forward
+        _dump_json(dst, _SCHEMA, current.schema.jsonValue())
         if meta is not None:
-            with open(os.path.join(dst, _META), "w") as f:
-                json.dump(meta, f)
+            _dump_json(dst, _META, meta)
         # data-skipping stats maintain incrementally: hardlinked files keep
         # their names (their stats entries stay valid); only the NEW part
         # files get scanned — O(batch), never O(table)
@@ -257,8 +301,7 @@ class TableStore:
                         prior_stats["columns"],
                     )
                 )
-            with open(os.path.join(dst, _STATS), "w") as f:
-                json.dump(merged, f)
+            _dump_json(dst, _STATS, merged)
         self._commit_pointer(name, nxt)
         self._gc(name)
 
@@ -284,12 +327,10 @@ class TableStore:
             if f.endswith(".parquet")
         )
         n_files = max(1, round(total_bytes / (target_file_mb * 1024 * 1024)))
-        # localCheckpoint cuts lineage to the snapshot being replaced;
         # the prior snapshot's metadata (e.g. stream replay guard) must
         # survive a compaction unchanged
-        checkpointed_write(
-            self.read(name).coalesce(n_files),
-            lambda ck: self.overwrite(name, ck, meta=self.meta(name) or None),
+        self.overwrite(
+            name, self.read(name).coalesce(n_files), meta=self.meta(name) or None
         )
         new = self._vdir(name, self.current_version(name))
         return sum(1 for f in os.listdir(new) if f.endswith(".parquet"))
@@ -431,8 +472,7 @@ class TableStore:
         klist = keys.select(F.col(keys.columns[0]).alias(key_col)).distinct()
         kept = df.join(F.broadcast(klist), key_col, "left_anti")
         before = df.count()
-        # checkpoint cuts lineage to the snapshot being replaced
-        checkpointed_write(kept, lambda ck: self.overwrite(name, ck))
+        self.overwrite(name, kept)
         after = self.read(name).count()
         return before - after, self.current_version(name)
 
@@ -458,8 +498,7 @@ class TableStore:
             raise KeyError(f"no table {name!r}")
         vdir = self._vdir(name, cur)
         stats = {"columns": cols, "files": self._file_stats([vdir], cols)}
-        with open(os.path.join(vdir, _STATS), "w") as f:
-            json.dump(stats, f)
+        _dump_json(vdir, _STATS, stats)
         return stats
 
     def _file_stats(self, paths: list[str], cols: list[str]) -> dict:
@@ -493,11 +532,7 @@ class TableStore:
 
     def stats(self, name: str, version: int | None = None) -> dict | None:
         """The snapshot's data-skipping stats, or None if never analyzed."""
-        p = os.path.join(self._resolve(name, version), _STATS)
-        if os.path.isfile(p):
-            with open(p) as f:
-                return json.load(f)
-        return None
+        return _load_json(self._resolve(name, version), _STATS)
 
     def read_pruned(
         self, name: str, col: str, op: str, value, value2=None
@@ -565,7 +600,7 @@ class TableStore:
             # empty result with the right schema, zero files opened
             empty = self.read(name).where(F.lit(False))
             return empty, 0, len(all_files)
-        df = self.spark.read.parquet(*[os.path.join(vdir, f) for f in kept])
+        df = self._reader(vdir).parquet(*[os.path.join(vdir, f) for f in kept])
         return df.where(pred), len(kept), len(all_files)
 
 
@@ -609,8 +644,5 @@ def optimize_zorder(
         raise KeyError(f"no table {name!r}")
     df = store.read(name)
     clustered = df.repartitionByRange(n_files, zorder_key(cols, bits=bits))
-    checkpointed_write(
-        clustered,
-        lambda ck: store.overwrite(name, ck, meta=store.meta(name) or None),
-    )
+    store.overwrite(name, clustered, meta=store.meta(name) or None)
     return store.analyze(name, cols)

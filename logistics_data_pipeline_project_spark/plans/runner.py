@@ -10,13 +10,17 @@ dags/snowflake-EDW-ETL-dag.py:549-561), each materialized per its config:
                      unique_key (dbt incremental_strategy='merge', §M5)
 - ``snapshot``     → SCD2 history via operators.merge.scd2_apply (§M6)
 
-Every run appends a row to the ETL_AUDIT_LOG table (§M7,
+Every model run records a row for the ETL_AUDIT_LOG table (§M7,
 dbt/.../macros/log_audit_event.sql:1-21): model, run id, status, started/
-finished timestamps, rows processed.
+finished timestamps, rows processed. The rows are buffered and committed
+as ONE append per ``run()`` (plus one per failing model, so a failure
+alert always finds its FAILED row committed).
 
 Threading note: Spark sessions are thread-safe for job submission; running
 independent models concurrently lets the scheduler interleave their stages
-exactly like dbt's thread pool does against a warehouse.
+exactly like dbt's thread pool does against a warehouse. Pool threads
+inherit the caller's Spark local properties (job group, scheduler pool),
+so ``cancelJobGroup`` stops a whole run.
 """
 
 from __future__ import annotations
@@ -28,6 +32,7 @@ from collections.abc import Callable, Sequence
 from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field
 
+from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame, Observation, Row, SparkSession, functions as F
 
 from ..operators.merge import dedup_latest, merge_upsert, scd2_apply
@@ -89,6 +94,7 @@ class ModelRunner:
         self.threads = threads
         self.models: dict[str, Model] = {}
         self._lock = threading.Lock()
+        self._audit_rows: list[Row] = []
 
     def register(self, model: Model) -> Model:
         if model.name in self.models:
@@ -124,6 +130,7 @@ class ModelRunner:
         return levels
 
     def _audit(self, model: str, run_id: str, status: str, started: dt.datetime, rows: int) -> None:
+        """Buffer one audit row; ``_flush_audit`` commits the buffer."""
         row = Row(
             job_name=model,
             run_id=run_id,
@@ -133,7 +140,13 @@ class ModelRunner:
             rows_processed=rows,
         )
         with self._lock:
-            self.store.append(AUDIT_TABLE, self.spark.createDataFrame([row]))
+            self._audit_rows.append(row)
+
+    def _flush_audit(self) -> None:
+        with self._lock:
+            rows, self._audit_rows = self._audit_rows, []
+            if rows:
+                self.store.append(AUDIT_TABLE, self.spark.createDataFrame(rows))
 
     def _write_counted(self, name: str, df: DataFrame) -> int:
         """Atomic overwrite + audit row count in ONE job: an Observation
@@ -208,6 +221,7 @@ class ModelRunner:
             self._audit(name, run_id, "SUCCESS", started, rows)
         except Exception as exc:
             self._audit(name, run_id, "FAILED", started, -1)
+            self._flush_audit()
             if self.on_failure is not None:
                 try:
                     self.on_failure(name, run_id, exc)
@@ -223,14 +237,18 @@ class ModelRunner:
             if n not in self.models:
                 raise KeyError(f"unknown model {n!r}")
         run_id = uuid.uuid4().hex[:12]
-        for level in self._toposort(selected):
-            if len(level) == 1:
-                self._run_one(level[0], run_id)
-            else:
-                with ThreadPoolExecutor(max_workers=self.threads) as pool:
-                    futures = [pool.submit(self._run_one, n, run_id) for n in level]
-                    for f in futures:
-                        f.result()
+        try:
+            for level in self._toposort(selected):
+                if len(level) == 1:
+                    self._run_one(level[0], run_id)
+                else:
+                    run_one = inheritable_thread_target(self.spark)(self._run_one)
+                    with ThreadPoolExecutor(max_workers=self.threads) as pool:
+                        futures = [pool.submit(run_one, n, run_id) for n in level]
+                        for f in futures:
+                            f.result()
+        finally:
+            self._flush_audit()
         return run_id
 
     def audit_log(self) -> DataFrame:

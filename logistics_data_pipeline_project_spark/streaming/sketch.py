@@ -26,7 +26,6 @@ from collections.abc import Callable, Sequence
 from pyspark.sql import DataFrame
 from pyspark.sql.streaming import StreamingQuery
 
-from ..operators.checkpoints import checkpointed_write
 from ..operators.sketch import hll_registers, merge_hll_sketches
 from ..plans.materialize import TableStore
 
@@ -68,19 +67,10 @@ def stream_sketch_rollup(
             ):
                 return  # replayed batch — already folded into the snapshot
             sk = merge(store.read(table), sk)
-        # checkpoint cuts lineage to the store's previous snapshot
-        # files before the atomic swap (same discipline as upsert.py);
-        # blocks are freed per batch
-        checkpointed_write(
+        store.overwrite(
+            table,
             sk,
-            lambda ck: store.overwrite(
-                table,
-                ck,
-                meta={
-                    "last_batch_id": batch_id,
-                    "checkpoint_dir": checkpoint_dir,
-                },
-            ),
+            meta={"last_batch_id": batch_id, "checkpoint_dir": checkpoint_dir},
         )
 
     writer = (

@@ -31,7 +31,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
-from ..operators.checkpoints import checkpointed_write
 from ..operators.merge import dedup_latest, merge_upsert
 from ..plans.materialize import TableStore
 
@@ -96,10 +95,9 @@ def stream_merge_upsert(
             merged = merge_upsert(target, latest, list(keys), update_set=update_set)
         else:
             merged = latest
-        # checkpoint breaks the lineage to the target's own files
-        # before the overwrite unlinks them; blocks are freed per batch
-        # (a foreachBatch loop would otherwise leak one per batch)
-        checkpointed_write(merged, lambda ck: store.overwrite(table, ck))
+        # the new snapshot lands in a fresh version directory, so the
+        # merge can read the target's current files while writing
+        store.overwrite(table, merged)
 
     writer = stream.writeStream.foreachBatch(_apply_batch).option(
         "checkpointLocation", checkpoint_dir

@@ -422,24 +422,22 @@ def test_connected_components_frees_superseded_checkpoints(spark):
     assert n_persistent() <= base2
 
 
-def test_checkpointed_write_frees_blocks(spark, tmp_path):
-    from logistics_data_pipeline_project_spark.operators.checkpoints import (
-        checkpointed_write,
-    )
+def test_store_self_read_overwrite_pins_nothing(spark, tmp_path):
+    """A store overwrite whose plan reads the table's own current snapshot
+    (the foreachBatch / incremental-merge shape) lands its data and
+    leaves no persistent RDD behind: the next version is a fresh
+    directory, so no checkpoint is needed to cut the lineage."""
     from logistics_data_pipeline_project_spark.plans.materialize import TableStore
 
     def n_persistent():
         return spark.sparkContext._jsc.getPersistentRDDs().size()
 
-    store = TableStore(spark, str(tmp_path))
+    store = TableStore(spark, str(tmp_path), retain_versions=1)
     store.overwrite("t", spark.range(100).selectExpr("id", "id * 2 as v"))
     base = n_persistent()
-    # the foreachBatch discipline: checkpoint -> write -> free
-    checkpointed_write(
-        store.read("t").withColumn("v", F.col("v") + 1),
-        lambda ck: store.overwrite("t", ck),
-    )
+    store.overwrite("t", store.read("t").withColumn("v", F.col("v") + 1))
     assert n_persistent() == base
+    assert store.versions("t") == [2]  # the snapshot read was GC'd
     assert store.read("t").agg(F.sum("v")).collect()[0][0] == sum(
         2 * i + 1 for i in range(100)
     )
@@ -1560,16 +1558,12 @@ def test_tracked_checkpoint_concurrent_attribution(spark):
     )
 
 
-def test_checkpointed_write_concurrent_streams(spark, tmp_path):
-    """Two concurrent checkpointed_write calls (the two-streaming-query
-    shape from the round-5 verdict's ask #6): both writes must land
-    their own data and free their own blocks — no cross-freeing, no
-    leftover pins, no CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND."""
+def test_store_concurrent_self_read_overwrites(spark, tmp_path):
+    """Two concurrent self-read overwrites of two tables (the
+    two-streaming-query shape): both writes must land their own data
+    and pin nothing — no leftover persistent RDDs."""
     import threading
 
-    from logistics_data_pipeline_project_spark.operators.checkpoints import (
-        checkpointed_write,
-    )
     from logistics_data_pipeline_project_spark.plans.materialize import TableStore
 
     def n_persistent():
@@ -1585,10 +1579,7 @@ def test_checkpointed_write_concurrent_streams(spark, tmp_path):
     def bump(table: str) -> None:
         try:
             barrier.wait(timeout=60)
-            checkpointed_write(
-                store.read(table).withColumn("v", F.col("v") + 1),
-                lambda ck: store.overwrite(table, ck),
-            )
+            store.overwrite(table, store.read(table).withColumn("v", F.col("v") + 1))
         except BaseException as e:  # noqa: BLE001 — re-raised below
             errors.append(e)
 
@@ -1600,7 +1591,7 @@ def test_checkpointed_write_concurrent_streams(spark, tmp_path):
     for th in threads:
         th.join(timeout=300)
     assert not errors, errors
-    assert n_persistent() == base, "a concurrent write leaked its pins"
+    assert n_persistent() == base, "a concurrent write left a pin"
     assert store.read("a").agg(F.sum("v")).collect()[0][0] == sum(
         2 * i + 1 for i in range(100)
     )

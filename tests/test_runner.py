@@ -153,6 +153,67 @@ def test_runner_failure_is_audited(spark, store):
     assert audit.filter((F.col("job_name") == "bad") & (F.col("status") == "FAILED")).count() == 1
 
 
+def _fanout_runner(spark, store, width=2):
+    """src -> (leaf_0 … leaf_{width-1}): the second level runs on the
+    thread pool, one thread per leaf."""
+    runner = ModelRunner(spark, store, threads=width)
+    runner.register(Model(name="src", fn=lambda sp, ref: sp.range(20).selectExpr("id", "id % 3 AS k")))
+    for k in range(width):
+        runner.register(
+            Model(name=f"leaf_{k}", fn=lambda sp, ref, k=k: ref("src").filter(F.col("k") == k), deps=("src",))
+        )
+    return runner
+
+
+def test_runner_pool_threads_keep_callers_job_group(spark, store, jobs_in_group):
+    """Models run on pool threads must carry the caller's job group, or
+    ``cancelJobGroup`` cannot stop a run."""
+    runner = _fanout_runner(spark, store)
+    grouped, ungrouped = jobs_in_group(runner.run)
+    assert grouped
+    assert ungrouped == set(), f"jobs {sorted(ungrouped)} ran outside the caller's group"
+    assert store.read("leaf_0").count() == 7 and store.read("leaf_1").count() == 7
+
+
+def test_runner_one_audit_append_per_run(spark, store):
+    """Pool threads (more than cores, with frequent thread switches) all
+    buffer their audit rows; the run commits them in ONE append."""
+    import sys
+
+    runner = _fanout_runner(spark, store, width=8)
+    want = sorted(["src"] + [f"leaf_{k}" for k in range(8)])
+    switch = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        run1 = runner.run()
+        v1 = store.current_version("etl_audit_log")
+        run2 = runner.run()
+    finally:
+        sys.setswitchinterval(switch)
+    assert store.current_version("etl_audit_log") == v1 + 1
+    for run_id in (run1, run2):
+        rows = runner.audit_log().filter(F.col("run_id") == run_id).collect()
+        assert sorted(r["job_name"] for r in rows) == want
+        assert {r["status"] for r in rows} == {"SUCCESS"}
+
+
+def test_on_failure_hook_sees_committed_failed_row(spark, store):
+    seen = []
+
+    def hook(model, run_id, exc):
+        audit = runner.audit_log().filter(F.col("run_id") == run_id)
+        seen.append([(r["job_name"], r["status"]) for r in audit.collect()])
+
+    def boom(sp, ref):
+        raise RuntimeError("model exploded")
+
+    runner = ModelRunner(spark, store, on_failure=hook)
+    runner.register(Model(name="bad", fn=boom))
+    with pytest.raises(RuntimeError, match="model exploded"):
+        runner.run()
+    assert seen == [[("bad", "FAILED")]]
+
+
 def test_table_store_versioning_time_travel_and_rollback(spark, tmp_path):
     store = TableStore(spark, str(tmp_path / "wh"), retain_versions=4)
     df1 = spark.createDataFrame([(1, "a")], "id long, v string")
