@@ -10,6 +10,12 @@ complete parseable object.
 Each query is fully executed through Spark's noop sink (all partitions
 materialized — no collect-to-driver bias, no result-size bias).
 
+Per-query CPU comes from perfbench/probe.py, the repo's one /proc and
+Spark REST reader: each query runs under its own Spark job group, and
+``queries_cpu`` sums executorCpuTime (plus spill) over that group's
+stages; ``queries_py_cpu`` is the CPU delta of the Python workers below
+this process's JVM, attributed by process parentage.
+
 Every run also persists its full payload to bench_history/<label>.json
 (label = $SPARK_GRAFT_BENCH_LABEL, default "latest") — the driver's
 BENCH_r{N}.json only retains the tail of the stdout line, so the history
@@ -40,193 +46,81 @@ from logistics_data_pipeline_project_spark.operators.checkpoints import (  # noq
 )
 from logistics_data_pipeline_project_spark.queries import REGISTRY  # noqa: E402
 from logistics_data_pipeline_project_spark.session import get_spark  # noqa: E402
+from perfbench.probe import SparkRest, tree_cpu  # noqa: E402
 
 
-class _CpuProbe:
-    """Per-query executor-CPU (and spill) deltas via the UI REST API —
-    the load-robust metric (VERDICT r8 ask #1): wall-clock on this host
-    swings ±15% with external load on byte-identical code, executor CPU
-    does not (tools/profile_q037.py proved the pattern; this moves it
-    into every bench payload so regressions adjudicate from the JSON,
-    not from git diffs).
+class _GroupCpu:
+    """Per-query executor CPU and spill from Spark's REST API.
 
-    Only stages NEWER than the previous snapshot are summed (tracked by
-    stage id), so UI eviction of old stages (spark.ui.retainedStages)
-    never corrupts a delta; one bounded HTTP GET per query, outside the
-    timed window.  Any probe failure disables it for the rest of the
-    run — CPU columns go absent, the wall measurement is never at risk.
+    Each query runs under its own job group (``start``/``stop``);
+    ``SparkRest._unit_jobs`` then waits until every job of that group is
+    final, and one ``/stages?status=complete`` read sums those jobs'
+    stages.  Jobs with no group submitted since the previous query count
+    too (threads the engine starts itself may not inherit the group).
+    Any failure disables the column for the rest of the run (``error``);
+    the wall measurement is never at risk.
     """
 
     def __init__(self, spark) -> None:
         self.error: str | None = None
-        self._last_stage = -1
-        self._ui = spark.sparkContext.uiWebUrl
-        self._app_id = None
-        if not self._ui:
-            self.error = "spark.ui disabled"
-            return
+        self._sc = spark.sparkContext
         try:
-            import urllib.request
-
-            apps = json.load(
-                urllib.request.urlopen(
-                    f"{self._ui}/api/v1/applications", timeout=10
-                )
-            )
-            self._app_id = apps[0]["id"]
+            self._rest = SparkRest(spark)
+            self._since = self._rest.last_job_id()  # warm-up jobs excluded
         except Exception as exc:  # noqa: BLE001 — probe must never kill bench
-            self.error = f"app-id probe failed: {str(exc)[:120]}"
+            self.error = f"stage probe failed: {str(exc)[:120]}"
 
-    def _fetch(self) -> list:
-        import urllib.request
+    def start(self, group: str) -> None:
+        self._sc.setJobGroup(group, group)
 
-        return json.load(
-            urllib.request.urlopen(
-                f"{self._ui}/api/v1/applications/{self._app_id}"
-                "/stages?status=complete",
-                timeout=15,
-            )
-        )
-
-    def delta(self) -> dict | None:
-        """CPU/spill summed over stages completed since the last call;
-        None once the probe is dead.
-
-        The status store is fed by an ASYNC listener bus, so a query's
-        final stage(s) may not be visible yet the instant the action
-        returns — a first-read snapshot would attribute them to the
-        NEXT query and bias min-over-passes CPU low (ADVICE r9).  Two
-        defenses, both bounded so ~500 probe calls per run stay cheap:
-        ZERO new stages is the unambiguous lag signal (every query runs
-        >=1 stage) — retry up to 4x with 50 ms sleeps; otherwise one
-        sleepless confirm read (HTTP round-trip is the gap), escalating
-        to slept polls only if the frontier moved between the reads."""
+    def stop(self, group: str) -> dict | None:
+        """Ends ``group`` and returns its jobs' ids and summed
+        ``cpu_ns``/``mem_spill``/``disk_spill``; None once the probe is
+        dead."""
+        self._sc.setLocalProperty("spark.jobGroup.id", None)
         if self.error is not None:
             return None
-
-        def _new_ids(stages: list) -> set:
-            return {
-                int(s.get("stageId", -1))
-                for s in stages
-                if int(s.get("stageId", -1)) > self._last_stage
-            }
-
         try:
-            stages = self._fetch()
-            for _ in range(4):
-                if not _new_ids(stages):
-                    time.sleep(0.05)
-                    stages = self._fetch()
-                    continue
-                nxt = self._fetch()  # confirm: frontier stable?
-                if _new_ids(nxt) == _new_ids(stages):
-                    stages = nxt
-                    break
-                stages = nxt
-                time.sleep(0.05)
+            jobs = self._rest._unit_jobs(group, self._since)
+            stages = self._rest.get("/stages?status=complete")
         except Exception as exc:  # noqa: BLE001
             self.error = f"stage probe failed: {str(exc)[:120]}"
             return None
-        out = {"cpu_ns": 0, "mem_spill": 0, "disk_spill": 0}
-        max_seen = self._last_stage
+        job_ids = {j["jobId"] for j in jobs}
+        self._since = max(job_ids | {self._since})
+        stage_ids = {s for j in jobs for s in j.get("stageIds", [])}
+        out = {"jobs": job_ids, "cpu_ns": 0, "mem_spill": 0, "disk_spill": 0}
         for s in stages:
-            sid = int(s.get("stageId", -1))
-            if sid <= self._last_stage:
+            if s["stageId"] not in stage_ids:
                 continue
-            max_seen = max(max_seen, sid)
-            out["cpu_ns"] += int(s.get("executorCpuTime", 0) or 0)
-            out["mem_spill"] += int(s.get("memoryBytesSpilled", 0) or 0)
-            out["disk_spill"] += int(s.get("diskBytesSpilled", 0) or 0)
-        self._last_stage = max_seen
+            out["cpu_ns"] += s.get("executorCpuTime", 0)
+            out["mem_spill"] += s.get("memoryBytesSpilled", 0)
+            out["disk_spill"] += s.get("diskBytesSpilled", 0)
         return out
 
 
-class _PyCpuProbe:
-    """Python-worker CPU per query (VERDICT r9 what's-wrong #3):
-    the REST ``executorCpuTime`` counts JVM task threads ONLY, so the
-    mapInPandas/Arrow decode lanes (q231 FLAC, q221/q227 dHash, q161
-    PNG) report CPU an order of magnitude below wall — the heaviest
-    queries in the catalog had no load-robust metric.  This probe sums
-    utime+stime (plus reaped-children cutime+cstime) over every process
-    in the ``pyspark.daemon`` trees via ``/proc/<pid>/stat`` between
-    queries — one /proc scan per query, outside the timed window.
-
-    Counting is exactly-once by construction: a live worker's ticks
-    live in its own utime/stime; once the daemon reaps it they move to
-    the daemon's cutime/cstime and the worker vanishes from /proc.
-    Deltas clamp at 0 (a daemon dying mid-run loses its tree's history;
-    never emit a negative).  Linux-only and assumes the bench runs solo
-    (any concurrent PySpark app's daemons would be summed too — the
-    repo's bench discipline already forbids concurrent runs); any
-    failure disables the probe for the rest of the run, never bench.
+class _PyWorkerCpu:
+    """Python-worker CPU between calls: the delta of
+    ``tree_cpu()["pyworker"]``, the processes below the JVM this process
+    launched (attributed by parentage, not command line).  The REST
+    ``executorCpuTime`` counts JVM task threads only, so this is the
+    load-robust column for the Arrow decode lanes.  A daemon reaped by the
+    JVM moves its tree's time to the JVM's counters, so the reading can
+    fall; the delta clamps at 0.  Any failure disables the column for the
+    rest of the run (``error``).
     """
 
     def __init__(self) -> None:
         self.error: str | None = None
-        try:
-            self._tick = float(os.sysconf("SC_CLK_TCK"))
-            self._last = self._total()
-        except Exception as exc:  # noqa: BLE001 — probe must never kill bench
-            self.error = f"py-cpu probe failed: {str(exc)[:120]}"
-
-    @staticmethod
-    def _stat(pid: str) -> tuple[int, int]:
-        """(ppid, own+reaped cpu ticks) from /proc/<pid>/stat; comm may
-        contain spaces/parens so parse from the LAST ')'."""
-        with open(f"/proc/{pid}/stat", "rb") as f:
-            raw = f.read()
-        rest = raw[raw.rindex(b")") + 2 :].split()
-        # fields (1-indexed): 4=ppid 14=utime 15=stime 16=cutime
-        # 17=cstime; rest[0] is field 3
-        return int(rest[1]), (
-            int(rest[11]) + int(rest[12]) + int(rest[13]) + int(rest[14])
-        )
-
-    def _total(self) -> float:
-        ppid: dict[int, int] = {}
-        ticks: dict[int, int] = {}
-        roots: set[int] = set()
-        for ent in os.listdir("/proc"):
-            if not ent.isdigit():
-                continue
-            try:
-                with open(f"/proc/{ent}/cmdline", "rb") as f:
-                    cmd = f.read()
-                pp, t = self._stat(ent)
-            except OSError:
-                continue  # process exited mid-scan
-            pid = int(ent)
-            ppid[pid] = pp
-            ticks[pid] = t
-            if (
-                b"pyspark.daemon" in cmd
-                or b"pyspark.worker" in cmd
-                or (
-                    b"pyspark_zipfast_daemon" in cmd
-                    # the conf string also appears in the JVM argv:
-                    # only python processes are worker-tree roots
-                    and b"python" in cmd.split(b"\x00", 1)[0]
-                )  # r11 daemon shim
-            ):
-                roots.add(pid)
-        # forked workers keep the daemon's argv so they match directly;
-        # the closure walk catches any descendant that rewrote argv[0]
-        tree = set(roots)
-        changed = True
-        while changed:
-            changed = False
-            for pid, pp in ppid.items():
-                if pp in tree and pid not in tree:
-                    tree.add(pid)
-                    changed = True
-        return sum(ticks[p] for p in tree) / self._tick
+        self._last = 0.0
+        self.delta()  # baseline: earlier worker CPU lands on no query
 
     def delta(self) -> float | None:
         if self.error is not None:
             return None
         try:
-            cur = self._total()
-        except Exception as exc:  # noqa: BLE001
+            cur = tree_cpu()["pyworker"]
+        except Exception as exc:  # noqa: BLE001 — probe must never kill bench
             self.error = f"py-cpu probe failed: {str(exc)[:120]}"
             return None
         d = max(0.0, cur - self._last)
@@ -275,11 +169,11 @@ def main() -> None:
             sys.exit(2)
         base["__path__"] = base_path
 
-    # UI on for the CPU probe: the stages REST endpoint is the only
-    # dependency-free source of executorCpuTime.  retainedStages bounds
-    # the per-call JSON (the probe filters by stage id anyway, eviction
-    # of old stages is harmless); 400 comfortably holds the deepest
-    # single query (iterative kmeans ~100 stages).
+    # UI on for the CPU probe: the REST API is the only dependency-free
+    # source of executorCpuTime.  retainedStages bounds the per-call JSON
+    # (the probe reads only the stages of the query just run, always the
+    # newest); 400 comfortably holds the deepest single query (iterative
+    # kmeans ~100 stages).
     spark = get_spark(
         app_name="ldp-spark-bench",
         extra_conf={
@@ -351,10 +245,8 @@ def main() -> None:
     except (OSError, ValueError):
         pass
 
-    probe = _CpuProbe(spark)
-    probe.delta()  # drain warm-up stages so q1's CPU delta is its own
-    py_probe = _PyCpuProbe()
-    py_probe.delta()  # warm-up workers' CPU must not land on q1
+    probe = _GroupCpu(spark)
+    py_probe = _PyWorkerCpu()
     cpu_s: dict[str, float] = {}
     py_cpu_s: dict[str, float] = {}
     mem_spill = disk_spill = 0
@@ -364,12 +256,14 @@ def main() -> None:
     def _run(name: str, tag: str) -> float:
         nonlocal mem_spill, disk_spill, residual_freed
         spec = REGISTRY[name]
+        group = f"{tag}:{name}"
+        probe.start(group)
         t0 = time.perf_counter()
         df = spec.fn(spark, sf_dir)
         df.write.format("noop").mode("overwrite").save()
         dt = round(time.perf_counter() - t0, 3)
         timings[name] = min(timings.get(name, dt), dt)
-        d = probe.delta()
+        d = probe.stop(group)
         if d is not None:
             q_cpu = round(d["cpu_ns"] / 1e9, 3)
             cpu_s[name] = min(cpu_s.get(name, q_cpu), q_cpu)
@@ -486,8 +380,9 @@ def main() -> None:
         "pass2_resume": pass2_resume,
         "pass_spread_pct": spread_pct,
         # The load-robust column (VERDICT r8 ask #1): executor CPU per
-        # query (min over passes, REST /stages sum) + catalog total +
-        # cumulative spill.  Compare cpu_s across rounds, not wall.
+        # query (min over passes, summed over the stages of the query's
+        # own job group) + catalog total + cumulative spill.  Compare
+        # cpu_s across rounds, not wall.
         "queries_cpu": cpu_s,
         # None (not a partial sum) when the probe died mid-run — a
         # partial total would read as a massive speedup.
@@ -496,10 +391,10 @@ def main() -> None:
             if len(cpu_s) == len(timings)
             else None
         ),
-        # Python-worker CPU per query (/proc pyspark.daemon-tree
-        # deltas): the load-robust metric for the Arrow decode lanes
-        # that executorCpuTime is blind to (q231/q221/q227/q161).
-        # ~0 for pure-JVM queries by construction.
+        # Python-worker CPU per query (/proc deltas over the processes
+        # below this bench's JVM): the load-robust metric for the Arrow
+        # decode lanes that executorCpuTime is blind to
+        # (q231/q221/q227/q161).  ~0 for pure-JVM queries by construction.
         "queries_py_cpu": py_cpu_s,
         "py_cpu_total": (
             round(sum(py_cpu_s.values()), 3)
@@ -512,9 +407,11 @@ def main() -> None:
             "(sustained-throughput estimate); single-pass WALL totals on "
             "this host swing ±15% with load on identical code — "
             "adjudicate regressions from queries_cpu/cpu_total (executor "
-            "CPU, load-robust; queries_py_cpu for the Python decode "
-            "lanes), compare per-query mins across bench_history/*.json, "
-            "and note the catalog grows every round; pass 2 re-samples "
+            "CPU of each query's own job group, load-robust; "
+            "queries_py_cpu, CPU of the Python workers below this bench's "
+            "JVM, for the Python decode lanes), compare per-query mins "
+            "across bench_history/*.json, and note the catalog grows "
+            "every round; pass 2 re-samples "
             "the pass2_tier1_n heaviest queries (pass-1 wall >= "
             "pass2_tier1_sec) FIRST, heaviest-first, then rotates "
             "through the [pass2_threshold_sec, pass2_tier1_sec) "

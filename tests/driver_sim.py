@@ -3,9 +3,10 @@ conf baked in at build time), entry() smoke, then every queries() entry at
 sf0.01 compared against oracle_sql() via DuckDB — order-insensitive,
 column-name-sorted value compare, like CORRECTNESS_r{N}.json."""
 import math
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import SparkSession
 

@@ -13,10 +13,12 @@ net for that whole bug class.
 Run: python tools/adversarial_sim.py   (~3 min at sf0.01)
 """
 
+import os
 import runpy
 import sys
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 from pyspark.sql import SparkSession  # noqa: E402
 
@@ -31,4 +33,4 @@ from pyspark.sql import SparkSession  # noqa: E402
 # driver_sim's own builder is a no-op now (an active session exists, and
 # builder.getOrCreate() returns it — its master/appName are ignored), so
 # the whole comparison runs under the adversarial conf above.
-runpy.run_path("/root/repo/tests/driver_sim.py", run_name="__main__")
+runpy.run_path(os.path.join(REPO, "tests", "driver_sim.py"), run_name="__main__")

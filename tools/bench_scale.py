@@ -13,8 +13,12 @@ super-linear point on this curve means the operator does work that
 grows faster than the data (the thing partitioned design must avoid);
 ~linear growth means the per-shard cost shape survives scale-up.
 
-Usage:  python tools/bench_scale.py [--mults 1,2,5,10]
+Usage:  python tools/bench_scale.py [--mults 1,2,5,10] [--update]
 Writes  bench_history/SCALE_CURVE.json and prints one JSON line.
+``--update`` folds this run's points into the existing curve by
+per-query min (a partial re-sweep, e.g. ``--mults 20,40 --update``).
+One unit alone: ``--point <m> --query <q>`` times query q at multiple m
+in a fresh session and prints that unit's JSON line.
 Scaled parquet lands in .scale/x{k}/ (gitignored, regenerated on
 demand; sizes are MBs at these SFs).
 """
@@ -159,34 +163,24 @@ def _gen(spark, mult: int, out_dir: str) -> None:
         f.write(f"{_FIXTURE_V}:{mult}")
 
 
-def _time_point(
-    mult: int,
-    sf_dir: str,
-    queries: list[str] | None = None,
-    passes: int = 4,
-) -> dict:
-    """Time ``queries`` (default: the HEAVY list) at one multiple in
-    THIS process's session.  Called in a FRESH subprocess per
-    measurement unit: a long-lived local[32] JVM ages (heap growth ->
-    multi-second full-GC pauses land inside measured queries —
-    observed: q037's x10 point read 14.8s inside a 25-min
-    single-session sweep vs a stable ~5s fresh), and weak scaling is
-    only a fair comparison when every point sees the same cold
-    environment + identical sf0.001 warmup.
+def _time_point(mult: int, sf_dir: str, q: str) -> dict:
+    """Time query ``q`` (min of 3 passes) at one multiple in THIS
+    process's session, which is a FRESH subprocess per (multiple, query)
+    unit: a long-lived local[32] JVM ages (heap growth -> multi-second
+    full-GC pauses land inside measured queries — observed: q037's x10
+    point read 14.8s inside a 25-min single-session sweep vs a stable
+    ~5s fresh), and weak scaling is only a fair comparison when every
+    point sees the same cold environment + identical sf0.001 warmup.
 
-    Round 7 found the shared-session variant biases by LIST POSITION,
-    not just by point: at x20, q175 measured a stable ~15.5s when run
-    after q127/q149/q165 in one session but 6.8-8.0s in a session of
-    its own — a 2x artifact that neither freeing checkpoint residue
-    nor a forced System.gc() between queries removed, so it is JVM/
-    codegen/worker-pool state, not storage leakage.  min-of-4 cannot
-    fix it: the bias is stable, so every pass of a late-listed query
-    pays it.  The default driver is therefore one subprocess per
-    (multiple, query) — each query warms ITSELF at sf0.001 and is
-    measured in an otherwise-idle session, which is also how a real
-    cluster job runs (one job, one driver, not 13 unrelated pipelines
-    back-to-back in one REPL)."""
-    queries = list(queries) if queries else list(HEAVY)
+    One query per session, not one session per point: round 7 found a
+    shared session biases by LIST POSITION — at x20, q175 measured a
+    stable ~15.5s when run after q127/q149/q165 in one session but
+    6.8-8.0s in a session of its own, a 2x artifact that neither
+    freeing checkpoint residue nor a forced System.gc() between queries
+    removed (JVM/codegen/worker-pool state, not storage leakage), and
+    min-of-N cannot fix a stable bias.  Each query warms ITSELF at
+    sf0.001 and is measured in an otherwise-idle session, which is also
+    how a real cluster job runs."""
     # Load stamp (VERDICT r8 ask #5) at UNIT START, before this unit's
     # own session spins up: a 1-min average read after the warm-ups or
     # passes is dominated by self-load and says nothing about external
@@ -230,11 +224,11 @@ def _time_point(
     spark.range(1_000_000).agg({"id": "sum"}).collect()
     # warm pass at the smallest SF: JVM/codegen/Arrow startup must not
     # be charged to the point (bench.py methodology)
-    for q in queries:
-        REGISTRY[q].fn(spark, "/root/testdata/sf0.001").write.format(
-            "noop"
-        ).mode("overwrite").save()
-    # Round 8 (tools/profile_q037.py): sf0.001 alone under-warms the
+    warm_dir = os.path.join(os.path.dirname(BASE), "sf0.001")
+    REGISTRY[q].fn(spark, warm_dir).write.format("noop").mode(
+        "overwrite"
+    ).save()
+    # Round 8 (q037 stage profile): sf0.001 alone under-warms the
     # BIG points — at toy size AQE picks broadcast joins, so the
     # sort-merge-join/sort codegen the big points actually execute
     # stays interpreter-cold, and the first big execution pays a C2
@@ -252,10 +246,9 @@ def _time_point(
     x2_warm = mult <= 2  # small points don't need the big-plan warm-up
     if mult > 2:
         if os.path.isdir(x2_dir):
-            for q in queries:
-                REGISTRY[q].fn(spark, x2_dir).write.format("noop").mode(
-                    "overwrite"
-                ).save()
+            REGISTRY[q].fn(spark, x2_dir).write.format("noop").mode(
+                "overwrite"
+            ).save()
             x2_warm = True
         else:
             # ADVICE r8: a silent no-op here quietly reverts big points
@@ -274,35 +267,35 @@ def _time_point(
     # identical back-to-back rerun measured 64.5s then 9.6s on 63MB of
     # data); noise spikes only ever ADD time, so the min over more
     # passes converges on the true cost
-    from bench import _CpuProbe
+    from bench import _GroupCpu
 
-    probe = _CpuProbe(spark)
-    probe.delta()  # drain the warm-up stages
+    probe = _GroupCpu(spark)
     timings: dict[str, float] = {}
     cpu_s: dict[str, float] = {}
-    for _pass in range(passes):
-        for q in queries:
-            t0 = time.perf_counter()
-            REGISTRY[q].fn(spark, sf_dir).write.format("noop").mode(
-                "overwrite"
-            ).save()
-            dt = round(time.perf_counter() - t0, 3)
-            timings[q] = min(timings.get(q, dt), dt)
-            d = probe.delta()
-            if d is not None:
-                qc = round(d["cpu_ns"] / 1e9, 3)
-                cpu_s[q] = min(cpu_s.get(q, qc), qc)
-            print(
-                f"# x{mult} pass{_pass} {q}: {dt:.3f}s"
-                + (f" cpu={d['cpu_ns'] / 1e9:.3f}s" if d else ""),
-                file=sys.stderr,
-            )
-            # lazy-checkpoint residue must not bleed into the next
-            # measurement (bench.py's discipline)
-            release_residual_checkpoints(spark, base_ids)
+    for _pass in range(3):
+        group = f"x{mult}:pass{_pass}:{q}"
+        probe.start(group)
+        t0 = time.perf_counter()
+        REGISTRY[q].fn(spark, sf_dir).write.format("noop").mode(
+            "overwrite"
+        ).save()
+        dt = round(time.perf_counter() - t0, 3)
+        timings[q] = min(timings.get(q, dt), dt)
+        d = probe.stop(group)
+        if d is not None:
+            qc = round(d["cpu_ns"] / 1e9, 3)
+            cpu_s[q] = min(cpu_s.get(q, qc), qc)
+        print(
+            f"# x{mult} pass{_pass} {q}: {dt:.3f}s"
+            + (f" cpu={d['cpu_ns'] / 1e9:.3f}s" if d else ""),
+            file=sys.stderr,
+        )
+        # lazy-checkpoint residue must not bleed into the next
+        # measurement (bench.py's discipline)
+        release_residual_checkpoints(spark, base_ids)
     spark.stop()
     return {
-        "total": round(sum(timings.values()), 3),
+        "total": timings[q],
         "queries": timings,
         "queries_cpu": cpu_s,  # executor CPU (min over passes) per query
         "x2_warm": x2_warm,
@@ -313,8 +306,9 @@ def _time_point(
 def _load1_dict(pt: dict) -> dict:
     """Normalize a point's ``load1`` to {query: load}.
 
-    Per-query subprocess points store a dict; --shared-session points
-    (and pre-round-9 curves) store ONE scalar float for the whole unit
+    Per-query subprocess points store a dict; points measured in one
+    shared session per multiple (the pre-round-7 mode, still in
+    committed curves) store ONE scalar float for the whole unit
     — treating that scalar as a dict crashed the --update merge after
     the sweep had already run (ADVICE r9).  A scalar fans out to every
     query in the point (it IS that unit's stamp for each of them)."""
@@ -330,9 +324,9 @@ def _merge_points(merged: dict, points: dict) -> dict:
     """Fold freshly measured ``points`` into ``merged`` in place by
     PER-QUERY, PER-METRIC MIN (host noise only ever ADDS time/CPU, so
     the min over more runs converges on the true cost).  Handles both
-    point shapes (per-query load1 dicts and shared-session scalar
-    load1) on either side; pure function of its inputs so the merge is
-    unit-testable without a sweep."""
+    point shapes (per-query load1 dicts and the older shared-session
+    scalar load1) on either side; pure function of its inputs so the
+    merge is unit-testable without a sweep."""
     for name, pt in points.items():
         if name not in merged:
             merged[name] = pt
@@ -370,16 +364,12 @@ def main() -> None:
         m: (BASE if m == 1 else os.path.join(scale_root, f"x{m}")) for m in mults
     }
 
-    if "--point" in sys.argv:  # subprocess mode: one multiple, one JSON line
+    if "--point" in sys.argv:  # subprocess mode: one unit, one JSON line
         m = int(sys.argv[sys.argv.index("--point") + 1])
-        # compute the dir directly: the parent passes only --point, so m
-        # need not be in the (default) mults list
+        q = sys.argv[sys.argv.index("--query") + 1]
+        # compute the dir directly: m need not be in the mults list
         d = BASE if m == 1 else os.path.join(scale_root, f"x{m}")
-        if "--query" in sys.argv:  # one (multiple, query) unit
-            q = sys.argv[sys.argv.index("--query") + 1]
-            print(json.dumps(_time_point(m, d, queries=[q], passes=3)))
-        else:
-            print(json.dumps(_time_point(m, d)))
+        print(json.dumps(_time_point(m, d, q)))
         return
 
     gen_needed = [m for m in mults if m != 1]
@@ -395,51 +385,37 @@ def main() -> None:
 
     import subprocess
 
-    # default: one subprocess per (multiple, query) — see _time_point's
-    # docstring for why the shared-session variant (--shared-session)
-    # biases late-listed queries by up to 2x
-    per_query = "--shared-session" not in sys.argv
-
+    # one subprocess per (multiple, query) — see _time_point's docstring
     points: dict[str, dict] = {}
     for m in mults:
-        if per_query:
-            timings: dict[str, float] = {}
-            cpus: dict[str, float] = {}
-            loads: dict[str, float] = {}
-            x2_warm = True
-            for q in HEAVY:
-                proc = subprocess.run(
-                    [
-                        sys.executable, os.path.abspath(__file__),
-                        "--point", str(m), "--query", q,
-                    ],
-                    capture_output=True,
-                    text=True,
-                    check=True,
-                )
-                sys.stderr.write(proc.stderr)
-                unit = json.loads(proc.stdout.strip().splitlines()[-1])
-                timings[q] = unit["queries"][q]
-                if q in unit.get("queries_cpu", {}):
-                    cpus[q] = unit["queries_cpu"][q]
-                loads[q] = unit.get("load1", 0.0)
-                x2_warm = x2_warm and unit.get("x2_warm", True)
-            points[f"x{m}"] = {
-                "total": round(sum(timings.values()), 3),
-                "queries": timings,
-                "queries_cpu": cpus,
-                "x2_warm": x2_warm,
-                "load1": loads,
-            }
-        else:
+        timings: dict[str, float] = {}
+        cpus: dict[str, float] = {}
+        loads: dict[str, float] = {}
+        x2_warm = True
+        for q in HEAVY:
             proc = subprocess.run(
-                [sys.executable, os.path.abspath(__file__), "--point", str(m)],
+                [
+                    sys.executable, os.path.abspath(__file__),
+                    "--point", str(m), "--query", q,
+                ],
                 capture_output=True,
                 text=True,
                 check=True,
             )
             sys.stderr.write(proc.stderr)
-            points[f"x{m}"] = json.loads(proc.stdout.strip().splitlines()[-1])
+            unit = json.loads(proc.stdout.strip().splitlines()[-1])
+            timings[q] = unit["queries"][q]
+            if q in unit.get("queries_cpu", {}):
+                cpus[q] = unit["queries_cpu"][q]
+            loads[q] = unit.get("load1", 0.0)
+            x2_warm = x2_warm and unit.get("x2_warm", True)
+        points[f"x{m}"] = {
+            "total": round(sum(timings.values()), 3),
+            "queries": timings,
+            "queries_cpu": cpus,
+            "x2_warm": x2_warm,
+            "load1": loads,
+        }
 
     out = os.path.join(repo, "bench_history", "SCALE_CURVE.json")
     updates = []
@@ -505,7 +481,7 @@ def main() -> None:
             "'knee' (5.78->14.68) actually was. round 8: points beyond "
             "x2 additionally warm once at x2 — sf0.001 warm-up leaves "
             "the big points' AQE-chosen sort-merge-join codegen "
-            "interpreter-cold (tools/profile_q037.py: q037 x40 rep0 "
+            "interpreter-cold (round-8 q037 profile: x40 rep0 "
             "burned 1305 executor-CPU-s vs ~260 steady; one x2 warm "
             "run cut the rep0 burn 2.5x), a ramp long enough at x40 "
             "that min-of-3 could not absorb it. round 9: every point "
@@ -526,7 +502,7 @@ def main() -> None:
             "instead of stamping"
         ),
         "q037_adjudication": (
-            "round 8 (tools/profile_q037.py, fresh subprocess per "
+            "round 8 (stage-level q037 profile, fresh subprocess per "
             "cell): q037's r7 x20->x40 step (9.50->30.26s, 3.2x for 2x "
             "data) is NOT algorithmic — shingle rows and edges are "
             "exactly 2x (5.21M->10.42M rows, 5200->10400 edges), "

@@ -9,9 +9,10 @@ column whose types differ.
 
 Usage: python tools/oracle_type_audit.py [sf_dir]
 """
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import duckdb
 from pyspark.sql import SparkSession
