@@ -65,26 +65,25 @@ ENGINE_CONF: dict[str, str] = {
 
 
 def _zipfast_worker_conf(master: str) -> dict[str, str]:
-    """Worker-module shim activation (guide §4 — the Python boundary).
+    """Python-worker shim activation.
 
-    Stock ``pyspark.worker`` re-reads the entire ``pyspark.zip`` /
-    ``py4j.zip`` central directory on EVERY task
-    (``setup_spark_files`` → ``importlib.invalidate_caches()`` →
-    ``zipimport._read_directory``): ~0.2 CPU-s of pure protocol tax per
-    Python task, any UDF flavor.  ``pyspark_zipfast_worker`` (repo
-    root) is the stock worker with only that zip re-read skipped.
+    ``pyspark_zipfast_daemon`` (repo root) is the stock pyspark daemon
+    with two per-task taxes removed: the zip-TOC re-read behind
+    ``importlib.invalidate_caches()`` and the full ``gc.collect()`` after
+    every task.  The daemon forks every Python worker, so this one conf
+    covers all of them.
 
     Local masters inherit the driver's environment, so making the shim
     importable is just a PYTHONPATH prepend before the JVM launches.
     On a cluster, ship the file with ``--py-files`` and set
-    ``spark.python.worker.module=pyspark_zipfast_worker`` yourself —
+    ``spark.python.daemon.module=pyspark_zipfast_daemon`` yourself —
     this helper deliberately stays out of the way there because a
-    worker that cannot import the module would fail every Python stage.
+    daemon that cannot import the module would fail every Python stage.
     """
     if not master.startswith("local"):
         return {}
     shim_dir = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    if not os.path.isfile(os.path.join(shim_dir, "pyspark_zipfast_worker.py")):
+    if not os.path.isfile(os.path.join(shim_dir, "pyspark_zipfast_daemon.py")):
         return {}
     # The daemon is spawned by the JVM with the JVM's environment; the
     # JVM inherits ours when the gateway launches (getOrCreate below),
@@ -94,17 +93,7 @@ def _zipfast_worker_conf(master: str) -> dict[str, str]:
         os.environ["PYTHONPATH"] = (
             shim_dir + os.pathsep + pypath if pypath else shim_dir
         )
-    conf = {"spark.python.worker.module": "pyspark_zipfast_worker"}
-    # Round-11 companion shim: stock pyspark.daemon runs a FULL
-    # gc.collect() after EVERY task in the reused-worker loop (~12-31 ms
-    # of CPU per task on a worker heap with pandas/numpy/pyarrow
-    # imported — the dominant remaining per-task Python tax after the
-    # zip-TOC fix).  pyspark_zipfast_daemon swaps it for a gen-1 collect
-    # per task + full collect every 64 tasks.  Same distribution story
-    # as the worker shim (PYTHONPATH locally, --py-files on a cluster).
-    if os.path.isfile(os.path.join(shim_dir, "pyspark_zipfast_daemon.py")):
-        conf["spark.python.daemon.module"] = "pyspark_zipfast_daemon"
-    return conf
+    return {"spark.python.daemon.module": "pyspark_zipfast_daemon"}
 
 
 def get_spark(

@@ -49,40 +49,49 @@ from .io_utils import register_views
 _STOPPERS = ("ORDER BY", "LIMIT")
 
 
-def _toplevel_find(sql: str, word: str, start: int = 0) -> int:
-    """Index of keyword ``word`` at paren-depth 0, outside string literals,
-    double-quoted identifiers, and ``--`` line comments; case-insensitive;
-    -1 if absent."""
-    upper = sql.upper()
-    word = word.upper()
-    depth = 0
-    i = start
+def _span_end(sql: str, i: int) -> int:
+    """End of the token at ``sql[i]``: past a whole ``'…'`` literal or
+    ``"…"`` quoted text, up to the newline of a ``--`` comment, else
+    ``i + 1``. Every scanner that looks for code steps with it, so they
+    all agree on what is code."""
     n = len(sql)
-    while i < n:
-        ch = sql[i]
-        if ch == "'":
-            i += 1
-            while i < n and sql[i] != "'":
-                i += 2 if sql[i] == "\\" else 1
-        elif ch == '"':
-            i += 1
-            while i < n and sql[i] != '"':
-                i += 1
-        elif ch == "-" and i + 1 < n and sql[i + 1] == "-":
-            while i < n and sql[i] != "\n":
-                i += 1
-            continue
-        elif ch == "(":
-            depth += 1
-        elif ch == ")":
-            depth -= 1
-        elif depth == 0 and upper.startswith(word, i):
-            before_ok = i == 0 or not (sql[i - 1].isalnum() or sql[i - 1] == "_")
+    if sql[i] == "'":
+        j = i + 1
+        while j < n and sql[j] != "'":
+            j += 2 if sql[j] == "\\" else 1
+        return min(j + 1, n)
+    if sql[i] == '"':
+        j = sql.find('"', i + 1)
+        return n if j < 0 else j + 1
+    if sql.startswith("--", i):
+        j = sql.find("\n", i)
+        return n if j < 0 else j
+    return i + 1
+
+
+def _tokens(sql: str, start: int = 0):
+    """``(index, text)`` per token from ``start``: one code character, or
+    a whole literal, quoted text or comment (see ``_span_end``)."""
+    i = start
+    while i < len(sql):
+        j = _span_end(sql, i)
+        yield i, sql[i:j]
+        i = j
+
+
+def _find_word(sql: str, word: str, start: int = 0, toplevel: bool = False) -> int:
+    """Index of keyword ``word`` in code (at paren-depth 0 when
+    ``toplevel``); case-insensitive; -1 if absent."""
+    upper, word = sql.upper(), word.upper()
+    depth = 0
+    for i, tok in _tokens(sql, start):
+        depth += (tok == "(") - (tok == ")")
+        if (depth == 0 or not toplevel) and upper.startswith(word, i):
+            before_ok = i == 0 or not (sql[i - 1].isalnum() or sql[i - 1] in "_$")
             j = i + len(word)
-            after_ok = j >= n or not (sql[j].isalnum() or sql[j] == "_")
+            after_ok = j >= len(sql) or not (sql[j].isalnum() or sql[j] in "_$")
             if before_ok and after_ok:
                 return i
-        i += 1
     return -1
 
 
@@ -90,13 +99,13 @@ def desugar_qualify(sql: str) -> tuple[str, bool]:
     """Rewrite a top-level QUALIFY clause into a wrapped subquery filter.
     Returns (rewritten_sql, had_qualify); the caller drops the helper
     ``__qualify`` column when had_qualify is True."""
-    q = _toplevel_find(sql, "QUALIFY")
+    q = _find_word(sql, "QUALIFY", toplevel=True)
     if q < 0:
         return sql, False
     pred_start = q + len("QUALIFY")
     pred_end = len(sql)
     for stopper in _STOPPERS:
-        s = _toplevel_find(sql, stopper, pred_start)
+        s = _find_word(sql, stopper, pred_start, toplevel=True)
         if 0 <= s < pred_end:
             pred_end = s
     pred = sql[pred_start:pred_end].strip().rstrip(";")
@@ -117,82 +126,27 @@ def desugar_qualify(sql: str) -> tuple[str, bool]:
 # ---------------------------------------------------------------------------
 
 
-def _find_word(sql: str, word: str, start: int = 0) -> int:
-    """Like _toplevel_find but at ANY paren depth (still skips literals,
-    quoted identifiers, and -- comments)."""
-    upper = sql.upper()
-    word = word.upper()
-    i, n = start, len(sql)
-    while i < n:
-        ch = sql[i]
-        if ch == "'":
-            i += 1
-            while i < n and sql[i] != "'":
-                i += 2 if sql[i] == "\\" else 1
-        elif ch == '"':
-            i += 1
-            while i < n and sql[i] != '"':
-                i += 1
-        elif ch == "-" and i + 1 < n and sql[i + 1] == "-":
-            while i < n and sql[i] != "\n":
-                i += 1
-            continue
-        elif upper.startswith(word, i):
-            before_ok = i == 0 or not (sql[i - 1].isalnum() or sql[i - 1] in "_$")
-            j = i + len(word)
-            after_ok = j >= n or not (sql[j].isalnum() or sql[j] in "_$")
-            if before_ok and after_ok:
-                return i
-        i += 1
-    return -1
-
-
 def _match_paren(sql: str, open_idx: int) -> int:
-    """Index of the ')' matching sql[open_idx] == '(' (skips literals)."""
+    """Index of the ')' matching sql[open_idx] == '('."""
     depth = 0
-    i, n = open_idx, len(sql)
-    while i < n:
-        ch = sql[i]
-        if ch == "'":
-            i += 1
-            while i < n and sql[i] != "'":
-                i += 2 if sql[i] == "\\" else 1
-        elif ch == '"':
-            i += 1
-            while i < n and sql[i] != '"':
-                i += 1
-        elif ch == "(":
-            depth += 1
-        elif ch == ")":
-            depth -= 1
-            if depth == 0:
-                return i
-        i += 1
+    for i, tok in _tokens(sql, open_idx):
+        depth += (tok == "(") - (tok == ")")
+        if tok == ")" and depth == 0:
+            return i
     raise ValueError("unbalanced parentheses in SQL")
 
 
 def _split_args(argstr: str) -> list[str]:
-    """Split a function-argument string on top-level commas."""
-    parts, depth, cur, i, n = [], 0, [], 0, len(argstr)
-    while i < n:
-        ch = argstr[i]
-        if ch == "'":
-            j = i + 1
-            while j < n and argstr[j] != "'":
-                j += 2 if argstr[j] == "\\" else 1
-            cur.append(argstr[i : j + 1])
-            i = j + 1
-            continue
-        if ch == "(":
-            depth += 1
-        elif ch == ")":
-            depth -= 1
-        if ch == "," and depth == 0:
+    """Split a function-argument string on top-level commas; comments are
+    dropped."""
+    parts, depth, cur = [], 0, []
+    for _, tok in _tokens(argstr):
+        depth += (tok == "(") - (tok == ")")
+        if tok == "," and depth == 0:
             parts.append("".join(cur).strip())
             cur = []
-        else:
-            cur.append(ch)
-        i += 1
+        elif not tok.startswith("--"):
+            cur.append(tok)
     if cur:
         parts.append("".join(cur).strip())
     return parts
@@ -354,18 +308,10 @@ def _rewrite_json_paths(sql: str) -> str:
     ident = lambda c: c.isalnum() or c in "_$"  # noqa: E731
     while i < n:
         ch = sql[i]
-        if ch == "'":
-            j = i + 1
-            while j < n and sql[j] != "'":
-                j += 2 if sql[j] == "\\" else 1
-            out.append(sql[i : j + 1])
-            i = j + 1
-            continue
-        if ch == "-" and i + 1 < n and sql[i + 1] == "-":
-            j = sql.find("\n", i)
-            j = n if j < 0 else j
-            out.append(sql[i:j])
-            i = j
+        end = _span_end(sql, i)
+        if end > i + 1:  # a literal, quoted text or comment: copied whole
+            out.append(sql[i:end])
+            i = end
             continue
         if (
             ch == ":"
@@ -768,27 +714,13 @@ def run_statement(
 def _split_statements(script: str) -> list[str]:
     """Split a SQL script on top-level semicolons (outside literals,
     quoted identifiers, and comments)."""
-    out, cur_start, i, n = [], 0, 0, len(script)
-    while i < n:
-        ch = script[i]
-        if ch == "'":
-            i += 1
-            while i < n and script[i] != "'":
-                i += 2 if script[i] == "\\" else 1
-        elif ch == '"':
-            i += 1
-            while i < n and script[i] != '"':
-                i += 1
-        elif ch == "-" and i + 1 < n and script[i + 1] == "-":
-            while i < n and script[i] != "\n":
-                i += 1
-            continue
-        elif ch == ";":
+    out, cur_start = [], 0
+    for i, tok in _tokens(script):
+        if tok == ";":
             stmt = _strip_leading_comments(script[cur_start:i])
             if stmt:
                 out.append(stmt)
             cur_start = i + 1
-        i += 1
     stmt = _strip_leading_comments(script[cur_start:])
     if stmt:
         out.append(stmt)

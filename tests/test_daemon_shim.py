@@ -1,12 +1,14 @@
-"""Semantics pins for the round-11 daemon-module shim
-(``pyspark_zipfast_daemon``): per-task gc policy, conf wiring, and the
-pre-import surface.  Companion to tests/test_worker_shim.py."""
+"""Semantics pins for ``pyspark_zipfast_daemon`` in the daemon process:
+per-task gc policy, pre-import surface, conf wiring, and the pyspark
+hooks both patches rely on.  What the shim changes inside the forked
+workers is pinned in tests/test_worker_shim.py."""
 
 from __future__ import annotations
 
 import gc
 import os
 import sys
+import types
 
 sys.path.insert(0, os.path.join(os.path.dirname(__file__), ".."))
 
@@ -39,8 +41,9 @@ def test_daemon_module_gc_reference_patched_not_global():
 
     # the stock module's reference is the policy object...
     assert isinstance(stock.gc, shim._PerTaskGcPolicy)
-    # ...while the global gc module is untouched (UDF code sees stock gc)
-    assert gc.collect.__module__ in (None, "gc") or callable(gc.collect)
+    # ...while the global gc.collect is still the builtin (UDF code sees
+    # stock gc)
+    assert type(gc.collect).__name__ == "builtin_function_or_method"
     assert not isinstance(gc.collect, shim._PerTaskGcPolicy)
     # non-collect gc API passes through
     assert stock.gc.isenabled() == gc.isenabled()
@@ -54,14 +57,9 @@ def test_policy_counter_is_per_instance():
 
 def test_preimported_surface_present():
     # the daemon pre-imports the heavy worker dependency surface so
-    # forked workers inherit it copy-on-write
-    for mod in (
-        "numpy",
-        "pandas",
-        "pyarrow",
-        "pyspark.worker",
-        "logistics_data_pipeline_project_spark.operators.multimodal",
-    ):
+    # forked workers inherit it copy-on-write; a renamed module would
+    # silently fall back to a per-worker import
+    for mod in shim.PREIMPORTS:
         assert mod in sys.modules, mod
 
 
@@ -70,9 +68,45 @@ def test_session_wires_daemon_conf():
         _zipfast_worker_conf,
     )
 
-    conf = _zipfast_worker_conf("local[4]")
-    assert conf.get("spark.python.worker.module") == "pyspark_zipfast_worker"
-    assert conf.get("spark.python.daemon.module") == "pyspark_zipfast_daemon"
-    # non-local masters: stay out of the way (cluster ships shims via
-    # --py-files and sets the confs explicitly)
+    assert _zipfast_worker_conf("local[4]") == {
+        "spark.python.daemon.module": "pyspark_zipfast_daemon"
+    }
+    shim_dir = os.path.dirname(os.path.abspath(shim.__file__))
+    assert shim_dir in os.environ.get("PYTHONPATH", "").split(os.pathsep)
+    # non-local masters: stay out of the way (a cluster ships the shim
+    # via --py-files and sets the conf explicitly)
     assert _zipfast_worker_conf("spark://host:7077") == {}
+    assert _zipfast_worker_conf("yarn") == {}
+
+
+def test_hooks_hold_on_installed_pyspark():
+    assert shim.hook_problems() == []
+
+
+def _stand_in(src: str) -> types.ModuleType:
+    mod = types.ModuleType("stand_in")
+    exec(src, vars(mod))
+    return mod
+
+
+def test_hook_problems_reports_each_broken_hook():
+    worker_util = _stand_in(
+        "import importlib\ndef setup():\n    importlib.invalidate_caches()\n"
+    )
+    daemon = _stand_in(
+        "import gc\ndef manager():\n    def loop():\n        gc.collect()\n"
+    )
+    assert shim.hook_problems(worker_util, daemon) == []
+
+    # worker_util binds the function itself: the importlib patch is unseen
+    no_attr = _stand_in(
+        "from importlib import invalidate_caches\n"
+        "def setup():\n    invalidate_caches()\n"
+    )
+    (problem,) = shim.hook_problems(no_attr, daemon)
+    assert "pyspark.worker_util" in problem
+
+    # manager stops calling gc.collect(): the gc policy is unseen
+    no_collect = _stand_in("import gc\ndef manager():\n    pass\n")
+    (problem,) = shim.hook_problems(worker_util, no_collect)
+    assert "pyspark.daemon.manager" in problem

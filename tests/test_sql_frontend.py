@@ -5,6 +5,7 @@ DataFrame equivalents."""
 from __future__ import annotations
 
 import duckdb
+import pytest
 from pyspark.sql import Window, functions as F
 
 from logistics_data_pipeline_project_spark.io_utils import TABLES, load
@@ -163,6 +164,38 @@ def test_scanner_skips_comments_and_quoted_identifiers():
     assert had2 and "__qualify" in out2
 
 
+@pytest.mark.parametrize(
+    "sql, reference",
+    [
+        # the comma inside "a,b" is not an argument separator
+        (
+            """SELECT IFF("a,b" = 'a,b', 1, 2) AS v FROM scan_t""",
+            """SELECT IF("a,b" = 'a,b', 1, 2) AS v FROM scan_t""",
+        ),
+        # the paren inside a comment does not unbalance the call
+        (
+            "SELECT IFF(a > 0, 1, 2 -- pick (one\n) AS v FROM scan_t",
+            "SELECT IFF(a > 0, 1, 2\n) AS v FROM scan_t",
+        ),
+        # the comma inside a comment adds no DATEDIFF argument
+        (
+            "SELECT DATEDIFF(DAY, d1, d2 -- end, inclusive\n) AS v FROM scan_t",
+            "SELECT DATEDIFF(DAY, d1, d2\n) AS v FROM scan_t",
+        ),
+    ],
+    ids=["quoted_comma", "comment_paren", "comment_comma"],
+)
+def test_call_rewrites_skip_quoted_text_and_comments(spark, sql, reference):
+    # 20 minutes across midnight: 1 Snowflake day, 0 full Spark days
+    spark.sql(
+        "SELECT 1 AS a, TIMESTAMP'2024-01-01 23:50:00' AS d1,"
+        " TIMESTAMP'2024-01-02 00:10:00' AS d2"
+    ).createOrReplaceTempView("scan_t")
+    got = run_sql(spark, sql).collect()
+    assert got == run_sql(spark, reference).collect()
+    assert got[0]["v"] == 1
+
+
 # ---------------------------------------------------------------------------
 # MERGE INTO statement entry (the reference's raw-SQL merge form,
 # dags/logistics-airbyte-sql.py:25-49)
@@ -211,8 +244,6 @@ def test_merge_sql_upserts_and_is_idempotent(spark, tmp_path):
 
 
 def test_merge_sql_strict_duplicate_source_errors(spark, tmp_path):
-    import pytest
-
     from logistics_data_pipeline_project_spark.plans.materialize import TableStore
     from logistics_data_pipeline_project_spark.sql_frontend import run_merge_sql
 

@@ -1,15 +1,14 @@
-"""pyspark_zipfast_worker: the per-task zip-TOC-re-read fix (r10).
+"""What ``pyspark_zipfast_daemon`` changes inside the Python workers it
+forks.
 
-Three angles:
-- conf wiring: ``get_spark`` points ``spark.python.worker.module`` at
-  the shim for local masters (and leaves cluster masters alone);
 - semantics: the replacement ``invalidate_caches`` still invalidates
-  directory (FileFinder) caches — the case Spark's per-task call
-  actually protects (``sc.addPyFile`` of plain ``.py`` files) — while
-  leaving zipimporter TOC caches untouched;
-- end-to-end: every pandas/Arrow UDF test in the suite already runs
-  through the shim (conftest sessions come from ``get_spark``), so a
-  green suite is the integration check.
+  directory (FileFinder) caches, the case Spark's per-task call protects
+  (``sc.addPyFile`` of plain ``.py`` files), while leaving zipimporter
+  TOC caches untouched;
+- live: a ``mapInPandas`` task in a ``get_spark`` session runs the stock
+  ``pyspark.worker`` with both patches active.  The stock daemon would
+  pass every other test in the suite, so this one is the integration
+  check.
 """
 
 from __future__ import annotations
@@ -19,21 +18,7 @@ import os
 import sys
 import zipfile
 
-import pyspark_zipfast_worker as shim
-from logistics_data_pipeline_project_spark.session import _zipfast_worker_conf
-
-
-def test_conf_set_for_local_master():
-    conf = _zipfast_worker_conf("local[4]")
-    assert conf["spark.python.worker.module"] == "pyspark_zipfast_worker"
-    assert conf["spark.python.daemon.module"] == "pyspark_zipfast_daemon"
-    shim_dir = os.path.dirname(os.path.abspath(shim.__file__))
-    assert shim_dir in os.environ.get("PYTHONPATH", "").split(os.pathsep)
-
-
-def test_conf_not_set_for_cluster_master():
-    assert _zipfast_worker_conf("spark://host:7077") == {}
-    assert _zipfast_worker_conf("yarn") == {}
+import pyspark_zipfast_daemon as shim
 
 
 def test_invalidate_still_refreshes_file_finder(tmp_path):
@@ -89,7 +74,30 @@ def test_invalidate_drops_none_entries():
     assert key not in sys.path_importer_cache
 
 
-def test_shim_exports_stock_main():
-    import pyspark.worker
+def test_live_worker_runs_both_patches(spark):
+    def probe(batches):
+        import importlib
+        import sys
 
-    assert shim.main is pyspark.worker.main
+        import pandas as pd
+
+        for _ in batches:
+            pass
+        daemon = sys.modules.get("pyspark.daemon")
+        yield pd.DataFrame(
+            {
+                "invalidate": [importlib.invalidate_caches.__name__],
+                "gc": [type(getattr(daemon, "gc", None)).__name__],
+                "argv1": [sys.argv[1] if len(sys.argv) > 1 else ""],
+            }
+        )
+
+    rows = (
+        spark.range(0, 64, 1, 4)
+        .mapInPandas(probe, "invalidate string, gc string, argv1 string")
+        .collect()
+    )
+    assert len(rows) == 4
+    assert {tuple(r) for r in rows} == {
+        ("_invalidate_caches_skip_zip_reread", "_PerTaskGcPolicy", "pyspark.worker")
+    }
