@@ -1,6 +1,8 @@
-"""What ``pyspark_zipfast_daemon`` changes inside the Python workers it
-forks.
+"""How ``pyspark_zipfast_daemon`` reaches the Python workers it forks,
+and what it changes inside them.
 
+- conf: ``get_spark`` activates the shim with exactly one conf on local
+  masters and sets nothing on cluster masters;
 - semantics: the replacement ``invalidate_caches`` still invalidates
   directory (FileFinder) caches, the case Spark's per-task call protects
   (``sc.addPyFile`` of plain ``.py`` files), while leaving zipimporter
@@ -19,6 +21,21 @@ import sys
 import zipfile
 
 import pyspark_zipfast_daemon as shim
+from logistics_data_pipeline_project_spark.session import _zipfast_worker_conf
+
+
+def test_conf_set_for_local_master():
+    assert _zipfast_worker_conf("local[4]") == {
+        "spark.python.daemon.module": "pyspark_zipfast_daemon"
+    }
+    shim_dir = os.path.dirname(os.path.abspath(shim.__file__))
+    assert shim_dir in os.environ.get("PYTHONPATH", "").split(os.pathsep)
+
+
+def test_conf_not_set_for_cluster_master():
+    # a cluster ships the shim via --py-files and sets the conf explicitly
+    assert _zipfast_worker_conf("spark://host:7077") == {}
+    assert _zipfast_worker_conf("yarn") == {}
 
 
 def test_invalidate_still_refreshes_file_finder(tmp_path):
