@@ -51,45 +51,26 @@ def exact_dedup(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
 
 
 def word_shingles(
-    df: DataFrame, text_col: str, id_col: str, n: int = 3, impl: str = "arrow"
+    df: DataFrame, text_col: str, id_col: str, n: int = 3
 ) -> DataFrame:
     """Distinct word n-gram shingles per document: (id, shingle) rows.
     Documents shorter than n tokens produce no shingles.
 
-    Two bit-identical implementations (``impl``):
-
-    - ``"arrow"`` (default): ``lower()`` stays a JVM codegen expression
-      (Java's locale-sensitive lowercasing — İ and final-sigma — differs
-      from Arrow's ``utf8_lower``, verified empirically), then ONE
-      ``mapInArrow`` pass does split/window/per-doc-distinct with
-      vectorized C++ kernels (``split_pattern`` matches Spark's
-      ``split(s, ' ')`` exactly, empties and trailing included —
-      pinned by tests).  The interpreted higher-order ``transform``
-      lambda this replaces ran at ~7x the CPU (2.16 vs 0.30 CPU-s for
-      the sf0.1 corpus) because HOFs forgo whole-stage codegen and pay
-      a per-task interpreter setup multiplied by task count.
-    - ``"expr"``: the round-10 pure-expression form, kept as the
-      equality reference (tests assert identical output, same order).
-
-    String construction is exact (no floating point anywhere), so the
-    twins agree byte-for-byte; row order is first-occurrence per doc in
-    both."""
+    ``lower()`` stays a JVM codegen expression (Java's locale-sensitive
+    lowercasing — İ and final-sigma — differs from Arrow's
+    ``utf8_lower``, verified empirically), then ONE ``mapInArrow`` pass
+    does split/window/per-doc-distinct with vectorized C++ kernels
+    (``split_pattern`` matches Spark's ``split(s, ' ')`` exactly,
+    empties and trailing included — pinned by tests).  The interpreted
+    higher-order ``transform`` lambda this replaced ran at ~7x the CPU
+    (2.16 vs 0.30 CPU-s for the sf0.1 corpus) because HOFs forgo
+    whole-stage codegen and pay a per-task interpreter setup multiplied
+    by task count; that expression form is the equality oracle in
+    ``tests/test_word_shingles_twin.py`` (same rows, same per-doc
+    first-occurrence order — string construction is exact)."""
     # Shingling fans each row out ~|tokens| ways; widen an
     # under-partitioned scan first so the work runs on every core.
     df = fan_out(df)
-    if impl == "expr":
-        toks = df.select(
-            F.col(id_col), F.split(F.lower(F.col(text_col)), " ").alias("__t")
-        ).filter(F.size("__t") >= n)
-        return toks.select(
-            F.col(id_col),
-            F.explode(
-                F.expr(
-                    f"array_distinct(transform(sequence(0, size(__t)-{n}),"
-                    f" i -> {sliding_concat_sql('__t', 'i', n)}))"
-                )
-            ).alias("shingle"),
-        )
     low = df.select(F.col(id_col), F.lower(F.col(text_col)).alias("__low"))
     id_type = low.schema[0].dataType.simpleString()
 

@@ -6,51 +6,48 @@ modality-specific fields). Decode / feature-extraction runs as Arrow-batched
 ``mapInPandas`` so payload bytes never round-trip through Python row-by-row
 and each batch decodes vectorized.
 
-Decode tiers (no image/audio libraries in this container):
+Every Spark-facing operator here is one ``rowmap.map_payloads`` stage:
+the operator supplies only the per-payload ``rows_of`` generator, and
+``rowmap`` owns the batch loop, the input cast and the ``on_error``
+quarantine lane.
 
-- ``decode_stub=True`` (default): deterministic fake "decode"
-  (dimensions/duration from a stable hash of the payload) so the
-  Spark-side plumbing — schema, partitioning, UDF signature, batch
-  shape — is real and tested regardless of codecs.
-- ``decode_stub=False``: REAL decode for the formats parseable in pure
-  Python. Header level: PNG / BMP / GIF / JPEG dimensions and WAV
-  duration (`parse_image_header` / `parse_wav_duration_ms`). Pixel /
-  sample level: full 8-bit non-interlaced PNG decode (zlib inflate +
-  scanline unfilter), nearest-neighbor resize, deterministic PNG
-  re-encode (`decode_png_pixels` / `nearest_resize` / `encode_png`),
-  16-bit PCM WAV sample stats (`parse_wav_pcm_stats`), and full GIF
-  first-frame pixel decode + encode (variable-width LZW both
-  directions: `decode_gif_pixels` / `encode_gif` / `gif_probe`) — all
-  golden-tested on real byte payloads. Baseline JPEG is a full real codec
-  too (ITU-T T.81 SOF0, grayscale and YCbCr color at 4:4:4 / 4:2:2 /
-  4:2:0 chroma subsampling: numpy DCT/IDCT, Annex K quant/Huffman
-  tables, interleaved multi-block MCUs, box-average downsampling /
-  replication upsampling, byte stuffing, restart-marker handling —
-  ``encode_jpeg`` / ``decode_jpeg_pixels`` / ``jpeg_probe``). Video
-  frame extraction is real for YUV4MPEG2 streams (``encode_y4m`` /
-  ``decode_y4m_frames`` / ``y4m_frame_stats``, and
-  ``sample_frames(decode_stub=False)``), the uncompressed interchange
-  format that needs no codec. Progressive JPEG (SOF2: spectral
-  selection + successive approximation) is fully decoded and encoded.
-  Arithmetic-coded/12-bit JPEG and inter-coded video still raise
-  NotImplementedError where Pillow/pyav calls would go — an honest
-  capability boundary, not a silent fake.
+Decode is REAL for the formats parseable in pure Python (no image/audio
+libraries are available). Header level: PNG / BMP / GIF / JPEG
+dimensions and WAV duration (`parse_image_header` /
+`parse_wav_duration_ms`). Pixel / sample level: full 8-bit
+non-interlaced PNG decode (zlib inflate + scanline unfilter),
+nearest-neighbor resize, deterministic PNG re-encode
+(`decode_png_pixels` / `nearest_resize` / `encode_png`), 16-bit PCM WAV
+sample stats (`parse_wav_pcm_stats`), and full GIF first-frame pixel
+decode + encode (variable-width LZW both directions: `decode_gif_pixels`
+/ `encode_gif` / `gif_probe`) — all golden-tested on real byte
+payloads. Baseline JPEG is a full real codec too (ITU-T T.81 SOF0,
+grayscale and YCbCr color at 4:4:4 / 4:2:2 / 4:2:0 chroma subsampling:
+numpy DCT/IDCT, Annex K quant/Huffman tables, interleaved multi-block
+MCUs, box-average downsampling / replication upsampling, byte stuffing,
+restart-marker handling — ``encode_jpeg`` / ``decode_jpeg_pixels`` /
+``jpeg_probe``). Video frame extraction is real for YUV4MPEG2 streams
+(``encode_y4m`` / ``decode_y4m_frames`` / ``y4m_frame_stats``) and
+MJPEG AVI (``mjpeg_frame_stats``; ``sample_frames`` takes either), all
+sampled by one rule, ``sampled_frames``. Progressive JPEG (SOF2:
+spectral selection + successive approximation) is fully decoded and
+encoded. Arithmetic-coded/12-bit JPEG and inter-coded video raise
+NotImplementedError where Pillow/pyav calls would go — an honest
+capability boundary, not a silent fake.
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
-import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.types import (
-    BinaryType,
     IntegerType,
     LongType,
     StringType,
     StructField,
     StructType,
 )
+
+from .rowmap import map_payloads
 
 __all__ = [
     "attach_payload_metadata",
@@ -82,6 +79,7 @@ __all__ = [
     "dhash_reference",
     "dhash_images",
     "sample_frames",
+    "sampled_frames",
     "resize_images",
     "MEDIA_FEATURE_SCHEMA",
     "FRAME_SCHEMA",
@@ -578,9 +576,12 @@ def decode_media(
     id_col: str,
     payload_col: str,
     media_type_col: str,
-    decode_stub: bool = True,
 ) -> DataFrame:
-    """Decode/feature-extract media payloads via Arrow-batched mapInPandas.
+    """REAL header decode of media payloads via Arrow-batched
+    mapInPandas: PNG/BMP/GIF/JPEG dimensions for ``image*`` types, WAV
+    duration for ``audio*``, and the payload's sha256 as
+    ``feature_digest``.  Anything else raises NotImplementedError — it
+    genuinely needs a codec library (Pillow/librosa/pyav, absent).
 
     Partitioning note: payloads dominate row size, so upstream should
     repartition to keep batches within executor memory
@@ -589,68 +590,37 @@ def decode_media(
     peak memory at one Arrow batch per task.
     """
 
-    def decode_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def rows_of(_id, payload, mtype):
         import hashlib
 
-        for pdf in batches:
-            out = []
-            for _id, payload, mtype in zip(
-                pdf[id_col], pdf[payload_col], pdf[media_type_col]
-            ):
-                payload = bytes(payload) if payload is not None else b""
-                digest = hashlib.sha256(payload).hexdigest()
-                is_image = str(mtype).startswith("image")
-                if decode_stub:
-                    # Deterministic fake decode: stable pseudo-dimensions
-                    # from the digest, so tests can assert exact values.
-                    seed = int(digest[:8], 16)
-                    width = 64 + seed % 1024 if is_image else None
-                    height = 64 + (seed >> 10) % 1024 if is_image else None
-                    duration = None if is_image else seed % 600000
-                else:
-                    # REAL header decode: PNG/BMP/GIF/JPEG dims, WAV
-                    # duration — pure-Python container parsing. Anything
-                    # else genuinely needs a codec library.
-                    width = height = duration = None
-                    if is_image:
-                        dims = parse_image_header(payload)
-                        if dims is None:
-                            raise NotImplementedError(
-                                f"image payload id={_id} is not PNG/BMP/GIF/"
-                                "JPEG; full decode requires Pillow (absent)"
-                            )
-                        width, height = dims
-                    elif str(mtype).startswith("audio"):
-                        duration = parse_wav_duration_ms(payload)
-                        if duration is None:
-                            raise NotImplementedError(
-                                f"audio payload id={_id} is not RIFF/WAVE; "
-                                "decode requires librosa/pyav (absent)"
-                            )
-                    else:
-                        raise NotImplementedError(
-                            f"media_type {mtype!r} decode requires pyav "
-                            "(absent)"
-                        )
-                out.append(
-                    {
-                        "id": int(_id),
-                        "media_type": str(mtype),
-                        "n_bytes": len(payload),
-                        "width": width,
-                        "height": height,
-                        "duration_ms": duration,
-                        "feature_digest": digest,
-                    }
+        mtype = str(mtype)
+        width = height = duration = None
+        if mtype.startswith("image"):
+            dims = parse_image_header(payload)
+            if dims is None:
+                raise NotImplementedError(
+                    f"image payload id={_id} is not PNG/BMP/GIF/"
+                    "JPEG; full decode requires Pillow (absent)"
                 )
-            yield pd.DataFrame(out, columns=[f.name for f in MEDIA_FEATURE_SCHEMA.fields])
+            width, height = dims
+        elif mtype.startswith("audio"):
+            duration = parse_wav_duration_ms(payload)
+            if duration is None:
+                raise NotImplementedError(
+                    f"audio payload id={_id} is not RIFF/WAVE; "
+                    "decode requires librosa/pyav (absent)"
+                )
+        else:
+            raise NotImplementedError(
+                f"media_type {mtype!r} decode requires pyav (absent)"
+            )
+        digest = hashlib.sha256(payload).hexdigest()
+        yield _id, mtype, len(payload), width, height, duration, digest
 
-    cols = df.select(
-        F.col(id_col).cast("long").alias(id_col),
-        F.col(payload_col).cast(BinaryType()).alias(payload_col),
-        F.col(media_type_col).alias(media_type_col),
+    return map_payloads(
+        df, id_col, payload_col, MEDIA_FEATURE_SCHEMA, rows_of,
+        extra_cols=(media_type_col,),
     )
-    return cols.mapInPandas(decode_batches, schema=MEDIA_FEATURE_SCHEMA)
 
 
 def png_probe(df: DataFrame, id_col: str, payload_col: str) -> DataFrame:
@@ -660,32 +630,14 @@ def png_probe(df: DataFrame, id_col: str, payload_col: str) -> DataFrame:
     pipelines (a re-encoded payload must probe back to the pixels the
     transform promised)."""
 
-    def probe(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for _id, payload in zip(pdf[id_col], pdf[payload_col]):
-                w, h, ch, raw = decode_png_pixels(
-                    bytes(payload) if payload is not None else b""
-                )
-                out.append(
-                    {
-                        "id": int(_id),
-                        "width": w,
-                        "height": h,
-                        "channels": ch,
-                        "first_px": raw[0] if raw else None,
-                    }
-                )
-            yield pd.DataFrame(
-                out, columns=["id", "width", "height", "channels", "first_px"]
-            )
+    def rows_of(_id, payload):
+        w, h, ch, raw = decode_png_pixels(payload)
+        yield _id, w, h, ch, raw[0] if raw else None
 
-    cols = df.select(
-        F.col(id_col).cast("long").alias(id_col),
-        F.col(payload_col).cast(BinaryType()).alias(payload_col),
-    )
-    return cols.mapInPandas(
-        probe, schema="id long, width int, height int, channels int, first_px int"
+    return map_payloads(
+        df, id_col, payload_col,
+        "id long, width int, height int, channels int, first_px int",
+        rows_of,
     )
 
 
@@ -699,99 +651,68 @@ FRAME_SCHEMA = StructType(
 )
 
 
+def sampled_frames(
+    n: int, num: int, den: int, every_ms: int, max_frames: int
+) -> list[tuple[int, int]]:
+    """The video sampling rule: for k = 0..max_frames-1 take the frame
+    at or before ``k * every_ms`` on the stream's own ``num/den`` fps
+    timebase, stopping at the end of the stream or at the first frame
+    that would be taken twice.  Returns ``(frame_index, frame_ms)``
+    pairs, ``frame_ms`` being that frame's own start time."""
+    picked: list[tuple[int, int]] = []
+    for k in range(max_frames):
+        idx = k * every_ms * num // (1000 * den)
+        # idx is monotone in k, so a repeat can only be the last pick
+        if idx >= n or (picked and picked[-1][0] == idx):
+            break
+        picked.append((idx, idx * 1000 * den // num))
+    return picked
+
+
 def sample_frames(
     df: DataFrame,
     id_col: str,
     payload_col: str,
     every_ms: int = 1000,
     max_frames: int = 8,
-    decode_stub: bool = True,
 ) -> DataFrame:
     """Frame-sample video payloads via mapInPandas: one output row per
-    sampled frame (id, frame_index, frame_ms, frame_digest).
+    sampled frame (id, frame_index, frame_ms, frame_digest), frames
+    picked by ``sampled_frames``.
 
     Row explosion happens Python-side inside the Arrow batch, so a task's
     peak memory is one batch of payloads plus its frame rows — the frame
     rows are tiny (no pixel data leaves the UDF; downstream feature
     extraction happens in the same pass at real scale).
 
-    ``decode_stub=True``: frame count/digests derive deterministically
-    from the payload hash so tests pin exact shapes without a codec.
-    ``decode_stub=False``: REAL sampling for YUV4MPEG2 payloads (frames
-    picked on the stream's own F num:den timebase, digest = sha256 of
-    the actual frame planes, ``decode_y4m_frames``) and for MJPEG AVI
-    payloads (RIFF walk + JPEG decode of ONLY the sampled frames,
-    digest = sha256 of the decoded pixels, ``decode_avi_mjpeg_frames``).
-    Other compressed video raises NotImplementedError (inter-coded
-    formats need pyav) — the honest boundary.
+    REAL sampling for YUV4MPEG2 payloads (digest = sha256 of the actual
+    frame planes, ``decode_y4m_frames``) and for MJPEG AVI payloads
+    (RIFF walk + JPEG decode of ONLY the sampled frames, digest = sha256
+    of the decoded pixels, ``decode_avi_mjpeg_frames``).  Other
+    compressed video raises NotImplementedError (inter-coded formats
+    need pyav) — the honest boundary.
     """
 
-    def frames(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def rows_of(_id, payload):
         import hashlib
 
-        for pdf in batches:
-            out = []
-            for _id, payload in zip(pdf[id_col], pdf[payload_col]):
-                payload = bytes(payload) if payload is not None else b""
-                if not decode_stub:
-                    if payload.startswith(b"YUV4MPEG2"):
-                        _w, _h, num, den, planes = decode_y4m_frames(payload)
-                        raw_frames: list[bytes] | None = planes
-                        jpegs: list[bytes] = []
-                    elif payload[:4] == b"RIFF" and payload[8:12] == b"AVI ":
-                        _w, _h, num, den, jpegs = decode_avi_mjpeg_frames(
-                            payload
-                        )
-                        raw_frames = None
-                    else:
-                        raise NotImplementedError(
-                            "real frame sampling of inter-coded video "
-                            "requires pyav; YUV4MPEG2 and MJPEG-AVI "
-                            "decode here"
-                        )
-                    n = len(raw_frames if raw_frames is not None else jpegs)
-                    seen: set[int] = set()
-                    for k in range(max_frames):
-                        idx = (k * every_ms) * num // (1000 * den)
-                        if idx >= n or idx in seen:
-                            break
-                        seen.add(idx)
-                        if raw_frames is not None:
-                            frame_bytes = raw_frames[idx]
-                        else:  # decode only the sampled frame
-                            frame_bytes = decode_jpeg_pixels(jpegs[idx])[3]
-                        out.append(
-                            {
-                                "id": int(_id),
-                                "frame_index": idx,
-                                "frame_ms": idx * 1000 * den // num,
-                                "frame_digest": hashlib.sha256(
-                                    frame_bytes
-                                ).hexdigest(),
-                            }
-                        )
-                    continue
-                digest = hashlib.sha256(payload).hexdigest()
-                duration_ms = int(digest[:8], 16) % 600000
-                n = min(max_frames, max(1, duration_ms // every_ms))
-                for i in range(n):
-                    out.append(
-                        {
-                            "id": int(_id),
-                            "frame_index": i,
-                            "frame_ms": i * every_ms,
-                            "frame_digest": hashlib.sha256(
-                                payload + i.to_bytes(4, "little")
-                            ).hexdigest(),
-                        }
-                    )
-            yield pd.DataFrame(out, columns=[f.name for f in FRAME_SCHEMA.fields])
+        if payload.startswith(b"YUV4MPEG2"):
+            _w, _h, num, den, frames = decode_y4m_frames(payload)
+            jpeg = False
+        elif payload[:4] == b"RIFF" and payload[8:12] == b"AVI ":
+            _w, _h, num, den, frames = decode_avi_mjpeg_frames(payload)
+            jpeg = True
+        else:
+            raise NotImplementedError(
+                "real frame sampling of inter-coded video requires pyav; "
+                "YUV4MPEG2 and MJPEG-AVI decode here"
+            )
+        for idx, ms in sampled_frames(len(frames), num, den, every_ms, max_frames):
+            # decode only the sampled frame
+            px = decode_jpeg_pixels(frames[idx])[3] if jpeg else frames[idx]
+            yield _id, idx, ms, hashlib.sha256(px).hexdigest()
 
-    cols = df.select(
-        F.col(id_col).cast("long").alias(id_col),
-        F.col(payload_col).cast(BinaryType()).alias(payload_col),
-    )
-    return cols.mapInPandas(frames, schema=FRAME_SCHEMA)
+    return map_payloads(df, id_col, payload_col, FRAME_SCHEMA, rows_of)
 
 
 def resize_images(
@@ -800,64 +721,32 @@ def resize_images(
     payload_col: str,
     width: int = 224,
     height: int = 224,
-    decode_stub: bool = True,
 ) -> DataFrame:
     """Resize image payloads via mapInPandas: (id, width, height,
     resized_payload) with the binary column preserved end-to-end.
 
-    ``decode_stub=False`` is a REAL resize for 8-bit non-interlaced PNG
-    payloads: stdlib inflate -> unfilter -> nearest-neighbor resample ->
-    deterministic re-encode (``decode_png_pixels`` / ``nearest_resize``
-    / ``encode_png``). Other formats raise NotImplementedError — they
-    genuinely need Pillow. ``decode_stub=True`` keeps the deterministic
-    digest-derived fake so the binary-in/binary-out plumbing is
-    exercised even codec-free.
+    A REAL resize for 8-bit non-interlaced PNG payloads: stdlib inflate
+    -> unfilter -> nearest-neighbor resample -> deterministic re-encode
+    (``decode_png_pixels`` / ``nearest_resize`` / ``encode_png``).
+    Other formats raise NotImplementedError — they genuinely need
+    Pillow.
     """
 
-    def resize(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import hashlib
+    def rows_of(_id, payload):
+        try:
+            w0, h0, ch, raw = decode_png_pixels(payload)
+        except ValueError as e:
+            raise NotImplementedError(
+                f"image payload id={_id}: {e}; non-PNG resize "
+                "requires Pillow (absent)"
+            ) from e
+        resized = nearest_resize(raw, w0, h0, ch, width, height)
+        yield _id, width, height, encode_png(width, height, ch, resized)
 
-        for pdf in batches:
-            out = []
-            for _id, payload in zip(pdf[id_col], pdf[payload_col]):
-                payload = bytes(payload) if payload is not None else b""
-                if decode_stub:
-                    resized = hashlib.sha256(
-                        payload + f"{width}x{height}".encode()
-                    ).digest()
-                else:
-                    try:
-                        w0, h0, ch, raw = decode_png_pixels(payload)
-                    except ValueError as e:
-                        raise NotImplementedError(
-                            f"image payload id={_id}: {e}; non-PNG resize "
-                            "requires Pillow (absent)"
-                        ) from e
-                    resized = encode_png(
-                        width,
-                        height,
-                        ch,
-                        nearest_resize(raw, w0, h0, ch, width, height),
-                    )
-                out.append(
-                    {
-                        "id": int(_id),
-                        "width": width,
-                        "height": height,
-                        "resized_payload": resized,
-                    }
-                )
-            yield pd.DataFrame(
-                out, columns=["id", "width", "height", "resized_payload"]
-            )
-
-    cols = df.select(
-        F.col(id_col).cast("long").alias(id_col),
-        F.col(payload_col).cast(BinaryType()).alias(payload_col),
-    )
-    return cols.mapInPandas(
-        resize,
-        schema="id long, width int, height int, resized_payload binary",
+    return map_payloads(
+        df, id_col, payload_col,
+        "id long, width int, height int, resized_payload binary",
+        rows_of,
     )
 
 
@@ -1202,52 +1091,19 @@ def gif_probe(df: DataFrame, id_col: str, payload_col: str) -> DataFrame:
     indices — a whole-frame checksum that only matches an oracle if
     every decoded pixel is correct, not just the header fields."""
 
-    def probe(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for _id, payload in zip(pdf[id_col], pdf[payload_col]):
-                w, h, idx, pal = decode_gif_pixels(
-                    bytes(payload) if payload is not None else b""
-                )
-                p0 = idx[0]
-                out.append(
-                    {
-                        "id": int(_id),
-                        "width": w,
-                        "height": h,
-                        "n_px": w * h,
-                        "first_idx": p0,
-                        "first_r": pal[3 * p0],
-                        "first_g": pal[3 * p0 + 1],
-                        "first_b": pal[3 * p0 + 2],
-                        "px_index_sum": sum(idx),
-                    }
-                )
-            yield pd.DataFrame(
-                out,
-                columns=[
-                    "id",
-                    "width",
-                    "height",
-                    "n_px",
-                    "first_idx",
-                    "first_r",
-                    "first_g",
-                    "first_b",
-                    "px_index_sum",
-                ],
-            )
+    def rows_of(_id, payload):
+        w, h, idx, pal = decode_gif_pixels(payload)
+        p0 = idx[0]
+        yield (
+            _id, w, h, w * h, p0,
+            pal[3 * p0], pal[3 * p0 + 1], pal[3 * p0 + 2], sum(idx),
+        )
 
-    cols = df.select(
-        F.col(id_col).cast("long").alias(id_col),
-        F.col(payload_col).cast(BinaryType()).alias(payload_col),
-    )
-    return cols.mapInPandas(
-        probe,
-        schema=(
-            "id long, width int, height int, n_px int, first_idx int,"
-            " first_r int, first_g int, first_b int, px_index_sum long"
-        ),
+    return map_payloads(
+        df, id_col, payload_col,
+        "id long, width int, height int, n_px int, first_idx int,"
+        " first_r int, first_g int, first_b int, px_index_sum long",
+        rows_of,
     )
 
 
@@ -2506,38 +2362,15 @@ def jpeg_probe(df: DataFrame, id_col: str, payload_col: str) -> DataFrame:
     an oracle if every stage (Huffman, zig-zag, DC prediction,
     dequantize, IDCT) is correct."""
 
-    def probe(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for _id, payload in zip(pdf[id_col], pdf[payload_col]):
-                w, h, ch, raw = decode_jpeg_pixels(
-                    bytes(payload) if payload is not None else b""
-                )
-                out.append(
-                    {
-                        "id": int(_id),
-                        "width": w,
-                        "height": h,
-                        "channels": ch,
-                        "first_px": raw[0],
-                        "px_sum": sum(raw),
-                    }
-                )
-            yield pd.DataFrame(
-                out,
-                columns=["id", "width", "height", "channels", "first_px", "px_sum"],
-            )
+    def rows_of(_id, payload):
+        w, h, ch, raw = decode_jpeg_pixels(payload)
+        yield _id, w, h, ch, raw[0], sum(raw)
 
-    cols = df.select(
-        F.col(id_col).cast("long").alias(id_col),
-        F.col(payload_col).cast(BinaryType()).alias(payload_col),
-    )
-    return cols.mapInPandas(
-        probe,
-        schema=(
-            "id long, width int, height int, channels int,"
-            " first_px int, px_sum long"
-        ),
+    return map_payloads(
+        df, id_col, payload_col,
+        "id long, width int, height int, channels int,"
+        " first_px int, px_sum long",
+        rows_of,
     )
 
 
@@ -2636,42 +2469,16 @@ def y4m_frame_stats(
     plane sum) the oracle can recompute. Row explosion happens inside
     the Arrow batch — pixel planes never leave the UDF."""
 
-    def stats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for _id, payload in zip(pdf[id_col], pdf[payload_col]):
-                w, h, num, den, frames = decode_y4m_frames(
-                    bytes(payload) if payload is not None else b""
-                )
-                n = len(frames)
-                seen: set[int] = set()
-                for k in range(max_frames):
-                    t_ms = k * every_ms
-                    idx = t_ms * num // (1000 * den)
-                    if idx >= n or idx in seen:
-                        break
-                    seen.add(idx)
-                    luma = frames[idx][: w * h]
-                    out.append(
-                        {
-                            "id": int(_id),
-                            "frame_index": idx,
-                            "frame_ms": idx * 1000 * den // num,
-                            "y_first": luma[0],
-                            "y_sum": sum(luma),
-                        }
-                    )
-            yield pd.DataFrame(
-                out, columns=["id", "frame_index", "frame_ms", "y_first", "y_sum"]
-            )
+    def rows_of(_id, payload):
+        w, h, num, den, frames = decode_y4m_frames(payload)
+        for idx, ms in sampled_frames(len(frames), num, den, every_ms, max_frames):
+            luma = frames[idx][: w * h]
+            yield _id, idx, ms, luma[0], sum(luma)
 
-    cols = df.select(
-        F.col(id_col).cast("long").alias(id_col),
-        F.col(payload_col).cast(BinaryType()).alias(payload_col),
-    )
-    return cols.mapInPandas(
-        stats,
-        schema="id long, frame_index int, frame_ms long, y_first int, y_sum long",
+    return map_payloads(
+        df, id_col, payload_col,
+        "id long, frame_index int, frame_ms long, y_first int, y_sum long",
+        rows_of,
     )
 
 
@@ -2832,43 +2639,16 @@ def mjpeg_frame_stats(
     sum) an oracle can recompute. Row explosion happens inside the
     Arrow batch — neither payloads nor pixels leave the UDF."""
 
-    def stats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for _id, payload in zip(pdf[id_col], pdf[payload_col]):
-                w, h, num, den, frames = decode_avi_mjpeg_frames(
-                    bytes(payload) if payload is not None else b""
-                )
-                n = len(frames)
-                seen: set[int] = set()
-                for k in range(max_frames):
-                    t_ms = k * every_ms
-                    idx = t_ms * num // (1000 * den)
-                    if idx >= n or idx in seen:
-                        break
-                    seen.add(idx)
-                    fw, fh, ch, raw = decode_jpeg_pixels(frames[idx])
-                    out.append(
-                        {
-                            "id": int(_id),
-                            "frame_index": idx,
-                            "frame_ms": idx * 1000 * den // num,
-                            "px_first": raw[0],
-                            "px_sum": sum(raw),
-                        }
-                    )
-            yield pd.DataFrame(
-                out,
-                columns=["id", "frame_index", "frame_ms", "px_first", "px_sum"],
-            )
+    def rows_of(_id, payload):
+        _w, _h, num, den, frames = decode_avi_mjpeg_frames(payload)
+        for idx, ms in sampled_frames(len(frames), num, den, every_ms, max_frames):
+            _fw, _fh, _ch, raw = decode_jpeg_pixels(frames[idx])
+            yield _id, idx, ms, raw[0], sum(raw)
 
-    cols = df.select(
-        F.col(id_col).cast("long").alias(id_col),
-        F.col(payload_col).cast(BinaryType()).alias(payload_col),
-    )
-    return cols.mapInPandas(
-        stats,
-        schema="id long, frame_index int, frame_ms long, px_first int, px_sum long",
+    return map_payloads(
+        df, id_col, payload_col,
+        "id long, frame_index int, frame_ms long, px_first int, px_sum long",
+        rows_of,
     )
 
 
@@ -3161,16 +2941,6 @@ def _flac_read_utf8(br: _FlacBitReader) -> int:
     return v
 
 
-#: FIXED-predictor coefficients per order: x[i] = res[i] + sum c_j * x[i-1-j]
-_FLAC_FIXED_COEF = {
-    0: (),
-    1: (1,),
-    2: (2, -1),
-    3: (3, -3, 1),
-    4: (4, -6, 4, -1),
-}
-
-
 def _flac_fixed_residual(x, order: int):
     """Residual of the order-``order`` FIXED predictor = the ``order``-th
     forward difference (the identity the decoder's cumsum reconstruction
@@ -3231,12 +3001,6 @@ def _rice_param_cost(u) -> tuple[int, int]:
     costs = np.add.reduce(u[:, None] >> ks[None, :], axis=0) + n * (1 + ks)
     k = int(costs.argmin())
     return k, int(costs[k])
-
-
-def _rice_param(residuals) -> int:
-    """Smallest-cost 4-bit Rice parameter (kept for callers/tests that
-    probe it directly)."""
-    return _rice_param_cost(_zigzag_np(residuals))[0]
 
 
 def _flac_write_subframe(
@@ -3371,10 +3135,6 @@ def encode_flac(
 
 _FLAC_BLOCKSIZE_CODE = {1: 192, **{n: 576 << (n - 2) for n in range(2, 6)},
                         **{n: 256 << (n - 8) for n in range(8, 16)}}
-_FLAC_SAMPLE_RATES = {
-    1: 88200, 2: 176400, 3: 192000, 4: 8000, 5: 16000, 6: 22050,
-    7: 24000, 8: 32000, 9: 44100, 10: 48000, 11: 96000,
-}
 
 
 def _flac_bit_cache(payload: bytes):
@@ -4135,9 +3895,8 @@ _OGG_CRC = _ogg_crc_table()
 
 def _ogg_crc_bytewise(data: bytes) -> int:
     # The textbook table walk: O(bytes) of INTERPRETER work. Kept as
-    # the independent reference implementation the fast path is
-    # cross-checked against (test_multimodal_decode.py) and as the
-    # fallback if numpy is ever absent.
+    # the independent reference implementation ``_ogg_crc`` is
+    # cross-checked against (test_multimodal_decode.py).
     r = 0
     for byte in data:
         r = ((r << 8) & 0xFFFFFFFF) ^ _OGG_CRC[(r >> 24) ^ byte]
@@ -4170,11 +3929,9 @@ def _ogg_crc(data: bytes) -> int:
     (ADVICE r6). Cross-checked against ``_ogg_crc_bytewise`` in the
     test suite."""
     global _REV8
-    try:
-        import numpy as np
-    except ImportError:  # pragma: no cover - numpy is baked in
-        return _ogg_crc_bytewise(data)
     import zlib
+
+    import numpy as np
 
     if _REV8 is None:
         t = np.arange(256, dtype=np.uint16)
@@ -5692,37 +5449,14 @@ def sniff_media(df: DataFrame, id_col: str, payload_col: str) -> DataFrame:
     pure map pass, no shuffle; the triage report downstream aggregates
     5 small columns."""
 
-    def sniff(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for _id, payload in zip(pdf[id_col], pdf[payload_col]):
-                container, codec, ok, reason = sniff_media_payload(
-                    bytes(payload) if payload is not None else b""
-                )
-                out.append(
-                    {
-                        "id": int(_id),
-                        "container": container,
-                        "codec": codec,
-                        "decodable_here": ok,
-                        "reason": reason,
-                    }
-                )
-            yield pd.DataFrame(
-                out,
-                columns=["id", "container", "codec", "decodable_here", "reason"],
-            )
+    def rows_of(_id, payload):
+        yield (_id, *sniff_media_payload(payload))
 
-    cols = df.select(
-        F.col(id_col).cast("long").alias(id_col),
-        F.col(payload_col).cast(BinaryType()).alias(payload_col),
-    )
-    return cols.mapInPandas(
-        sniff,
-        schema=(
-            "id long, container string, codec string, "
-            "decodable_here boolean, reason string"
-        ),
+    return map_payloads(
+        df, id_col, payload_col,
+        "id long, container string, codec string, "
+        "decodable_here boolean, reason string",
+        rows_of,
     )
 
 
@@ -5751,49 +5485,24 @@ def audio_frame_features(
     shape: one narrow mapInPandas pass; at 100 TB the frame rows (4
     ints) are orders of magnitude smaller than the audio they
     summarize."""
-    if on_error not in ("fail", "skip"):
-        raise ValueError("on_error must be 'fail' or 'skip'")
 
-    def feats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def rows_of(_id, payload):
         import numpy as np
 
-        for pdf in batches:
-            out = []
-            for _id, payload in zip(pdf[id_col], pdf[payload_col]):
-                try:
-                    _rate, samples = decode_audio_samples(
-                        bytes(payload) if payload is not None else b""
-                    )
-                except Exception:
-                    if on_error == "fail":
-                        raise
-                    continue
-                arr = np.asarray(samples, dtype=np.int64)
-                n_frames = len(arr) // frame_len
-                for k in range(n_frames):
-                    fr = arr[k * frame_len : (k + 1) * frame_len]
-                    spec = np.abs(np.fft.rfft(fr.astype(np.float64)))
-                    out.append(
-                        {
-                            "id": int(_id),
-                            "frame_index": k,
-                            "energy_sum": int((fr * fr).sum()),
-                            "peak_abs": int(np.abs(fr).max()),
-                            "dom_bin": int(np.argmax(spec[1:]) + 1),
-                        }
-                    )
-            yield pd.DataFrame(
-                out,
-                columns=["id", "frame_index", "energy_sum", "peak_abs", "dom_bin"],
+        _rate, samples = decode_audio_samples(payload)
+        arr = np.asarray(samples, dtype=np.int64)
+        for k in range(len(arr) // frame_len):
+            fr = arr[k * frame_len : (k + 1) * frame_len]
+            spec = np.abs(np.fft.rfft(fr.astype(np.float64)))
+            yield (
+                _id, k, int((fr * fr).sum()), int(np.abs(fr).max()),
+                int(np.argmax(spec[1:]) + 1),
             )
 
-    cols = df.select(
-        F.col(id_col).cast("long").alias(id_col),
-        F.col(payload_col).cast(BinaryType()).alias(payload_col),
-    )
-    return cols.mapInPandas(
-        feats,
-        schema="id long, frame_index int, energy_sum long, peak_abs int, dom_bin int",
+    return map_payloads(
+        df, id_col, payload_col,
+        "id long, frame_index int, energy_sum long, peak_abs int, dom_bin int",
+        rows_of, on_error=on_error,
     )
 
 
@@ -5889,78 +5598,31 @@ def dhash_images(
     Scale shape: one Arrow-batched mapInPandas projection — payloads
     never leave the UDF, the output row is 6 scalars; downstream dedup
     shuffles 8-byte fingerprints, never pixels."""
-    if on_error not in ("fail", "skip", "tag"):
-        raise ValueError("on_error must be 'fail', 'skip' or 'tag'")
 
-    def hashes(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def rows_of(_id, payload):
         import numpy as np
 
-        for pdf in batches:
-            out = []
-            for _id, payload in zip(pdf[id_col], pdf[payload_col]):
-                try:
-                    pb = bytes(payload) if payload is not None else b""
-                    w, h, ch, raw = decode_image_pixels(pb)
-                    if normalize_orientation:
-                        o = exif_orientation(pb)
-                        if o != 1:
-                            w, h, raw = orient_pixels(raw, w, h, ch, o)
-                except Exception as e:
-                    if on_error == "fail":
-                        raise
-                    if on_error == "tag":
-                        out.append(
-                            {
-                                "id": int(_id),
-                                "width": None,
-                                "height": None,
-                                "dhash_hi": None,
-                                "dhash_lo": None,
-                                "err": type(e).__name__,
-                            }
-                        )
-                    continue
-                a = (
-                    np.frombuffer(raw, dtype=np.uint8)
-                    .reshape(h, w, ch)
-                    .astype(np.int64)
-                )
-                if ch >= 3:
-                    g = (299 * a[:, :, 0] + 587 * a[:, :, 1] + 114 * a[:, :, 2]) // 1000
-                else:
-                    g = a[:, :, 0]
-                ys = (np.arange(8) * h) // 8
-                xs = (np.arange(9) * w) // 9
-                s = g[np.ix_(ys, xs)]
-                bits = (s[:, :-1] < s[:, 1:]).astype(np.uint64).ravel()
-                val = int((bits << np.arange(64, dtype=np.uint64)).sum())
-                out.append(
-                    {
-                        "id": int(_id),
-                        "width": w,
-                        "height": h,
-                        "dhash_hi": (val >> 32) & 0xFFFFFFFF,
-                        "dhash_lo": val & 0xFFFFFFFF,
-                        "err": None,
-                    }
-                )
-            # object dtype: a tagged batch mixes ints and None — pandas
-            # would otherwise coerce to float64/NaN, which Arrow refuses
-            # to safe-cast back to the integer schema
-            yield pd.DataFrame(
-                out,
-                columns=["id", "width", "height", "dhash_hi", "dhash_lo", "err"],
-                dtype=object,
-            )
+        w, h, ch, raw = decode_image_pixels(payload)
+        if normalize_orientation:
+            o = exif_orientation(payload)
+            if o != 1:
+                w, h, raw = orient_pixels(raw, w, h, ch, o)
+        a = np.frombuffer(raw, dtype=np.uint8).reshape(h, w, ch).astype(np.int64)
+        if ch >= 3:
+            g = (299 * a[:, :, 0] + 587 * a[:, :, 1] + 114 * a[:, :, 2]) // 1000
+        else:
+            g = a[:, :, 0]
+        ys = (np.arange(8) * h) // 8
+        xs = (np.arange(9) * w) // 9
+        s = g[np.ix_(ys, xs)]
+        bits = (s[:, :-1] < s[:, 1:]).astype(np.uint64).ravel()
+        val = int((bits << np.arange(64, dtype=np.uint64)).sum())
+        yield _id, w, h, (val >> 32) & 0xFFFFFFFF, val & 0xFFFFFFFF, None
 
-    cols = df.select(
-        F.col(id_col).cast("long").alias(id_col),
-        F.col(payload_col).cast(BinaryType()).alias(payload_col),
-    )
-    return cols.mapInPandas(
-        hashes,
-        schema=(
-            "id long, width int, height int, dhash_hi long, dhash_lo long,"
-            " err string"
-        ),
+    return map_payloads(
+        df, id_col, payload_col,
+        "id long, width int, height int, dhash_hi long, dhash_lo long,"
+        " err string",
+        rows_of, on_error=on_error,
+        tag_row=lambda _id, e: (_id, None, None, None, None, type(e).__name__),
     )

@@ -289,7 +289,6 @@ def kmeans_cells(
     vec_col: str,
     k: int = 8,
     n_iter: int = 2,
-    assign_impl: str = "pandas",
 ) -> tuple[DataFrame, list[tuple[int, list[float]]]]:
     """Deterministic Lloyd k-means over an embedding column, expressed as
     DataFrame ops — the coarse quantizer an IVF index is built on.
@@ -310,11 +309,11 @@ def kmeans_cells(
     The iterative driver loop is over *rounds* (each one Spark job: a
     zero-shuffle assignment + one groupBy(cell) shuffle); centroids
     (k·dim doubles) are collected per round and re-embedded as literals —
-    the Python float round-trip is exact IEEE754. Assignment has two
-    bit-identical implementations (``assign_impl``): "pandas" (default) —
-    vectorized numpy with sequential accumulation over dims, Arrow
-    batches; "expr" — pure JVM expression fold (``_cell_dist_structs``).
-    Tests assert they agree exactly; the oracle gate checks both orders.
+    the Python float round-trip is exact IEEE754. Assignment is
+    ``_assign_cells_pandas`` (vectorized numpy with sequential
+    accumulation over dims, Arrow batches); tests assert every round's
+    assignment equals the JVM expression fold (``_cell_dist_structs``)
+    on that round's centroids.
 
     Scale note: the sorted-member fold is the cross-engine-exact gate
     choice; at corpus scale swap the update for decimal-quantized partial
@@ -342,17 +341,9 @@ def kmeans_cells(
     cents = [(i, list(r["v"])) for i, r in enumerate(init)]
     dim = len(cents[0][1])
 
-    def assign(c):
-        if assign_impl == "pandas":
-            return _assign_cells_pandas(dbl, c)
-        best = F.array_min(_cell_dist_structs(c))
-        return dbl.select(
-            "id", "v", best["cell"].alias("cell"), best["d"].alias("sq_dist")
-        )
-
     assigned = None
     for it in range(n_iter + 1):
-        assigned = assign(cents)
+        assigned = _assign_cells_pandas(dbl, cents)
         if it == n_iter:
             break
         upd = (
@@ -790,7 +781,6 @@ def pq_kmeans(
     m: int = 4,
     ksub: int = 8,
     n_iter: int = 2,
-    assign_impl: str = "pandas",
     dim: int | None = None,
 ) -> tuple[DataFrame, list[list[list[float]]]]:
     """Product-quantizer training: split every vector into ``m``
@@ -839,19 +829,9 @@ def pq_kmeans(
         for s in range(m)
     ]
 
-    def assign(c):
-        if assign_impl == "pandas":
-            return _assign_subs_pandas(subs, c)
-        best = F.array_min(_sub_dist_structs(_cents_literal(c)))
-        return subs.select(
-            "id", "s", "sv",
-            best["code"].alias("code"),
-            best["d"].alias("sq_err"),
-        )
-
     assigned = None
     for it in range(n_iter + 1):
-        assigned = assign(cents)
+        assigned = _assign_subs_pandas(subs, cents)
         if it == n_iter:
             break
         upd = (

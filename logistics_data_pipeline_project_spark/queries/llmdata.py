@@ -48,6 +48,22 @@ from ..operators.text import (
 )
 from .registry import register
 
+#: Python tasks of the per-document payload stages (``_doc_rows``)
+_DOC_TASKS = 32
+
+
+def _doc_rows(spark, sf_dir, rows_of, schema="doc_id long, payload binary", setup=None):
+    """``map_rows`` over the corpus doc_ids: ``rows_of(doc_id)``, or
+    ``rows_of(setup(), doc_id)`` with a per-task ``setup``, yields each
+    document's output tuples.  The bare ids are hash-spread over
+    ``_DOC_TASKS`` partitions first (one cheap shuffle of longs): the id
+    column is tiny but the per-document codec work is CPU-bound."""
+    from ..operators.rowmap import map_rows
+
+    docs = load(spark, sf_dir, "documents").select("doc_id").repartition(_DOC_TASKS, "doc_id")
+    return map_rows(docs, schema, rows_of, setup=setup)
+
+
 # ---------------------------------------------------------------------------
 # q21 — exact dedup (hash-groupBy)
 # ---------------------------------------------------------------------------
@@ -4271,7 +4287,7 @@ def q161_png_resize_audit(spark: SparkSession, sf_dir: str):
     """REAL image-codec pipeline over Arrow batches
     (operators/multimodal.py): per document a genuine 8-bit grayscale
     PNG is encoded (pixel (x,y) = (doc_id + 3x + 5y) mod 256), resized
-    {w}x{h} nearest-neighbor through the non-stub path — stdlib inflate
+    {w}x{h} nearest-neighbor — stdlib inflate
     -> scanline unfilter -> resample -> deterministic re-encode — and
     the resized payload is then RE-DECODED by png_probe, whose top-left
     pixel must equal the source formula at (0,0): the oracle checks a
@@ -4280,46 +4296,22 @@ def q161_png_resize_audit(spark: SparkSession, sf_dir: str):
     (payload bytes never row-trip through the driver); at scale the
     payload column is the partition-size dominator, so the stages
     inherit decode_media's batching notes."""
-    from ..operators.multimodal import png_probe, resize_images
+    from ..operators.multimodal import encode_png, png_probe, resize_images
+    from ..operators.rowmap import map_rows
 
-    def gen(batches):
-        from ..operators.multimodal import encode_png
-
-        for pdf in batches:
-            out = []
-            for doc_id in pdf["doc_id"]:
-                doc_id = int(doc_id)
-                w, h = 4 + doc_id % 5, 3 + doc_id % 4
-                raw = bytes(
-                    (doc_id + 3 * x + 5 * y) % 256
-                    for y in range(h)
-                    for x in range(w)
-                )
-                out.append(
-                    {
-                        "doc_id": doc_id,
-                        "src_w": w,
-                        "src_h": h,
-                        "payload": encode_png(w, h, 1, raw),
-                    }
-                )
-            import pandas as _pd
-
-            yield _pd.DataFrame(
-                out, columns=["doc_id", "src_w", "src_h", "payload"]
-            )
+    def rows_of(doc_id):
+        w, h = 4 + doc_id % 5, 3 + doc_id % 4
+        raw = bytes(
+            (doc_id + 3 * x + 5 * y) % 256 for y in range(h) for x in range(w)
+        )
+        yield doc_id, w, h, encode_png(w, h, 1, raw)
 
     docs = load(spark, sf_dir, "documents").select("doc_id")
-    gen_df = docs.mapInPandas(
-        gen, schema="doc_id long, src_w int, src_h int, payload binary"
+    gen_df = map_rows(
+        docs, "doc_id long, src_w int, src_h int, payload binary", rows_of
     )
     resized = resize_images(
-        gen_df,
-        "doc_id",
-        "payload",
-        width=_PNG_OUT_W,
-        height=_PNG_OUT_H,
-        decode_stub=False,
+        gen_df, "doc_id", "payload", width=_PNG_OUT_W, height=_PNG_OUT_H
     )
     probe = png_probe(resized, "id", "resized_payload").select(
         F.col("id").alias("doc_id"),
@@ -5104,31 +5096,20 @@ def q173_gif_decode_audit(spark: SparkSession, sf_dir: str):
     PNG audit's sibling for the LZW family.  Both stages are
     iterator-style mapInPandas (payload bytes never visit the driver);
     scale notes inherit decode_media's batching contract."""
-    from ..operators.multimodal import gif_probe
+    from ..operators.multimodal import encode_gif, gif_probe
+    from ..operators.rowmap import map_rows
 
-    def gen(batches):
-        from ..operators.multimodal import encode_gif
+    pal = bytes((i * k) % 256 for i in range(256) for k in (1, 2, 3))
 
-        pal = bytes(
-            (i * k) % 256 for i in range(256) for k in (1, 2, 3)
+    def rows_of(doc_id):
+        w, h = 3 + doc_id % 4, 2 + doc_id % 3
+        idx = bytes(
+            (doc_id + 7 * x + 11 * y) % 256 for y in range(h) for x in range(w)
         )
-        for pdf in batches:
-            out = []
-            for doc_id in pdf["doc_id"]:
-                doc_id = int(doc_id)
-                w, h = 3 + doc_id % 4, 2 + doc_id % 3
-                idx = bytes(
-                    (doc_id + 7 * x + 11 * y) % 256
-                    for y in range(h)
-                    for x in range(w)
-                )
-                out.append({"doc_id": doc_id, "payload": encode_gif(w, h, idx, pal)})
-            import pandas as _pd
-
-            yield _pd.DataFrame(out, columns=["doc_id", "payload"])
+        yield doc_id, encode_gif(w, h, idx, pal)
 
     docs = load(spark, sf_dir, "documents").select("doc_id")
-    gif_df = docs.mapInPandas(gen, schema="doc_id long, payload binary")
+    gif_df = map_rows(docs, "doc_id long, payload binary", rows_of)
     return gif_probe(gif_df, "doc_id", "payload").select(
         F.col("id").alias("doc_id"),
         "width",
@@ -6760,36 +6741,24 @@ def q199_jpeg_codec_audit(spark: SparkSession, sf_dir: str):
     shape: generation and decode are iterator mapInPandas stages; no
     payload ever reaches the driver; one broadcast-free narrow pipeline
     plus the final checksum join on doc_id."""
-    from ..operators.multimodal import jpeg_probe
+    from ..operators.multimodal import encode_jpeg, jpeg_probe
 
     w_px, h_px = _JPEG_TILES_X * 8, _JPEG_TILES_Y * 8
 
-    def gen(batches):
-        import numpy as _np
-        import pandas as _pd
-
-        from ..operators.multimodal import encode_jpeg
-
+    def tiles():
         # tile index per pixel is doc-independent: build it once per task
-        tiles = (
-            (_np.arange(h_px)[:, None] // 8) * _JPEG_TILES_X
-            + _np.arange(w_px)[None, :] // 8
-        ).ravel()
-        for pdf in batches:
-            out = []
-            for doc_id in pdf["doc_id"]:
-                doc_id = int(doc_id)
-                raw = ((doc_id * 7 + 31 * tiles) % 256).astype(_np.uint8).tobytes()
-                out.append(
-                    {"doc_id": doc_id, "payload": encode_jpeg(w_px, h_px, raw, qtable=[8] * 64)}
-                )
-            yield _pd.DataFrame(out, columns=["doc_id", "payload"])
+        import numpy as np
 
-    # the id column is tiny but the codec work is CPU-bound: spread the
-    # generate+encode+decode pipeline across executors before the
-    # mapInPandas stages (one cheap shuffle of bare longs).
-    docs = load(spark, sf_dir, "documents").select("doc_id").repartition(32, "doc_id")
-    gen_df = docs.mapInPandas(gen, schema="doc_id long, payload binary")
+        return (
+            (np.arange(h_px)[:, None] // 8) * _JPEG_TILES_X
+            + np.arange(w_px)[None, :] // 8
+        ).ravel()
+
+    def rows_of(tiles, doc_id):
+        raw = ((doc_id * 7 + 31 * tiles) % 256).astype("uint8").tobytes()
+        yield doc_id, encode_jpeg(w_px, h_px, raw, qtable=[8] * 64)
+
+    gen_df = _doc_rows(spark, sf_dir, rows_of, setup=tiles)
     return jpeg_probe(gen_df, "doc_id", "payload").select(
         F.col("id").alias("doc_id"),
         "width",
@@ -6844,31 +6813,16 @@ def q200_video_frame_audit(spark: SparkSession, sf_dir: str):
     honest pyav boundary.  Scale shape: two narrow mapInPandas stages
     after an explicit repartition of bare ids — frame planes never
     shuffle and never reach the driver."""
-    from ..operators.multimodal import y4m_frame_stats
+    from ..operators.multimodal import encode_y4m, y4m_frame_stats
 
-    def gen(batches):
-        import pandas as _pd
+    def rows_of(doc_id):
+        frames = [
+            bytes([(doc_id * 11 + 13 * i) % 256]) * (_Y4M_W * _Y4M_H)
+            for i in range(1 + doc_id % 4)
+        ]
+        yield doc_id, encode_y4m(_Y4M_W, _Y4M_H, frames, fps=(10, 1))
 
-        from ..operators.multimodal import encode_y4m
-
-        for pdf in batches:
-            out = []
-            for doc_id in pdf["doc_id"]:
-                doc_id = int(doc_id)
-                frames = [
-                    bytes([(doc_id * 11 + 13 * i) % 256]) * (_Y4M_W * _Y4M_H)
-                    for i in range(1 + doc_id % 4)
-                ]
-                out.append(
-                    {
-                        "doc_id": doc_id,
-                        "payload": encode_y4m(_Y4M_W, _Y4M_H, frames, fps=(10, 1)),
-                    }
-                )
-            yield _pd.DataFrame(out, columns=["doc_id", "payload"])
-
-    docs = load(spark, sf_dir, "documents").select("doc_id").repartition(32, "doc_id")
-    gen_df = docs.mapInPandas(gen, schema="doc_id long, payload binary")
+    gen_df = _doc_rows(spark, sf_dir, rows_of)
     return y4m_frame_stats(
         gen_df, "doc_id", "payload", every_ms=100, max_frames=8
     ).select(
@@ -7548,40 +7502,26 @@ def q209_jpeg_color_audit(spark: SparkSession, sf_dir: str):
     RGB pixel sum in closed form.  Chromatic content is lossy by nature
     and lives in the property tests; this query certifies the color
     STRUCTURE bit-for-bit.  Same two-stage mapInPandas shape as q199."""
-    from ..operators.multimodal import jpeg_probe
+    from ..operators.multimodal import encode_jpeg, jpeg_probe
 
     w_px, h_px = _JPEG_TILES_X * 8, _JPEG_TILES_Y * 8
 
-    def gen(batches):
-        import numpy as _np
-        import pandas as _pd
+    def tiles():
+        import numpy as np
 
-        from ..operators.multimodal import encode_jpeg
-
-        tiles = _np.repeat(
+        return np.repeat(
             (
-                (_np.arange(h_px)[:, None] // 8) * _JPEG_TILES_X
-                + _np.arange(w_px)[None, :] // 8
+                (np.arange(h_px)[:, None] // 8) * _JPEG_TILES_X
+                + np.arange(w_px)[None, :] // 8
             ).ravel(),
             3,  # R=G=B
         )
-        for pdf in batches:
-            out = []
-            for doc_id in pdf["doc_id"]:
-                doc_id = int(doc_id)
-                raw = ((doc_id * 13 + 29 * tiles) % 256).astype(_np.uint8).tobytes()
-                out.append(
-                    {
-                        "doc_id": doc_id,
-                        "payload": encode_jpeg(
-                            w_px, h_px, raw, qtable=[8] * 64, channels=3
-                        ),
-                    }
-                )
-            yield _pd.DataFrame(out, columns=["doc_id", "payload"])
 
-    docs = load(spark, sf_dir, "documents").select("doc_id").repartition(32, "doc_id")
-    gen_df = docs.mapInPandas(gen, schema="doc_id long, payload binary")
+    def rows_of(tiles, doc_id):
+        raw = ((doc_id * 13 + 29 * tiles) % 256).astype("uint8").tobytes()
+        yield doc_id, encode_jpeg(w_px, h_px, raw, qtable=[8] * 64, channels=3)
+
+    gen_df = _doc_rows(spark, sf_dir, rows_of, setup=tiles)
     return jpeg_probe(gen_df, "doc_id", "payload").select(
         F.col("id").alias("doc_id"),
         "width",
@@ -7725,52 +7665,38 @@ def q213_jpeg_subsampled_audit(spark: SparkSession, sf_dir: str):
     iterator-mapInPandas pipeline as q199/q209 — payloads never touch
     the driver, one cheap shuffle of bare longs fans the CPU-bound
     codec work across executors."""
-    from ..operators.multimodal import jpeg_probe
+    from ..operators.multimodal import encode_jpeg, jpeg_probe
 
     w_px, h_px = _JPEG_SS_W, _JPEG_SS_H
     modes = (("420", 16, 16, 0), ("422", 16, 8, 101))
 
-    def gen(batches):
-        import numpy as _np
-        import pandas as _pd
-
-        from ..operators.multimodal import encode_jpeg
-
+    def mode_tiles():
         # per-mode pixel->tile maps are doc-independent: build once per task
-        mode_tiles = []
+        import numpy as np
+
+        out = []
         for mode, mw, mh, moff in modes:
             mcux = -(-w_px // mw)
-            tiles = _np.repeat(
+            tiles = np.repeat(
                 (
-                    (_np.arange(h_px)[:, None] // mh) * mcux
-                    + _np.arange(w_px)[None, :] // mw
+                    (np.arange(h_px)[:, None] // mh) * mcux
+                    + np.arange(w_px)[None, :] // mw
                 ).ravel(),
                 3,
             )
-            mode_tiles.append((mode, moff, tiles))
-        for pdf in batches:
-            out = []
-            for doc_id in pdf["doc_id"]:
-                doc_id = int(doc_id)
-                for mi, (mode, moff, tiles) in enumerate(mode_tiles):
-                    raw = (
-                        ((doc_id * 11 + 37 * tiles + moff) % 256)
-                        .astype(_np.uint8)
-                        .tobytes()
-                    )
-                    out.append(
-                        {
-                            "id": doc_id * 2 + mi,
-                            "payload": encode_jpeg(
-                                w_px, h_px, raw, qtable=[8] * 64,
-                                channels=3, subsampling=mode,
-                            ),
-                        }
-                    )
-            yield _pd.DataFrame(out, columns=["id", "payload"])
+            out.append((mode, moff, tiles))
+        return out
 
-    docs = load(spark, sf_dir, "documents").select("doc_id").repartition(32, "doc_id")
-    gen_df = docs.mapInPandas(gen, schema="id long, payload binary")
+    def rows_of(mode_tiles, doc_id):
+        for mi, (mode, moff, tiles) in enumerate(mode_tiles):
+            raw = ((doc_id * 11 + 37 * tiles + moff) % 256).astype("uint8").tobytes()
+            yield doc_id * 2 + mi, encode_jpeg(
+                w_px, h_px, raw, qtable=[8] * 64, channels=3, subsampling=mode
+            )
+
+    gen_df = _doc_rows(
+        spark, sf_dir, rows_of, schema="id long, payload binary", setup=mode_tiles
+    )
     return jpeg_probe(gen_df, "id", "payload").select(
         (F.col("id") / 2).cast("long").alias("doc_id"),
         F.when(F.col("id") % 2 == 0, F.lit("420")).otherwise(F.lit("422")).alias("mode"),
@@ -7825,37 +7751,26 @@ def q214_mjpeg_frame_audit(spark: SparkSession, sf_dir: str):
     Scale shape: two iterator-mapInPandas stages (generate+mux, then
     sample+decode); payloads and pixels never leave the UDFs; one cheap
     shuffle of bare longs spreads the CPU-bound codec work."""
-    from ..operators.multimodal import mjpeg_frame_stats
+    from ..operators.multimodal import (
+        encode_avi_mjpeg,
+        encode_jpeg,
+        mjpeg_frame_stats,
+    )
 
     w_px, h_px = _MJPEG_W, _MJPEG_H
 
-    def gen(batches):
-        import pandas as _pd
+    def rows_of(doc_id):
+        frames = [
+            encode_jpeg(
+                w_px, h_px,
+                bytes([(doc_id * 23 + 19 * k) % 256]) * (w_px * h_px * 3),
+                qtable=[8] * 64, channels=3, subsampling="420",
+            )
+            for k in range(3 + doc_id % 5)
+        ]
+        yield doc_id, encode_avi_mjpeg(w_px, h_px, frames, fps=(4, 1))
 
-        from ..operators.multimodal import encode_avi_mjpeg, encode_jpeg
-
-        for pdf in batches:
-            out = []
-            for doc_id in pdf["doc_id"]:
-                doc_id = int(doc_id)
-                frames = [
-                    encode_jpeg(
-                        w_px, h_px,
-                        bytes([(doc_id * 23 + 19 * k) % 256]) * (w_px * h_px * 3),
-                        qtable=[8] * 64, channels=3, subsampling="420",
-                    )
-                    for k in range(3 + doc_id % 5)
-                ]
-                out.append(
-                    {
-                        "doc_id": doc_id,
-                        "payload": encode_avi_mjpeg(w_px, h_px, frames, fps=(4, 1)),
-                    }
-                )
-            yield _pd.DataFrame(out, columns=["doc_id", "payload"])
-
-    docs = load(spark, sf_dir, "documents").select("doc_id").repartition(32, "doc_id")
-    gen_df = docs.mapInPandas(gen, schema="doc_id long, payload binary")
+    gen_df = _doc_rows(spark, sf_dir, rows_of)
     return mjpeg_frame_stats(gen_df, "doc_id", "payload", every_ms=500).select(
         F.col("id").alias("doc_id"),
         "frame_index",
@@ -8363,31 +8278,16 @@ def q219_audio_spectral_audit(spark: SparkSession, sf_dir: str):
     two iterator-mapInPandas stages (synthesize, then decode+FFT);
     samples never leave the UDFs; one cheap shuffle of bare longs
     spreads the CPU-bound DSP."""
-    from ..operators.multimodal import audio_frame_features
+    from ..operators.multimodal import audio_frame_features, encode_wav_pcm16
 
-    def gen(batches):
-        import pandas as _pd
+    def rows_of(doc_id):
+        period = 2 ** (1 + doc_id % 5)
+        amp = 1000 + (doc_id % 7) * 500
+        n = _AUDIO_FRAME * (2 + doc_id % 3)
+        samples = [amp if (i % period) < period // 2 else -amp for i in range(n)]
+        yield doc_id, encode_wav_pcm16(samples)
 
-        from ..operators.multimodal import encode_wav_pcm16
-
-        for pdf in batches:
-            out = []
-            for doc_id in pdf["doc_id"]:
-                doc_id = int(doc_id)
-                period = 2 ** (1 + doc_id % 5)
-                amp = 1000 + (doc_id % 7) * 500
-                n = _AUDIO_FRAME * (2 + doc_id % 3)
-                samples = [
-                    amp if (i % period) < period // 2 else -amp
-                    for i in range(n)
-                ]
-                out.append(
-                    {"doc_id": doc_id, "payload": encode_wav_pcm16(samples)}
-                )
-            yield _pd.DataFrame(out, columns=["doc_id", "payload"])
-
-    docs = load(spark, sf_dir, "documents").select("doc_id").repartition(32, "doc_id")
-    gen_df = docs.mapInPandas(gen, schema="doc_id long, payload binary")
+    gen_df = _doc_rows(spark, sf_dir, rows_of)
     return audio_frame_features(
         gen_df, "doc_id", "payload", frame_len=_AUDIO_FRAME
     ).select(
@@ -8489,29 +8389,18 @@ def q220_image_dhash_audit(spark: SparkSession, sf_dir: str):
     (the q199/q219 pattern, now for the image-dedup fingerprint).
     Scale shape: generate and hash are iterator-mapInPandas stages;
     payloads never leave the UDFs; the result is 5 scalars per image."""
-    from ..operators.multimodal import dhash_images
+    from ..operators.multimodal import dhash_images, encode_gif, encode_png
 
-    def gen(batches):
-        import pandas as _pd
+    gray_palette = bytes(v for i in range(256) for v in (i, i, i))
 
-        from ..operators.multimodal import encode_gif, encode_png
+    def rows_of(doc_id):
+        raw = _dhash_pixels(doc_id)
+        if doc_id % 2 == 0:
+            yield doc_id, encode_png(_DH_W, _DH_H, 1, raw)
+        else:
+            yield doc_id, encode_gif(_DH_W, _DH_H, raw, gray_palette)
 
-        gray_palette = bytes(v for i in range(256) for v in (i, i, i))
-        for pdf in batches:
-            out = []
-            for doc_id in pdf["doc_id"]:
-                doc_id = int(doc_id)
-                raw = _dhash_pixels(doc_id)
-                payload = (
-                    encode_png(_DH_W, _DH_H, 1, raw)
-                    if doc_id % 2 == 0
-                    else encode_gif(_DH_W, _DH_H, raw, gray_palette)
-                )
-                out.append({"doc_id": doc_id, "payload": payload})
-            yield _pd.DataFrame(out, columns=["doc_id", "payload"])
-
-    docs = load(spark, sf_dir, "documents").select("doc_id").repartition(32, "doc_id")
-    gen_df = docs.mapInPandas(gen, schema="doc_id long, payload binary")
+    gen_df = _doc_rows(spark, sf_dir, rows_of)
     return dhash_images(gen_df, "doc_id", "payload").select(
         F.col("id").alias("doc_id"), "width", "height", "dhash_hi", "dhash_lo"
     )
@@ -8571,32 +8460,17 @@ def q221_image_neardup_pairs(spark: SparkSession, sf_dir: str):
     stages; the LSH join shuffles only (band, 16-bit key, 8-byte
     fingerprint) — at 100 TB the pair stage never touches image bytes."""
     from ..operators.dedup import hamming_near_pairs
-    from ..operators.multimodal import dhash_images
+    from ..operators.multimodal import dhash_images, encode_png
 
-    def gen(batches):
-        import pandas as _pd
+    def rows_of(doc_id):
+        g, v = doc_id // 4, doc_id % 4
+        raw = bytearray(_dhash_pixels(g))
+        if v > 0:
+            i = 2 * v * _DH_W + 2 * v
+            raw[i] = (raw[i] + 128) % 256
+        yield doc_id, encode_png(_DH_W, _DH_H, 1, bytes(raw))
 
-        from ..operators.multimodal import encode_png
-
-        for pdf in batches:
-            out = []
-            for doc_id in pdf["doc_id"]:
-                doc_id = int(doc_id)
-                g, v = doc_id // 4, doc_id % 4
-                raw = bytearray(_dhash_pixels(g))
-                if v > 0:
-                    i = 2 * v * _DH_W + 2 * v
-                    raw[i] = (raw[i] + 128) % 256
-                out.append(
-                    {
-                        "doc_id": doc_id,
-                        "payload": encode_png(_DH_W, _DH_H, 1, bytes(raw)),
-                    }
-                )
-            yield _pd.DataFrame(out, columns=["doc_id", "payload"])
-
-    docs = load(spark, sf_dir, "documents").select("doc_id").repartition(32, "doc_id")
-    gen_df = docs.mapInPandas(gen, schema="doc_id long, payload binary")
+    gen_df = _doc_rows(spark, sf_dir, rows_of)
     fp = dhash_images(gen_df, "doc_id", "payload")
     return hamming_near_pairs(
         fp.select(F.col("id").alias("doc_id"), "dhash_hi", "dhash_lo"),
@@ -8650,37 +8524,25 @@ def q222_jpeg_progressive_audit(spark: SparkSession, sf_dir: str):
     correction bit, band boundary or DC bitplane breaks the whole-image
     checksum.  Scale shape: identical to q199 — two iterator
     mapInPandas stages, payloads never leave the UDFs."""
-    from ..operators.multimodal import jpeg_probe
+    from ..operators.multimodal import encode_jpeg, jpeg_probe
 
     w_px, h_px = _PJPEG_TX * 8, _PJPEG_TY * 8
 
-    def gen(batches):
-        import numpy as _np
-        import pandas as _pd
+    def tiles():
+        import numpy as np
 
-        from ..operators.multimodal import encode_jpeg
-
-        tiles = (
-            (_np.arange(h_px)[:, None] // 8) * _PJPEG_TX
-            + _np.arange(w_px)[None, :] // 8
+        return (
+            (np.arange(h_px)[:, None] // 8) * _PJPEG_TX
+            + np.arange(w_px)[None, :] // 8
         ).ravel()
-        for pdf in batches:
-            out = []
-            for doc_id in pdf["doc_id"]:
-                doc_id = int(doc_id)
-                raw = ((doc_id * 13 + 41 * tiles) % 256).astype(_np.uint8).tobytes()
-                out.append(
-                    {
-                        "doc_id": doc_id,
-                        "payload": encode_jpeg(
-                            w_px, h_px, raw, qtable=[8] * 64, progressive=True
-                        ),
-                    }
-                )
-            yield _pd.DataFrame(out, columns=["doc_id", "payload"])
 
-    docs = load(spark, sf_dir, "documents").select("doc_id").repartition(32, "doc_id")
-    gen_df = docs.mapInPandas(gen, schema="doc_id long, payload binary")
+    def rows_of(tiles, doc_id):
+        raw = ((doc_id * 13 + 41 * tiles) % 256).astype("uint8").tobytes()
+        yield doc_id, encode_jpeg(
+            w_px, h_px, raw, qtable=[8] * 64, progressive=True
+        )
+
+    gen_df = _doc_rows(spark, sf_dir, rows_of, setup=tiles)
     return jpeg_probe(gen_df, "doc_id", "payload").select(
         F.col("id").alias("doc_id"),
         "width",
@@ -8966,26 +8828,15 @@ def q226_decode_quarantine_audit(spark: SparkSession, sf_dir: str):
     identical to q220 — the try/except lives inside the Arrow batch;
     no driver round-trip, no lost partition, no speculative retry
     storm."""
-    from ..operators.multimodal import dhash_images
+    from ..operators.multimodal import dhash_images, encode_png
 
-    def gen(batches):
-        import pandas as _pd
+    def rows_of(doc_id):
+        payload = encode_png(_DH_W, _DH_H, 1, _dhash_pixels(doc_id))
+        if doc_id % 7 == 0:
+            payload = payload[:10]  # partial download
+        yield doc_id, payload
 
-        from ..operators.multimodal import encode_png
-
-        for pdf in batches:
-            out = []
-            for doc_id in pdf["doc_id"]:
-                doc_id = int(doc_id)
-                raw = _dhash_pixels(doc_id)
-                payload = encode_png(_DH_W, _DH_H, 1, raw)
-                if doc_id % 7 == 0:
-                    payload = payload[:10]  # partial download
-                out.append({"doc_id": doc_id, "payload": payload})
-            yield _pd.DataFrame(out, columns=["doc_id", "payload"])
-
-    docs = load(spark, sf_dir, "documents").select("doc_id").repartition(32, "doc_id")
-    gen_df = docs.mapInPandas(gen, schema="doc_id long, payload binary")
+    gen_df = _doc_rows(spark, sf_dir, rows_of)
     return dhash_images(gen_df, "doc_id", "payload", on_error="tag").select(
         F.col("id").alias("doc_id"),
         F.when(F.col("err").isNull(), F.lit("ok"))
@@ -9059,34 +8910,18 @@ def q227_image_dup_clusters(spark: SparkSession, sf_dir: str):
     component loop is one shuffle per round, O(diameter) rounds, with
     superseded checkpoint rounds freed eagerly."""
     from ..operators.dedup import connected_components, hamming_near_pairs
-    from ..operators.multimodal import dhash_images
+    from ..operators.multimodal import dhash_images, encode_png
 
-    def gen(batches):
-        import pandas as _pd
-
-        from ..operators.multimodal import encode_png
-
-        for pdf in batches:
-            out = []
-            for doc_id in pdf["doc_id"]:
-                doc_id = int(doc_id)
-                g, v = doc_id // 4, doc_id % 4
-                raw = bytearray(_dhash_pixels(g))
-                if v > 0:
-                    i = 2 * v * _DH_W + 2 * v
-                    raw[i] = (raw[i] + 128) % 256
-                out.append(
-                    {
-                        "doc_id": doc_id,
-                        "payload": encode_png(_DH_W, _DH_H, 1, bytes(raw)),
-                    }
-                )
-            yield _pd.DataFrame(out, columns=["doc_id", "payload"])
+    def rows_of(doc_id):
+        g, v = doc_id // 4, doc_id % 4
+        raw = bytearray(_dhash_pixels(g))
+        if v > 0:
+            i = 2 * v * _DH_W + 2 * v
+            raw[i] = (raw[i] + 128) % 256
+        yield doc_id, encode_png(_DH_W, _DH_H, 1, bytes(raw))
 
     docs = load(spark, sf_dir, "documents").select("doc_id")
-    gen_df = docs.repartition(32, "doc_id").mapInPandas(
-        gen, schema="doc_id long, payload binary"
-    )
+    gen_df = _doc_rows(spark, sf_dir, rows_of)
     fp = dhash_images(gen_df, "doc_id", "payload")
     pairs = hamming_near_pairs(
         fp.select(F.col("id").alias("doc_id"), "dhash_hi", "dhash_lo"),
@@ -9233,35 +9068,20 @@ def q229_audio_stereo_downmix_audit(spark: SparkSession, sf_dir: str):
     convention and the FFT all have to be right at once.  Scale shape:
     identical to q219 — two iterator-mapInPandas stages, samples never
     leave the UDFs."""
-    from ..operators.multimodal import audio_frame_features
+    from ..operators.multimodal import audio_frame_features, encode_wav_pcm16
 
-    def gen(batches):
-        import pandas as _pd
+    def rows_of(doc_id):
+        period = 2 ** (1 + doc_id % 4)
+        a = 200 + (doc_id % 3) * 200
+        b = (doc_id % 5) * 200
+        n = _AUDIO_FRAME * (2 + doc_id % 3)
+        inter = []
+        for i in range(n):
+            left = a if (i % period) < period // 2 else -a
+            inter += [left, b]
+        yield doc_id, encode_wav_pcm16(inter, n_channels=2)
 
-        from ..operators.multimodal import encode_wav_pcm16
-
-        for pdf in batches:
-            out = []
-            for doc_id in pdf["doc_id"]:
-                doc_id = int(doc_id)
-                period = 2 ** (1 + doc_id % 4)
-                a = 200 + (doc_id % 3) * 200
-                b = (doc_id % 5) * 200
-                n = _AUDIO_FRAME * (2 + doc_id % 3)
-                inter = []
-                for i in range(n):
-                    left = a if (i % period) < period // 2 else -a
-                    inter += [left, b]
-                out.append(
-                    {
-                        "doc_id": doc_id,
-                        "payload": encode_wav_pcm16(inter, n_channels=2),
-                    }
-                )
-            yield _pd.DataFrame(out, columns=["doc_id", "payload"])
-
-    docs = load(spark, sf_dir, "documents").select("doc_id").repartition(32, "doc_id")
-    gen_df = docs.mapInPandas(gen, schema="doc_id long, payload binary")
+    gen_df = _doc_rows(spark, sf_dir, rows_of)
     return audio_frame_features(
         gen_df, "doc_id", "payload", frame_len=_AUDIO_FRAME
     ).select(
@@ -9373,44 +9193,28 @@ def q231_audio_flac_decode_audit(spark: SparkSession, sf_dir: str):
     /decorrelation bug shifts a sample and breaks the hash.  Scale
     shape: identical to q229 — two iterator-mapInPandas stages,
     samples never leave the UDFs."""
-    from ..operators.multimodal import audio_frame_features
+    from ..operators.multimodal import audio_frame_features, encode_flac
 
-    def gen(batches):
-        import numpy as _np
-        import pandas as _pd
+    modes = ("independent", "left_side", "right_side", "mid_side")
 
-        from ..operators.multimodal import encode_flac
+    def rows_of(doc_id):
+        import numpy as np
 
-        modes = ("independent", "left_side", "right_side", "mid_side")
-        for pdf in batches:
-            out = []
-            for doc_id in pdf["doc_id"]:
-                doc_id = int(doc_id)
-                period = 2 ** (1 + doc_id % 4)
-                a = 200 + (doc_id % 3) * 200
-                b = (doc_id % 5) * 200
-                n = _AUDIO_FRAME * (2 + doc_id % 3)
-                # vectorized square-wave synthesis — same samples as the
-                # per-index Python loop, ~10x less worker CPU
-                i = _np.arange(n, dtype=_np.int64)
-                inter = _np.empty(2 * n, dtype=_np.int64)
-                inter[0::2] = _np.where((i % period) < period // 2, a, -a)
-                inter[1::2] = b
-                out.append(
-                    {
-                        "doc_id": doc_id,
-                        "payload": encode_flac(
-                            inter,
-                            n_channels=2,
-                            block_size=1024,
-                            stereo_mode=modes[doc_id % 4],
-                        ),
-                    }
-                )
-            yield _pd.DataFrame(out, columns=["doc_id", "payload"])
+        period = 2 ** (1 + doc_id % 4)
+        a = 200 + (doc_id % 3) * 200
+        b = (doc_id % 5) * 200
+        n = _AUDIO_FRAME * (2 + doc_id % 3)
+        # vectorized square-wave synthesis — same samples as the
+        # per-index Python loop, ~10x less worker CPU
+        i = np.arange(n, dtype=np.int64)
+        inter = np.empty(2 * n, dtype=np.int64)
+        inter[0::2] = np.where((i % period) < period // 2, a, -a)
+        inter[1::2] = b
+        yield doc_id, encode_flac(
+            inter, n_channels=2, block_size=1024, stereo_mode=modes[doc_id % 4]
+        )
 
-    docs = load(spark, sf_dir, "documents").select("doc_id").repartition(32, "doc_id")
-    gen_df = docs.mapInPandas(gen, schema="doc_id long, payload binary")
+    gen_df = _doc_rows(spark, sf_dir, rows_of)
     return audio_frame_features(
         gen_df, "doc_id", "payload", frame_len=_AUDIO_FRAME
     ).select(
@@ -9473,58 +9277,56 @@ def q232_media_codec_triage(spark: SparkSession, sf_dir: str):
     exercised.  The oracle states all lanes in closed form.  Scale
     shape: one header-only map pass (bytes read per payload is O(100)
     regardless of size), then a 5-column aggregate."""
-    from ..operators.multimodal import sniff_media
+    from ..operators.multimodal import (
+        encode_avi_mjpeg,
+        encode_flac,
+        encode_gif,
+        encode_jpeg,
+        encode_png,
+        encode_wav_pcm16,
+        sniff_media,
+    )
 
-    def gen(batches):
-        import pandas as _pd
-
-        from ..operators.multimodal import (
-            encode_avi_mjpeg,
-            encode_flac,
-            encode_gif,
-            encode_jpeg,
-            encode_png,
-            encode_wav_pcm16,
-        )
-
+    def fixtures():
+        # one payload per lane, built once per task
         raw = bytes((7 * i) % 256 for i in range(72))
         pal = bytes(v for i in range(256) for v in (i, i, 255 - i))
-        png = encode_png(9, 8, 1, raw)
         jpg = encode_jpeg(9, 8, raw)
         at = jpg.find(b"\xff\xc0")
-        jpg_arith = jpg[: at + 1] + b"\xca" + jpg[at + 2 :]
-        gif = encode_gif(9, 8, raw, pal)
-        wav = encode_wav_pcm16([100, -100] * 32)
-        flac = encode_flac([100, -100] * 32)
         avi = encode_avi_mjpeg(9, 8, [jpg])
-        avi_h264 = avi.replace(b"MJPG", b"H264")
-        mp3 = b"\xff\xfb\x90\x00" + bytes(32)
-        for pdf in batches:
-            out = []
-            for doc_id in pdf["doc_id"]:
-                doc_id = int(doc_id)
-                v = doc_id % 8
-                if v == 0:
-                    payload = png
-                elif v == 1:
-                    payload = jpg_arith if doc_id % 16 == 1 else jpg
-                elif v == 2:
-                    payload = gif
-                elif v == 3:
-                    payload = wav
-                elif v == 4:
-                    payload = flac
-                elif v == 5:
-                    payload = mp3
-                elif v == 6:
-                    payload = avi_h264 if doc_id % 16 == 6 else avi
-                else:
-                    payload = b"garbage " + str(doc_id).encode()
-                out.append({"doc_id": doc_id, "payload": payload})
-            yield _pd.DataFrame(out, columns=["doc_id", "payload"])
+        return {
+            "png": encode_png(9, 8, 1, raw),
+            "jpg": jpg,
+            "jpg_arith": jpg[: at + 1] + b"\xca" + jpg[at + 2 :],
+            "gif": encode_gif(9, 8, raw, pal),
+            "wav": encode_wav_pcm16([100, -100] * 32),
+            "flac": encode_flac([100, -100] * 32),
+            "mp3": b"\xff\xfb\x90\x00" + bytes(32),
+            "avi": avi,
+            "avi_h264": avi.replace(b"MJPG", b"H264"),
+        }
 
-    docs = load(spark, sf_dir, "documents").select("doc_id").repartition(32, "doc_id")
-    gen_df = docs.mapInPandas(gen, schema="doc_id long, payload binary")
+    def rows_of(fx, doc_id):
+        v = doc_id % 8
+        if v == 0:
+            payload = fx["png"]
+        elif v == 1:
+            payload = fx["jpg_arith"] if doc_id % 16 == 1 else fx["jpg"]
+        elif v == 2:
+            payload = fx["gif"]
+        elif v == 3:
+            payload = fx["wav"]
+        elif v == 4:
+            payload = fx["flac"]
+        elif v == 5:
+            payload = fx["mp3"]
+        elif v == 6:
+            payload = fx["avi_h264"] if doc_id % 16 == 6 else fx["avi"]
+        else:
+            payload = b"garbage " + str(doc_id).encode()
+        yield doc_id, payload
+
+    gen_df = _doc_rows(spark, sf_dir, rows_of, setup=fixtures)
     return (
         sniff_media(gen_df, "doc_id", "payload")
         .groupBy("container", "codec", "decodable_here")
@@ -9576,49 +9378,20 @@ def q234_mp3_stream_triage(spark: SparkSession, sf_dir: str):
     rate, frame count, exact integer duration, floor-average bitrate
     and the CBR flag in closed form.  Scale shape: one Arrow map pass
     reading O(frames) HEADER bytes per payload, no shuffle."""
-    from ..operators.multimodal import mp3_stream_info
+    from ..operators.multimodal import encode_mp3_headers, mp3_stream_info
 
-    def triage(batches):
-        import pandas as _pd
+    rates = (44100, 48000, 32000)
 
-        from ..operators.multimodal import encode_mp3_headers
+    def rows_of(doc_id):
+        payload = encode_mp3_headers(
+            3 + doc_id % 5,
+            rates[doc_id % 3],
+            (128,) if doc_id % 2 == 0 else (96, 192),
+        )
+        yield (doc_id, *mp3_stream_info(payload))
 
-        rates = (44100, 48000, 32000)
-        for pdf in batches:
-            out = []
-            for doc_id in pdf["doc_id"]:
-                doc_id = int(doc_id)
-                payload = encode_mp3_headers(
-                    3 + doc_id % 5,
-                    rates[doc_id % 3],
-                    (128,) if doc_id % 2 == 0 else (96, 192),
-                )
-                sr, n, dur, avg, cbr = mp3_stream_info(payload)
-                out.append(
-                    {
-                        "doc_id": doc_id,
-                        "sample_rate": sr,
-                        "n_frames": n,
-                        "duration_ms": dur,
-                        "kbps_avg": avg,
-                        "is_cbr": cbr,
-                    }
-                )
-            yield _pd.DataFrame(
-                out,
-                columns=[
-                    "doc_id",
-                    "sample_rate",
-                    "n_frames",
-                    "duration_ms",
-                    "kbps_avg",
-                    "is_cbr",
-                ],
-            )
-
-    docs = load(spark, sf_dir, "documents").select("doc_id").repartition(32, "doc_id")
-    return docs.mapInPandas(
-        triage,
+    return _doc_rows(
+        spark, sf_dir, rows_of,
         schema=(
             "doc_id long, sample_rate int, n_frames int, "
             "duration_ms long, kbps_avg int, is_cbr boolean"
@@ -9666,34 +9439,18 @@ def q235_audio_silence_trim(spark: SparkSession, sf_dir: str):
     trimming is a query over frame features, not a codec change).  The
     oracle states every bound in closed form.  Scale shape: one Arrow
     map pass then one hash aggregate over 4-int frame rows."""
-    from ..operators.multimodal import audio_frame_features
+    from ..operators.multimodal import audio_frame_features, encode_wav_pcm16
 
-    def gen(batches):
-        import pandas as _pd
+    def rows_of(doc_id):
+        n_lead, n_tail = doc_id % 3, doc_id % 2
+        a = 200 + (doc_id % 3) * 100
+        body = [a if (i % 4) < 2 else -a for i in range(2 * _AUDIO_FRAME)]
+        samples = (
+            [0] * (n_lead * _AUDIO_FRAME) + body + [0] * (n_tail * _AUDIO_FRAME)
+        )
+        yield doc_id, encode_wav_pcm16(samples)
 
-        from ..operators.multimodal import encode_wav_pcm16
-
-        for pdf in batches:
-            out = []
-            for doc_id in pdf["doc_id"]:
-                doc_id = int(doc_id)
-                n_lead, n_tail = doc_id % 3, doc_id % 2
-                a = 200 + (doc_id % 3) * 100
-                body = [
-                    a if (i % 4) < 2 else -a for i in range(2 * _AUDIO_FRAME)
-                ]
-                samples = (
-                    [0] * (n_lead * _AUDIO_FRAME)
-                    + body
-                    + [0] * (n_tail * _AUDIO_FRAME)
-                )
-                out.append(
-                    {"doc_id": doc_id, "payload": encode_wav_pcm16(samples)}
-                )
-            yield _pd.DataFrame(out, columns=["doc_id", "payload"])
-
-    docs = load(spark, sf_dir, "documents").select("doc_id").repartition(32, "doc_id")
-    gen_df = docs.mapInPandas(gen, schema="doc_id long, payload binary")
+    gen_df = _doc_rows(spark, sf_dir, rows_of)
     fr = audio_frame_features(gen_df, "doc_id", "payload", frame_len=_AUDIO_FRAME)
     voiced = F.col("energy_sum") > 0
     return fr.groupBy(F.col("id").alias("doc_id")).agg(
@@ -9752,52 +9509,39 @@ def q236_image_orientation_dedup(spark: SparkSession, sf_dir: str):
     fingerprint and the visual (post-rotation) dims, or normalization
     is broken.  Scale shape: identical to q220 — one Arrow map pass,
     8-byte fingerprints shuffle, pixels never do."""
-    from ..operators.multimodal import dhash_images
+    from ..operators.multimodal import dhash_images, encode_png, png_exif_chunk
 
-    def gen(batches):
-        import numpy as _np
-        import pandas as _pd
+    def rows_of(doc_id):
+        import numpy as np
 
-        from ..operators.multimodal import encode_png, png_exif_chunk
+        g, o = doc_id // 8, 1 + doc_id % 8
+        upright = np.frombuffer(_dhash_pixels(g), dtype=np.uint8).reshape(
+            _DH_H, _DH_W
+        )
+        # store the image AS THE CAMERA WOULD: the inverse of the
+        # upright-restoring transform in orient_pixels
+        if o == 1:
+            a = upright
+        elif o == 2:
+            a = upright[:, ::-1]
+        elif o == 3:
+            a = upright[::-1, ::-1]
+        elif o == 4:
+            a = upright[::-1, :]
+        elif o == 5:
+            a = upright.transpose(1, 0)
+        elif o == 6:
+            a = np.rot90(upright, k=1)
+        elif o == 7:
+            a = np.rot90(upright.transpose(1, 0), k=2)
+        else:
+            a = np.rot90(upright, k=-1)
+        hh, ww = a.shape
+        png = encode_png(ww, hh, 1, np.ascontiguousarray(a).tobytes())
+        exif = png_exif_chunk(o, "II" if doc_id % 2 == 0 else "MM")
+        yield doc_id, png[:33] + exif + png[33:]
 
-        for pdf in batches:
-            out = []
-            for doc_id in pdf["doc_id"]:
-                doc_id = int(doc_id)
-                g, o = doc_id // 8, 1 + doc_id % 8
-                upright = _np.frombuffer(
-                    _dhash_pixels(g), dtype=_np.uint8
-                ).reshape(_DH_H, _DH_W)
-                # store the image AS THE CAMERA WOULD: the inverse of the
-                # upright-restoring transform in orient_pixels
-                if o == 1:
-                    a = upright
-                elif o == 2:
-                    a = upright[:, ::-1]
-                elif o == 3:
-                    a = upright[::-1, ::-1]
-                elif o == 4:
-                    a = upright[::-1, :]
-                elif o == 5:
-                    a = upright.transpose(1, 0)
-                elif o == 6:
-                    a = _np.rot90(upright, k=1)
-                elif o == 7:
-                    a = _np.rot90(upright.transpose(1, 0), k=2)
-                else:
-                    a = _np.rot90(upright, k=-1)
-                hh, ww = a.shape
-                png = encode_png(ww, hh, 1, _np.ascontiguousarray(a).tobytes())
-                payload = (
-                    png[:33]
-                    + png_exif_chunk(o, "II" if doc_id % 2 == 0 else "MM")
-                    + png[33:]
-                )
-                out.append({"doc_id": doc_id, "payload": payload})
-            yield _pd.DataFrame(out, columns=["doc_id", "payload"])
-
-    docs = load(spark, sf_dir, "documents").select("doc_id").repartition(32, "doc_id")
-    gen_df = docs.mapInPandas(gen, schema="doc_id long, payload binary")
+    gen_df = _doc_rows(spark, sf_dir, rows_of)
     return dhash_images(
         gen_df, "doc_id", "payload", normalize_orientation=True
     ).select(
@@ -10141,81 +9885,51 @@ def q240_adts_vbr_audio_triage(spark: SparkSession, sf_dir: str):
     oracle states every lane's rate / frames / exact integer duration
     / floor bitrate in closed form.  Scale shape: one Arrow map pass
     reading O(200) header bytes per payload, no shuffle."""
-    from ..operators.multimodal import adts_stream_info, mp3_vbr_info
+    from ..operators.multimodal import (
+        adts_stream_info,
+        encode_adts_headers,
+        encode_mp3_headers,
+        encode_mp3_vbr_header,
+        mp3_vbr_info,
+    )
 
-    def triage(batches):
-        import pandas as _pd
+    arates = (48000, 44100, 32000)
+    mrates = (44100, 48000, 32000)
 
-        from ..operators.multimodal import (
-            encode_adts_headers,
-            encode_mp3_headers,
-            encode_mp3_vbr_header,
-        )
-
-        arates = (48000, 44100, 32000)
-        mrates = (44100, 48000, 32000)
-        for pdf in batches:
-            out = []
-            for doc_id in pdf["doc_id"]:
-                doc_id = int(doc_id)
-                lane = doc_id % 4
-                if lane == 0:
-                    payload = encode_adts_headers(
-                        2 + doc_id % 5,
-                        arates[doc_id % 3],
-                        "lc" if doc_id % 2 == 0 else "main",
-                        channels=2,
-                        payload_len=10 + doc_id % 7,
-                    )
-                    sr, n, dur, kbps, prof, _ch = adts_stream_info(payload)
-                    row = ("aac-adts", prof, sr, n, dur, kbps)
-                else:
-                    if lane == 1:
-                        payload = encode_mp3_vbr_header(
-                            500 + doc_id % 100,
-                            160000 + (doc_id % 50) * 1000,
-                            mrates[doc_id % 3],
-                            b"Xing",
-                        )
-                    elif lane == 2:
-                        payload = encode_mp3_vbr_header(
-                            300 + doc_id % 77,
-                            120000 + (doc_id % 41) * 999,
-                            mrates[doc_id % 3],
-                            b"VBRI",
-                        )
-                    else:
-                        payload = encode_mp3_headers(2, mrates[doc_id % 3])
-                    tag, n, _nb, dur, kbps = mp3_vbr_info(payload)
-                    sr = mrates[doc_id % 3]
-                    row = (f"mp3-{tag}", tag, sr, n, dur, kbps)
-                out.append(
-                    {
-                        "doc_id": doc_id,
-                        "kind": row[0],
-                        "detail": row[1],
-                        "sample_rate": row[2],
-                        "n_frames": row[3],
-                        "duration_ms": row[4],
-                        "kbps_avg": row[5],
-                    }
-                )
-            yield _pd.DataFrame(
-                out,
-                columns=[
-                    "doc_id",
-                    "kind",
-                    "detail",
-                    "sample_rate",
-                    "n_frames",
-                    "duration_ms",
-                    "kbps_avg",
-                ],
+    def rows_of(doc_id):
+        lane = doc_id % 4
+        if lane == 0:
+            payload = encode_adts_headers(
+                2 + doc_id % 5,
+                arates[doc_id % 3],
+                "lc" if doc_id % 2 == 0 else "main",
+                channels=2,
+                payload_len=10 + doc_id % 7,
             )
+            sr, n, dur, kbps, prof, _ch = adts_stream_info(payload)
+            yield doc_id, "aac-adts", prof, sr, n, dur, kbps
+            return
+        if lane == 1:
+            payload = encode_mp3_vbr_header(
+                500 + doc_id % 100,
+                160000 + (doc_id % 50) * 1000,
+                mrates[doc_id % 3],
+                b"Xing",
+            )
+        elif lane == 2:
+            payload = encode_mp3_vbr_header(
+                300 + doc_id % 77,
+                120000 + (doc_id % 41) * 999,
+                mrates[doc_id % 3],
+                b"VBRI",
+            )
+        else:
+            payload = encode_mp3_headers(2, mrates[doc_id % 3])
+        tag, n, _nb, dur, kbps = mp3_vbr_info(payload)
+        yield doc_id, f"mp3-{tag}", tag, mrates[doc_id % 3], n, dur, kbps
 
-    docs = load(spark, sf_dir, "documents").select("doc_id").repartition(32, "doc_id")
-    return docs.mapInPandas(
-        triage,
+    return _doc_rows(
+        spark, sf_dir, rows_of,
         schema=(
             "doc_id long, kind string, detail string, sample_rate int, "
             "n_frames long, duration_ms long, kbps_avg int"
@@ -10355,59 +10069,26 @@ def q242_ogg_opus_triage(spark: SparkSession, sf_dir: str):
     payload byte — at C speed (numpy bit-reverse gather + one zlib
     call via the CRC reflection identity), not as an interpreter
     loop, so verification stays a small fraction of the scan cost."""
-    from ..operators.multimodal import ogg_stream_info
+    from ..operators.multimodal import encode_ogg_pages, ogg_stream_info
 
-    def triage(batches):
-        import pandas as _pd
+    rates = (44100, 48000, 32000)
 
-        from ..operators.multimodal import encode_ogg_pages
-
-        rates = (44100, 48000, 32000)
-        for pdf in batches:
-            out = []
-            for doc_id in pdf["doc_id"]:
-                doc_id = int(doc_id)
-                lane, g = doc_id % 3, doc_id // 3
-                if lane == 0:
-                    payload = encode_ogg_pages(
-                        "vorbis",
-                        2 + g % 4,
-                        1024 * (1 + g % 3),
-                        rates[g % 3],
-                        1 + g % 2,
-                    )
-                elif lane == 1:
-                    payload = encode_ogg_pages(
-                        "opus",
-                        3 + g % 3,
-                        960,
-                        channels=1 + g % 2,
-                        pre_skip=312 + g % 100,
-                    )
-                else:
-                    payload = encode_ogg_pages("flac-ogg", 2, 4096)
-                codec, ch, sr, dur, np_ = ogg_stream_info(payload)
-                out.append(
-                    {
-                        "doc_id": doc_id,
-                        "codec": codec,
-                        "channels": ch,
-                        "sample_rate": sr,
-                        "duration_ms": dur,
-                        "n_pages": np_,
-                    }
-                )
-            yield _pd.DataFrame(
-                out,
-                columns=[
-                    "doc_id", "codec", "channels",
-                    "sample_rate", "duration_ms", "n_pages",
-                ],
+    def rows_of(doc_id):
+        lane, g = doc_id % 3, doc_id // 3
+        if lane == 0:
+            payload = encode_ogg_pages(
+                "vorbis", 2 + g % 4, 1024 * (1 + g % 3), rates[g % 3], 1 + g % 2
             )
+        elif lane == 1:
+            payload = encode_ogg_pages(
+                "opus", 3 + g % 3, 960, channels=1 + g % 2, pre_skip=312 + g % 100
+            )
+        else:
+            payload = encode_ogg_pages("flac-ogg", 2, 4096)
+        yield (doc_id, *ogg_stream_info(payload))
 
-    docs = load(spark, sf_dir, "documents").select("doc_id").repartition(32, "doc_id")
-    return docs.mapInPandas(
-        triage,
+    return _doc_rows(
+        spark, sf_dir, rows_of,
         schema=(
             "doc_id long, codec string, channels int, sample_rate int, "
             "duration_ms long, n_pages long"
@@ -10468,84 +10149,60 @@ def q243_video_container_triage(spark: SparkSession, sf_dir: str):
     encoders.  The oracle states brand/doctype, exact integer duration,
     track counts and codec ids in closed form.  Scale shape: one Arrow
     map pass reading O(1 KB) header bytes per payload, no shuffle."""
-    from ..operators.multimodal import mkv_stream_info, mp4_stream_info
+    from ..operators.multimodal import (
+        encode_mkv_elements,
+        encode_mp4_boxes,
+        mkv_stream_info,
+        mp4_stream_info,
+    )
 
-    def triage(batches):
-        import pandas as _pd
-
-        from ..operators.multimodal import (
-            encode_mkv_elements,
-            encode_mp4_boxes,
-        )
-
-        for pdf in batches:
-            out = []
-            for doc_id in pdf["doc_id"]:
-                doc_id = int(doc_id)
-                lane, g = doc_id % 4, doc_id // 4
-                if lane <= 1:
-                    if lane == 0:
-                        payload = encode_mp4_boxes(
-                            "isom",
-                            (10 + g % 20) * 90000,
-                            90000,
-                            [
-                                ("vide", "avc1" if g % 2 == 0 else "hev1"),
-                                ("soun", "mp4a"),
-                            ],
-                        )
-                    else:
-                        payload = encode_mp4_boxes(
-                            "m4a",
-                            (30 + g % 60) * 44100,
-                            44100,
-                            [("soun", "mp4a")],
-                            mvhd_version=1,
-                        )
-                    brand, dur, _ts, nt, vc, ac = mp4_stream_info(payload)
-                    row = ("mp4", brand, dur, nt, vc, ac)
-                else:
-                    if lane == 2:
-                        payload = encode_mkv_elements(
-                            "webm",
-                            float(60000 + g % 1000),
-                            1_000_000,
-                            [
-                                (1, "V_VP9" if g % 2 == 0 else "V_AV1"),
-                                (2, "A_OPUS"),
-                            ],
-                        )
-                    else:
-                        payload = encode_mkv_elements(
-                            "matroska",
-                            float(8000 + g % 100),
-                            500_000,
-                            [(1, "V_MPEG4/ISO/AVC")],
-                        )
-                    doctype, dur, nt, vc, ac = mkv_stream_info(payload)
-                    row = ("mkv", doctype, dur, nt, vc, ac)
-                out.append(
-                    {
-                        "doc_id": doc_id,
-                        "container": row[0],
-                        "detail": row[1],
-                        "duration_ms": row[2],
-                        "n_tracks": row[3],
-                        "video_codec": row[4],
-                        "audio_codec": row[5],
-                    }
+    def rows_of(doc_id):
+        lane, g = doc_id % 4, doc_id // 4
+        if lane <= 1:
+            if lane == 0:
+                payload = encode_mp4_boxes(
+                    "isom",
+                    (10 + g % 20) * 90000,
+                    90000,
+                    [
+                        ("vide", "avc1" if g % 2 == 0 else "hev1"),
+                        ("soun", "mp4a"),
+                    ],
                 )
-            yield _pd.DataFrame(
-                out,
-                columns=[
-                    "doc_id", "container", "detail", "duration_ms",
-                    "n_tracks", "video_codec", "audio_codec",
-                ],
-            )
+            else:
+                payload = encode_mp4_boxes(
+                    "m4a",
+                    (30 + g % 60) * 44100,
+                    44100,
+                    [("soun", "mp4a")],
+                    mvhd_version=1,
+                )
+            brand, dur, _ts, nt, vc, ac = mp4_stream_info(payload)
+            row = ("mp4", brand, dur, nt, vc, ac)
+        else:
+            if lane == 2:
+                payload = encode_mkv_elements(
+                    "webm",
+                    float(60000 + g % 1000),
+                    1_000_000,
+                    [
+                        (1, "V_VP9" if g % 2 == 0 else "V_AV1"),
+                        (2, "A_OPUS"),
+                    ],
+                )
+            else:
+                payload = encode_mkv_elements(
+                    "matroska",
+                    float(8000 + g % 100),
+                    500_000,
+                    [(1, "V_MPEG4/ISO/AVC")],
+                )
+            doctype, dur, nt, vc, ac = mkv_stream_info(payload)
+            row = ("mkv", doctype, dur, nt, vc, ac)
+        yield (doc_id, *row)
 
-    docs = load(spark, sf_dir, "documents").select("doc_id").repartition(32, "doc_id")
-    return docs.mapInPandas(
-        triage,
+    return _doc_rows(
+        spark, sf_dir, rows_of,
         schema=(
             "doc_id long, container string, detail string, duration_ms long, "
             "n_tracks int, video_codec string, audio_codec string"
@@ -10610,61 +10267,46 @@ def q244_warc_crawl_census(spark: SparkSession, sf_dir: str):
     closed-form.  The oracle states all records (type, URI, exact
     length, status, MIME).  Scale shape: one Arrow map pass retaining
     O(header) memory per record, no shuffle."""
-    from ..sources.warc import warc_triage
+    from ..sources.warc import encode_warc_records, warc_triage
 
-    def gen(batches):
-        import pandas as _pd
+    def rows_of(doc_id):
+        k, m = 2 + doc_id % 3, doc_id % 50
+        recs = [
+            {
+                "rec_type": "warcinfo",
+                "content_type": "application/warc-fields",
+                "body": b"software: ldp-spark",
+            }
+        ]
+        for j in range(k):
+            uri = f"http://d{m}.example.com/p{j}"
+            recs.append(
+                {
+                    "rec_type": "request",
+                    "target_uri": uri,
+                    "content_type": "application/http;msgtype=request",
+                    "body": b"GET /page HTTP/1.1\r\n\r\n",
+                }
+            )
+            s = (200, 404, 301)[(doc_id + j) % 3]
+            phrase = {200: "OK", 404: "NF", 301: "MV"}[s]
+            mime = "text/html" if s == 200 else "text/plain"
+            body = (
+                f"HTTP/1.1 {s} {phrase}\r\nContent-Type: {mime}"
+                f"\r\n\r\n".encode()
+                + b"c" * (10 + (doc_id + j) % 20)
+            )
+            recs.append(
+                {
+                    "rec_type": "response",
+                    "target_uri": uri,
+                    "content_type": "application/http;msgtype=response",
+                    "body": body,
+                }
+            )
+        yield doc_id, encode_warc_records(recs, gzip_members=True)
 
-        from ..sources.warc import encode_warc_records
-
-        for pdf in batches:
-            out = []
-            for doc_id in pdf["doc_id"]:
-                doc_id = int(doc_id)
-                k, m = 2 + doc_id % 3, doc_id % 50
-                recs = [
-                    {
-                        "rec_type": "warcinfo",
-                        "content_type": "application/warc-fields",
-                        "body": b"software: ldp-spark",
-                    }
-                ]
-                for j in range(k):
-                    uri = f"http://d{m}.example.com/p{j}"
-                    recs.append(
-                        {
-                            "rec_type": "request",
-                            "target_uri": uri,
-                            "content_type": "application/http;msgtype=request",
-                            "body": b"GET /page HTTP/1.1\r\n\r\n",
-                        }
-                    )
-                    s = (200, 404, 301)[(doc_id + j) % 3]
-                    phrase = {200: "OK", 404: "NF", 301: "MV"}[s]
-                    mime = "text/html" if s == 200 else "text/plain"
-                    body = (
-                        f"HTTP/1.1 {s} {phrase}\r\nContent-Type: {mime}"
-                        f"\r\n\r\n".encode()
-                        + b"c" * (10 + (doc_id + j) % 20)
-                    )
-                    recs.append(
-                        {
-                            "rec_type": "response",
-                            "target_uri": uri,
-                            "content_type": "application/http;msgtype=response",
-                            "body": body,
-                        }
-                    )
-                out.append(
-                    {
-                        "doc_id": doc_id,
-                        "payload": encode_warc_records(recs, gzip_members=True),
-                    }
-                )
-            yield _pd.DataFrame(out, columns=["doc_id", "payload"])
-
-    docs = load(spark, sf_dir, "documents").select("doc_id").repartition(32, "doc_id")
-    gen_df = docs.mapInPandas(gen, schema="doc_id long, payload binary")
+    gen_df = _doc_rows(spark, sf_dir, rows_of)
     return warc_triage(gen_df, "doc_id", "payload").select(
         F.col("id").alias("doc_id"),
         "rec_index",
@@ -10860,7 +10502,18 @@ def q246_video_dimension_triage(spark: SparkSession, sf_dir: str):
     modern crawl's video codec mix.  The oracle states all
     fields in closed form.  Scale shape: one Arrow map pass reading
     O(decoder-config) bytes per payload — a few hundred — no shuffle."""
-    from ..operators.multimodal import video_stream_params
+    from ..operators.multimodal import (
+        encode_av1_sequence_header,
+        encode_av1c,
+        encode_avc_sps,
+        encode_avcc,
+        encode_hevc_sps,
+        encode_hvcc,
+        encode_mkv_elements,
+        encode_mp4_boxes,
+        encode_vpcc,
+        video_stream_params,
+    )
 
     _dims = [(640, 360), (1280, 720), (1920, 1080), (854, 480), (426, 240)]
     _profiles = [66, 77, 100]
@@ -10871,115 +10524,78 @@ def q246_video_dimension_triage(spark: SparkSession, sf_dir: str):
     _av1_levels = [5, 8, 12, 13, 19]  # seq_level_idx: 2.1/3.0/4.0/4.1/5.1
     _vp9_levels = [10, 20, 31, 41, 51]  # 1.0/2.0/3.1/4.1/5.1 x10
 
-    def triage(batches):
-        import pandas as _pd
-
-        from ..operators.multimodal import (
-            encode_avc_sps,
-            encode_avcc,
-            encode_av1_sequence_header,
-            encode_av1c,
-            encode_hevc_sps,
-            encode_hvcc,
-            encode_mkv_elements,
-            encode_mp4_boxes,
-            encode_vpcc,
-        )
-
-        for pdf in batches:
-            out = []
-            for doc_id in pdf["doc_id"]:
-                doc_id = int(doc_id)
-                lane, g = doc_id % 5, doc_id // 5
-                w, h = _dims[g % 5]
-                if lane <= 1:
-                    avcc = encode_avcc(
-                        [encode_avc_sps(w, h, _profiles[g % 3], _levels[g % 5])]
-                    )
-                    if lane == 0:
-                        payload = encode_mp4_boxes(
-                            "isom",
-                            (10 + g % 20) * 90000,
-                            90000,
-                            [("vide", "avc1"), ("soun", "mp4a")],
-                            video_avcc=avcc,
-                        )
-                    else:
-                        payload = encode_mkv_elements(
-                            "matroska",
-                            float(8000 + g % 100),
-                            500_000,
-                            [(1, "V_MPEG4/ISO/AVC", avcc)],
-                        )
-                elif lane == 2:
-                    hvcc = encode_hvcc(
-                        [encode_hevc_sps(
-                            w, h, _hevc_profiles[g % 3], _hevc_levels[g % 5]
-                        )]
-                    )
-                    payload = encode_mp4_boxes(
-                        "isom",
-                        (10 + g % 20) * 90000,
-                        90000,
-                        [("vide", "hev1"), ("soun", "mp4a")],
-                        video_hvcc=hvcc,
-                    )
-                elif lane == 3:
-                    if g % 2 == 0:
-                        payload = encode_mkv_elements(
-                            "webm",
-                            float(60000 + g % 1000),
-                            1_000_000,
-                            [(1, "V_VP9", None, w, h), (2, "A_OPUS")],
-                        )
-                    else:
-                        payload = encode_mp4_boxes(
-                            "isom",
-                            (10 + g % 20) * 90000,
-                            90000,
-                            [("vide", "vp09"), ("soun", "mp4a")],
-                            video_vpcc=encode_vpcc(
-                                _av1_profiles[g % 3], _vp9_levels[g % 5]
-                            ),
-                            video_dims=(w, h),
-                        )
-                else:
-                    av1c = encode_av1c(
-                        encode_av1_sequence_header(
-                            w, h, _av1_profiles[g % 3], _av1_levels[g % 5]
-                        )
-                    )
-                    payload = encode_mp4_boxes(
-                        "isom",
-                        (10 + g % 20) * 90000,
-                        90000,
-                        [("vide", "av01"), ("soun", "mp4a")],
-                        video_av1c=av1c,
-                    )
-                cont, codec, vw, vh, prof, lvl = video_stream_params(payload)
-                out.append(
-                    {
-                        "doc_id": doc_id,
-                        "container": cont,
-                        "codec": codec,
-                        "width": vw,
-                        "height": vh,
-                        "profile_idc": prof,
-                        "level_idc": lvl,
-                        "n_pixels": vw * vh,
-                    }
-                )
-            yield _pd.DataFrame(
-                out,
-                columns=[
-                    "doc_id", "container", "codec", "width", "height",
-                    "profile_idc", "level_idc", "n_pixels",
-                ],
+    def rows_of(doc_id):
+        lane, g = doc_id % 5, doc_id // 5
+        w, h = _dims[g % 5]
+        if lane <= 1:
+            avcc = encode_avcc(
+                [encode_avc_sps(w, h, _profiles[g % 3], _levels[g % 5])]
             )
+            if lane == 0:
+                payload = encode_mp4_boxes(
+                    "isom",
+                    (10 + g % 20) * 90000,
+                    90000,
+                    [("vide", "avc1"), ("soun", "mp4a")],
+                    video_avcc=avcc,
+                )
+            else:
+                payload = encode_mkv_elements(
+                    "matroska",
+                    float(8000 + g % 100),
+                    500_000,
+                    [(1, "V_MPEG4/ISO/AVC", avcc)],
+                )
+        elif lane == 2:
+            hvcc = encode_hvcc(
+                [encode_hevc_sps(
+                    w, h, _hevc_profiles[g % 3], _hevc_levels[g % 5]
+                )]
+            )
+            payload = encode_mp4_boxes(
+                "isom",
+                (10 + g % 20) * 90000,
+                90000,
+                [("vide", "hev1"), ("soun", "mp4a")],
+                video_hvcc=hvcc,
+            )
+        elif lane == 3:
+            if g % 2 == 0:
+                payload = encode_mkv_elements(
+                    "webm",
+                    float(60000 + g % 1000),
+                    1_000_000,
+                    [(1, "V_VP9", None, w, h), (2, "A_OPUS")],
+                )
+            else:
+                payload = encode_mp4_boxes(
+                    "isom",
+                    (10 + g % 20) * 90000,
+                    90000,
+                    [("vide", "vp09"), ("soun", "mp4a")],
+                    video_vpcc=encode_vpcc(
+                        _av1_profiles[g % 3], _vp9_levels[g % 5]
+                    ),
+                    video_dims=(w, h),
+                )
+        else:
+            av1c = encode_av1c(
+                encode_av1_sequence_header(
+                    w, h, _av1_profiles[g % 3], _av1_levels[g % 5]
+                )
+            )
+            payload = encode_mp4_boxes(
+                "isom",
+                (10 + g % 20) * 90000,
+                90000,
+                [("vide", "av01"), ("soun", "mp4a")],
+                video_av1c=av1c,
+            )
+        cont, codec, vw, vh, prof, lvl = video_stream_params(payload)
+        yield doc_id, cont, codec, vw, vh, prof, lvl, vw * vh
 
-    docs = load(spark, sf_dir, "documents").select("doc_id").repartition(32, "doc_id")
-    return docs.mapInPandas(
-        triage,
+    return _doc_rows(
+        spark, sf_dir, rows_of,
         schema=(
             "doc_id long, container string, codec string, width int, "
             "height int, profile_idc int, level_idc int, n_pixels long"
@@ -11061,139 +10677,121 @@ def q247_warc_to_corpus(spark: SparkSession, sf_dir: str):
         robots_gate,
         robots_rules,
     )
-    from ..sources.warc import warc_html_documents
+    from ..sources.warc import encode_warc_records, warc_html_documents
 
-    def gen(batches):
+    def html_doc(body_html, *headers, ctype=b"text/html"):
+        head = b"HTTP/1.1 200 OK\r\nContent-Type: " + ctype
+        for h in headers:
+            head += b"\r\n" + h
+        return head + b"\r\n\r\n" + body_html
+
+    def chunk_frame(body, size=24):
+        out = bytearray()
+        for i in range(0, len(body), size):
+            c = body[i : i + size]
+            out += b"%x\r\n" % len(c) + c + b"\r\n"
+        return bytes(out + b"0\r\n\r\n")
+
+    def rows_of(doc_id):
         import gzip as _gzip
 
-        import pandas as _pd
-
-        from ..sources.warc import encode_warc_records
-
-        def html_doc(body_html, *headers, ctype=b"text/html"):
-            head = b"HTTP/1.1 200 OK\r\nContent-Type: " + ctype
-            for h in headers:
-                head += b"\r\n" + h
-            return head + b"\r\n\r\n" + body_html
-
-        def chunk_frame(body, size=24):
-            out = bytearray()
-            for i in range(0, len(body), size):
-                c = body[i : i + size]
-                out += b"%x\r\n" % len(c) + c + b"\r\n"
-            return bytes(out + b"0\r\n\r\n")
-
-        for pdf in batches:
-            out = []
-            for doc_id in pdf["doc_id"]:
-                doc_id = int(doc_id)
-                m, g = doc_id % 10, doc_id // 10
-                k = (g // 2) % 4
-                beta = (
-                    f"<p>Beta text {k}</p>"
-                    if g % 2 == 0
-                    else f"<P>BETA TEXT {k}</P>"
-                )
-                b_q = "x=2&a=1" if g % 2 == 0 else "a=1&x=2"
-                eps = f"<html><body><p>épsilon {g} page</p></body></html>"
-                eps_meta = (
-                    '<html><head><meta charset="iso-8859-1"></head>'
-                    f"<body><p>épsilon {g} page</p></body></html>"
-                )
-                recs = [
-                    {"rec_type": "warcinfo",
-                     "content_type": "application/warc-fields",
-                     "body": b"software: ldp"},
-                    {"rec_type": "request",
-                     "target_uri": f"http://d{m}.example.com/a",
-                     "content_type": "application/http;msgtype=request",
-                     "body": b"GET /a HTTP/1.1\r\nHost: x\r\n\r\n"},
-                    {"rec_type": "response",
-                     "target_uri": (
-                         f"http://D{m}.EXAMPLE.com/a?utm_source=x&id={g}"
-                     ),
-                     "content_type": "application/http;msgtype=response",
-                     "body": html_doc(
-                         b"<html><head><title>T</title><script>var x=1;"
-                         b"</script></head><body><p>alpha %d content</p>"
-                         b"</body></html>" % g
-                     )},
-                    {"rec_type": "response",
-                     "target_uri": f"http://d{m}.example.com/private/p{g}",
-                     "content_type": "application/http;msgtype=response",
-                     "body": html_doc(b"<p>secret %d</p>" % g)},
-                    {"rec_type": "response",
-                     "target_uri": f"http://d{m}.example.com/b?{b_q}",
-                     "content_type": "application/http;msgtype=response",
-                     "body": html_doc(beta.encode())},
-                    {"rec_type": "response",
-                     "target_uri": f"http://d{m}.example.com/gone{g}",
-                     "content_type": "application/http;msgtype=response",
-                     "body": (
-                         b"HTTP/1.1 404 Not Found\r\nContent-Type: "
-                         b"text/html\r\n\r\nmissing"
-                     )},
-                    {"rec_type": "response",
-                     "target_uri": f"http://d{m}.example.com/api{g}",
-                     "content_type": "application/http;msgtype=response",
-                     "body": (
-                         b"HTTP/1.1 200 OK\r\nContent-Type: "
-                         b'application/json\r\n\r\n{"a": 1}'
-                     )},
-                    # --- round-8 HTTP-fidelity lanes ---
-                    {"rec_type": "response",  # gzip content-coding
-                     "target_uri": f"http://d{m}.example.com/c{g}",
-                     "content_type": "application/http;msgtype=response",
-                     "body": html_doc(
-                         _gzip.compress(
-                             b"<p>gamma %d content</p>" % g, mtime=0
-                         ),
-                         b"Content-Encoding: gzip",
-                     )},
-                    {"rec_type": "response",  # chunked transfer framing
-                     "target_uri": f"http://d{m}.example.com/e{g}",
-                     "content_type": "application/http;msgtype=response",
-                     "body": html_doc(
-                         chunk_frame(b"<p>delta %d content</p>" % g),
-                         b"Transfer-Encoding: chunked",
-                     )},
-                    {"rec_type": "response",  # charset triple 1: UTF-8
-                     "target_uri": f"http://d{m}.example.com/f{g}",
-                     "content_type": "application/http;msgtype=response",
-                     "body": html_doc(eps.encode("utf-8"))},
-                    {"rec_type": "response",  # 2: latin-1, head charset
-                     "target_uri": f"http://d{m}.example.com/h{g}",
-                     "content_type": "application/http;msgtype=response",
-                     "body": html_doc(
-                         eps.encode("latin-1"),
-                         ctype=b"text/html; charset=iso-8859-1",
-                     )},
-                    {"rec_type": "response",  # 3: latin-1, meta prescan
-                     "target_uri": f"http://d{m}.example.com/j{g}",
-                     "content_type": "application/http;msgtype=response",
-                     "body": html_doc(eps_meta.encode("latin-1"))},
-                    {"rec_type": "response",  # br -> record quarantine
-                     "target_uri": f"http://d{m}.example.com/z{g}",
-                     "content_type": "application/http;msgtype=response",
-                     "body": html_doc(
-                         b"\x8b\x03\x80brpayload",
-                         b"Content-Encoding: br",
-                     )},
-                ]
-                out.append(
-                    {
-                        "doc_id": doc_id,
-                        "payload": encode_warc_records(
-                            recs, gzip_members=True
-                        ),
-                    }
-                )
-            yield _pd.DataFrame(out, columns=["doc_id", "payload"])
+        m, g = doc_id % 10, doc_id // 10
+        k = (g // 2) % 4
+        beta = (
+            f"<p>Beta text {k}</p>"
+            if g % 2 == 0
+            else f"<P>BETA TEXT {k}</P>"
+        )
+        b_q = "x=2&a=1" if g % 2 == 0 else "a=1&x=2"
+        eps = f"<html><body><p>épsilon {g} page</p></body></html>"
+        eps_meta = (
+            '<html><head><meta charset="iso-8859-1"></head>'
+            f"<body><p>épsilon {g} page</p></body></html>"
+        )
+        recs = [
+            {"rec_type": "warcinfo",
+             "content_type": "application/warc-fields",
+             "body": b"software: ldp"},
+            {"rec_type": "request",
+             "target_uri": f"http://d{m}.example.com/a",
+             "content_type": "application/http;msgtype=request",
+             "body": b"GET /a HTTP/1.1\r\nHost: x\r\n\r\n"},
+            {"rec_type": "response",
+             "target_uri": (
+                 f"http://D{m}.EXAMPLE.com/a?utm_source=x&id={g}"
+             ),
+             "content_type": "application/http;msgtype=response",
+             "body": html_doc(
+                 b"<html><head><title>T</title><script>var x=1;"
+                 b"</script></head><body><p>alpha %d content</p>"
+                 b"</body></html>" % g
+             )},
+            {"rec_type": "response",
+             "target_uri": f"http://d{m}.example.com/private/p{g}",
+             "content_type": "application/http;msgtype=response",
+             "body": html_doc(b"<p>secret %d</p>" % g)},
+            {"rec_type": "response",
+             "target_uri": f"http://d{m}.example.com/b?{b_q}",
+             "content_type": "application/http;msgtype=response",
+             "body": html_doc(beta.encode())},
+            {"rec_type": "response",
+             "target_uri": f"http://d{m}.example.com/gone{g}",
+             "content_type": "application/http;msgtype=response",
+             "body": (
+                 b"HTTP/1.1 404 Not Found\r\nContent-Type: "
+                 b"text/html\r\n\r\nmissing"
+             )},
+            {"rec_type": "response",
+             "target_uri": f"http://d{m}.example.com/api{g}",
+             "content_type": "application/http;msgtype=response",
+             "body": (
+                 b"HTTP/1.1 200 OK\r\nContent-Type: "
+                 b'application/json\r\n\r\n{"a": 1}'
+             )},
+            # --- round-8 HTTP-fidelity lanes ---
+            {"rec_type": "response",  # gzip content-coding
+             "target_uri": f"http://d{m}.example.com/c{g}",
+             "content_type": "application/http;msgtype=response",
+             "body": html_doc(
+                 _gzip.compress(
+                     b"<p>gamma %d content</p>" % g, mtime=0
+                 ),
+                 b"Content-Encoding: gzip",
+             )},
+            {"rec_type": "response",  # chunked transfer framing
+             "target_uri": f"http://d{m}.example.com/e{g}",
+             "content_type": "application/http;msgtype=response",
+             "body": html_doc(
+                 chunk_frame(b"<p>delta %d content</p>" % g),
+                 b"Transfer-Encoding: chunked",
+             )},
+            {"rec_type": "response",  # charset triple 1: UTF-8
+             "target_uri": f"http://d{m}.example.com/f{g}",
+             "content_type": "application/http;msgtype=response",
+             "body": html_doc(eps.encode("utf-8"))},
+            {"rec_type": "response",  # 2: latin-1, head charset
+             "target_uri": f"http://d{m}.example.com/h{g}",
+             "content_type": "application/http;msgtype=response",
+             "body": html_doc(
+                 eps.encode("latin-1"),
+                 ctype=b"text/html; charset=iso-8859-1",
+             )},
+            {"rec_type": "response",  # 3: latin-1, meta prescan
+             "target_uri": f"http://d{m}.example.com/j{g}",
+             "content_type": "application/http;msgtype=response",
+             "body": html_doc(eps_meta.encode("latin-1"))},
+            {"rec_type": "response",  # br -> record quarantine
+             "target_uri": f"http://d{m}.example.com/z{g}",
+             "content_type": "application/http;msgtype=response",
+             "body": html_doc(
+                 b"\x8b\x03\x80brpayload",
+                 b"Content-Encoding: br",
+             )},
+        ]
+        yield doc_id, encode_warc_records(recs, gzip_members=True)
 
     docs = load(spark, sf_dir, "documents").select("doc_id")
-    warcs = docs.repartition(32, "doc_id").mapInPandas(
-        gen, schema="doc_id long, payload binary"
-    )
+    warcs = _doc_rows(spark, sf_dir, rows_of)
     pages = warc_html_documents(warcs, "doc_id", "payload").select(
         (F.col("id") * 16 + F.col("rec_index")).alias("page_id"),
         canonicalize_url(F.col("url")).alias("curl"),

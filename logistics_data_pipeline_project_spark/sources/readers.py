@@ -136,8 +136,11 @@ def read_media_dir(
     files as (path, modificationTime, length, content) rows via Spark's
     ``binaryFile`` source — the standard way raw media enters a Spark
     pipeline (one task per file, bytes never touch the driver). Feed the
-    result to ``operators.multimodal.attach_payload_metadata`` /
-    ``decode_media`` for the typed-metadata + decode stages.
+    result to ``operators.multimodal.attach_payload_metadata`` for the
+    typed metadata; ``decode_media`` additionally needs a long id column
+    and a media-type column, decodes headers for real (image dims, WAV
+    duration) and raises NotImplementedError for bytes no codec here
+    can parse.
 
     ``pattern`` prunes at LISTING time (pathGlobFilter — unmatched files
     are never opened); ``max_bytes`` guards against a stray huge file

@@ -51,9 +51,9 @@ from __future__ import annotations
 
 from collections.abc import Iterator, Sequence
 
-import pandas as pd
-from pyspark.sql import DataFrame, functions as F
-from pyspark.sql.types import BinaryType
+from pyspark.sql import DataFrame
+
+from ..operators.rowmap import map_payloads
 
 __all__ = [
     "parse_warc_records",
@@ -748,66 +748,20 @@ def warc_triage(
     drops it, 'tag' emits one quarantine row (rec_type='invalid') so
     the streaming census counts garbage as a lane instead of killing
     the query."""
-    if on_error not in ("fail", "skip", "tag"):
-        raise ValueError(f"bad on_error {on_error!r}")
 
-    def walk(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = [
-            "id",
-            "rec_index",
-            "rec_type",
-            "target_uri",
-            "content_length",
-            "http_status",
-            "mime",
-        ]
-        for pdf in batches:
-            out = []
-            for _id, payload in zip(pdf[id_col], pdf[payload_col]):
-                try:
-                    recs = parse_warc_records(
-                        bytes(payload) if payload is not None else b""
-                    )
-                except ValueError:
-                    if on_error == "fail":
-                        raise
-                    if on_error == "tag":
-                        out.append(
-                            {
-                                "id": int(_id),
-                                "rec_index": 0,
-                                "rec_type": "invalid",
-                                "target_uri": "",
-                                "content_length": 0,
-                                "http_status": 0,
-                                "mime": "",
-                            }
-                        )
-                    continue
-                for ix, r in enumerate(recs):
-                    out.append(
-                        {
-                            "id": int(_id),
-                            "rec_index": ix,
-                            "rec_type": r["rec_type"],
-                            "target_uri": r["target_uri"],
-                            "content_length": r["content_length"],
-                            "http_status": r["http_status"],
-                            "mime": r["mime"],
-                        }
-                    )
-            yield pd.DataFrame(out, columns=cols)
+    def rows_of(_id, payload):
+        for ix, r in enumerate(parse_warc_records(payload)):
+            yield (
+                _id, ix, r["rec_type"], r["target_uri"],
+                r["content_length"], r["http_status"], r["mime"],
+            )
 
-    cols = df.select(
-        F.col(id_col).cast("long").alias(id_col),
-        F.col(payload_col).cast(BinaryType()).alias(payload_col),
-    )
-    return cols.mapInPandas(
-        walk,
-        schema=(
-            "id long, rec_index int, rec_type string, target_uri string, "
-            "content_length long, http_status int, mime string"
-        ),
+    return map_payloads(
+        df, id_col, payload_col,
+        "id long, rec_index int, rec_type string, target_uri string, "
+        "content_length long, http_status int, mime string",
+        rows_of, on_error=on_error, catch=ValueError,
+        tag_row=lambda _id, e: (_id, 0, "invalid", "", 0, 0, ""),
     )
 
 
@@ -853,60 +807,25 @@ def warc_html_documents(
     raises on a non-WARC/corrupt-gzip payload, 'skip' drops it, 'tag'
     emits one row with rec_index=-1 and empty url/html so the garbage
     stays countable."""
-    if on_error not in ("fail", "skip", "tag"):
-        raise ValueError(f"bad on_error {on_error!r}")
 
-    def walk(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = ["id", "rec_index", "url", "html"]
-        for pdf in batches:
-            out = []
-            for _id, payload in zip(pdf[id_col], pdf[payload_col]):
-                try:
-                    recs = parse_warc_records(
-                        bytes(payload) if payload is not None else b"",
-                        body_max=body_max,
-                    )
-                except ValueError:
-                    if on_error == "fail":
-                        raise
-                    if on_error == "tag":
-                        out.append(
-                            {
-                                "id": int(_id),
-                                "rec_index": -1,
-                                "url": "",
-                                "html": "",
-                            }
-                        )
-                    continue
-                for ix, r in enumerate(recs):
-                    if (
-                        r["rec_type"] != "response"
-                        or r["http_status"] != 200
-                        or r["mime"]
-                        not in ("text/html", "application/xhtml+xml")
-                    ):
-                        continue
-                    out.append(
-                        {
-                            "id": int(_id),
-                            "rec_index": ix,
-                            "url": r["target_uri"],
-                            "html": (
-                                None
-                                if r["payload_error"] is not None
-                                else _decode_html_bytes(
-                                    r["payload"], r["charset"]
-                                )
-                            ),
-                        }
-                    )
-            yield pd.DataFrame(out, columns=cols)
+    def rows_of(_id, payload):
+        for ix, r in enumerate(parse_warc_records(payload, body_max=body_max)):
+            if (
+                r["rec_type"] != "response"
+                or r["http_status"] != 200
+                or r["mime"] not in ("text/html", "application/xhtml+xml")
+            ):
+                continue
+            html = (
+                None
+                if r["payload_error"] is not None
+                else _decode_html_bytes(r["payload"], r["charset"])
+            )
+            yield _id, ix, r["target_uri"], html
 
-    cols = df.select(
-        F.col(id_col).cast("long").alias(id_col),
-        F.col(payload_col).cast(BinaryType()).alias(payload_col),
-    )
-    return cols.mapInPandas(
-        walk, schema="id long, rec_index int, url string, html string"
+    return map_payloads(
+        df, id_col, payload_col,
+        "id long, rec_index int, url string, html string",
+        rows_of, on_error=on_error, catch=ValueError,
+        tag_row=lambda _id, e: (_id, -1, "", ""),
     )

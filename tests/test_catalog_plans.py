@@ -399,8 +399,8 @@ def test_q247_warc_pipeline_single_scan_broadcast_gate(spark, sf_dir):
     # repeated-scan bug this composed query exists to catch; the third
     # MapInPandas (robots_rules' parse) runs over the KB-sized domain
     # table, not the corpus
-    assert plan.count("MapInPandas walk(") == 1, plan
-    assert plan.count("MapInPandas gen(") == 1, plan
+    assert plan.count("MapInPandas warc_html_documents(") == 1, plan
+    assert plan.count("MapInPandas q247_warc_to_corpus(") == 1, plan
     assert plan.count("MapInPandas") == 3, plan
     # the robots rule table broadcasts; the page corpus never
     # sort-merge-joins for the gate

@@ -1,7 +1,7 @@
 """Non-stub multimodal decode tests: REAL byte payloads (a valid zlib-
 compressed PNG, BMP, GIF, JPEG, and RIFF/WAVE built from stdlib only)
 through both the pure-Python header parsers and the Spark
-`decode_media(decode_stub=False)` path."""
+`decode_media` path."""
 
 from __future__ import annotations
 
@@ -117,9 +117,7 @@ def test_decode_media_non_stub_real_payloads(spark):
     df = spark.createDataFrame(rows, "id long, payload binary, media_type string")
     out = {
         r["id"]: r
-        for r in decode_media(
-            df, "id", "payload", "media_type", decode_stub=False
-        ).collect()
+        for r in decode_media(df, "id", "payload", "media_type").collect()
     }
     assert (out[1]["width"], out[1]["height"]) == (320, 200)
     assert (out[2]["width"], out[2]["height"]) == (17, 9)
@@ -136,7 +134,7 @@ def test_decode_media_non_stub_raises_on_unknown_codec(spark):
         [(1, b"\x00\x01\x02", "video/mp4")], "id long, payload binary, media_type string"
     )
     with pytest.raises(Exception, match="pyav"):
-        decode_media(df, "id", "payload", "media_type", decode_stub=False).collect()
+        decode_media(df, "id", "payload", "media_type").collect()
 
 
 # ---------------------------------------------------------------------------
@@ -269,7 +267,7 @@ def test_real_png_resize_end_to_end_spark(spark):
     df = spark.createDataFrame(
         [(1, encode_png(w, h, 1, raw))], "id long, payload binary"
     )
-    resized = resize_images(df, "id", "payload", 3, 3, decode_stub=False)
+    resized = resize_images(df, "id", "payload", 3, 3)
     probed = png_probe(resized, "id", "resized_payload").collect()[0]
     assert (probed["width"], probed["height"], probed["channels"]) == (3, 3, 1)
     got = decode_png_pixels(
@@ -613,7 +611,7 @@ def test_y4m_frame_stats_and_sample_frames_spark(spark):
     real = {
         r["frame_index"]: r["frame_digest"]
         for r in sample_frames(
-            df, "id", "payload", every_ms=250, max_frames=8, decode_stub=False
+            df, "id", "payload", every_ms=250, max_frames=8
         ).collect()
     }
     assert sorted(real) == [0, 2, 5, 7]
@@ -625,7 +623,7 @@ def test_sample_frames_real_rejects_compressed(spark):
 
     df = spark.createDataFrame([(1, b"\x00\x00\x00\x18ftypmp42")], "id long, payload binary")
     with _pytest.raises(Exception) as ei:
-        sample_frames(df, "id", "payload", decode_stub=False).collect()
+        sample_frames(df, "id", "payload").collect()
     assert "NotImplementedError" in str(ei.value) or "pyav" in str(ei.value)
 
 
@@ -848,7 +846,7 @@ def test_sample_frames_real_avi_path(spark):
     avi = encode_avi_mjpeg(8, 8, frames, fps=(2, 1))
     df = spark.createDataFrame([(1, avi)], "id long, payload binary")
     got = sample_frames(
-        df, "id", "payload", every_ms=500, max_frames=8, decode_stub=False
+        df, "id", "payload", every_ms=500, max_frames=8
     ).collect()
     assert [r["frame_index"] for r in got] == [0, 1, 2, 3]
     # digest is over DECODED pixels, matching a direct decode

@@ -248,19 +248,28 @@ def test_cosine_topk_exact(spark):
 
 
 def test_kmeans_assign_impls_bit_identical(spark, sf_dir):
-    """The vectorized numpy assignment (np.add.accumulate) and the JVM
-    expression fold must agree bit-for-bit — the determinism contract the
-    q41/q42 oracle gate rests on."""
+    """Every round's vectorized numpy assignment must equal the JVM
+    expression fold (``_cell_dist_structs``, the oracle) on that round's
+    centroids bit-for-bit — the determinism contract the q41/q42 oracle
+    gate rests on.  ``n_iter`` = 0, 1, 2 exposes each round."""
     from logistics_data_pipeline_project_spark.io_utils import load
-    from logistics_data_pipeline_project_spark.operators.similarity import kmeans_cells
+    from logistics_data_pipeline_project_spark.operators.similarity import (
+        _cell_dist_structs,
+        kmeans_cells,
+    )
 
     emb = load(spark, sf_dir, "embeddings")
-    a_pd, c_pd = kmeans_cells(emb, "vec_id", "embedding", k=4, n_iter=2, assign_impl="pandas")
-    a_ex, c_ex = kmeans_cells(emb, "vec_id", "embedding", k=4, n_iter=2, assign_impl="expr")
-    assert c_pd == c_ex  # centroid doubles bit-equal through both paths
-    rows_pd = {r["id"]: (r["cell"], r["sq_dist"]) for r in a_pd.collect()}
-    rows_ex = {r["id"]: (r["cell"], r["sq_dist"]) for r in a_ex.collect()}
-    assert rows_pd == rows_ex
+    dbl = emb.select(
+        F.col("vec_id").alias("id"),
+        F.transform(F.col("embedding"), lambda x: x.cast("double")).alias("v"),
+    )
+    for n_iter in (0, 1, 2):
+        got, cents = kmeans_cells(emb, "vec_id", "embedding", k=4, n_iter=n_iter)
+        best = F.array_min(_cell_dist_structs(cents))
+        want = dbl.select("id", best["cell"].alias("cell"), best["d"].alias("sq_dist"))
+        rows_got = {r["id"]: (r["cell"], r["sq_dist"]) for r in got.collect()}
+        rows_want = {r["id"]: (r["cell"], r["sq_dist"]) for r in want.collect()}
+        assert rows_got == rows_want, n_iter
 
 
 def test_kmeans_cells_partition_all_rows(spark, sf_dir):
@@ -299,61 +308,85 @@ def test_ivf_topk_recall_vs_exact(spark, sf_dir):
 
 
 def test_multimodal_metadata_and_stub_decode(spark):
-    df = spark.createDataFrame(
+    """Metadata is JVM-side; decode is real, and bytes no codec here can
+    parse raise NotImplementedError instead of faking features."""
+    from logistics_data_pipeline_project_spark.operators.multimodal import (
+        encode_png,
+        encode_wav_pcm16,
+    )
+
+    fake = spark.createDataFrame(
         [
             Row(id=1, payload=bytearray(b"fake-image-bytes"), mtype="image/png"),
             Row(id=2, payload=bytearray(b"fake-audio-bytes!"), mtype="audio/wav"),
         ]
     )
-    meta = attach_payload_metadata(df, "payload", "mtype")
+    meta = attach_payload_metadata(fake, "payload", "mtype")
     m = {r["id"]: r["media_meta"].asDict() for r in meta.collect()}
     assert m[1]["n_bytes"] == 16 and m[1]["media_type"] == "image/png"
     assert len(m[1]["sha256"]) == 64
 
-    feats = decode_media(df, "id", "payload", "mtype")
-    rows = {r["id"]: r.asDict() for r in feats.collect()}
-    assert rows[1]["width"] is not None and rows[1]["duration_ms"] is None
-    assert rows[2]["width"] is None and rows[2]["duration_ms"] is not None
-    # deterministic fake decode: replay gives identical features
-    rows2 = {r["id"]: r.asDict() for r in decode_media(df, "id", "payload", "mtype").collect()}
-    assert rows == rows2
-    # sha digest matches the JVM-side metadata digest
-    assert rows[1]["feature_digest"] == m[1]["sha256"]
+    with pytest.raises(Exception, match="NotImplementedError"):
+        decode_media(fake, "id", "payload", "mtype").collect()
 
-    with pytest.raises(Exception, match="NotImplementedError|real media decode"):
-        decode_media(df, "id", "payload", "mtype", decode_stub=False).collect()
+    real = spark.createDataFrame(
+        [
+            Row(id=1, payload=bytearray(encode_png(5, 3, 1, bytes(15))), mtype="image/png"),
+            Row(id=2, payload=bytearray(encode_wav_pcm16([0] * 800)), mtype="audio/wav"),
+        ]
+    )
+    m = {
+        r["id"]: r["media_meta"].asDict()
+        for r in attach_payload_metadata(real, "payload", "mtype").collect()
+    }
+    rows = {r["id"]: r.asDict() for r in decode_media(real, "id", "payload", "mtype").collect()}
+    assert (rows[1]["width"], rows[1]["height"], rows[1]["duration_ms"]) == (5, 3, None)
+    assert (rows[2]["width"], rows[2]["duration_ms"]) == (None, 100)
+    # sha digest matches the JVM-side metadata digest
+    for i in (1, 2):
+        assert rows[i]["feature_digest"] == m[i]["sha256"]
+        assert rows[i]["n_bytes"] == m[i]["n_bytes"]
 
 
 def test_multimodal_frame_sample_and_resize(spark):
     from logistics_data_pipeline_project_spark.operators.multimodal import (
+        decode_png_pixels,
+        encode_png,
+        encode_y4m,
         resize_images,
         sample_frames,
+        sampled_frames,
     )
 
-    df = spark.createDataFrame(
+    fake = spark.createDataFrame(
         [(1, bytearray(b"video-bytes-a")), (2, bytearray(b"video-bytes-b"))],
         "id long, payload binary",
     )
-    frames = sample_frames(df, "id", "payload", every_ms=1000, max_frames=4)
-    rows = frames.collect()
-    # deterministic: same payload -> same frame count and digests
-    again = sample_frames(df, "id", "payload", every_ms=1000, max_frames=4).collect()
-    assert sorted(map(tuple, rows)) == sorted(map(tuple, again))
-    by_id = {}
-    for r in rows:
-        by_id.setdefault(r["id"], []).append(r)
-    for vid, fr in by_id.items():
-        assert 1 <= len(fr) <= 4
-        assert [f["frame_index"] for f in sorted(fr, key=lambda x: x["frame_index"])] == list(range(len(fr)))
-        assert all(f["frame_ms"] == f["frame_index"] * 1000 for f in fr)
+    with pytest.raises(Exception, match="NotImplementedError"):
+        sample_frames(fake, "id", "payload").collect()
+    with pytest.raises(Exception, match="NotImplementedError"):
+        resize_images(fake, "id", "payload", width=4, height=4).collect()
 
-    resized = resize_images(df, "id", "payload", width=64, height=64).collect()
-    assert {r["id"] for r in resized} == {1, 2}
-    assert all(r["width"] == 64 and r["height"] == 64 for r in resized)
-    assert all(isinstance(r["resized_payload"], (bytes, bytearray)) for r in resized)
-    # binary-in/binary-out determinism
-    r2 = resize_images(df, "id", "payload", width=64, height=64).collect()
-    assert {bytes(r["resized_payload"]) for r in resized} == {bytes(r["resized_payload"]) for r in r2}
+    # 5 frames at 2 fps: every 1000 ms picks frames 0, 2, 4, then stops
+    y4m = encode_y4m(2, 2, [bytes([i] * 4) for i in range(5)], fps=(2, 1))
+    assert sampled_frames(5, 2, 1, 1000, 8) == [(0, 0), (2, 1000), (4, 2000)]
+    # a step shorter than the frame period would repeat a frame: stop
+    assert sampled_frames(5, 2, 1, 100, 8) == [(0, 0)]
+    assert sampled_frames(5, 2, 1, 1000, 2) == [(0, 0), (2, 1000)]
+    vids = spark.createDataFrame([(7, bytearray(y4m))], "id long, payload binary")
+    rows = sample_frames(vids, "id", "payload", every_ms=1000, max_frames=4).collect()
+    assert [(r["id"], r["frame_index"], r["frame_ms"]) for r in rows] == [
+        (7, 0, 0), (7, 2, 1000), (7, 4, 2000)
+    ]
+    import hashlib
+
+    assert rows[1]["frame_digest"] == hashlib.sha256(bytes([2] * 4)).hexdigest()
+
+    png = encode_png(4, 2, 1, bytes(range(8)))
+    imgs = spark.createDataFrame([(3, bytearray(png))], "id long, payload binary")
+    (r,) = resize_images(imgs, "id", "payload", width=2, height=2).collect()
+    assert (r["id"], r["width"], r["height"]) == (3, 2, 2)
+    assert decode_png_pixels(bytes(r["resized_payload"])) == (2, 2, 1, bytes([0, 2, 4, 6]))
 
 
 def test_connected_components_min_label():
@@ -1244,19 +1277,33 @@ def test_ivf_pq_residual_coding_recall(spark, sf_dir):
 
 
 def test_pq_assign_impls_bit_equal(spark, sf_dir):
-    """The vectorized Arrow assignment (np.add.accumulate — sequential
-    per-dim sums) must reproduce the JVM fold path bit-for-bit, same
-    contract as kmeans_cells' two implementations."""
+    """Every round's vectorized Arrow assignment (np.add.accumulate —
+    sequential per-dim sums) must reproduce the JVM fold
+    (``_sub_dist_structs``, the oracle) on that round's codebooks
+    bit-for-bit, same contract as kmeans_cells."""
     from logistics_data_pipeline_project_spark.io_utils import load
-    from logistics_data_pipeline_project_spark.operators.similarity import pq_kmeans
+    from logistics_data_pipeline_project_spark.operators.similarity import (
+        _cents_literal,
+        _split_subvectors,
+        _sub_dist_structs,
+        pq_kmeans,
+    )
 
     emb = load(spark, sf_dir, "embeddings")
-    a_pd, c_pd = pq_kmeans(emb, "vec_id", "embedding", n_iter=1, assign_impl="pandas")
-    a_ex, c_ex = pq_kmeans(emb, "vec_id", "embedding", n_iter=1, assign_impl="expr")
-    assert c_pd == c_ex
-    rp = {(r["id"], r["s"]): (r["code"], r["sq_err"]) for r in a_pd.collect()}
-    re_ = {(r["id"], r["s"]): (r["code"], r["sq_err"]) for r in a_ex.collect()}
-    assert rp == re_
+    dbl = emb.select(
+        F.col("vec_id").alias("id"),
+        F.transform(F.col("embedding"), lambda x: x.cast("double")).alias("v"),
+    )
+    for n_iter in (0, 1, 2):
+        got, cb = pq_kmeans(emb, "vec_id", "embedding", n_iter=n_iter)
+        subs = _split_subvectors(dbl, "v", len(cb), len(cb[0][0]), ["id"])
+        best = F.array_min(_sub_dist_structs(_cents_literal(cb)))
+        want = subs.select(
+            "id", "s", best["code"].alias("code"), best["d"].alias("sq_err")
+        )
+        rg = {(r["id"], r["s"]): (r["code"], r["sq_err"]) for r in got.collect()}
+        rw = {(r["id"], r["s"]): (r["code"], r["sq_err"]) for r in want.collect()}
+        assert rg == rw, n_iter
 
 
 def test_pq_edge_cases_guarded(spark):

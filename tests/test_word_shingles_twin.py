@@ -1,8 +1,8 @@
-"""Bit-equality proof for the round-11 Arrow word_shingles twin vs the
-round-10 pure-expression form: same rows, same per-doc first-occurrence
-order, over the real corpus AND adversarial strings (empty tokens,
-trailing spaces, unicode where Java/Arrow lowercasing differs — handled
-by keeping lower() in the JVM)."""
+"""Bit-equality proof for the Arrow ``word_shingles`` kernel against the
+pure-expression form it replaced (kept here as the oracle): same rows,
+same per-doc first-occurrence order, over the real corpus AND
+adversarial strings (empty tokens, trailing spaces, unicode where
+Java/Arrow lowercasing differs — handled by keeping lower() in the JVM)."""
 
 from __future__ import annotations
 
@@ -13,14 +13,35 @@ import pytest
 
 sys.path.insert(0, os.path.join(os.path.dirname(__file__), ".."))
 
+from pyspark.sql import functions as F
+
 from logistics_data_pipeline_project_spark.operators.dedup import word_shingles
+from logistics_data_pipeline_project_spark.operators.scale import fan_out
+from logistics_data_pipeline_project_spark.operators.text import sliding_concat_sql
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.001")
 
 
+def _expr_shingles(df, text_col, id_col, n):
+    """The pure-expression form: split, then array_distinct over a
+    transform of the window starts."""
+    toks = fan_out(df).select(
+        F.col(id_col), F.split(F.lower(F.col(text_col)), " ").alias("__t")
+    ).filter(F.size("__t") >= n)
+    return toks.select(
+        F.col(id_col),
+        F.explode(
+            F.expr(
+                f"array_distinct(transform(sequence(0, size(__t)-{n}),"
+                f" i -> {sliding_concat_sql('__t', 'i', n)}))"
+            )
+        ).alias("shingle"),
+    )
+
+
 def _both(df, text_col, id_col, n):
-    a = word_shingles(df, text_col, id_col, n=n, impl="arrow").collect()
-    e = word_shingles(df, text_col, id_col, n=n, impl="expr").collect()
+    a = word_shingles(df, text_col, id_col, n=n).collect()
+    e = _expr_shingles(df, text_col, id_col, n).collect()
     return [tuple(r) for r in a], [tuple(r) for r in e]
 
 
