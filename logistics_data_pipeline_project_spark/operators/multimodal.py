@@ -38,6 +38,8 @@ capability boundary, not a silent fake.
 
 from __future__ import annotations
 
+from collections.abc import Sequence
+
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.types import (
     IntegerType,
@@ -651,6 +653,13 @@ FRAME_SCHEMA = StructType(
 )
 
 
+def _check_every_ms(every_ms: int) -> None:
+    # a step below 1 ms would pick frame 0 only, or (negative) frames
+    # counted back from the end of the stream
+    if every_ms < 1:
+        raise ValueError(f"every_ms must be >= 1, got {every_ms!r}")
+
+
 def sampled_frames(
     n: int, num: int, den: int, every_ms: int, max_frames: int
 ) -> list[tuple[int, int]]:
@@ -658,7 +667,9 @@ def sampled_frames(
     at or before ``k * every_ms`` on the stream's own ``num/den`` fps
     timebase, stopping at the end of the stream or at the first frame
     that would be taken twice.  Returns ``(frame_index, frame_ms)``
-    pairs, ``frame_ms`` being that frame's own start time."""
+    pairs, ``frame_ms`` being that frame's own start time.  ``every_ms``
+    below 1 raises ``ValueError``."""
+    _check_every_ms(every_ms)
     picked: list[tuple[int, int]] = []
     for k in range(max_frames):
         idx = k * every_ms * num // (1000 * den)
@@ -692,6 +703,7 @@ def sample_frames(
     compressed video raises NotImplementedError (inter-coded formats
     need pyav) — the honest boundary.
     """
+    _check_every_ms(every_ms)
 
     def rows_of(_id, payload):
         import hashlib
@@ -2468,6 +2480,7 @@ def y4m_frame_stats(
     ``max_frames``; report exact per-frame luma stats (first byte, full
     plane sum) the oracle can recompute. Row explosion happens inside
     the Arrow batch — pixel planes never leave the UDF."""
+    _check_every_ms(every_ms)
 
     def rows_of(_id, payload):
         w, h, num, den, frames = decode_y4m_frames(payload)
@@ -2638,6 +2651,7 @@ def mjpeg_frame_stats(
     report exact per-frame decoded-pixel stats (first pixel, full RGB
     sum) an oracle can recompute. Row explosion happens inside the
     Arrow batch — neither payloads nor pixels leave the UDF."""
+    _check_every_ms(every_ms)
 
     def rows_of(_id, payload):
         _w, _h, num, den, frames = decode_avi_mjpeg_frames(payload)

@@ -48,19 +48,20 @@ from ..operators.text import (
 )
 from .registry import register
 
-#: Python tasks of the per-document payload stages (``_doc_rows``)
-_DOC_TASKS = 32
-
-
 def _doc_rows(spark, sf_dir, rows_of, schema="doc_id long, payload binary", setup=None):
     """``map_rows`` over the corpus doc_ids: ``rows_of(doc_id)``, or
     ``rows_of(setup(), doc_id)`` with a per-task ``setup``, yields each
-    document's output tuples.  The bare ids are hash-spread over
-    ``_DOC_TASKS`` partitions first (one cheap shuffle of longs): the id
-    column is tiny but the per-document codec work is CPU-bound."""
+    document's output tuples.  The bare ids are hash-spread over the
+    session's ``spark.sql.shuffle.partitions`` first (one cheap shuffle of
+    longs): the id column is tiny but the per-document codec work is
+    CPU-bound, so one task per core (``session.py`` sets the conf to the
+    core count) and an explicit count, which AQE does not coalesce into
+    one task.  Every ``setup`` table is deterministic per task, so no
+    output depends on the count."""
     from ..operators.rowmap import map_rows
 
-    docs = load(spark, sf_dir, "documents").select("doc_id").repartition(_DOC_TASKS, "doc_id")
+    tasks = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    docs = load(spark, sf_dir, "documents").select("doc_id").repartition(tasks, "doc_id")
     return map_rows(docs, schema, rows_of, setup=setup)
 
 
@@ -4292,10 +4293,12 @@ def q161_png_resize_audit(spark: SparkSession, sf_dir: str):
     the resized payload is then RE-DECODED by png_probe, whose top-left
     pixel must equal the source formula at (0,0): the oracle checks a
     value that only survives if every codec stage is correct, not just
-    the plumbing.  All three stages are iterator-style mapInPandas
-    (payload bytes never row-trip through the driver); at scale the
-    payload column is the partition-size dominator, so the stages
-    inherit decode_media's batching notes."""
+    the plumbing.  All three stages run as ONE fused iterator-style
+    mapInPandas (operators/rowmap.py), so payload bytes never row-trip
+    through the driver and cross into Python once per task; the source
+    size columns of the final join re-run the generator alone.  At
+    scale the payload column is the partition-size dominator, so the
+    stages inherit decode_media's batching notes."""
     from ..operators.multimodal import encode_png, png_probe, resize_images
     from ..operators.rowmap import map_rows
 
@@ -5093,9 +5096,10 @@ def q173_gif_decode_audit(spark: SparkSession, sf_dir: str):
     indices.  The oracle recomputes that whole-frame checksum from the
     pixel formula, so the hash only matches if compressor, width-growth
     rule, container walk and decompressor are all correct — the q161
-    PNG audit's sibling for the LZW family.  Both stages are
-    iterator-style mapInPandas (payload bytes never visit the driver);
-    scale notes inherit decode_media's batching contract."""
+    PNG audit's sibling for the LZW family.  Both stages run as one
+    fused iterator-style mapInPandas (operators/rowmap.py; payload bytes
+    never visit the driver); scale notes inherit decode_media's
+    batching contract."""
     from ..operators.multimodal import encode_gif, gif_probe
     from ..operators.rowmap import map_rows
 
@@ -6738,8 +6742,9 @@ def q199_jpeg_codec_audit(spark: SparkSession, sf_dir: str):
     pixel sum, which only matches if every codec stage is correct (the
     q161 PNG pattern, now through a DCT codec).  Lossy-path behavior is
     property-tested separately (tests/test_multimodal_decode.py).  Scale
-    shape: generation and decode are iterator mapInPandas stages; no
-    payload ever reaches the driver; one broadcast-free narrow pipeline
+    shape: generation and decode run as one fused iterator mapInPandas
+    (operators/rowmap.py), one Python crossing per task; no payload
+    ever reaches the driver; one broadcast-free narrow pipeline
     plus the final checksum join on doc_id."""
     from ..operators.multimodal import encode_jpeg, jpeg_probe
 
@@ -6810,9 +6815,10 @@ def q200_video_frame_audit(spark: SparkSession, sf_dir: str):
     the oracle.  This is the video twin of q161/q199: the Spark-side
     plumbing (binary payloads, Arrow batches, in-UDF row explosion) and
     the parser are both real; only COMPRESSED video remains behind the
-    honest pyav boundary.  Scale shape: two narrow mapInPandas stages
-    after an explicit repartition of bare ids — frame planes never
-    shuffle and never reach the driver."""
+    honest pyav boundary.  Scale shape: generation and sampling run as
+    one fused narrow mapInPandas (operators/rowmap.py) after an
+    explicit repartition of bare ids — frame planes never shuffle and
+    never reach the driver."""
     from ..operators.multimodal import encode_y4m, y4m_frame_stats
 
     def rows_of(doc_id):
@@ -7501,7 +7507,8 @@ def q209_jpeg_color_audit(spark: SparkSession, sf_dir: str):
     is integer-exact END TO END; the oracle recomputes the whole-image
     RGB pixel sum in closed form.  Chromatic content is lossy by nature
     and lives in the property tests; this query certifies the color
-    STRUCTURE bit-for-bit.  Same two-stage mapInPandas shape as q199."""
+    STRUCTURE bit-for-bit.  Same fused generate+decode mapInPandas
+    shape as q199."""
     from ..operators.multimodal import encode_jpeg, jpeg_probe
 
     w_px, h_px = _JPEG_TILES_X * 8, _JPEG_TILES_Y * 8
@@ -7661,8 +7668,8 @@ def q213_jpeg_subsampled_audit(spark: SparkSession, sf_dir: str):
     reassembly + upsample) is integer-exact END TO END; the oracle
     recomputes both whole-image RGB pixel sums in closed form.  Lossy
     chromatic content lives in the property tests
-    (tests/test_multimodal_decode.py).  Scale shape: same two-stage
-    iterator-mapInPandas pipeline as q199/q209 — payloads never touch
+    (tests/test_multimodal_decode.py).  Scale shape: same fused
+    generate+decode iterator-mapInPandas as q199/q209 — payloads never touch
     the driver, one cheap shuffle of bare longs fans the CPU-bound
     codec work across executors."""
     from ..operators.multimodal import encode_jpeg, jpeg_probe
@@ -7748,7 +7755,7 @@ def q214_mjpeg_frame_audit(spark: SparkSession, sf_dir: str):
     form (frames 0,2,4,6 while they exist).  At 100 TB this sampling
     shape reads n_sampled, not n_total, JPEG decodes per clip — the
     reason the container stays compressed until the sample point.
-    Scale shape: two iterator-mapInPandas stages (generate+mux, then
+    Scale shape: one fused iterator-mapInPandas (generate+mux, then
     sample+decode); payloads and pixels never leave the UDFs; one cheap
     shuffle of bare longs spreads the CPU-bound codec work."""
     from ..operators.multimodal import (
@@ -8275,7 +8282,7 @@ def q219_audio_spectral_audit(spark: SparkSession, sf_dir: str):
     numpy FFT argmax is structurally stable and the oracle states every
     output in closed form — container parse, framing, integer energy
     and the spectral peak all have to be right at once.  Scale shape:
-    two iterator-mapInPandas stages (synthesize, then decode+FFT);
+    one fused iterator-mapInPandas (synthesize, then decode+FFT);
     samples never leave the UDFs; one cheap shuffle of bare longs
     spreads the CPU-bound DSP."""
     from ..operators.multimodal import audio_frame_features, encode_wav_pcm16
@@ -8387,7 +8394,8 @@ def q220_image_dhash_audit(spark: SparkSession, sf_dir: str):
     the exact fingerprint — container parse, entropy decode, palette
     resolution, luma and the bit packing all have to be right at once
     (the q199/q219 pattern, now for the image-dedup fingerprint).
-    Scale shape: generate and hash are iterator-mapInPandas stages;
+    Scale shape: generate and hash run as one fused
+    iterator-mapInPandas;
     payloads never leave the UDFs; the result is 5 scalars per image."""
     from ..operators.multimodal import dhash_images, encode_gif, encode_png
 
@@ -8522,8 +8530,8 @@ def q222_jpeg_progressive_audit(spark: SparkSession, sf_dir: str):
     41*b) mod 256, quantizer 8) keep every stage integer-exact, so the
     oracle states the decoded pixels in closed form — a wrong EOBRUN,
     correction bit, band boundary or DC bitplane breaks the whole-image
-    checksum.  Scale shape: identical to q199 — two iterator
-    mapInPandas stages, payloads never leave the UDFs."""
+    checksum.  Scale shape: identical to q199 — one fused iterator
+    mapInPandas (generate, then decode), payloads never leave the UDFs."""
     from ..operators.multimodal import encode_jpeg, jpeg_probe
 
     w_px, h_px = _PJPEG_TX * 8, _PJPEG_TY * 8
@@ -9066,8 +9074,8 @@ def q229_audio_stereo_downmix_audit(spark: SparkSession, sf_dir: str):
     and the fundamental at bin N/P still strictly dominates — container
     channel-count handling, interleave order, the downmix rounding
     convention and the FFT all have to be right at once.  Scale shape:
-    identical to q219 — two iterator-mapInPandas stages, samples never
-    leave the UDFs."""
+    identical to q219 — one fused iterator-mapInPandas (synthesize,
+    then decode+FFT), samples never leave the UDFs."""
     from ..operators.multimodal import audio_frame_features, encode_wav_pcm16
 
     def rows_of(doc_id):
@@ -9191,8 +9199,8 @@ def q231_audio_flac_decode_audit(spark: SparkSession, sf_dir: str):
     frame-audited.  Because FLAC is LOSSLESS the oracle is q229's
     closed-form energy/peak/bin formulas UNCHANGED — any Rice/predictor
     /decorrelation bug shifts a sample and breaks the hash.  Scale
-    shape: identical to q229 — two iterator-mapInPandas stages,
-    samples never leave the UDFs."""
+    shape: identical to q229 — one fused iterator-mapInPandas
+    (encode, then decode+FFT), samples never leave the UDFs."""
     from ..operators.multimodal import audio_frame_features, encode_flac
 
     modes = ("independent", "left_side", "right_side", "mid_side")

@@ -5,6 +5,8 @@ appear, not just be claimed in docstrings."""
 
 from __future__ import annotations
 
+import pytest
+
 from logistics_data_pipeline_project_spark.queries import REGISTRY
 
 
@@ -304,7 +306,15 @@ def test_q220_image_hash_single_exchange(spark, sf_dir):
     # generate->decode->hash pipeline itself is narrow (payloads never
     # shuffle)
     assert plan.count("Exchange hashpartitioning") == 1, plan
-    assert plan.count("MapInPandas") == 2, plan  # generate + hash
+    assert plan.count("MapInPandas") == 1, plan  # generate + hash, fused
+
+
+@pytest.mark.parametrize("name", ["q199_jpeg_codec_audit", "q244_warc_crawl_census"])
+def test_codec_generate_and_probe_cross_into_python_once(spark, sf_dir, name):
+    plan = _physical(REGISTRY[name].fn(spark, sf_dir))
+    # the fixture generator and the codec probe run as one fused Python
+    # node (operators/rowmap.py), not two stacked ones per task
+    assert plan.count("MapInPandas") == 1, plan
 
 
 def test_q221_neardup_join_shuffles_fingerprints_not_pixels(spark, sf_dir):
@@ -393,15 +403,14 @@ def test_q245_robots_gate_is_broadcast_join(spark, sf_dir):
 
 def test_q247_warc_pipeline_single_scan_broadcast_gate(spark, sf_dir):
     plan = _physical(REGISTRY["q247_warc_to_corpus"].fn(spark, sf_dir))
-    # the crawl bytes must be read by EXACTLY ONE Arrow walk (the
-    # extraction lane) and generated by exactly one fixture pass — a
-    # second pass over the payload would be the cross-operator
-    # repeated-scan bug this composed query exists to catch; the third
-    # MapInPandas (robots_rules' parse) runs over the KB-sized domain
-    # table, not the corpus
-    assert plan.count("MapInPandas warc_html_documents(") == 1, plan
-    assert plan.count("MapInPandas q247_warc_to_corpus(") == 1, plan
-    assert plan.count("MapInPandas") == 3, plan
+    # the crawl bytes must be generated by exactly one fixture pass and
+    # read by EXACTLY ONE Arrow walk (the extraction lane), fused into
+    # that pass — a second pass over the payload would be the
+    # cross-operator repeated-scan bug this composed query exists to
+    # catch; the other MapInPandas (robots_rules' parse) runs over the
+    # KB-sized domain table, not the corpus
+    assert plan.count("MapInPandas q247_warc_to_corpus+warc_html_documents(") == 1, plan
+    assert plan.count("MapInPandas") == 2, plan
     # the robots rule table broadcasts; the page corpus never
     # sort-merge-joins for the gate
     assert "BroadcastHashJoin" in plan, plan

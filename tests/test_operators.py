@@ -353,9 +353,11 @@ def test_multimodal_frame_sample_and_resize(spark):
         decode_png_pixels,
         encode_png,
         encode_y4m,
+        mjpeg_frame_stats,
         resize_images,
         sample_frames,
         sampled_frames,
+        y4m_frame_stats,
     )
 
     fake = spark.createDataFrame(
@@ -373,7 +375,15 @@ def test_multimodal_frame_sample_and_resize(spark):
     # a step shorter than the frame period would repeat a frame: stop
     assert sampled_frames(5, 2, 1, 100, 8) == [(0, 0)]
     assert sampled_frames(5, 2, 1, 1000, 2) == [(0, 0), (2, 1000)]
+    # a negative step would pick frames counted from the end of the stream
+    with pytest.raises(ValueError, match="every_ms"):
+        sampled_frames(5, 2, 1, -1000, 3)
     vids = spark.createDataFrame([(7, bytearray(y4m))], "id long, payload binary")
+    # the operators reject it when called, before any job runs
+    for op in (sample_frames, y4m_frame_stats, mjpeg_frame_stats):
+        for every_ms in (0, -1000):
+            with pytest.raises(ValueError, match="every_ms"):
+                op(vids, "id", "payload", every_ms=every_ms)
     rows = sample_frames(vids, "id", "payload", every_ms=1000, max_frames=4).collect()
     assert [(r["id"], r["frame_index"], r["frame_ms"]) for r in rows] == [
         (7, 0, 0), (7, 2, 1000), (7, 4, 2000)
@@ -387,6 +397,25 @@ def test_multimodal_frame_sample_and_resize(spark):
     (r,) = resize_images(imgs, "id", "payload", width=2, height=2).collect()
     assert (r["id"], r["width"], r["height"]) == (3, 2, 2)
     assert decode_png_pixels(bytes(r["resized_payload"])) == (2, 2, 1, bytes([0, 2, 4, 6]))
+
+
+def test_payload_operator_annotations_resolve():
+    # annotations stay strings under `from __future__ import annotations`,
+    # so a name the module never imports surfaces only here
+    import inspect
+    import typing
+
+    from logistics_data_pipeline_project_spark.operators import multimodal, rowmap
+    from logistics_data_pipeline_project_spark.sources import warc
+
+    checked = 0
+    for mod in (multimodal, rowmap, warc):
+        for name, fn in vars(mod).items():
+            if name.startswith("_") or not inspect.isfunction(fn) or fn.__module__ != mod.__name__:
+                continue
+            typing.get_type_hints(fn)
+            checked += 1
+    assert checked > 50
 
 
 def test_connected_components_min_label():
