@@ -16,7 +16,7 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, functions as F
 
-from ..operators.merge import incremental_filter
+from ..operators.merge import high_watermark, incremental_filter
 from ..operators.router import validity_router
 
 WATERMARK_COL = "_AIRBYTE_EXTRACTED_AT"
@@ -28,8 +28,7 @@ def _incremental(raw: DataFrame, existing: DataFrame | None, wm_col: str = WATER
     WHERE extracted_at > COALESCE((SELECT MAX(...) FROM this), '2000-01-01')."""
     if existing is None:
         return raw
-    wm = existing.agg(F.max(wm_col)).first()[0]
-    return incremental_filter(raw, wm_col, wm)
+    return incremental_filter(raw, wm_col, high_watermark(existing, wm_col))
 
 
 # -- customers (dbt/.../silver/dim_customers.sql, silver_error_customers.sql)

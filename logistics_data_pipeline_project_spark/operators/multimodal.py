@@ -11,6 +11,17 @@ the operator supplies only the per-payload ``rows_of`` generator, and
 ``rowmap`` owns the batch loop, the input cast and the ``on_error``
 quarantine lane.
 
+The codecs share one wire-format layer, defined once at the top of the
+module: the container walkers ``_riff_chunks`` (with ``_avi_chunks`` for
+AVI LIST trees and ``_wav_fmt_data`` for the WAV fmt/data pair),
+``_mp4_boxes`` / ``_mp4_child`` (ISO-BMFF) and ``_ebml_elements``
+(Matroska/WebM); the MSB-first ``_MsbBitReader`` / ``_MsbBitWriter``
+(fixed-width, unary and Exp-Golomb fields) that FLAC, the H.264/H.265/AV1
+headers and the JPEG entropy coder read and write through; and
+``_make_crc_table`` for the FLAC and Ogg CRCs. JPEG's LUT-driven
+``_BitReader`` stays separate: it reads de-stuffed scan data on the
+decoder's hot path.
+
 Decode is REAL for the formats parseable in pure Python (no image/audio
 libraries are available). Header level: PNG / BMP / GIF / JPEG
 dimensions and WAV duration (`parse_image_header` /
@@ -103,6 +114,253 @@ __all__ = [
 ]
 
 
+# ---------------------------------------------------------------------------
+# Wire-format primitives shared by the codecs below
+# ---------------------------------------------------------------------------
+
+
+def _riff_chunks(p: bytes, lo: int, hi: int):
+    """Yield (fourcc, body_lo, body_hi, declared_size) per RIFF chunk in
+    ``p[lo:hi]``. ``body_hi`` is clipped to ``hi``; the walk steps over
+    the declared size plus the pad byte that word-aligns an odd chunk."""
+    i = lo
+    while i + 8 <= hi:
+        size = int.from_bytes(p[i + 4 : i + 8], "little")
+        yield p[i : i + 4], i + 8, min(i + 8 + size, hi), size
+        i += 8 + size + (size & 1)
+
+
+def _avi_chunks(p: bytes, lo: int, hi: int):
+    """Leaf (fourcc, body_lo, body_hi) chunks of an AVI's RIFF tree in
+    file order: a LIST is entered past its 4-byte list type, with its
+    children clipped to it."""
+    for cid, b0, b1, _size in _riff_chunks(p, lo, hi):
+        if cid == b"LIST":
+            yield from _avi_chunks(p, b0 + 4, b1)
+        else:
+            yield cid, b0, b1
+
+
+def _wav_fmt_data(p: bytes, whole_fmt: bool):
+    """(fmt, data) of a RIFF/WAVE payload. ``fmt`` unpacks the last
+    'fmt ' chunk's first 16 bytes as (format_code, n_channels,
+    sample_rate, byte_rate, block_align, bits_per_sample); a chunk counts
+    when those 16 bytes lie inside the payload and, with ``whole_fmt``,
+    inside its declared size too. ``data`` is the last 'data' chunk's
+    (body_lo, body_hi, declared_size). Either is None when absent."""
+    import struct
+
+    fmt = data = None
+    for cid, b0, b1, size in _riff_chunks(p, 12, len(p)):
+        if cid == b"fmt " and b0 + 16 <= len(p) and (size >= 16 or not whole_fmt):
+            fmt = struct.unpack("<HHIIHH", p[b0 : b0 + 16])
+        elif cid == b"data":
+            data = (b0, b1, size)
+    return fmt, data
+
+
+def _mp4_boxes(p: bytes, lo: int, hi: int):
+    """Yield (fourcc, body_lo, box_end) per ISO-BMFF box in ``p[lo:hi]``
+    (size 1: a 64-bit largesize follows; size 0: the box runs to
+    ``hi``). Stops at the first box that is undersized or overruns."""
+    j = lo
+    while j + 8 <= hi:
+        size = int.from_bytes(p[j : j + 4], "big")
+        fourcc = p[j + 4 : j + 8]
+        body = j + 8
+        if size == 1:
+            if j + 16 > hi:
+                return
+            size = int.from_bytes(p[j + 8 : j + 16], "big")
+            body = j + 16
+        elif size == 0:
+            size = hi - j
+        if size < 8 or j + size > hi:
+            return
+        yield fourcc, body, j + size
+        j += size
+
+
+def _mp4_child(p: bytes, lo: int, hi: int, fourcc: bytes):
+    """(body_lo, box_end) of the first ``fourcc`` box in ``p[lo:hi]``,
+    or None."""
+    for fc, b, e in _mp4_boxes(p, lo, hi):
+        if fc == fourcc:
+            return b, e
+    return None
+
+
+def _ebml_vint(p: bytes, i: int, strip_marker: bool) -> tuple[int, int]:
+    """Parse one EBML variable-length integer at offset ``i`` ->
+    (value, next_offset).  The first byte's leading-zero count gives
+    the width; element IDs keep the marker bit (matroska convention),
+    sizes strip it.  Raises ValueError on truncation/zero byte."""
+    if i >= len(p) or p[i] == 0:
+        raise ValueError("bad EBML varint")
+    first = p[i]
+    width = 8 - first.bit_length() + 1
+    if i + width > len(p):
+        raise ValueError("truncated EBML varint")
+    v = first & (0xFF >> width) if strip_marker else first
+    for b in p[i + 1 : i + width]:
+        v = (v << 8) | b
+    return v, i + width
+
+
+def _ebml_elements(p: bytes, lo: int, hi: int):
+    """Yield (element_id, body_lo, body_hi) per EBML element in
+    ``p[lo:hi]``; stops at a malformed varint or an element that
+    overruns ``hi``."""
+    j = lo
+    while j < hi:
+        try:
+            eid, k = _ebml_vint(p, j, strip_marker=False)
+            size, body = _ebml_vint(p, k, strip_marker=True)
+        except ValueError:
+            return
+        end = body + size
+        if end > hi:
+            return
+        yield eid, body, end
+        j = end
+
+
+class _MsbBitReader:
+    """MSB-first bit reader over bytes (the FLAC, H.264/H.265 and AV1 bit
+    order). Raises ValueError past the end of the data.
+
+    ``_bits``/``_ones`` optionally hold a whole-payload numpy bit cache
+    (np.unpackbits + positions of set bits, computed ONCE per decode in
+    decode_flac_samples) that the vectorized residual/verbatim readers
+    index directly; the serial read()/read_unary() path stays the
+    source of truth for headers and warmups."""
+
+    __slots__ = ("data", "pos", "bit", "_bits", "_ones")
+
+    def __init__(self, data: bytes, pos: int = 0):
+        self.data, self.pos, self.bit = data, pos, 0
+        self._bits = self._ones = None
+
+    def bitpos(self) -> int:
+        return self.pos * 8 + self.bit
+
+    def seek_bit(self, b: int) -> None:
+        self.pos, self.bit = b >> 3, b & 7
+
+    def read(self, n: int) -> int:
+        v = 0
+        while n > 0:
+            if self.pos >= len(self.data):
+                raise ValueError("bitstream truncated")
+            avail = 8 - self.bit
+            take = n if n < avail else avail
+            v = (v << take) | (
+                (self.data[self.pos] >> (avail - take)) & ((1 << take) - 1)
+            )
+            self.bit += take
+            if self.bit == 8:
+                self.bit, self.pos = 0, self.pos + 1
+            n -= take
+        return v
+
+    def read_signed(self, n: int) -> int:
+        v = self.read(n)
+        return v - (1 << n) if v >= (1 << (n - 1)) else v
+
+    def read_unary(self) -> int:
+        q = 0
+        while self.read(1) == 0:
+            q += 1
+        return q
+
+    def ue(self) -> int:
+        """Exp-Golomb ue(v) (H.264 §9.1); over 32 leading zeros is
+        malformed."""
+        zeros = 0
+        while self.read(1) == 0:
+            zeros += 1
+            if zeros > 32:
+                raise ValueError("bad exp-golomb")
+        return (1 << zeros) - 1 + self.read(zeros)
+
+    def se(self) -> int:
+        k = self.ue()
+        return (k + 1) // 2 if k % 2 else -(k // 2)
+
+    def align(self) -> None:
+        if self.bit:
+            self.bit, self.pos = 0, self.pos + 1
+
+
+class _MsbBitWriter:
+    """MSB-first bit writer (inverse of _MsbBitReader)."""
+
+    __slots__ = ("out", "acc", "nbits")
+
+    def __init__(self):
+        self.out, self.acc, self.nbits = bytearray(), 0, 0
+
+    def write(self, v: int, n: int) -> None:
+        self.acc = (self.acc << n) | (v & ((1 << n) - 1))
+        self.nbits += n
+        while self.nbits >= 8:
+            self.nbits -= 8
+            self.out.append((self.acc >> self.nbits) & 0xFF)
+        self.acc &= (1 << self.nbits) - 1
+
+    def write_unary(self, q: int) -> None:
+        while q >= 32:
+            self.write(0, 32)
+            q -= 32
+        self.write(1, q + 1)  # q zero bits then the terminating 1
+
+    def write_ue(self, v: int) -> None:
+        self.write(v + 1, 2 * (v + 1).bit_length() - 1)  # Exp-Golomb ue(v)
+
+    def write_bits(self, bits) -> None:
+        """Append a numpy uint8 0/1 array (MSB-first bit order) in bulk:
+        the whole-byte prefix goes through ``np.packbits`` straight into
+        ``out``; the <8-bit tail lands in the accumulator — byte-for-byte
+        identical to an equivalent sequence of ``write`` calls, without
+        the per-bit Python arithmetic."""
+        import numpy as np
+
+        n = int(len(bits))
+        if n == 0:
+            return
+        if self.nbits:
+            head = np.empty(self.nbits + n, dtype=np.uint8)
+            for i in range(self.nbits):  # <8 iterations
+                head[i] = (self.acc >> (self.nbits - 1 - i)) & 1
+            head[self.nbits :] = bits
+            bits = head
+            n += self.nbits
+            self.acc = self.nbits = 0
+        whole = n - (n % 8)
+        if whole:
+            self.out += np.packbits(bits[:whole]).tobytes()
+        for i in range(whole, n):  # <8 leftover bits
+            self.acc = (self.acc << 1) | int(bits[i])
+            self.nbits += 1
+
+    def align(self) -> None:
+        if self.nbits:
+            self.write(0, 8 - self.nbits)
+
+
+def _make_crc_table(poly: int, width: int) -> list[int]:
+    """Byte-wise lookup table of a non-reflected CRC (MSB-first)."""
+    top = 1 << (width - 1)
+    mask = (1 << width) - 1
+    table = []
+    for b in range(256):
+        c = b << (width - 8)
+        for _ in range(8):
+            c = ((c << 1) ^ poly) & mask if c & top else (c << 1) & mask
+        table.append(c)
+    return table
+
+
 def parse_image_header(payload: bytes) -> tuple[int, int] | None:
     """(width, height) from the container header of a PNG, BMP, GIF,
     JPEG, or WebP (VP8/VP8L/VP8X) byte payload — pure stdlib, no
@@ -182,23 +440,14 @@ def parse_image_header(payload: bytes) -> tuple[int, int] | None:
 def parse_wav_duration_ms(payload: bytes) -> int | None:
     """Duration in ms from a RIFF/WAVE header — pure stdlib, no librosa.
     Walks the chunk list for fmt (byte rate) and data (payload size);
-    duration = data_bytes / byte_rate. None for non-WAV payloads."""
-    import struct
-
+    duration = data_bytes / byte_rate, with the data chunk's declared
+    size. None for non-WAV payloads."""
     if len(payload) < 12 or payload[:4] != b"RIFF" or payload[8:12] != b"WAVE":
         return None
-    i, byte_rate, data_size = 12, None, None
-    while i + 8 <= len(payload):
-        cid = payload[i : i + 4]
-        size = struct.unpack("<I", payload[i + 4 : i + 8])[0]
-        if cid == b"fmt " and i + 16 + 8 <= len(payload):
-            byte_rate = struct.unpack("<I", payload[i + 16 : i + 20])[0]
-        elif cid == b"data":
-            data_size = size
-        i += 8 + size + (size & 1)  # chunks are word-aligned
-    if not byte_rate or data_size is None:
+    fmt, data = _wav_fmt_data(payload, whole_fmt=False)
+    if fmt is None or not fmt[3] or data is None:
         return None
-    return int(data_size * 1000 // byte_rate)
+    return int(data[2] * 1000 // fmt[3])
 
 
 _PNG_CHANNELS = {0: 1, 2: 3, 4: 2, 6: 4}  # color type -> samples/pixel
@@ -521,19 +770,13 @@ def parse_wav_pcm_stats(payload: bytes) -> tuple[int, int, int] | None:
 
     if len(payload) < 12 or payload[:4] != b"RIFF" or payload[8:12] != b"WAVE":
         return None
-    i, n_channels, bits, fmt_code, data = 12, None, None, None, None
-    while i + 8 <= len(payload):
-        cid = payload[i : i + 4]
-        size = struct.unpack("<I", payload[i + 4 : i + 8])[0]
-        body = payload[i + 8 : i + 8 + size]
-        if cid == b"fmt " and len(body) >= 16:
-            fmt_code, n_channels = struct.unpack("<HH", body[0:4])
-            bits = struct.unpack("<H", body[14:16])[0]
-        elif cid == b"data":
-            data = body
-        i += 8 + size + (size & 1)
-    if data is None or fmt_code != 1 or bits != 16 or not n_channels:
+    fmt, chunk = _wav_fmt_data(payload, whole_fmt=True)
+    if chunk is None or fmt is None:
         return None
+    fmt_code, n_channels, _rate, _byte_rate, _align, bits = fmt
+    if fmt_code != 1 or bits != 16 or not n_channels:
+        return None
+    data = payload[chunk[0] : chunk[1]]
     n_samples = len(data) // 2
     samples = struct.unpack(f"<{n_samples}h", data[: n_samples * 2])
     if not n_samples:
@@ -1251,30 +1494,12 @@ def _build_huffman_codes(bits: list[int], vals: list[int]) -> dict[int, tuple[in
     return codes
 
 
-class _BitWriter:
-    """MSB-first bit accumulator with JPEG byte stuffing (0xFF -> 0xFF00)."""
-
-    def __init__(self) -> None:
-        self.out = bytearray()
-        self.acc = 0
-        self.nbits = 0
-
-    def write(self, code: int, length: int) -> None:
-        self.acc = (self.acc << length) | (code & ((1 << length) - 1))
-        self.nbits += length
-        while self.nbits >= 8:
-            byte = (self.acc >> (self.nbits - 8)) & 0xFF
-            self.out.append(byte)
-            if byte == 0xFF:
-                self.out.append(0x00)
-            self.nbits -= 8
-            self.acc &= (1 << self.nbits) - 1
-
-    def flush(self) -> bytes:
-        if self.nbits:
-            pad = 8 - self.nbits
-            self.write((1 << pad) - 1, pad)  # pad with 1-bits per T.81 F.1.2.3
-        return bytes(self.out)
+def _jpeg_entropy(w: _MsbBitWriter) -> bytes:
+    """A scan's entropy-coded segment: ``w``'s bits padded with 1-bits
+    (T.81 F.1.2.3), then every 0xFF byte stuffed as 0xFF00."""
+    if w.nbits:
+        w.write(0xFF, 8 - w.nbits)
+    return bytes(w.out).replace(b"\xff", b"\xff\x00")
 
 
 def _jpeg_category(v: int) -> int:
@@ -1413,7 +1638,7 @@ def encode_jpeg(
         # fixture twin
         ac_codes = _build_huffman_codes(_JPEG_AC_BITS, _JPEG_AC_VALS)
         for ci in range(channels):
-            writer = _BitWriter()
+            writer = _MsbBitWriter()
             prev_dc = [0] * channels
             fh, fv = factors[ci]
             cw = (width * fh + hy - 1) // hy
@@ -1427,12 +1652,12 @@ def encode_jpeg(
             scans_out.append(
                 (
                     bytes([1, comp_ids[ci], 0x00]) + b"\x00\x3f\x00",
-                    writer.flush(),
+                    _jpeg_entropy(writer),
                 )
             )
     elif not progressive:
         ac_codes = _build_huffman_codes(_JPEG_AC_BITS, _JPEG_AC_VALS)
-        writer = _BitWriter()
+        writer = _MsbBitWriter()
         prev_dc = [0] * channels
         for my in range(mcuy):
             for mx in range(mcux):  # MCU = fh*fv blocks/component, T.81 A.2.3
@@ -1451,7 +1676,7 @@ def encode_jpeg(
                             )
         sos_comps = b"".join(bytes([cid, 0x00]) for cid in comp_ids)
         scans_out.append(
-            (bytes([channels]) + sos_comps + b"\x00\x3f\x00", writer.flush())
+            (bytes([channels]) + sos_comps + b"\x00\x3f\x00", _jpeg_entropy(writer))
         )
     else:
         scans_out = _jpeg_progressive_scans(
@@ -1563,7 +1788,7 @@ def _jpeg_progressive_scans(
 
     scans: list[tuple[bytes, bytes]] = []
     # ---- DC first scan: difference chain on the Al=1 point transform
-    w = _BitWriter()
+    w = _MsbBitWriter()
     prev = [0] * channels
     for ci, dc in mcu_dc_blocks():
         v = dc >> 1  # arithmetic shift per T.81 G.1.2.1
@@ -1574,7 +1799,7 @@ def _jpeg_progressive_scans(
         w.write(code, ln)
         if s:
             w.write(diff if diff > 0 else diff + (1 << s) - 1, s)
-    scans.append((dc_sos(0, 1), w.flush()))
+    scans.append((dc_sos(0, 1), _jpeg_entropy(w)))
 
     bands = []
     for ci in range(channels):
@@ -1582,7 +1807,7 @@ def _jpeg_progressive_scans(
 
     # ---- AC first scans (Al=1): run/size + EOBn end-of-band runs
     for ci, ss, se in bands:
-        w = _BitWriter()
+        w = _MsbBitWriter()
         eobrun = 0
 
         def flush_eob():
@@ -1619,18 +1844,18 @@ def _jpeg_progressive_scans(
                 if eobrun == 0x7FFF:
                     flush_eob()
         flush_eob()
-        scans.append((bytes([1, comp_ids[ci], 0x00, ss, se, 0x01]), w.flush()))
+        scans.append((bytes([1, comp_ids[ci], 0x00, ss, se, 0x01]), _jpeg_entropy(w)))
 
     # ---- DC refinement: one raw bit per block (no Huffman)
-    w = _BitWriter()
+    w = _MsbBitWriter()
     for _ci, dc in mcu_dc_blocks():
         w.write(dc & 1, 1)
-    scans.append((dc_sos(1, 0), w.flush()))
+    scans.append((dc_sos(1, 0), _jpeg_entropy(w)))
 
     # ---- AC refinement scans (Ah=1, Al=0): correction bits buffered
     # per libjpeg jcphuff figure G.7 semantics
     for ci, ss, se in bands:
-        w = _BitWriter()
+        w = _MsbBitWriter()
         eobrun = 0
         pend: list[int] = []  # correction bits deferred across an EOB run
 
@@ -1685,12 +1910,12 @@ def _jpeg_progressive_scans(
                 if eobrun == 0x7FFF:
                     flush_eob()
         flush_eob()
-        scans.append((bytes([1, comp_ids[ci], 0x00, ss, se, 0x10]), w.flush()))
+        scans.append((bytes([1, comp_ids[ci], 0x00, ss, se, 0x10]), _jpeg_entropy(w)))
     return scans
 
 
 def _jpeg_write_block(
-    writer: "_BitWriter",
+    writer: _MsbBitWriter,
     block,
     comp: int,
     prev_dc: list[int],
@@ -2590,39 +2815,22 @@ def decode_avi_mjpeg_frames(
     if len(payload) < 12 or payload[:4] != b"RIFF" or payload[8:12] != b"AVI ":
         raise ValueError("not an AVI payload")
 
-    def walk(start: int, end: int):
-        i = start
-        while i + 8 <= end:
-            cid = payload[i : i + 4]
-            (size,) = struct.unpack("<I", payload[i + 4 : i + 8])
-            yield cid, i + 8, min(i + 8 + size, end)
-            i += 8 + size + (size & 1)
-
     width = height = -1
     num, den = 25, 1
     handler = None
     frames: list[bytes] = []
-
-    def visit(start: int, end: int) -> None:
-        nonlocal width, height, num, den, handler
-        for cid, b0, b1 in walk(start, end):
-            if cid == b"LIST":
-                visit(b0 + 4, b1)
-            elif cid == b"avih" and b1 - b0 >= 40:
-                vals = struct.unpack("<10I", payload[b0 : b0 + 40])
-                width, height = vals[8], vals[9]
-            elif cid == b"strh" and b1 - b0 >= 32:
-                if payload[b0 : b0 + 4] == b"vids":
-                    handler = payload[b0 + 4 : b0 + 8]
-                    scale, rate = struct.unpack(
-                        "<II", payload[b0 + 20 : b0 + 28]
-                    )
-                    if scale > 0 and rate > 0:
-                        num, den = rate, scale
-            elif cid in (b"00dc", b"00db"):
-                frames.append(payload[b0:b1])
-
-    visit(12, len(payload))
+    for cid, b0, b1 in _avi_chunks(payload, 12, len(payload)):
+        if cid == b"avih" and b1 - b0 >= 40:
+            vals = struct.unpack("<10I", payload[b0 : b0 + 40])
+            width, height = vals[8], vals[9]
+        elif cid == b"strh" and b1 - b0 >= 32:
+            if payload[b0 : b0 + 4] == b"vids":
+                handler = payload[b0 + 4 : b0 + 8]
+                scale, rate = struct.unpack("<II", payload[b0 + 20 : b0 + 28])
+                if scale > 0 and rate > 0:
+                    num, den = rate, scale
+        elif cid in (b"00dc", b"00db"):
+            frames.append(payload[b0:b1])
     if width <= 0 or height <= 0:
         raise ValueError("AVI missing avih dimensions")
     if handler is None:
@@ -2708,19 +2916,11 @@ def decode_wav_samples(payload: bytes) -> tuple[int, list[int]]:
 
     if len(payload) < 12 or payload[:4] != b"RIFF" or payload[8:12] != b"WAVE":
         raise ValueError("not a RIFF/WAVE payload")
-    i, rate, n_channels, bits, fmt_code, data = 12, None, None, None, None, None
-    while i + 8 <= len(payload):
-        cid = payload[i : i + 4]
-        size = struct.unpack("<I", payload[i + 4 : i + 8])[0]
-        body = payload[i + 8 : i + 8 + size]
-        if cid == b"fmt " and len(body) >= 16:
-            fmt_code, n_channels, rate = struct.unpack("<HHI", body[0:8])
-            bits = struct.unpack("<H", body[14:16])[0]
-        elif cid == b"data":
-            data = body
-        i += 8 + size + (size & 1)
-    if data is None or fmt_code is None:
+    fmt, chunk = _wav_fmt_data(payload, whole_fmt=True)
+    if chunk is None or fmt is None:
         raise ValueError("WAVE missing fmt/data chunks")
+    fmt_code, n_channels, rate, _byte_rate, _align, bits = fmt
+    data = payload[chunk[0] : chunk[1]]
     if fmt_code != 1 or bits != 16 or n_channels < 1:
         raise NotImplementedError(
             "only 16-bit PCM decodes here; compressed audio needs a "
@@ -2740,124 +2940,6 @@ def decode_wav_samples(payload: bytes) -> tuple[int, list[int]]:
 # ---------------------------------------------------------------------------
 # FLAC: lossless audio codec, pure stdlib (bit-level Rice/fixed-predictor)
 # ---------------------------------------------------------------------------
-
-
-class _FlacBitReader:
-    """MSB-first bit reader over bytes (the FLAC bit order).
-
-    ``_bits``/``_ones`` optionally hold a whole-payload numpy bit cache
-    (np.unpackbits + positions of set bits, computed ONCE per decode in
-    decode_flac_samples) that the vectorized residual/verbatim readers
-    index directly; the serial read()/read_unary() path stays the
-    source of truth for headers and warmups."""
-
-    __slots__ = ("data", "pos", "bit", "_bits", "_ones")
-
-    def __init__(self, data: bytes, pos: int = 0):
-        self.data, self.pos, self.bit = data, pos, 0
-        self._bits = self._ones = None
-
-    def bitpos(self) -> int:
-        return self.pos * 8 + self.bit
-
-    def seek_bit(self, b: int) -> None:
-        self.pos, self.bit = b >> 3, b & 7
-
-    def read(self, n: int) -> int:
-        v = 0
-        while n > 0:
-            if self.pos >= len(self.data):
-                raise ValueError("FLAC bitstream truncated")
-            avail = 8 - self.bit
-            take = n if n < avail else avail
-            v = (v << take) | (
-                (self.data[self.pos] >> (avail - take)) & ((1 << take) - 1)
-            )
-            self.bit += take
-            if self.bit == 8:
-                self.bit, self.pos = 0, self.pos + 1
-            n -= take
-        return v
-
-    def read_signed(self, n: int) -> int:
-        v = self.read(n)
-        return v - (1 << n) if v >= (1 << (n - 1)) else v
-
-    def read_unary(self) -> int:
-        q = 0
-        while self.read(1) == 0:
-            q += 1
-        return q
-
-    def align(self) -> None:
-        if self.bit:
-            self.bit, self.pos = 0, self.pos + 1
-
-
-class _FlacBitWriter:
-    """MSB-first bit writer (inverse of _FlacBitReader)."""
-
-    __slots__ = ("out", "acc", "nbits")
-
-    def __init__(self):
-        self.out, self.acc, self.nbits = bytearray(), 0, 0
-
-    def write(self, v: int, n: int) -> None:
-        self.acc = (self.acc << n) | (v & ((1 << n) - 1))
-        self.nbits += n
-        while self.nbits >= 8:
-            self.nbits -= 8
-            self.out.append((self.acc >> self.nbits) & 0xFF)
-        self.acc &= (1 << self.nbits) - 1
-
-    def write_unary(self, q: int) -> None:
-        while q >= 32:
-            self.write(0, 32)
-            q -= 32
-        self.write(1, q + 1)  # q zero bits then the terminating 1
-
-    def write_bits(self, bits) -> None:
-        """Append a numpy uint8 0/1 array (MSB-first bit order) in bulk:
-        the whole-byte prefix goes through ``np.packbits`` straight into
-        ``out``; the <8-bit tail lands in the accumulator — byte-for-byte
-        identical to an equivalent sequence of ``write`` calls, without
-        the per-bit Python arithmetic."""
-        import numpy as np
-
-        n = int(len(bits))
-        if n == 0:
-            return
-        if self.nbits:
-            head = np.empty(self.nbits + n, dtype=np.uint8)
-            for i in range(self.nbits):  # <8 iterations
-                head[i] = (self.acc >> (self.nbits - 1 - i)) & 1
-            head[self.nbits :] = bits
-            bits = head
-            n += self.nbits
-            self.acc = self.nbits = 0
-        whole = n - (n % 8)
-        if whole:
-            self.out += np.packbits(bits[:whole]).tobytes()
-        for i in range(whole, n):  # <8 leftover bits
-            self.acc = (self.acc << 1) | int(bits[i])
-            self.nbits += 1
-
-    def align(self) -> None:
-        if self.nbits:
-            self.write(0, 8 - self.nbits)
-
-
-def _make_crc_table(poly: int, width: int) -> list[int]:
-    top = 1 << (width - 1)
-    mask = (1 << width) - 1
-    table = []
-    for b in range(256):
-        c = b << (width - 8)
-        for _ in range(8):
-            c = ((c << 1) ^ poly) & mask if c & top else (c << 1) & mask
-        table.append(c)
-    return table
-
 
 _CRC8_TABLE = _make_crc_table(0x07, 8)
 _CRC16_TABLE = _make_crc_table(0x8005, 16)
@@ -2935,7 +3017,7 @@ def _flac_utf8_number(n: int) -> bytes:
     raise ValueError("frame number too large")
 
 
-def _flac_read_utf8(br: _FlacBitReader) -> int:
+def _flac_read_utf8(br: _MsbBitReader) -> int:
     b0 = br.read(8)
     if b0 < 0x80:
         return b0
@@ -2976,7 +3058,7 @@ def _zigzag_np(res):
     return np.where(r >= 0, r << 1, ((-r) << 1) - 1)
 
 
-def _rice_write(bw: _FlacBitWriter, residuals, k: int) -> None:
+def _rice_write(bw: _MsbBitWriter, residuals, k: int) -> None:
     """Emit Rice(k) codes for the whole residual block as ONE bit array
     (terminator scatter + remainder gather) — the encode twin of the
     decoder's ``_rice_partition_np``; byte-identical to the per-sample
@@ -3018,7 +3100,7 @@ def _rice_param_cost(u) -> tuple[int, int]:
 
 
 def _flac_write_subframe(
-    bw: _FlacBitWriter, x: list[int], bps: int
+    bw: _MsbBitWriter, x: list[int], bps: int
 ) -> None:
     """One subframe: CONSTANT when flat, else the best FIXED order 0-2
     with a single-partition Rice residual, else VERBATIM when Rice can't
@@ -3094,7 +3176,7 @@ def encode_flac(
     _arr = np.asarray(samples, dtype=np.int64)
     chans = [_arr[c::n_channels] for c in range(n_channels)]
     # STREAMINFO (34 bytes)
-    si = _FlacBitWriter()
+    si = _MsbBitWriter()
     si.write(block_size, 16)
     si.write(block_size, 16)
     si.write(0, 24)
@@ -3124,7 +3206,7 @@ def encode_flac(
                 asgn, sub, bps_extra = 10, [mid, side], [0, 1]
         else:
             asgn, bps_extra = n_channels - 1, [0] * n_channels
-        hdr = _FlacBitWriter()
+        hdr = _MsbBitWriter()
         hdr.write(0x3FFE, 14)  # sync
         hdr.write(0, 1)
         hdr.write(0, 1)  # fixed-blocksize strategy
@@ -3137,7 +3219,7 @@ def encode_flac(
         hdr_bytes = bytes(hdr.out) + _flac_utf8_number(frame_no)
         hdr_bytes += struct.pack(">H", bs - 1)
         hdr_bytes += bytes([_crc8(hdr_bytes)])
-        body = _FlacBitWriter()
+        body = _MsbBitWriter()
         for ci, x in enumerate(sub):
             _flac_write_subframe(body, x, 16 + bps_extra[ci])
         body.align()
@@ -3160,7 +3242,7 @@ def _flac_bit_cache(payload: bytes):
     return bits, np.flatnonzero(bits).astype(np.int64)
 
 
-def _read_fixed_np(br: _FlacBitReader, cnt: int, width: int):
+def _read_fixed_np(br: _MsbBitReader, cnt: int, width: int):
     """``cnt`` unsigned ``width``-bit codes at the reader's bit cursor as
     one strided gather + matmul (int64), advancing the cursor — the
     vectorized twin of ``cnt`` br.read(width) calls."""
@@ -3178,7 +3260,7 @@ def _read_fixed_np(br: _FlacBitReader, cnt: int, width: int):
     return vals
 
 
-def _rice_partition_np(br: _FlacBitReader, cnt: int, k: int):
+def _rice_partition_np(br: _MsbBitReader, cnt: int, k: int):
     """Decode ``cnt`` Rice(k) codes (zigzag applied) vectorized.
 
     The bitstream is serial by spec, but the code BOUNDARIES form a
@@ -3243,7 +3325,7 @@ def _rice_partition_np(br: _FlacBitReader, cnt: int, k: int):
     return (u >> 1) ^ -(u & 1)
 
 
-def _flac_read_residual(br: _FlacBitReader, n: int, order: int):
+def _flac_read_residual(br: _MsbBitReader, n: int, order: int):
     import numpy as np
 
     method = br.read(2)
@@ -3273,7 +3355,7 @@ def _flac_read_residual(br: _FlacBitReader, n: int, order: int):
     return np.concatenate(res) if res else np.zeros(0, dtype=np.int64)
 
 
-def _flac_read_subframe(br: _FlacBitReader, n: int, bps: int):
+def _flac_read_subframe(br: _MsbBitReader, n: int, bps: int):
     """One subframe as an int64 numpy array.  FIXED reconstruction is
     ``order``-fold cumulative integration (the order-o fixed predictor's
     residual is exactly the o-th forward difference, so x rebuilds as o
@@ -3353,7 +3435,7 @@ def decode_flac_samples(payload: bytes) -> tuple[int, list[int]]:
         hdr = payload[pos]
         size = int.from_bytes(payload[pos + 1 : pos + 4], "big")
         if hdr & 0x7F == 0:  # STREAMINFO
-            si = _FlacBitReader(payload, pos + 4)
+            si = _MsbBitReader(payload, pos + 4)
             si.read(16)
             si.read(16)
             si.read(24)
@@ -3375,7 +3457,7 @@ def decode_flac_samples(payload: bytes) -> tuple[int, list[int]]:
     chans: list[list] = [[] for _ in range(n_channels)]
     decoded = 0
     while pos < len(payload) and (not total or decoded < total):
-        br = _FlacBitReader(payload, pos)
+        br = _MsbBitReader(payload, pos)
         br._bits, br._ones = bit_cache
         if br.read(14) != 0x3FFE:
             raise ValueError("bad FLAC frame sync")
@@ -3892,19 +3974,9 @@ def adts_stream_info(
     )
 
 
-def _ogg_crc_table() -> list[int]:
-    # Ogg page CRC (RFC 3533 A.1): CRC-32 poly 0x04C11DB7, NOT reflected,
-    # init 0, xorout 0 — different from zlib.crc32 on all three counts
-    tbl = []
-    for b in range(256):
-        r = b << 24
-        for _ in range(8):
-            r = ((r << 1) ^ 0x04C11DB7 if r & 0x80000000 else r << 1) & 0xFFFFFFFF
-        tbl.append(r)
-    return tbl
-
-
-_OGG_CRC = _ogg_crc_table()
+# Ogg page CRC (RFC 3533 A.1): CRC-32 poly 0x04C11DB7, NOT reflected,
+# init 0, xorout 0 — different from zlib.crc32 on all three counts
+_OGG_CRC = _make_crc_table(0x04C11DB7, 32)
 
 
 def _ogg_crc_bytewise(data: bytes) -> int:
@@ -4169,40 +4241,16 @@ def mp4_stream_info(
 
     p = payload or b""
 
-    def boxes(lo: int, hi: int):
-        j = lo
-        while j + 8 <= hi:
-            (size,) = struct.unpack(">I", p[j : j + 4])
-            fourcc = p[j + 4 : j + 8]
-            body = j + 8
-            if size == 1:
-                if j + 16 > hi:
-                    return
-                (size,) = struct.unpack(">Q", p[j + 8 : j + 16])
-                body = j + 16
-            elif size == 0:
-                size = hi - j
-            if size < 8 or j + size > hi:
-                return
-            yield fourcc, body, j + size
-            j += size
-
-    def child(lo: int, hi: int, fourcc: bytes):
-        for fc, b, e in boxes(lo, hi):
-            if fc == fourcc:
-                return b, e
-        return None
-
-    top = list(boxes(0, len(p)))
+    top = list(_mp4_boxes(p, 0, len(p)))
     if not top or top[0][0] != b"ftyp":
         raise ValueError("no leading ftyp box")
     brand = p[top[0][1] : top[0][1] + 4].decode("latin-1").strip().lower()
     timescale = duration = 0
     n_tracks = 0
     video_codec = audio_codec = ""
-    moov = child(0, len(p), b"moov")
+    moov = _mp4_child(p, 0, len(p), b"moov")
     if moov:
-        mv = child(*moov, b"mvhd")
+        mv = _mp4_child(p, *moov, b"mvhd")
         if mv:
             b = mv[0]
             ver = p[b]
@@ -4212,18 +4260,18 @@ def mp4_stream_info(
             elif ver == 0 and b + 20 <= mv[1]:
                 (timescale,) = struct.unpack(">I", p[b + 12 : b + 16])
                 (duration,) = struct.unpack(">I", p[b + 16 : b + 20])
-        for fc, b, e in boxes(*moov):
+        for fc, b, e in _mp4_boxes(p, *moov):
             if fc != b"trak":
                 continue
             n_tracks += 1
-            mdia = child(b, e, b"mdia")
+            mdia = _mp4_child(p, b, e, b"mdia")
             if not mdia:
                 continue
-            hd = child(*mdia, b"hdlr")
+            hd = _mp4_child(p, *mdia, b"hdlr")
             handler = p[hd[0] + 8 : hd[0] + 12] if hd else b""
-            minf = child(*mdia, b"minf")
-            stbl = child(*minf, b"stbl") if minf else None
-            stsd = child(*stbl, b"stsd") if stbl else None
+            minf = _mp4_child(p, *mdia, b"minf")
+            stbl = _mp4_child(p, *minf, b"stbl") if minf else None
+            stsd = _mp4_child(p, *stbl, b"stsd") if stbl else None
             codec = ""
             if stsd and stsd[0] + 16 <= stsd[1]:
                 # stsd: version/flags(4) + entry_count(4) + first
@@ -4358,23 +4406,6 @@ def encode_mp4_boxes(
     return ftyp + box(b"moov", b"".join(kids)) + box(b"mdat", b"")
 
 
-def _ebml_vint(p: bytes, i: int, strip_marker: bool) -> tuple[int, int]:
-    """Parse one EBML variable-length integer at offset ``i`` ->
-    (value, next_offset).  The first byte's leading-zero count gives
-    the width; element IDs keep the marker bit (matroska convention),
-    sizes strip it.  Raises ValueError on truncation/zero byte."""
-    if i >= len(p) or p[i] == 0:
-        raise ValueError("bad EBML varint")
-    first = p[i]
-    width = 8 - first.bit_length() + 1
-    if i + width > len(p):
-        raise ValueError("truncated EBML varint")
-    v = first & (0xFF >> width) if strip_marker else first
-    for b in p[i + 1 : i + width]:
-        v = (v << 8) | b
-    return v, i + width
-
-
 def mkv_stream_info(payload: bytes) -> tuple[str, int, int, str, str]:
     """EBML-walk metadata for a Matroska/WebM file — (doctype,
     duration_ms, n_tracks, video_codec, audio_codec) — without reading
@@ -4394,34 +4425,20 @@ def mkv_stream_info(payload: bytes) -> tuple[str, int, int, str, str]:
     if p[:4] != b"\x1a\x45\xdf\xa3":
         raise ValueError("no EBML header")
 
-    def walk(lo: int, hi: int):
-        j = lo
-        while j < hi:
-            try:
-                eid, k = _ebml_vint(p, j, strip_marker=False)
-                size, body = _ebml_vint(p, k, strip_marker=True)
-            except ValueError:
-                return
-            end = body + size
-            if end > hi:
-                return
-            yield eid, body, end
-            j = end
-
     doctype = "unknown"
     scale_ns = 1_000_000
     dur_ticks = 0.0
     n_tracks = 0
     video_codec = audio_codec = ""
-    for eid, b, e in walk(0, len(p)):
+    for eid, b, e in _ebml_elements(p, 0, len(p)):
         if eid == 0x1A45DFA3:  # EBML header
-            for i2, b2, e2 in walk(b, e):
+            for i2, b2, e2 in _ebml_elements(p, b, e):
                 if i2 == 0x4282:  # DocType
                     doctype = p[b2:e2].decode("latin-1").rstrip("\x00")
         elif eid == 0x18538067:  # Segment
-            for i2, b2, e2 in walk(b, e):
+            for i2, b2, e2 in _ebml_elements(p, b, e):
                 if i2 == 0x1549A966:  # Info
-                    for i3, b3, e3 in walk(b2, e2):
+                    for i3, b3, e3 in _ebml_elements(p, b2, e2):
                         if i3 == 0x2AD7B1:  # TimestampScale (uint)
                             scale_ns = int.from_bytes(p[b3:e3], "big")
                         elif i3 == 0x4489:  # Duration (float 4/8)
@@ -4437,12 +4454,12 @@ def mkv_stream_info(payload: bytes) -> tuple[str, int, int, str, str]:
                                     ">f" if len(raw) == 4 else ">d", raw
                                 )[0]
                 elif i2 == 0x1654AE6B:  # Tracks
-                    for i3, b3, e3 in walk(b2, e2):
+                    for i3, b3, e3 in _ebml_elements(p, b2, e2):
                         if i3 != 0xAE:  # TrackEntry
                             continue
                         n_tracks += 1
                         ttype, codec = 0, ""
-                        for i4, b4, e4 in walk(b3, e3):
+                        for i4, b4, e4 in _ebml_elements(p, b3, e3):
                             if i4 == 0x83:
                                 ttype = int.from_bytes(p[b4:e4], "big")
                             elif i4 == 0x86:
@@ -4539,37 +4556,6 @@ _AVC_HIGH_PROFILES = frozenset(
 _AVC_SUBWH = {1: (2, 2), 2: (2, 1), 3: (1, 1)}
 
 
-class _Bits:
-    """MSB-first bit reader with Exp-Golomb (H.264 §9.1). Raises
-    ValueError past the end — truncated SPS is garbage-lane material."""
-
-    def __init__(self, data: bytes):
-        self.d = data
-        self.pos = 0
-
-    def u(self, n: int) -> int:
-        v = 0
-        for _ in range(n):
-            byte, bit = self.pos >> 3, 7 - (self.pos & 7)
-            if byte >= len(self.d):
-                raise ValueError("truncated bitstream")
-            v = (v << 1) | ((self.d[byte] >> bit) & 1)
-            self.pos += 1
-        return v
-
-    def ue(self) -> int:
-        zeros = 0
-        while self.u(1) == 0:
-            zeros += 1
-            if zeros > 32:
-                raise ValueError("bad exp-golomb")
-        return (1 << zeros) - 1 + (self.u(zeros) if zeros else 0)
-
-    def se(self) -> int:
-        k = self.ue()
-        return (k + 1) // 2 if k % 2 else -(k // 2)
-
-
 def _strip_emulation(rbsp: bytes) -> bytes:
     # 00 00 03 -> 00 00 (the 03 is the emulation-prevention byte)
     if b"\x00\x00\x03" not in rbsp:
@@ -4586,6 +4572,19 @@ def _strip_emulation(rbsp: bytes) -> bytes:
     return bytes(out)
 
 
+def _add_emulation(rbsp: bytes) -> bytes:
+    # 00 00 {00,01,02,03} -> 00 00 03 xx (the inverse of _strip_emulation)
+    out = bytearray()
+    zeros = 0
+    for byte in rbsp:
+        if zeros >= 2 and byte <= 3:
+            out.append(3)
+            zeros = 0
+        out.append(byte)
+        zeros = zeros + 1 if byte == 0 else 0
+    return bytes(out)
+
+
 def parse_avc_sps(nal: bytes) -> tuple[int, int, int, int]:
     """Decode one H.264 sequence parameter set NAL ->
     (profile_idc, level_idc, width, height) — the full §7.3.2.1 parse:
@@ -4597,22 +4596,22 @@ def parse_avc_sps(nal: bytes) -> tuple[int, int, int, int]:
     Raises ValueError on anything malformed — callers lane it."""
     if not nal or (nal[0] & 0x1F) != 7:
         raise ValueError("not an SPS NAL")
-    b = _Bits(_strip_emulation(nal[1:]))
-    profile_idc = b.u(8)
-    b.u(8)  # constraint flags + reserved
-    level_idc = b.u(8)
+    b = _MsbBitReader(_strip_emulation(nal[1:]))
+    profile_idc = b.read(8)
+    b.read(8)  # constraint flags + reserved
+    level_idc = b.read(8)
     b.ue()  # seq_parameter_set_id
     chroma_format_idc = 1
     if profile_idc in _AVC_HIGH_PROFILES:
         chroma_format_idc = b.ue()
         if chroma_format_idc == 3:
-            b.u(1)  # separate_colour_plane_flag
+            b.read(1)  # separate_colour_plane_flag
         b.ue()  # bit_depth_luma_minus8
         b.ue()  # bit_depth_chroma_minus8
-        b.u(1)  # qpprime_y_zero_transform_bypass_flag
-        if b.u(1):  # seq_scaling_matrix_present_flag
+        b.read(1)  # qpprime_y_zero_transform_bypass_flag
+        if b.read(1):  # seq_scaling_matrix_present_flag
             for i in range(12 if chroma_format_idc == 3 else 8):
-                if b.u(1):  # seq_scaling_list_present_flag[i]
+                if b.read(1):  # seq_scaling_list_present_flag[i]
                     size = 16 if i < 6 else 64
                     last, nxt = 8, 8
                     for _ in range(size):
@@ -4624,21 +4623,21 @@ def parse_avc_sps(nal: bytes) -> tuple[int, int, int, int]:
     if poc_type == 0:
         b.ue()  # log2_max_pic_order_cnt_lsb_minus4
     elif poc_type == 1:
-        b.u(1)  # delta_pic_order_always_zero_flag
+        b.read(1)  # delta_pic_order_always_zero_flag
         b.se()  # offset_for_non_ref_pic
         b.se()  # offset_for_top_to_bottom_field
         for _ in range(b.ue()):  # num_ref_frames_in_pic_order_cnt_cycle
             b.se()
     b.ue()  # max_num_ref_frames
-    b.u(1)  # gaps_in_frame_num_value_allowed_flag
+    b.read(1)  # gaps_in_frame_num_value_allowed_flag
     pw_mbs = b.ue() + 1
     ph_units = b.ue() + 1
-    frame_mbs_only = b.u(1)
+    frame_mbs_only = b.read(1)
     if not frame_mbs_only:
-        b.u(1)  # mb_adaptive_frame_field_flag
-    b.u(1)  # direct_8x8_inference_flag
+        b.read(1)  # mb_adaptive_frame_field_flag
+    b.read(1)  # direct_8x8_inference_flag
     crop_l = crop_r = crop_t = crop_b = 0
-    if b.u(1):  # frame_cropping_flag
+    if b.read(1):  # frame_cropping_flag
         crop_l, crop_r, crop_t, crop_b = b.ue(), b.ue(), b.ue(), b.ue()
     if chroma_format_idc == 0:
         cux, cuy = 1, 2 - frame_mbs_only
@@ -4667,65 +4666,42 @@ def encode_avc_sps(
     even."""
     if width <= 0 or height <= 0 or width % 2 or height % 2:
         raise ValueError("dimensions must be positive and even (4:2:0)")
-    bits: list[int] = []
-
-    def u(v: int, n: int) -> None:
-        for i in range(n - 1, -1, -1):
-            bits.append((v >> i) & 1)
-
-    def ue(v: int) -> None:
-        code = v + 1
-        n = code.bit_length()
-        u(0, n - 1)
-        u(code, n)
-
-    u(profile_idc, 8)
-    u(0, 8)  # constraint flags + reserved_zero
-    u(level_idc, 8)
-    ue(0)  # seq_parameter_set_id
+    w = _MsbBitWriter()
+    w.write(profile_idc, 8)
+    w.write(0, 8)  # constraint flags + reserved_zero
+    w.write(level_idc, 8)
+    w.write_ue(0)  # seq_parameter_set_id
     if profile_idc in _AVC_HIGH_PROFILES:
-        ue(1)  # chroma_format_idc = 4:2:0
-        ue(0)  # bit_depth_luma_minus8
-        ue(0)  # bit_depth_chroma_minus8
-        u(0, 1)  # qpprime_y_zero_transform_bypass_flag
-        u(0, 1)  # seq_scaling_matrix_present_flag
-    ue(0)  # log2_max_frame_num_minus4
-    ue(2)  # pic_order_cnt_type (2: no further fields)
-    ue(1)  # max_num_ref_frames
-    u(0, 1)  # gaps_in_frame_num_value_allowed_flag
+        w.write_ue(1)  # chroma_format_idc = 4:2:0
+        w.write_ue(0)  # bit_depth_luma_minus8
+        w.write_ue(0)  # bit_depth_chroma_minus8
+        w.write(0, 1)  # qpprime_y_zero_transform_bypass_flag
+        w.write(0, 1)  # seq_scaling_matrix_present_flag
+    w.write_ue(0)  # log2_max_frame_num_minus4
+    w.write_ue(2)  # pic_order_cnt_type (2: no further fields)
+    w.write_ue(1)  # max_num_ref_frames
+    w.write(0, 1)  # gaps_in_frame_num_value_allowed_flag
     pw_mbs = (width + 15) // 16
     ph_units = (height + 15) // 16
-    ue(pw_mbs - 1)
-    ue(ph_units - 1)
-    u(1, 1)  # frame_mbs_only_flag
-    u(1, 1)  # direct_8x8_inference_flag
+    w.write_ue(pw_mbs - 1)
+    w.write_ue(ph_units - 1)
+    w.write(1, 1)  # frame_mbs_only_flag
+    w.write(1, 1)  # direct_8x8_inference_flag
     crop_r = (pw_mbs * 16 - width) // 2  # CropUnitX = 2 (4:2:0)
     crop_b = (ph_units * 16 - height) // 2  # CropUnitY = 2 (frame_mbs_only)
     if crop_r or crop_b:
-        u(1, 1)
-        ue(0)
-        ue(crop_r)
-        ue(0)
-        ue(crop_b)
+        w.write(1, 1)
+        w.write_ue(0)
+        w.write_ue(crop_r)
+        w.write_ue(0)
+        w.write_ue(crop_b)
     else:
-        u(0, 1)
-    u(0, 1)  # vui_parameters_present_flag
-    u(1, 1)  # rbsp_stop_one_bit
-    while len(bits) % 8:
-        bits.append(0)
-    rbsp = bytearray()
-    for i in range(0, len(bits), 8):
-        rbsp.append(int("".join(map(str, bits[i : i + 8])), 2))
-    # emulation prevention: 00 00 {00,01,02,03} -> 00 00 03 xx
-    out = bytearray([0x67])  # nal_ref_idc=3, nal_unit_type=7 (SPS)
-    zeros = 0
-    for byte in rbsp:
-        if zeros >= 2 and byte <= 3:
-            out.append(3)
-            zeros = 0
-        out.append(byte)
-        zeros = zeros + 1 if byte == 0 else 0
-    return bytes(out)
+        w.write(0, 1)
+    w.write(0, 1)  # vui_parameters_present_flag
+    w.write(1, 1)  # rbsp_stop_one_bit
+    w.align()
+    # nal_ref_idc=3, nal_unit_type=7 (SPS)
+    return b"\x67" + _add_emulation(bytes(w.out))
 
 
 def encode_avcc(sps_nals: Sequence[bytes]) -> bytes:
@@ -4772,33 +4748,33 @@ def parse_hevc_sps(nal: bytes) -> tuple[int, int, int, int]:
     ValueError on anything malformed — callers lane it."""
     if len(nal) < 2 or (nal[0] >> 1) & 0x3F != 33:
         raise ValueError("not an HEVC SPS NAL")
-    b = _Bits(_strip_emulation(nal[2:]))
-    b.u(4)  # sps_video_parameter_set_id
-    max_sub_layers = b.u(3)
-    b.u(1)  # sps_temporal_id_nesting_flag
+    b = _MsbBitReader(_strip_emulation(nal[2:]))
+    b.read(4)  # sps_video_parameter_set_id
+    max_sub_layers = b.read(3)
+    b.read(1)  # sps_temporal_id_nesting_flag
     # profile_tier_level(1, max_sub_layers)
-    b.u(2)  # general_profile_space
-    b.u(1)  # general_tier_flag
-    profile_idc = b.u(5)
-    b.u(32)  # general_profile_compatibility_flags
-    b.u(48)  # progressive/interlaced/non-packed/frame-only + 44 reserved
-    level_idc = b.u(8)
+    b.read(2)  # general_profile_space
+    b.read(1)  # general_tier_flag
+    profile_idc = b.read(5)
+    b.read(32)  # general_profile_compatibility_flags
+    b.read(48)  # progressive/interlaced/non-packed/frame-only + 44 reserved
+    level_idc = b.read(8)
     if max_sub_layers:
-        present = [(b.u(1), b.u(1)) for _ in range(max_sub_layers)]
+        present = [(b.read(1), b.read(1)) for _ in range(max_sub_layers)]
         if max_sub_layers < 8:
-            b.u(2 * (8 - max_sub_layers))  # reserved alignment
+            b.read(2 * (8 - max_sub_layers))  # reserved alignment
         for prof, lvl in present:
             if prof:
-                b.u(88)
+                b.read(88)
             if lvl:
-                b.u(8)
+                b.read(8)
     b.ue()  # sps_seq_parameter_set_id
     chroma_format_idc = b.ue()
     if chroma_format_idc == 3:
-        b.u(1)  # separate_colour_plane_flag
+        b.read(1)  # separate_colour_plane_flag
     width = b.ue()  # pic_width_in_luma_samples
     height = b.ue()  # pic_height_in_luma_samples
-    if b.u(1):  # conformance_window_flag
+    if b.read(1):  # conformance_window_flag
         left, right, top, bottom = b.ue(), b.ue(), b.ue(), b.ue()
         sw, sh = _AVC_SUBWH.get(chroma_format_idc, (1, 1))
         width -= sw * (left + right)
@@ -4825,48 +4801,26 @@ def encode_hevc_sps(
     zero window for structural realism."""
     if width <= 0 or height <= 0 or width % 2 or height % 2:
         raise ValueError("dimensions must be positive and even (4:2:0)")
-    bits: list[int] = []
-
-    def u(v: int, n: int) -> None:
-        for i in range(n - 1, -1, -1):
-            bits.append((v >> i) & 1)
-
-    def ue(v: int) -> None:
-        code = v + 1
-        n = code.bit_length()
-        u(0, n - 1)
-        u(code, n)
-
-    u(0, 4)  # sps_video_parameter_set_id
-    u(0, 3)  # sps_max_sub_layers_minus1
-    u(1, 1)  # sps_temporal_id_nesting_flag
-    u(0, 2)  # general_profile_space
-    u(0, 1)  # general_tier_flag
-    u(profile_idc, 5)
-    u(1 << (31 - profile_idc), 32)  # compatibility: own profile bit
-    u(0b1000, 4)  # progressive=1, interlaced/non-packed/frame-only=0
-    u(0, 44)  # reserved/constraint bits
-    u(level_idc, 8)
-    ue(0)  # sps_seq_parameter_set_id
-    ue(1)  # chroma_format_idc = 4:2:0
-    ue(width)
-    ue(height)
-    u(0, 1)  # conformance_window_flag
-    u(1, 1)  # rbsp_stop_one_bit
-    while len(bits) % 8:
-        bits.append(0)
-    rbsp = bytearray()
-    for i in range(0, len(bits), 8):
-        rbsp.append(int("".join(map(str, bits[i : i + 8])), 2))
-    out = bytearray([33 << 1, 1])  # nal type 33, layer 0, tid_plus1 1
-    zeros = 0
-    for byte in rbsp:
-        if zeros >= 2 and byte <= 3:
-            out.append(3)
-            zeros = 0
-        out.append(byte)
-        zeros = zeros + 1 if byte == 0 else 0
-    return bytes(out)
+    w = _MsbBitWriter()
+    w.write(0, 4)  # sps_video_parameter_set_id
+    w.write(0, 3)  # sps_max_sub_layers_minus1
+    w.write(1, 1)  # sps_temporal_id_nesting_flag
+    w.write(0, 2)  # general_profile_space
+    w.write(0, 1)  # general_tier_flag
+    w.write(profile_idc, 5)
+    w.write(1 << (31 - profile_idc), 32)  # compatibility: own profile bit
+    w.write(0b1000, 4)  # progressive=1, interlaced/non-packed/frame-only=0
+    w.write(0, 44)  # reserved/constraint bits
+    w.write(level_idc, 8)
+    w.write_ue(0)  # sps_seq_parameter_set_id
+    w.write_ue(1)  # chroma_format_idc = 4:2:0
+    w.write_ue(width)
+    w.write_ue(height)
+    w.write(0, 1)  # conformance_window_flag
+    w.write(1, 1)  # rbsp_stop_one_bit
+    w.align()
+    # nal type 33, layer 0, tid_plus1 1
+    return bytes([33 << 1, 1]) + _add_emulation(bytes(w.out))
 
 
 def encode_hvcc(sps_nals: Sequence[bytes]) -> bytes:
@@ -4950,14 +4904,14 @@ def parse_av1_sequence_header(obu: bytes) -> tuple[int, int, int, int]:
         while j < len(obu) and obu[j] & 0x80:
             j += 1
         j += 1
-    b = _Bits(obu[j:])
-    seq_profile = b.u(3)
-    still_picture = b.u(1)
-    reduced = b.u(1)
+    b = _MsbBitReader(obu, j)
+    seq_profile = b.read(3)
+    still_picture = b.read(1)
+    reduced = b.read(1)
     if reduced:
-        seq_level_idx_0 = b.u(5)
+        seq_level_idx_0 = b.read(5)
     else:
-        if b.u(1):  # timing_info_present_flag
+        if b.read(1):  # timing_info_present_flag
             raise ValueError("timing_info not supported by this triage")
         # initial_display_delay_present_flag gates per-operating-point
         # delay fields BELOW — it is legal without timing_info (§5.5.1
@@ -4965,25 +4919,25 @@ def parse_av1_sequence_header(obu: bytes) -> tuple[int, int, int, int]:
         # timing_info), so it must be consumed, not assumed zero: a
         # spec-legal stream with the flag set would otherwise shift
         # every following bit and misparse dimensions silently.
-        delay_present = b.u(1)  # initial_display_delay_present_flag
-        op_cnt = b.u(5) + 1
+        delay_present = b.read(1)  # initial_display_delay_present_flag
+        op_cnt = b.read(5) + 1
         seq_level_idx_0 = 0
         for i in range(op_cnt):
-            b.u(12)  # operating_point_idc
-            lvl = b.u(5)
+            b.read(12)  # operating_point_idc
+            lvl = b.read(5)
             if i == 0:
                 seq_level_idx_0 = lvl
             if lvl > 7:
-                b.u(1)  # seq_tier
+                b.read(1)  # seq_tier
             # decoder_model_present_for_this_op is 0 on this path (its
             # flag nests under timing_info, which raises above), so the
             # only remaining per-op fields are the display-delay pair:
-            if delay_present and b.u(1):
-                b.u(4)  # initial_display_delay_minus_1
-    wbits = b.u(4) + 1
-    hbits = b.u(4) + 1
-    width = b.u(wbits) + 1
-    height = b.u(hbits) + 1
+            if delay_present and b.read(1):
+                b.read(4)  # initial_display_delay_minus_1
+    wbits = b.read(4) + 1
+    hbits = b.read(4) + 1
+    width = b.read(wbits) + 1
+    height = b.read(hbits) + 1
     _ = still_picture
     return seq_profile, seq_level_idx_0, width, height
 
@@ -5009,39 +4963,30 @@ def encode_av1_sequence_header(
         1 <= initial_display_delay <= 16
     ):
         raise ValueError("initial_display_delay must be 1-16 frames")
-    bits: list[int] = []
-
-    def u(v: int, n: int) -> None:
-        for i in range(n - 1, -1, -1):
-            bits.append((v >> i) & 1)
-
-    u(seq_profile, 3)
-    u(0, 1)  # still_picture
-    u(0, 1)  # reduced_still_picture_header
-    u(0, 1)  # timing_info_present_flag
-    u(0 if initial_display_delay is None else 1, 1)
+    w = _MsbBitWriter()
+    w.write(seq_profile, 3)
+    w.write(0, 1)  # still_picture
+    w.write(0, 1)  # reduced_still_picture_header
+    w.write(0, 1)  # timing_info_present_flag
+    w.write(0 if initial_display_delay is None else 1, 1)
     #        ^ initial_display_delay_present_flag
-    u(0, 5)  # operating_points_cnt_minus_1
-    u(0, 12)  # operating_point_idc[0]
-    u(seq_level_idx, 5)
+    w.write(0, 5)  # operating_points_cnt_minus_1
+    w.write(0, 12)  # operating_point_idc[0]
+    w.write(seq_level_idx, 5)
     if seq_level_idx > 7:
-        u(0, 1)  # seq_tier[0]
+        w.write(0, 1)  # seq_tier[0]
     if initial_display_delay is not None:
-        u(1, 1)  # initial_display_delay_present_for_this_op[0]
-        u(initial_display_delay - 1, 4)
+        w.write(1, 1)  # initial_display_delay_present_for_this_op[0]
+        w.write(initial_display_delay - 1, 4)
     wbits = max((width - 1).bit_length(), 1)
     hbits = max((height - 1).bit_length(), 1)
-    u(wbits - 1, 4)
-    u(hbits - 1, 4)
-    u(width - 1, wbits)
-    u(height - 1, hbits)
-    u(1, 1)  # trailing one bit (start of what a real header continues)
-    while len(bits) % 8:
-        bits.append(0)
-    payload = bytes(
-        int("".join(map(str, bits[i : i + 8])), 2)
-        for i in range(0, len(bits), 8)
-    )
+    w.write(wbits - 1, 4)
+    w.write(hbits - 1, 4)
+    w.write(width - 1, wbits)
+    w.write(height - 1, hbits)
+    w.write(1, 1)  # trailing one bit (start of what a real header continues)
+    w.align()
+    payload = bytes(w.out)
     size = len(payload)
     leb = bytearray()
     while True:  # leb128
@@ -5108,6 +5053,15 @@ def parse_vpcc(data: bytes) -> tuple[int, int]:
     return data[4], data[5]
 
 
+#: Decoder-configuration records that carry dimensions: (ISO-BMFF
+#: sample-entry child box, Matroska CodecID, parser).
+_VIDEO_CONFIGS = (
+    (b"avcC", "V_MPEG4/ISO/AVC", parse_avcc),
+    (b"hvcC", "V_MPEGH/ISO/HEVC", parse_hvcc),
+    (b"av1C", "V_AV1", parse_av1c),
+)
+
+
 def video_stream_params(payload: bytes) -> tuple[str, str, int, int, int, int]:
     """Pixel-level triage for containerized video — (container, codec,
     width, height, profile_idc, level_idc) — from decoder-configuration
@@ -5128,46 +5082,21 @@ def video_stream_params(payload: bytes) -> tuple[str, str, int, int, int, int]:
 
     p = payload or b""
     if len(p) >= 12 and p[4:8] == b"ftyp":
-
-        def boxes(lo: int, hi: int):
-            j = lo
-            while j + 8 <= hi:
-                (size,) = struct.unpack(">I", p[j : j + 4])
-                fourcc = p[j + 4 : j + 8]
-                body = j + 8
-                if size == 1:
-                    if j + 16 > hi:
-                        return
-                    (size,) = struct.unpack(">Q", p[j + 8 : j + 16])
-                    body = j + 16
-                elif size == 0:
-                    size = hi - j
-                if size < 8 or j + size > hi:
-                    return
-                yield fourcc, body, j + size
-                j += size
-
-        def child(lo: int, hi: int, fourcc: bytes):
-            for fc, b, e in boxes(lo, hi):
-                if fc == fourcc:
-                    return b, e
-            return None
-
-        moov = child(0, len(p), b"moov")
+        moov = _mp4_child(p, 0, len(p), b"moov")
         if not moov:
             raise ValueError("no moov box")
-        for fc, b, e in boxes(*moov):
+        for fc, b, e in _mp4_boxes(p, *moov):
             if fc != b"trak":
                 continue
-            mdia = child(b, e, b"mdia")
+            mdia = _mp4_child(p, b, e, b"mdia")
             if not mdia:
                 continue
-            hd = child(*mdia, b"hdlr")
+            hd = _mp4_child(p, *mdia, b"hdlr")
             if not hd or p[hd[0] + 8 : hd[0] + 12] != b"vide":
                 continue
-            minf = child(*mdia, b"minf")
-            stbl = child(*minf, b"stbl") if minf else None
-            stsd = child(*stbl, b"stsd") if stbl else None
+            minf = _mp4_child(p, *mdia, b"minf")
+            stbl = _mp4_child(p, *minf, b"stbl") if minf else None
+            stsd = _mp4_child(p, *stbl, b"stsd") if stbl else None
             if not stsd or stsd[0] + 16 > stsd[1]:
                 continue
             entry_lo = stsd[0] + 8  # past version/flags + entry_count
@@ -5177,18 +5106,11 @@ def video_stream_params(payload: bytes) -> tuple[str, str, int, int, int, int]:
             )
             entry_hi = min(entry_lo + esize, stsd[1])
             # child boxes start after the 78-byte VisualSampleEntry body
-            cfg = child(entry_lo + 8 + 78, entry_hi, b"avcC")
-            if cfg:
-                prof, lvl, w, h = parse_avcc(p[cfg[0] : cfg[1]])
-                return "mp4", codec, w, h, prof, lvl
-            cfg = child(entry_lo + 8 + 78, entry_hi, b"hvcC")
-            if cfg:
-                prof, lvl, w, h = parse_hvcc(p[cfg[0] : cfg[1]])
-                return "mp4", codec, w, h, prof, lvl
-            cfg = child(entry_lo + 8 + 78, entry_hi, b"av1C")
-            if cfg:
-                prof, lvl, w, h = parse_av1c(p[cfg[0] : cfg[1]])
-                return "mp4", codec, w, h, prof, lvl
+            for fourcc, _codec_id, parse in _VIDEO_CONFIGS:
+                cfg = _mp4_child(p, entry_lo + 8 + 78, entry_hi, fourcc)
+                if cfg:
+                    prof, lvl, w, h = parse(p[cfg[0] : cfg[1]])
+                    return "mp4", codec, w, h, prof, lvl
             # declared dims at fixed VisualSampleEntry offsets; VP9's
             # vpcC adds profile/level (its config carries no dims)
             w = h = prof = lvl = 0
@@ -5196,39 +5118,24 @@ def video_stream_params(payload: bytes) -> tuple[str, str, int, int, int, int]:
                 w, h = struct.unpack(
                     ">HH", p[entry_lo + 8 + 24 : entry_lo + 8 + 28]
                 )
-            cfg = child(entry_lo + 8 + 78, entry_hi, b"vpcC")
+            cfg = _mp4_child(p, entry_lo + 8 + 78, entry_hi, b"vpcC")
             if cfg:
                 prof, lvl = parse_vpcc(p[cfg[0] : cfg[1]])
             return "mp4", codec, w, h, prof, lvl
         raise ValueError("no video trak")
     if p[:4] == b"\x1a\x45\xdf\xa3":
-
-        def walk(lo: int, hi: int):
-            j = lo
-            while j < hi:
-                try:
-                    eid, k = _ebml_vint(p, j, strip_marker=False)
-                    size, body = _ebml_vint(p, k, strip_marker=True)
-                except ValueError:
-                    return
-                end = body + size
-                if end > hi:
-                    return
-                yield eid, body, end
-                j = end
-
-        for eid, b, e in walk(0, len(p)):
+        for eid, b, e in _ebml_elements(p, 0, len(p)):
             if eid != 0x18538067:  # Segment
                 continue
-            for i2, b2, e2 in walk(b, e):
+            for i2, b2, e2 in _ebml_elements(p, b, e):
                 if i2 != 0x1654AE6B:  # Tracks
                     continue
-                for i3, b3, e3 in walk(b2, e2):
+                for i3, b3, e3 in _ebml_elements(p, b2, e2):
                     if i3 != 0xAE:  # TrackEntry
                         continue
                     ttype, codec, priv = 0, "", b""
                     pw = ph = 0
-                    for i4, b4, e4 in walk(b3, e3):
+                    for i4, b4, e4 in _ebml_elements(p, b3, e3):
                         if i4 == 0x83:
                             ttype = int.from_bytes(p[b4:e4], "big")
                         elif i4 == 0x86:
@@ -5238,22 +5145,17 @@ def video_stream_params(payload: bytes) -> tuple[str, str, int, int, int, int]:
                         elif i4 == 0x63A2:  # CodecPrivate
                             priv = p[b4:e4]
                         elif i4 == 0xE0:  # Video
-                            for i5, b5, e5 in walk(b4, e4):
+                            for i5, b5, e5 in _ebml_elements(p, b4, e4):
                                 if i5 == 0xB0:
                                     pw = int.from_bytes(p[b5:e5], "big")
                                 elif i5 == 0xBA:
                                     ph = int.from_bytes(p[b5:e5], "big")
                     if ttype != 1:
                         continue
-                    if codec == "V_MPEG4/ISO/AVC" and priv:
-                        prof, lvl, w, h = parse_avcc(priv)
-                        return "mkv", codec, w, h, prof, lvl
-                    if codec == "V_MPEGH/ISO/HEVC" and priv:
-                        prof, lvl, w, h = parse_hvcc(priv)
-                        return "mkv", codec, w, h, prof, lvl
-                    if codec == "V_AV1" and priv:
-                        prof, lvl, w, h = parse_av1c(priv)
-                        return "mkv", codec, w, h, prof, lvl
+                    for _fourcc, codec_id, parse in _VIDEO_CONFIGS:
+                        if codec == codec_id and priv:
+                            prof, lvl, w, h = parse(priv)
+                            return "mkv", codec, w, h, prof, lvl
                     return "mkv", codec, pw, ph, 0, 0
         raise ValueError("no video TrackEntry")
     raise ValueError("not an MP4/Matroska payload")
@@ -5340,19 +5242,16 @@ def sniff_media_payload(payload: bytes) -> tuple[str, str, bool, str]:
             i += 2 + size
         return "jpeg", "jpeg", False, "no SOF before SOS/EOI"
     if p[:4] == b"RIFF" and p[8:12] == b"WAVE":
-        i = 12
-        while i + 8 <= len(p):
-            cid = p[i : i + 4]
-            size = struct.unpack("<I", p[i + 4 : i + 8])[0]
-            if cid == b"fmt " and i + 24 <= len(p):
-                fmt_code, _nch = struct.unpack("<HH", p[i + 8 : i + 12])
-                bits = struct.unpack("<H", p[i + 22 : i + 24])[0]
+        # the FIRST fmt chunk decides
+        for cid, b0, _b1, _size in _riff_chunks(p, 12, len(p)):
+            if cid == b"fmt " and b0 + 16 <= len(p):
+                (fmt_code,) = struct.unpack("<H", p[b0 : b0 + 2])
+                (bits,) = struct.unpack("<H", p[b0 + 14 : b0 + 16])
                 if fmt_code == 1 and bits == 16:
                     return "wav", "pcm16", True, ""
                 if fmt_code == 1:
                     return "wav", f"pcm{bits}", False, f"{bits}-bit PCM"
                 return "wav", f"fmt{fmt_code}", False, "compressed WAV"
-            i += 8 + size + (size & 1)
         return "wav", "unknown", False, "missing fmt chunk"
     if p[:4] == b"RIFF" and p[8:12] == b"WEBP":
         tag = p[12:16]
@@ -5361,22 +5260,12 @@ def sniff_media_payload(payload: bytes) -> tuple[str, str, bool, str]:
         )
         return "webp", codec, False, "WebP needs libwebp"
     if p[:4] == b"RIFF" and p[8:12] == b"AVI ":
-        # walk LIST trees for the first video stream header's handler
-        def walk(lo: int, hi: int) -> str | None:
-            j = lo
-            while j + 8 <= hi:
-                cid = p[j : j + 4]
-                size = struct.unpack("<I", p[j + 4 : j + 8])[0]
-                if cid == b"LIST":
-                    got = walk(j + 12, min(hi, j + 8 + size))
-                    if got:
-                        return got
-                elif cid == b"strh" and p[j + 8 : j + 12] == b"vids":
-                    return p[j + 12 : j + 16].decode("latin-1")
-                j += 8 + size + (size & 1)
-            return None
-
-        handler = walk(12, len(p)) or "unknown"
+        # the first video stream header's handler, LIST trees included
+        handler = "unknown"
+        for cid, b0, _b1 in _avi_chunks(p, 12, len(p)):
+            if cid == b"strh" and p[b0 : b0 + 4] == b"vids":
+                handler = p[b0 + 4 : b0 + 8].decode("latin-1") or "unknown"
+                break
         if handler.upper() == "MJPG":
             return "avi", "mjpeg", True, ""
         return "avi", handler.lower(), False, "inter-coded video needs pyav"

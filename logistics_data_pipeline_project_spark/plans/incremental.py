@@ -21,6 +21,7 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, functions as F
 
+from ..operators.merge import high_watermark, incremental_filter
 from .materialize import TableStore
 
 #: Merge functions for decomposable partial aggregates.
@@ -74,11 +75,10 @@ def incremental_rollup(
     wm_col = "__cursor_wm"
     if store.exists(name):
         prev = store.read(name)
-        wm = prev.agg(F.max(wm_col)).first()[0]
         # a NULL watermark means the stored rollup has processed no rows
         # yet (e.g. the first increment was empty) — take everything;
         # `cursor > NULL` would silently drop the whole source
-        delta = source if wm is None else source.filter(F.col(cursor_col) > F.lit(wm))
+        delta = incremental_filter(source, cursor_col, high_watermark(prev, wm_col))
     else:
         prev = None
         delta = source
@@ -101,10 +101,10 @@ def incremental_rollup(
                 F.max(wm_col).alias(wm_col),
             )
         )
-        gmax = merged.agg(F.max(wm_col)).first()[0]
+        gmax = high_watermark(merged, wm_col)
     else:
         merged = part
-        gmax = part.agg(F.max(wm_col)).first()[0]
+        gmax = high_watermark(part, wm_col)
     # re-broadcast the global watermark onto every row, keeping the column
     # typed even when gmax is None (an untyped null would drift the schema
     # and break the next run's unionByName)

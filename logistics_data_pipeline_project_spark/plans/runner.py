@@ -35,7 +35,13 @@ from dataclasses import dataclass, field
 from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame, Observation, Row, SparkSession, functions as F
 
-from ..operators.merge import dedup_latest, merge_upsert, scd2_apply
+from ..operators.merge import (
+    dedup_latest,
+    high_watermark,
+    incremental_filter,
+    merge_upsert,
+    scd2_apply,
+)
 from .materialize import TableStore
 
 AUDIT_TABLE = "etl_audit_log"
@@ -166,9 +172,9 @@ class ModelRunner:
             target = self.store.read(m.name)
             source = df
             if m.watermark_col:
-                wm = target.agg(F.max(m.watermark_col)).first()[0]
-                if wm is not None:
-                    source = source.filter(F.col(m.watermark_col) > F.lit(wm))
+                source = incremental_filter(
+                    source, m.watermark_col, high_watermark(target, m.watermark_col)
+                )
             if m.dedup_order:
                 source = dedup_latest(
                     source, [m.unique_key], [F.desc(c) for c in m.dedup_order]

@@ -4296,9 +4296,9 @@ def q161_png_resize_audit(spark: SparkSession, sf_dir: str):
     the plumbing.  All three stages run as ONE fused iterator-style
     mapInPandas (operators/rowmap.py), so payload bytes never row-trip
     through the driver and cross into Python once per task; the source
-    size columns of the final join re-run the generator alone.  At
-    scale the payload column is the partition-size dominator, so the
-    stages inherit decode_media's batching notes."""
+    size columns are the generator's own formula over ``id``, not a join
+    back to it.  At scale the payload column is the partition-size
+    dominator, so the stages inherit decode_media's batching notes."""
     from ..operators.multimodal import encode_png, png_probe, resize_images
     from ..operators.rowmap import map_rows
 
@@ -4307,23 +4307,22 @@ def q161_png_resize_audit(spark: SparkSession, sf_dir: str):
         raw = bytes(
             (doc_id + 3 * x + 5 * y) % 256 for y in range(h) for x in range(w)
         )
-        yield doc_id, w, h, encode_png(w, h, 1, raw)
+        yield doc_id, encode_png(w, h, 1, raw)
 
     docs = load(spark, sf_dir, "documents").select("doc_id")
-    gen_df = map_rows(
-        docs, "doc_id long, src_w int, src_h int, payload binary", rows_of
-    )
+    gen_df = map_rows(docs, "doc_id long, payload binary", rows_of)
     resized = resize_images(
         gen_df, "doc_id", "payload", width=_PNG_OUT_W, height=_PNG_OUT_H
     )
-    probe = png_probe(resized, "id", "resized_payload").select(
+    return png_probe(resized, "id", "resized_payload").select(
         F.col("id").alias("doc_id"),
+        (4 + F.pmod("id", F.lit(5))).cast("int").alias("src_w"),
+        (3 + F.pmod("id", F.lit(4))).cast("int").alias("src_h"),
         F.col("width").alias("out_w"),
         F.col("height").alias("out_h"),
         "channels",
         "first_px",
     )
-    return gen_df.select("doc_id", "src_w", "src_h").join(probe, "doc_id")
 
 
 q161_png_resize_audit.__doc__ = q161_png_resize_audit.__doc__.format(

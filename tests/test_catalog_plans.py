@@ -309,7 +309,10 @@ def test_q220_image_hash_single_exchange(spark, sf_dir):
     assert plan.count("MapInPandas") == 1, plan  # generate + hash, fused
 
 
-@pytest.mark.parametrize("name", ["q199_jpeg_codec_audit", "q244_warc_crawl_census"])
+@pytest.mark.parametrize(
+    "name",
+    ["q161_png_resize_audit", "q199_jpeg_codec_audit", "q244_warc_crawl_census"],
+)
 def test_codec_generate_and_probe_cross_into_python_once(spark, sf_dir, name):
     plan = _physical(REGISTRY[name].fn(spark, sf_dir))
     # the fixture generator and the codec probe run as one fused Python

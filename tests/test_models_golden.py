@@ -147,3 +147,117 @@ def test_seller_product_profitability_margin_rounding(spark):
     assert r["logistics_expense"] == pytest.approx(130.00)
     assert r["gross_profit"] == pytest.approx(1370.00)
     assert r["gross_margin_pct"] == pytest.approx(91.33)
+
+
+def test_shipment_delay_summary_window_and_day_boundaries(spark):
+    from pyspark.sql import functions as F
+
+    # as_of 2024-02-01 -> 30-day cutoff 2024-01-02: the December row is
+    # outside the window; DATEDIFF counts date crossings (23:00 -> 01:00
+    # is one day)
+    shipments = spark.createDataFrame(
+        [
+            Row(CARRIER_NAME="Delhivery", DESTINATION_CITY="Bangalore",
+                STATUS_CREATED_AT=ts("2024-01-10 10:00"), STATUS_DELIVERED_AT=ts("2024-01-12 09:00"),
+                DELAY_FLAG=True),
+            Row(CARRIER_NAME="Delhivery", DESTINATION_CITY="Bangalore",
+                STATUS_CREATED_AT=ts("2024-01-20 23:00"), STATUS_DELIVERED_AT=ts("2024-01-21 01:00"),
+                DELAY_FLAG=False),
+            Row(CARRIER_NAME="Delhivery", DESTINATION_CITY="Bangalore",
+                STATUS_CREATED_AT=ts("2023-12-01 00:00"), STATUS_DELIVERED_AT=ts("2023-12-09 00:00"),
+                DELAY_FLAG=True),
+            Row(CARRIER_NAME="BlueDart", DESTINATION_CITY="Mumbai",
+                STATUS_CREATED_AT=ts("2024-01-15 08:00"), STATUS_DELIVERED_AT=ts("2024-01-20 08:00"),
+                DELAY_FLAG=True),
+        ]
+    )
+    rows = [
+        r.asDict()
+        for r in gold.shipment_delay_summary(shipments, as_of=F.lit(dt.date(2024, 2, 1))).collect()
+    ]
+    assert rows == [
+        {"courier_name": "BlueDart", "delivery_zone": "Mumbai", "total_shipments": 1,
+         "avg_delivery_days": 5.0, "delayed_shipments": 1, "delay_rate_pct": 100.0},
+        {"courier_name": "Delhivery", "delivery_zone": "Bangalore", "total_shipments": 2,
+         "avg_delivery_days": 1.5, "delayed_shipments": 1, "delay_rate_pct": 50.0},
+    ]
+
+
+def test_courier_sla_breach_inner_join(spark):
+    shipments = spark.createDataFrame(
+        [
+            Row(CARRIER_ID="C1", DELAY_FLAG=True),
+            Row(CARRIER_ID="C1", DELAY_FLAG=True),
+            Row(CARRIER_ID="C1", DELAY_FLAG=False),
+            Row(CARRIER_ID="C2", DELAY_FLAG=False),
+            Row(CARRIER_ID="C9", DELAY_FLAG=True),  # no courier row: dropped
+        ]
+    )
+    couriers = spark.createDataFrame(
+        [
+            Row(COURIER_ID="C1", NAME="Delhivery"),
+            Row(COURIER_ID="C2", NAME="BlueDart"),
+            Row(COURIER_ID="C3", NAME="Ekart"),  # no shipments: absent
+        ]
+    )
+    rows = [r.asDict() for r in gold.courier_sla_breach(shipments, couriers).collect()]
+    assert rows == [
+        {"courier_name": "Delhivery", "total_shipments": 3, "sla_breaches": 2, "breach_pct": 66.67},
+        {"courier_name": "BlueDart", "total_shipments": 1, "sla_breaches": 0, "breach_pct": 0.0},
+    ]
+
+
+def test_geo_delivery_summary_inner_join(spark):
+    shipments = spark.createDataFrame(
+        [
+            Row(DESTINATION_PINCODE="560001", DELIVERY_TAT_DAYS=2, DELAY_FLAG=True),
+            Row(DESTINATION_PINCODE="560001", DELIVERY_TAT_DAYS=3, DELAY_FLAG=False),
+            Row(DESTINATION_PINCODE="560001", DELIVERY_TAT_DAYS=3, DELAY_FLAG=False),
+            Row(DESTINATION_PINCODE="400001", DELIVERY_TAT_DAYS=5, DELAY_FLAG=True),
+            Row(DESTINATION_PINCODE="999999", DELIVERY_TAT_DAYS=9, DELAY_FLAG=True),  # unmatched
+        ]
+    )
+    locations = spark.createDataFrame(
+        [Row(PINCODE="560001", CITY="Bangalore"), Row(PINCODE="400001", CITY="Mumbai")]
+    )
+    out = {r["DESTINATION_PINCODE"]: r for r in _rows(gold.geo_delivery_summary(shipments, locations))}
+    assert set(out) == {"560001", "400001"}
+    assert out["560001"] == {"DESTINATION_PINCODE": "560001", "CITY": "Bangalore", "shipment_count": 3,
+                             "avg_delivery_days": 2.67, "delay_rate": pytest.approx(100.0 / 3)}
+    assert out["400001"] == {"DESTINATION_PINCODE": "400001", "CITY": "Mumbai", "shipment_count": 1,
+                             "avg_delivery_days": 5.0, "delay_rate": 100.0}
+
+
+def test_silver_error_inventory_first_match_reason_and_watermark(spark):
+    from logistics_data_pipeline_project_spark.models import silver
+
+    def inv(id_, stock, seller, product, at):
+        return Row(ID=id_, STOCK=stock, SELLER_ID=seller, PRODUCT_ID=product,
+                   _AIRBYTE_EXTRACTED_AT=ts(at))
+
+    schema = "ID string, STOCK int, SELLER_ID string, PRODUCT_ID string, _AIRBYTE_EXTRACTED_AT timestamp"
+    existing = spark.createDataFrame([inv("I0", 100, "S1", "P1", "2024-01-05")], schema)
+    raw = spark.createDataFrame(
+        [
+            inv("I1", 10, "S1", "P1", "2024-01-06"),
+            inv("I2", 6000, "S1", "P1", "2024-01-06"),
+            inv("I3", None, None, "P1", "2024-01-06"),  # two violations: first wins
+            inv("I4", 100, "S1", "P1", "2024-01-06"),  # valid
+            inv("I5", 5, "S1", "P1", "2024-01-04"),  # at/below the watermark: skipped
+            inv(None, 50, "S1", "P1", "2024-01-07"),
+            inv("I6", 20, "S1", None, "2024-01-07"),  # boundary: 20 is too low
+            inv("I7", 5000, "S1", None, "2024-01-07"),  # 5000 is in range
+        ],
+        schema,
+    )
+    out = silver.silver_error_inventory(raw, existing)
+    assert "error_logged_at" in out.columns
+    got = sorted((r["ID"] or "", r["error_reason"]) for r in out.collect())
+    assert got == [
+        ("", "Missing ID"),
+        ("I1", "STOCK too low (<= 20)"),
+        ("I2", "STOCK too high (> 5000)"),
+        ("I3", "Missing STOCK"),
+        ("I6", "STOCK too low (<= 20)"),
+        ("I7", "Missing PRODUCT_ID"),
+    ]

@@ -721,16 +721,17 @@ def test_jpeg_restart_marker_decode():
         _JPEG_AC_VALS,
         _JPEG_DC_BITS,
         _JPEG_DC_VALS,
-        _BitWriter,
+        _MsbBitWriter,
         _build_huffman_codes,
         _jpeg_category,
+        _jpeg_entropy,
     )
 
     dc_codes = _build_huffman_codes(_JPEG_DC_BITS, _JPEG_DC_VALS)
     ac_codes = _build_huffman_codes(_JPEG_AC_BITS, _JPEG_AC_VALS)
 
     def interval(v):  # one flat tile: dc = 8*(v-128)/8 = v-128, ACs zero
-        wtr = _BitWriter()
+        wtr = _MsbBitWriter()
         diff = v - 128  # predictor reset: diff IS the dc
         s = _jpeg_category(diff)
         code, length = dc_codes[s]
@@ -739,7 +740,7 @@ def test_jpeg_restart_marker_decode():
             wtr.write(diff if diff > 0 else diff + (1 << s) - 1, s)
         code, length = ac_codes[0x00]  # EOB
         wtr.write(code, length)
-        return wtr.flush()
+        return _jpeg_entropy(wtr)
 
     def seg(marker, body):
         return struct.pack(">HH", marker, len(body) + 2) + body
@@ -761,6 +762,74 @@ def test_jpeg_restart_marker_decode():
     w, h, ch, dec = decode_jpeg_pixels(payload)
     assert (w, h, ch) == (16, 8, 1)
     assert dec == bytes([77] * 8 + [201] * 8) * 8
+
+
+def test_msb_bit_writer_reader_roundtrip():
+    # the one MSB-first bit layer under FLAC, the H.264/H.265/AV1 headers
+    # and the JPEG entropy coder
+    import numpy as np
+    import pytest
+
+    from logistics_data_pipeline_project_spark.operators.multimodal import (
+        _MsbBitReader,
+        _MsbBitWriter,
+    )
+
+    rng = np.random.RandomState(11)
+    fields = [
+        (v, n)
+        for n in range(33)
+        for v in {0, (1 << n) - 1, int(rng.randint(0, 1 << 31)) & ((1 << n) - 1)}
+    ]
+    ues = list(range((1 << 16) + 1)) + [1 << 31, (1 << 32) - 1]
+    w = _MsbBitWriter()
+    for v, n in fields:
+        w.write(v, n)
+    for v in ues:
+        w.write_ue(v)
+    for q in range(70):
+        w.write_unary(q)
+    w.align()
+    r = _MsbBitReader(bytes(w.out))
+    assert [r.read(n) for _v, n in fields] == [v for v, _n in fields]
+    assert [r.ue() for _ in ues] == ues
+    assert [r.read_unary() for _ in range(70)] == list(range(70))
+    r.align()
+    assert r.pos == len(w.out)
+
+    # se(v) reads the ue code k as (k + 1) // 2 for odd k, -(k // 2) else
+    w = _MsbBitWriter()
+    for k in ues:
+        w.write_ue(k)
+    w.align()
+    r = _MsbBitReader(bytes(w.out))
+    assert [r.se() for _ in ues] == [
+        (k + 1) // 2 if k % 2 else -(k // 2) for k in ues
+    ]
+
+    # bulk write_bits equals the same bits written one at a time, from
+    # every partial-byte starting offset
+    for lead in range(8):
+        bits = rng.randint(0, 2, 8 * lead + 13).astype(np.uint8)
+        bulk, single = _MsbBitWriter(), _MsbBitWriter()
+        for wtr in (bulk, single):
+            wtr.write(0b1011011, lead)
+        bulk.write_bits(bits)
+        for b in bits:
+            single.write(int(b), 1)
+        bulk.align()
+        single.align()
+        assert bulk.out == single.out
+
+    # truncation and over-long Exp-Golomb prefixes are ValueErrors
+    with pytest.raises(ValueError):
+        _MsbBitReader(b"\xab").read(9)
+    with pytest.raises(ValueError):
+        _MsbBitReader(b"\x00\x00").ue()
+    with pytest.raises(ValueError):
+        _MsbBitReader(b"\x00" * 4 + b"\x7f" + b"\xff" * 5).ue()  # 33 zeros
+    with pytest.raises(ValueError):
+        _MsbBitReader(b"\x00").read_unary()
 
 
 # ---------------------------------------------------------------------------
