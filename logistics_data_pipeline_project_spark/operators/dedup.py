@@ -25,7 +25,7 @@ from functools import reduce
 from pyspark.sql import DataFrame, Window, functions as F
 
 from .scale import fan_out
-from .text import sliding_concat_sql
+from .text import _token_windows, sliding_concat_sql
 
 __all__ = [
     "exact_dedup",
@@ -77,48 +77,24 @@ def word_shingles(
     def gen(batches):
         import numpy as np
         import pyarrow as pa
-        import pyarrow.compute as pc
 
-        out_names = [id_col, "shingle"]
         for batch in batches:
-            ids = batch.column(0)
-            toks = pc.split_pattern(batch.column(1), " ")
-            if isinstance(toks, pa.ChunkedArray):  # defensive
-                toks = toks.combine_chunks()
-            offsets = toks.offsets.to_numpy(zero_copy_only=False)
-            lens = np.diff(offsets)
-            valid = pc.is_valid(toks).to_numpy(zero_copy_only=False)
-            counts = np.where(valid & (lens >= n), lens - n + 1, 0)
-            total = int(counts.sum())
-            if total == 0:
-                yield pa.RecordBatch.from_arrays(
-                    [ids.slice(0, 0), pa.array([], pa.string())],
-                    names=out_names,
-                )
-                continue
-            doc_rep = np.repeat(np.arange(len(counts)), counts)
-            starts = np.concatenate(([0], np.cumsum(counts)[:-1]))
-            # token index of each window start, in document order
-            base = offsets[doc_rep] + (np.arange(total) - starts[doc_rep])
-            flat = toks.values
-            if n == 1:
-                shingles = flat.take(pa.array(base))
-            else:
-                cols = [flat.take(pa.array(base + k)) for k in range(n)]
-                shingles = pc.binary_join_element_wise(*cols, " ")
-            # per-document distinct keeping FIRST occurrence (the
-            # array_distinct order): unique on (doc, shingle-code),
-            # then restore original positions
-            codes = shingles.dictionary_encode().indices.to_numpy(
-                zero_copy_only=False
-            ).astype(np.int64)
-            key = doc_rep * (int(codes.max()) + 1) + codes
-            _, first_idx = np.unique(key, return_index=True)
-            first_idx.sort()
-            sel = pa.array(first_idx)
+            doc_rep, _, shingles = _token_windows(batch.column(1), n)
+            if len(shingles):
+                # per-document distinct keeping FIRST occurrence (the
+                # array_distinct order): unique on (doc, shingle-code),
+                # then restore original positions
+                codes = shingles.dictionary_encode().indices.to_numpy(
+                    zero_copy_only=False
+                ).astype(np.int64)
+                key = doc_rep * (int(codes.max()) + 1) + codes
+                _, first_idx = np.unique(key, return_index=True)
+                first_idx.sort()
+                doc_rep = doc_rep[first_idx]
+                shingles = shingles.take(pa.array(first_idx))
             yield pa.RecordBatch.from_arrays(
-                [ids.take(pa.array(doc_rep[first_idx])), shingles.take(sel)],
-                names=out_names,
+                [batch.column(0).take(pa.array(doc_rep)), shingles],
+                names=[id_col, "shingle"],
             )
 
     return low.mapInArrow(gen, schema=f"`{id_col}` {id_type}, shingle string")

@@ -1982,6 +1982,10 @@ class _JpegHuffDecode:
         for length in range(1, 17):
             n = bits[length - 1]
             if n:
+                # the LUT holds codes <= 8 bits: each needs its symbol
+                # and a slot inside the 8-bit prefix space
+                if length <= 8 and (code + n > 1 << length or k + n > len(vals)):
+                    raise ValueError("corrupt JPEG Huffman table")
                 self.valptr[length] = k
                 self.mincode[length] = code
                 for _ in range(n):
@@ -2232,10 +2236,10 @@ def decode_jpeg_pixels(payload: bytes) -> tuple[int, int, int, bytes]:
     row-major ``width*height*channels`` bytes — the decode_png_pixels
     convention.
 
-    Raises ValueError for non-JPEG bytes and NotImplementedError for the
-    JPEG features that genuinely need libjpeg (arithmetic coding,
-    12-bit precision, lossless/hierarchical) — the same honest
-    capability surface as the PNG/GIF decoders."""
+    Raises ValueError for non-JPEG, truncated or corrupt bytes and
+    NotImplementedError for the JPEG features that genuinely need
+    libjpeg (arithmetic coding, 12-bit precision, lossless/hierarchical)
+    — the same honest capability surface as the PNG/GIF decoders."""
     import struct
 
     import numpy as np
@@ -2270,6 +2274,8 @@ def decode_jpeg_pixels(payload: bytes) -> tuple[int, int, int, bytes]:
             )
         if marker == 0xCC or marker == 0xC8:
             raise NotImplementedError("arithmetic-coded JPEG unsupported")
+        if i + 4 > len(payload):
+            raise ValueError("JPEG truncated in a marker segment")
         (size,) = struct.unpack(">H", payload[i + 2 : i + 4])
         body = payload[i + 4 : i + 2 + size]
         if marker == 0xDB:  # DQT — may carry several tables
@@ -2278,6 +2284,8 @@ def decode_jpeg_pixels(payload: bytes) -> tuple[int, int, int, bytes]:
                 pq, tq = body[j] >> 4, body[j] & 0x0F
                 if pq not in (0, 1):
                     raise ValueError("bad DQT precision")
+                if j + 65 + 64 * pq > len(body):
+                    raise ValueError("JPEG DQT truncated")
                 if pq:  # 16-bit table values, big-endian
                     zz_qt = [
                         int.from_bytes(
@@ -2301,6 +2309,8 @@ def decode_jpeg_pixels(payload: bytes) -> tuple[int, int, int, bytes]:
             # hold), so it decodes on the baseline path; libjpeg does the
             # same (T.81 Annex F vs B.2.2 differ only in those limits).
             progressive = marker == 0xC2
+            if len(body) < 6:
+                raise ValueError("JPEG SOF truncated")
             _prec, height, width, nf = struct.unpack(">BHHB", body[:6])
             if _prec != 8:
                 raise NotImplementedError("12-bit JPEG unsupported")
@@ -2319,6 +2329,8 @@ def decode_jpeg_pixels(payload: bytes) -> tuple[int, int, int, bytes]:
             while j < len(body):
                 tc, th = body[j] >> 4, body[j] & 0x0F
                 bits = list(body[j + 1 : j + 17])
+                if len(bits) < 16:
+                    raise ValueError("JPEG DHT truncated")
                 nv = sum(bits)
                 vals = list(body[j + 17 : j + 17 + nv])
                 if tc == 0:
@@ -2327,9 +2339,13 @@ def decode_jpeg_pixels(payload: bytes) -> tuple[int, int, int, bytes]:
                     ac_tables[th] = _build_huffman_decode(bits, vals)
                 j += 17 + nv
         elif marker == 0xDD:  # DRI
+            if len(body) < 2:
+                raise ValueError("JPEG DRI truncated")
             (restart_interval,) = struct.unpack(">H", body[:2])
         elif marker == 0xDA:  # SOS: header, then de-stuffed entropy
-            ns = body[0]
+            ns = body[0] if body else 0
+            if not ns or len(body) < 4 + 2 * ns:
+                raise ValueError("JPEG SOS header truncated or empty")
             by_id = {c["id"]: idx for idx, c in enumerate(comps)}
             sel = []
             for si in range(ns):
@@ -2491,6 +2507,8 @@ def decode_jpeg_pixels(payload: bytes) -> tuple[int, int, int, bytes]:
             interleaved = len(sel) > 1
             if ss == 0 and se != 0:
                 raise ValueError("progressive scan mixes DC and AC")
+            if se > 63:
+                raise ValueError("progressive scan band past coefficient 63")
             if ss > 0 and interleaved:
                 raise ValueError("progressive AC scan must be single-component")
             if ss == 0:

@@ -8,12 +8,20 @@
 - **lsh_topk** — the approximate scale path: seeded random-hyperplane
   (SimHash) pre-bucketing as pure DataFrame expressions, so each query
   only scores its bucket's candidates.
-- **block_cosine_topk_pandas** — the vectorized throughput path: one
-  numpy matmul per block via Arrow-batched applyInPandas.
+- **kmeans_cells / ivf_topk**, **pq_kmeans / pq_topk / pq_encode /
+  ivf_pq_topk**, **block_nn_pairs_pandas** and **semantic_dedup** run
+  their vector math in numpy over Arrow batches, through the vector
+  primitives defined once below: ``_arrow_matrix`` (an Arrow list column
+  as an ``(n, dim)`` matrix), ``_nearest`` (nearest codebook row),
+  ``_seq_norms`` and ``_seq_dot_chunks`` (row norms and budgeted dot
+  blocks).
 
-Determinism: dot/norm folds run left-to-right (F.aggregate is a strict
-sequential fold), so scores are bit-stable; ranking orders by the rounded
-score with the candidate id as tiebreaker.
+Determinism: dot/norm/distance sums run left-to-right over the dims in
+both forms — ``F.aggregate`` is a strict sequential fold, and the numpy
+primitives add one dim at a time in the same order, as DuckDB's
+``list_sum`` does — so scores are bit-identical across Spark's
+expressions, the numpy kernels and the oracle; ranking orders by the
+rounded score with the candidate id as tiebreaker.
 """
 
 from __future__ import annotations
@@ -25,7 +33,6 @@ from .scale import fan_out
 __all__ = [
     "cosine_topk",
     "lsh_topk",
-    "block_cosine_topk_pandas",
     "block_nn_pairs_pandas",
     "kmeans_cells",
     "pq_kmeans",
@@ -35,6 +42,84 @@ __all__ = [
     "semantic_dedup",
     "ivf_topk",
 ]
+
+
+# ---------------------------------------------------------------------------
+# Vector primitives: the one numpy form of each kernel step.  Sums run over
+# the dims strictly left to right, so every kernel below is bit-identical to
+# its expression oracle.
+# ---------------------------------------------------------------------------
+
+# bytes of one (rows × n) dot block plus its product scratch
+_DOT_BUDGET = 64 << 20
+
+
+def _arrow_matrix(arr):
+    """The ``(n, dim)`` float64 matrix of an Arrow list column, reshaped
+    from its flat value buffer: zero-copy for ``list<double>``, an exact
+    widening for ``list<float>``.  A sliced array reads its own offsets.
+    A null or ragged row raises ``ValueError``."""
+    import numpy as np
+    import pyarrow as pa
+
+    if isinstance(arr, pa.ChunkedArray):
+        arr = arr.chunk(0) if arr.num_chunks == 1 else arr.combine_chunks()
+    offs = arr.offsets.to_numpy(zero_copy_only=False)
+    lens = np.diff(offs)
+    if arr.null_count or (lens != lens[:1]).any():
+        raise ValueError("vector rows must be non-null and of equal length")
+    dim = int(lens[0]) if len(lens) else 0
+    vals = arr.values.to_numpy(zero_copy_only=False)[offs[0] : offs[-1]]
+    return vals.astype(np.float64, copy=False).reshape(len(arr), dim)
+
+
+def _nearest(x, C):
+    """``(code, sq_dist)`` of each row of ``x`` against the codebook rows
+    ``C``.  The squared L2 distance adds ``(x - c)²`` one dim at a time
+    from +0.0 (``0.0 + sq`` is exact, as in the fold); ``argmin`` keeps
+    the first minimum, so ties go to the lower code."""
+    import numpy as np
+
+    d = np.zeros((len(x), len(C)))
+    for t in range(C.shape[1]):
+        diff = x[:, t, None] - C[None, :, t]
+        d += diff * diff
+    j = d.argmin(axis=1)
+    return j, d[np.arange(len(x)), j]
+
+
+def _seq_norms(m):
+    """Row L2 norms, the squares added left to right."""
+    import numpy as np
+
+    return np.sqrt(np.add.accumulate(m * m, axis=1)[:, -1])
+
+
+def _seq_dot_chunks(a, b, budget: int = _DOT_BUDGET):
+    """Dot products of the rows of ``a`` with the rows of ``b`` as
+    ``(s, dots)`` blocks, ``dots[i, j] = a[s + i] · b[j]``, the products
+    added left to right (bit-equal to ``np.add.accumulate`` over the
+    dims).  Blocks cover ``a`` in row order, each as many rows (at least
+    one) as keep it and its product scratch within ``budget`` bytes."""
+    import numpy as np
+
+    rows = max(1, budget // max(1, 16 * len(b)))
+    for s in range(0, len(a), rows):
+        x = a[s : s + rows]
+        dots = x[:, None, 0] * b[None, :, 0]
+        prod = np.empty_like(dots)
+        for t in range(1, a.shape[1]):
+            dots += np.multiply(x[:, None, t], b[None, :, t], out=prod)
+        yield s, dots
+
+
+def _arrow_schema(ddl: str):
+    """The Arrow schema of a Spark DDL schema string (needs the active
+    SparkContext, so callers build it before shipping a kernel)."""
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import _parse_datatype_string
+
+    return to_arrow_schema(_parse_datatype_string(ddl))
 
 
 def _dot(a: str, b: str):
@@ -223,58 +308,25 @@ def _cell_dist_structs(cents: list[tuple[int, list[float]]]):
     )
 
 
-def _assign_cells_pandas(dbl: DataFrame, cents: list[tuple[int, list[float]]]) -> DataFrame:
-    """Arrow-batched numpy twin of the ``_cell_dist_structs`` projection:
-    per-dim squared differences accumulated strictly left-to-right (the
-    exact order of the JVM fold and DuckDB's ``list_sum`` — the running
-    ``d += diff²`` starts at +0.0, and 0.0 + x == x bitwise for squares)
-    and ``argmin`` (first-minimum) reproducing the ties-to-lower-cell
-    rule, since centroids arrive sorted by cell.  Bit-identical to the
-    expression path (asserted in tests).
-
-    r11: ``mapInArrow`` instead of ``mapInPandas`` — the vector column is
-    reshaped ZERO-COPY from the Arrow list buffer ([n·dim] doubles +
-    uniform offsets) instead of ``np.stack`` over n per-row arrays, and
-    the id/v columns pass through untouched; only the two small result
-    columns are newly built.  The dim loop also drops the (n, k, dim)
-    cumsum intermediate the old form materialized."""
+def _assign_cells(dbl: DataFrame, cents: list[tuple[int, list[float]]]) -> DataFrame:
+    """Arrow-batched twin of the ``_cell_dist_structs`` projection:
+    ``(id, v, cell, sq_dist)`` through ``_nearest``, bit-identical to the
+    fold (asserted in tests).  Centroids arrive sorted by cell, so the
+    first minimum is the ties-to-lower-cell rule.  The id and vector
+    columns pass through untouched."""
     import numpy as np
     import pyarrow as pa
 
     C = np.array([cvec for _, cvec in cents], dtype=np.float64)
-    cells = pa.array(
-        np.array([cell for cell, _ in cents], dtype=np.int32)
-    )
-    k, dim = C.shape
+    cells = pa.array(np.array([cell for cell, _ in cents], dtype=np.int32))
 
     def part(batches):
         for batch in batches:
-            n = batch.num_rows
-            if not n:
+            if not batch.num_rows:
                 continue
-            v = batch.column(1)
-            offs = v.offsets.to_numpy(zero_copy_only=False)
-            if len(offs) != n + 1 or not (np.diff(offs) == dim).all():
-                # ragged/odd layout: per-row fallback (same arithmetic)
-                x = np.stack(
-                    [np.asarray(r, dtype=np.float64) for r in v.to_pylist()]
-                )
-            else:
-                x = v.values.to_numpy(zero_copy_only=False)[
-                    offs[0] : offs[-1]
-                ].reshape(n, dim)
-            d = np.zeros((n, k), dtype=np.float64)
-            for t in range(dim):  # left-to-right, the JVM fold's order
-                diff = x[:, t, None] - C[None, :, t]
-                d += diff * diff
-            j = d.argmin(axis=1)
+            j, d = _nearest(_arrow_matrix(batch.column(1)), C)
             yield pa.RecordBatch.from_arrays(
-                [
-                    batch.column(0),
-                    v,
-                    cells.take(pa.array(j)),
-                    pa.array(d[np.arange(n), j], pa.float64()),
-                ],
+                [batch.column(0), batch.column(1), cells.take(pa.array(j)), pa.array(d)],
                 names=["id", "v", "cell", "sq_dist"],
             )
 
@@ -310,8 +362,8 @@ def kmeans_cells(
     zero-shuffle assignment + one groupBy(cell) shuffle); centroids
     (k·dim doubles) are collected per round and re-embedded as literals —
     the Python float round-trip is exact IEEE754. Assignment is
-    ``_assign_cells_pandas`` (vectorized numpy with sequential
-    accumulation over dims, Arrow batches); tests assert every round's
+    ``_assign_cells`` (numpy over Arrow batches, the same sequential
+    sums over the dims); tests assert every round's
     assignment equals the JVM expression fold (``_cell_dist_structs``)
     on that round's centroids.
 
@@ -343,7 +395,7 @@ def kmeans_cells(
 
     assigned = None
     for it in range(n_iter + 1):
-        assigned = _assign_cells_pandas(dbl, cents)
+        assigned = _assign_cells(dbl, cents)
         if it == n_iter:
             break
         upd = (
@@ -426,67 +478,6 @@ def ivf_topk(
     )
 
 
-def block_cosine_topk_pandas(
-    embeddings: DataFrame,
-    id_col: str,
-    vec_col: str,
-    block_col: str,
-    k: int = 1,
-) -> DataFrame:
-    """Block-local cosine top-k via Arrow-batched ``applyInPandas`` +
-    numpy — the vectorized fast path for all-pairs scoring inside a
-    block (label, IVF cell, LSH bucket).
-
-    Where the JVM fold (cosine_topk / q36) does one lambda fold per
-    pair, this does ONE numpy matmul per block: normalize the block's
-    [n, d] matrix, S = U @ U.T, mask the diagonal, take per-row top-k.
-    Arrow moves each block across the Python boundary as a single
-    columnar batch, so per-row overhead is nil; work per block is BLAS.
-
-    Blocks must individually fit in executor memory (n_block² floats) —
-    the same bound the blocking strategy already guarantees upstream.
-    Results are float64-accumulation-order dependent (BLAS), so this is
-    the throughput path; the JVM fold is the determinism path the
-    DuckDB oracle checks. Agreement between the two is asserted in
-    tests (same neighbors; scores within 1e-4).
-    """
-    import numpy as np
-    import pandas as pd
-
-    def score_block(pdf: pd.DataFrame) -> pd.DataFrame:
-        n = len(pdf)
-        if n < 2:
-            return pd.DataFrame(
-                columns=["vec_id", "nn_id", "block", "cosine", "rnk"]
-            ).astype(
-                {"vec_id": "int64", "nn_id": "int64", "block": "int64",
-                 "cosine": "float64", "rnk": "int32"}
-            )
-        ids = pdf[id_col].to_numpy()
-        m = np.stack([np.asarray(v, dtype=np.float64) for v in pdf[vec_col]])
-        u = m / np.linalg.norm(m, axis=1, keepdims=True)
-        sims = u @ u.T
-        np.fill_diagonal(sims, -np.inf)
-        out = []
-        kk = min(k, n - 1)
-        for i in range(n):
-            # stable top-k: score desc, neighbor id asc on ties
-            order = np.lexsort((ids, -sims[i]))[:kk]
-            for r, j in enumerate(order, start=1):
-                out.append((int(ids[i]), int(ids[j]), int(pdf[block_col].iloc[0]),
-                            float(round(sims[i, j], 4)), r))
-        return pd.DataFrame(
-            out, columns=["vec_id", "nn_id", "block", "cosine", "rnk"]
-        )
-
-    return embeddings.select(
-        F.col(id_col), F.col(vec_col), F.col(block_col)
-    ).groupBy(block_col).applyInPandas(
-        score_block,
-        schema="vec_id long, nn_id long, block long, cosine double, rnk int",
-    )
-
-
 def block_nn_pairs_pandas(
     embeddings: DataFrame,
     id_col: str,
@@ -494,11 +485,10 @@ def block_nn_pairs_pandas(
     block_col: str,
     block_type: str = "int",
     margin: float = 2e-4,
-    chunk_rows: int = 256,
 ) -> DataFrame:
-    """Block-local nearest-neighbor *candidates* via numpy with
-    **bit-deterministic sequential accumulation** — the fast path that
-    still passes an exact cross-engine value-hash gate.
+    """Block-local nearest-neighbor *candidates*, one Arrow table per
+    block scored in numpy — the fast path that still passes an exact
+    cross-engine value-hash gate.
 
     Emits (id, nn candidate, block, raw cosine) for every candidate whose
     raw cosine is within ``margin`` of the row maximum; the caller rounds
@@ -506,11 +496,10 @@ def block_nn_pairs_pandas(
     tie-break on the *rounded* score stays in one place and matches the
     SQL oracle's ``ROW_NUMBER ... ORDER BY ROUND(cos,4) DESC, id``.
 
-    Determinism: unlike ``block_cosine_topk_pandas`` (BLAS matmul,
-    pairwise summation), dots and norms here are computed with
-    ``np.add.accumulate`` — strictly left-to-right, the exact order of
-    Spark's ``F.aggregate`` fold and DuckDB's ``list_sum``, so raw scores
-    are bit-identical across all three engines.
+    Determinism: rows are normalized by ``_seq_norms`` and dotted by
+    ``_seq_dot_chunks`` — sums strictly left to right, the order of
+    Spark's ``F.aggregate`` fold and DuckDB's ``list_sum`` — so raw
+    scores are bit-identical across all three engines.
 
     Margin correctness: rounding to 4 decimals moves a value by ≤ 5e-5,
     so the post-round argmax always has a raw score within 1e-4 (+ulp) of
@@ -518,65 +507,37 @@ def block_nn_pairs_pandas(
     emission is ~1 row per id, so the Arrow transfer and downstream
     shuffle carry O(n) rows, not O(Σ|block|²).
 
-    Memory: pair scoring is chunked to (chunk_rows × |block| × dim)
-    float64; blocks themselves must fit an executor — the same bound the
-    blocking strategy (label / IVF cell / LSH bucket) guarantees upstream.
+    Memory: the dot blocks stay within ``_DOT_BUDGET``; blocks themselves
+    must fit an executor — the same bound the blocking strategy (label /
+    IVF cell / LSH bucket) guarantees upstream.
     """
     import numpy as np
-    import pandas as pd
+    import pyarrow as pa
 
-    np_block = {"int": "int32", "long": "int64"}.get(block_type, "object")
+    schema = f"id long, nn_id long, block {block_type}, cosine_raw double"
+    out = _arrow_schema(schema)
 
-    def score_block(pdf: pd.DataFrame) -> pd.DataFrame:
-        n = len(pdf)
-        if n < 2:
-            return pd.DataFrame(
-                {
-                    "id": pd.Series([], dtype="int64"),
-                    "nn_id": pd.Series([], dtype="int64"),
-                    "block": pd.Series([], dtype=np_block),
-                    "cosine_raw": pd.Series([], dtype="float64"),
-                }
-            )
-        ids = pdf[id_col].to_numpy()
-        m = np.stack([np.asarray(v, dtype=np.float64) for v in pdf[vec_col]])
-        # sequential norm: accumulate of squares == the JVM fold's order
-        norms = np.sqrt(np.add.accumulate(m * m, axis=1)[:, -1])
-        u = m / norms[:, None]
-        out_i, out_j, out_c = [], [], []
-        # bound the (chunk × n × dim) product buffer: shrink the chunk as
-        # the block grows so one hot block cannot blow a worker (r11; the
-        # block itself must still fit — documented upstream bound)
-        chunk_rows_eff = max(
-            1, min(chunk_rows, (64 << 20) // max(1, n * m.shape[1] * 8))
-        )
-        for s in range(0, n, chunk_rows_eff):
-            e = min(s + chunk_rows_eff, n)
-            prod = u[s:e, None, :] * u[None, :, :]
-            dots = np.add.accumulate(prod, axis=2)[:, :, -1]
-            for k in range(e - s):
-                dots[k, s + k] = -np.inf  # mask self-pair
-            rowmax = dots.max(axis=1, keepdims=True)
-            ci, cj = np.nonzero(dots >= rowmax - margin)
-            out_i.append(ids[ci + s])
-            out_j.append(ids[cj])
-            out_c.append(dots[ci, cj])
-        return pd.DataFrame(
-            {
-                "id": np.concatenate(out_i),
-                "nn_id": np.concatenate(out_j),
-                "block": pdf[block_col].iloc[0],
-                "cosine_raw": np.concatenate(out_c),
-            }
-        )
+    def score_block(key, tbl):
+        if tbl.num_rows < 2:
+            return out.empty_table()
+        ids = tbl.column(0).to_numpy()
+        m = _arrow_matrix(tbl.column(1))
+        u = m / _seq_norms(m)[:, None]
+        hits = []
+        for s, dots in _seq_dot_chunks(u, u):
+            r = np.arange(len(dots))
+            dots[r, r + s] = -np.inf  # mask self-pair
+            ci, cj = np.nonzero(dots >= dots.max(axis=1, keepdims=True) - margin)
+            hits.append((ids[ci + s], ids[cj], dots[ci, cj]))
+        i, j, c = (np.concatenate(h) for h in zip(*hits))
+        return pa.table(
+            {"id": i, "nn_id": j, "block": pa.repeat(key[0], len(i)), "cosine_raw": c}
+        ).cast(out)
 
     return (
         embeddings.select(F.col(id_col), F.col(vec_col), F.col(block_col))
         .groupBy(block_col)
-        .applyInPandas(
-            score_block,
-            schema=f"id long, nn_id long, block {block_type}, cosine_raw double",
-        )
+        .applyInArrow(score_block, schema=schema)
     )
 
 
@@ -620,48 +581,36 @@ def _cents_literal(cents: list[list[list[float]]]):
     )
 
 
-def _assign_subs_pandas(subs: DataFrame, cents: list[list[list[float]]]) -> DataFrame:
-    """Arrow-batched numpy twin of the per-subspace ``_sub_dist_structs``
-    projection (the PQ analogue of ``_assign_cells_pandas``): rows are
-    grouped by their subspace inside each batch, distances summed with
-    ``np.add.accumulate`` — the exact left-to-right order of the JVM fold
-    and DuckDB's ``list_sum`` — and first-minimum ``argmin`` reproduces
-    the ties-to-lower-code rule (codebook rows sit at their code index).
-    Bit-identical to the expression path (asserted in tests); vectorized
-    instead of m·ksub interpreted fold expressions per row."""
+def _assign_subs(subs: DataFrame, cents: list[list[list[float]]]) -> DataFrame:
+    """Arrow-batched twin of the per-subspace ``_sub_dist_structs``
+    projection (the PQ analogue of ``_assign_cells``): ``(id, s, sv,
+    code, sq_err)``, each subvector against its own subspace's codebook
+    through ``_nearest`` (codebook rows sit at their code index, so ties
+    go to the lower code).  Bit-identical to the fold (asserted in
+    tests)."""
     import numpy as np
-    import pandas as pd
+    import pyarrow as pa
 
     C = [np.array(cb, dtype=np.float64) for cb in cents]
 
     def part(batches):
-        for pdf in batches:
-            if not len(pdf):
+        for batch in batches:
+            n = batch.num_rows
+            if not n:
                 continue
-            out_code = np.empty(len(pdf), dtype=np.int32)
-            out_d = np.empty(len(pdf), dtype=np.float64)
-            svals = pdf["s"].to_numpy()
-            for s in np.unique(svals):
-                idx = np.nonzero(svals == s)[0]
-                x = np.stack(
-                    [np.asarray(v, dtype=np.float64) for v in pdf["sv"].iloc[idx]]
-                )
-                diff2 = (x[:, None, :] - C[s][None, :, :]) ** 2
-                d = np.add.accumulate(diff2, axis=2)[:, :, -1]
-                j = d.argmin(axis=1)
-                out_code[idx] = j
-                out_d[idx] = d[np.arange(len(idx)), j]
-            yield pd.DataFrame(
-                {
-                    "id": pdf["id"],
-                    "s": pdf["s"],
-                    "sv": pdf["sv"],
-                    "code": out_code,
-                    "sq_err": out_d,
-                }
+            sub = batch.column(1).to_numpy()
+            x = _arrow_matrix(batch.column(2))
+            code = np.empty(n, dtype=np.int32)
+            err = np.empty(n)
+            for s in np.unique(sub):
+                idx = np.nonzero(sub == s)[0]
+                code[idx], err[idx] = _nearest(x[idx], C[s])
+            yield pa.RecordBatch.from_arrays(
+                [*batch.columns, pa.array(code), pa.array(err)],
+                names=["id", "s", "sv", "code", "sq_err"],
             )
 
-    return subs.mapInPandas(
+    return subs.mapInArrow(
         part, schema="id long, s int, sv array<double>, code int, sq_err double"
     )
 
@@ -831,7 +780,7 @@ def pq_kmeans(
 
     assigned = None
     for it in range(n_iter + 1):
-        assigned = _assign_subs_pandas(subs, cents)
+        assigned = _assign_subs(subs, cents)
         if it == n_iter:
             break
         upd = (
@@ -932,10 +881,10 @@ def pq_encode(
     """Encode vectors against FROZEN codebooks — the incremental-ingest
     path: codebooks are trained once (``pq_kmeans``) on a representative
     sample, then every new batch is encoded with a zero-shuffle map-side
-    projection (codebooks ride as a literal; no training jobs, no
-    collects). Encoding a batch incrementally is bit-identical to
-    re-encoding the full corpus under the same codebooks, so the code
-    column can be maintained append-only forever.
+    pass — ``_assign_subs``, the routine ``pq_kmeans`` assigns with (no
+    training jobs, no collects). Encoding a batch incrementally is
+    bit-identical to re-encoding the full corpus under the same
+    codebooks, so the code column can be maintained append-only forever.
 
     Returns (id, s, sv, code, sq_err) — the same shape ``pq_kmeans``
     assigns, byte-compatible with ``pq_topk``'s scoring."""
@@ -958,11 +907,7 @@ def pq_encode(
         F.col(id_col).alias("id"),
         F.transform(F.col(vec_col), lambda x: x.cast("double")).alias("v"),
     )
-    subs = _split_subvectors(dbl, "v", m, dsub, ["id"])
-    best = F.array_min(_sub_dist_structs(_cents_literal(codebooks)))
-    return subs.select(
-        "id", "s", "sv", best["code"].alias("code"), best["d"].alias("sq_err")
-    )
+    return _assign_subs(_split_subvectors(dbl, "v", m, dsub, ["id"]), codebooks)
 
 
 def ivf_pq_topk(
@@ -1073,118 +1018,66 @@ def ivf_pq_topk(
     return _adc_topk(cand, qdf, m, k, round_to, join_on="cell")
 
 
-def _cell_threshold_pairs_pandas(
+def _cell_threshold_pairs(
     assigned: DataFrame,
     threshold: float,
     margin: float = 2e-4,
-    chunk_budget_bytes: int = 64 << 20,
     max_cell_rows: int = 4096,
 ) -> DataFrame:
     """All ordered in-cell pairs (id1 < id2) whose RAW cosine is within
     ``margin`` below ``threshold`` or above — the numpy fast path for
     ``semantic_dedup``'s verify stage, bit-deterministic like
-    ``block_nn_pairs_pandas``: dots and squared norms use
-    ``np.add.accumulate`` (strict left-to-right — the exact order of the
+    ``block_nn_pairs_pandas``: norms and dots come from ``_seq_norms``
+    and ``_seq_dot_chunks`` (strict left-to-right sums, the order of the
     JVM ``F.aggregate`` fold and DuckDB's ``list_sum``), and the cosine
-    is ``dot / (sqrt(s1) * sqrt(s2))`` — the same multiply-then-divide
-    the ``_dot / (_norm * _norm)`` expression performs, so every emitted
-    raw score is bit-identical to the expression path.  The caller
-    rounds and applies the exact threshold Spark-side; ``margin`` must
-    cover the worst the caller's rounding can move a value (the caller
-    derives it from ``round_to``), so no qualifying pair is lost.
-    Emitting only near/above-threshold pairs keeps the Arrow transfer
-    O(qualifying pairs), not Σ|cell|².
+    is ``dot / (n1 * n2)`` — the same multiply-then-divide the
+    ``_dot / (_norm * _norm)`` expression performs, so every emitted raw
+    score is bit-identical to the expression path.  The caller rounds
+    and applies the exact threshold Spark-side; ``margin`` must cover
+    the worst the caller's rounding can move a value (the caller derives
+    it from ``round_to``), so no qualifying pair is lost.  Emitting only
+    near/above-threshold pairs keeps the Arrow transfer O(qualifying
+    pairs), not Σ|cell|².
 
-    Memory bounds (r11): a cell bigger than ``max_cell_rows`` is SPLIT
-    into ``s = ceil(n / max_cell_rows)`` deterministic hash blocks and
-    scored as block PAIRS — group (cell, b1, b2) holds ≤ 2·max_cell_rows
-    rows, so one hot cell can no longer materialize unbounded in a
-    single task (each unordered pair lands in exactly one block pair, so
-    outputs need no dedup and stay bit-identical: per-pair arithmetic is
-    independent of the grouping).  The chunked product buffer is sized
-    from ``chunk_budget_bytes`` instead of a fixed row count."""
+    Memory: a cell bigger than ``max_cell_rows`` is SPLIT into ``s =
+    ceil(n / max_cell_rows)`` deterministic hash blocks and scored as
+    block PAIRS — group (cell, b1, b2) holds ≤ 2·max_cell_rows rows, so
+    one hot cell never materializes whole in a single task.  Each
+    unordered pair lands in exactly one block pair and per-pair
+    arithmetic is independent of the grouping, so the output needs no
+    dedup and is bit-identical to the unsplit one."""
     import numpy as np
-    import pandas as pd
+    import pyarrow as pa
 
     cut = threshold - margin
-    empty = None
+    schema = "cell int, id1 long, id2 long, cosine_raw double"
+    out = _arrow_schema(schema)
 
-    def _score_cross(ids_a, m_a, ids_b, m_b, norms_a, norms_b):
-        """Pairs (a, b) across two row sets, chunked over the A side;
-        same arithmetic sequence as the single-set path (products are
-        commutative, so cos(a,b) is bitwise grouping-independent)."""
-        out_i, out_j, out_c = [], [], []
-        dim = m_a.shape[1]
-        chunk = max(1, int(chunk_budget_bytes // max(1, len(ids_b) * dim * 8)))
-        denom_b = norms_b[None, :]
-        for s in range(0, len(ids_a), chunk):
-            e = min(s + chunk, len(ids_a))
-            prod = m_a[s:e, None, :] * m_b[None, :, :]
-            dots = np.add.accumulate(prod, axis=2)[:, :, -1]
-            cos = dots / (norms_a[s:e, None] * denom_b)
-            ci, cj = np.nonzero(cos >= cut)
-            ia, jb = ids_a[ci + s], ids_b[cj]
-            keep = ia < jb
-            out_i.append(ia[keep])
-            out_j.append(jb[keep])
-            out_c.append(cos[ci, cj][keep])
-            # the reverse orientation: same bits, ordered the other way
-            keep_r = jb < ia
-            out_i.append(jb[keep_r])
-            out_j.append(ia[keep_r])
-            out_c.append(cos[ci, cj][keep_r])
-        return out_i, out_j, out_c
-
-    def score_cell(pdf: pd.DataFrame) -> pd.DataFrame:
-        nonlocal empty
-        if empty is None:
-            empty = pd.DataFrame(
-                {
-                    "cell": pd.Series([], dtype="int32"),
-                    "id1": pd.Series([], dtype="int64"),
-                    "id2": pd.Series([], dtype="int64"),
-                    "cosine_raw": pd.Series([], dtype="float64"),
-                }
+    def score_cell(key, tbl):
+        cell, b1, b2 = key
+        same = b1.as_py() == b2.as_py()
+        ids = tbl.column("id").to_numpy()
+        m = _arrow_matrix(tbl.column("v"))
+        norms = _seq_norms(m)
+        # rows of block b1 against rows of block b2 (itself when same)
+        a = tbl.column("__b").to_numpy() == b1.as_py()
+        o = a if same else ~a
+        ids_a, ids_o, n_a, n_o = ids[a], ids[o], norms[a], norms[o]
+        hits = []
+        for s, dots in _seq_dot_chunks(m[a], m[o]):
+            dots /= n_a[s : s + len(dots), None] * n_o[None, :]
+            ci, cj = np.nonzero(dots >= cut)
+            i, j = ids_a[ci + s], ids_o[cj]
+            keep = i < j if same else i != j
+            hits.append(
+                (np.minimum(i, j)[keep], np.maximum(i, j)[keep], dots[ci, cj][keep])
             )
-        pdf = pdf.sort_values("id", kind="mergesort")
-        cross = int(pdf["__b1"].iloc[0]) != int(pdf["__b2"].iloc[0])
-        if len(pdf) < 2:
-            return empty
-        ids_all = pdf["id"].to_numpy()
-        m_all = np.stack([np.asarray(v, dtype=np.float64) for v in pdf["v"]])
-        norms_all = np.sqrt(np.add.accumulate(m_all * m_all, axis=1)[:, -1])
-        if cross:
-            in_a = (pdf["__b"] == pdf["__b1"]).to_numpy()
-            if not in_a.any() or in_a.all():
-                return empty
-            out_i, out_j, out_c = _score_cross(
-                ids_all[in_a], m_all[in_a], ids_all[~in_a], m_all[~in_a],
-                norms_all[in_a], norms_all[~in_a],
-            )
-        else:
-            out_i, out_j, out_c = [], [], []
-            n, dim = m_all.shape
-            chunk = max(1, int(chunk_budget_bytes // max(1, n * dim * 8)))
-            for s in range(0, n, chunk):
-                e = min(s + chunk, n)
-                prod = m_all[s:e, None, :] * m_all[None, :, :]
-                dots = np.add.accumulate(prod, axis=2)[:, :, -1]
-                cos = dots / (norms_all[s:e, None] * norms_all[None, :])
-                ci, cj = np.nonzero(cos >= cut)
-                keep = ids_all[ci + s] < ids_all[cj]  # ordered pairs only
-                out_i.append(ids_all[ci + s][keep])
-                out_j.append(ids_all[cj][keep])
-                out_c.append(cos[ci, cj][keep])
-        if not out_i:
-            return empty
-        return pd.DataFrame(
-            {
-                "cell": np.int32(pdf["cell"].iloc[0]),
-                "id1": np.concatenate(out_i),
-                "id2": np.concatenate(out_j),
-                "cosine_raw": np.concatenate(out_c),
-            }
-        )
+        if not hits:
+            return out.empty_table()
+        i, j, c = (np.concatenate(h) for h in zip(*hits))
+        return pa.table(
+            {"cell": pa.repeat(cell, len(i)), "id1": i, "id2": j, "cosine_raw": c}
+        ).cast(out)
 
     # the sizes aggregate and the grouped scoring both read the
     # assignment: materialize it once (within-query, freed with the job)
@@ -1213,10 +1106,7 @@ def _cell_threshold_pairs_pandas(
             F.col("__pg.b1").alias("__b1"), F.col("__pg.b2").alias("__b2"),
         )
     )
-    return src.groupBy("cell", "__b1", "__b2").applyInPandas(
-        score_cell,
-        schema="cell int, id1 long, id2 long, cosine_raw double",
-    )
+    return src.groupBy("cell", "__b1", "__b2").applyInArrow(score_cell, schema=schema)
 
 
 def semantic_dedup(
@@ -1248,14 +1138,14 @@ def semantic_dedup(
     )
     # In-cell pair scoring runs vectorized (one numpy pass per cell with
     # the JVM fold's exact accumulation order — see
-    # _cell_threshold_pairs_pandas) instead of Σ|cell|² interpreted
+    # _cell_threshold_pairs) instead of Σ|cell|² interpreted
     # zip_with/aggregate folds on the self-join output; profiled 10+
     # CPU-s → ~1 at sf0.1.  Rounding and the EXACT threshold stay
     # Spark-side on the bit-identical raw score.  The margin is DERIVED
     # from round_to (rounding can raise a raw cosine by at most
     # 0.5·10^-round_to; +1e-9 covers the ulp) so callers with a coarser
     # round_to cannot silently lose qualifying pairs.
-    cand = _cell_threshold_pairs_pandas(
+    cand = _cell_threshold_pairs(
         assigned, threshold, margin=0.5 * 10.0 ** -round_to + 1e-9
     ).withColumn(
         "cosine", F.round(F.col("cosine_raw"), round_to).cast("double")

@@ -462,6 +462,36 @@ def extract_html_text(html: Column | str) -> Column:
     return F.trim(F.regexp_replace(c, r"\s+", " "))
 
 
+def _token_windows(text, n: int):
+    """Every consecutive ``n``-token window of ``split(text, ' ')`` over an
+    Arrow string array, in row then start order: ``(doc_rep, start,
+    spans)`` — each window's row index, its first token's index within
+    the row (int32) and its tokens joined by ``' '``.  Rows with fewer
+    than ``n`` tokens, and NULL rows, give none.  ``split_pattern``
+    matches Spark's ``split(s, ' ')`` exactly, empties and trailing
+    included (pinned by tests)."""
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    toks = pc.split_pattern(text, " ")
+    if isinstance(toks, pa.ChunkedArray):  # defensive
+        toks = toks.combine_chunks()
+    offsets = toks.offsets.to_numpy(zero_copy_only=False)
+    lens = np.diff(offsets)
+    valid = pc.is_valid(toks).to_numpy(zero_copy_only=False)
+    counts = np.where(valid & (lens >= n), lens - n + 1, 0)
+    doc_rep = np.repeat(np.arange(len(counts)), counts)
+    run_starts = np.concatenate(([0], np.cumsum(counts)[:-1]))
+    start = (np.arange(len(doc_rep)) - run_starts[doc_rep]).astype(np.int32)
+    base = offsets[doc_rep] + start
+    flat = toks.values
+    if n == 1:
+        return doc_rep, start, flat.take(pa.array(base))
+    cols = [flat.take(pa.array(base + k)) for k in range(n)]
+    return doc_rep, start, pc.binary_join_element_wise(*cols, " ")
+
+
 def _window_hash_rows_arrow(
     df: DataFrame, id_col: str, text_col: str, window: int
 ) -> DataFrame:
@@ -477,38 +507,10 @@ def _window_hash_rows_arrow(
     def gen(batches):
         from hashlib import md5
 
-        import numpy as np
         import pyarrow as pa
-        import pyarrow.compute as pc
 
-        names = ["__id", "start", "wh"]
         for batch in batches:
-            ids = batch.column(0)
-            toks = pc.split_pattern(batch.column(1), " ")
-            if isinstance(toks, pa.ChunkedArray):  # defensive
-                toks = toks.combine_chunks()
-            offsets = toks.offsets.to_numpy(zero_copy_only=False)
-            lens = np.diff(offsets)
-            valid = pc.is_valid(toks).to_numpy(zero_copy_only=False)
-            counts = np.where(valid & (lens >= window), lens - window + 1, 0)
-            total = int(counts.sum())
-            if total == 0:
-                yield pa.RecordBatch.from_arrays(
-                    [
-                        ids.slice(0, 0),
-                        pa.array([], pa.int32()),
-                        pa.array([], pa.string()),
-                    ],
-                    names=names,
-                )
-                continue
-            doc_rep = np.repeat(np.arange(len(counts)), counts)
-            run_starts = np.concatenate(([0], np.cumsum(counts)[:-1]))
-            starts = (np.arange(total) - run_starts[doc_rep]).astype(np.int32)
-            base = offsets[doc_rep] + starts
-            flat = toks.values
-            cols = [flat.take(pa.array(base + k)) for k in range(window)]
-            spans = pc.binary_join_element_wise(*cols, " ")
+            doc_rep, start, spans = _token_windows(batch.column(1), window)
             # spans are never null (built from non-null token takes);
             # md5 over the utf-8 bytes == Spark's md5(string) hex
             hashes = pa.array(
@@ -516,8 +518,8 @@ def _window_hash_rows_arrow(
                 pa.string(),
             )
             yield pa.RecordBatch.from_arrays(
-                [ids.take(pa.array(doc_rep)), pa.array(starts), hashes],
-                names=names,
+                [batch.column(0).take(pa.array(doc_rep)), pa.array(start), hashes],
+                names=["__id", "start", "wh"],
             )
 
     return src.mapInArrow(

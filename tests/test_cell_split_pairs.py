@@ -1,4 +1,4 @@
-"""Oversized-cell split in _cell_threshold_pairs_pandas (r11): a cell
+"""Oversized-cell split in _cell_threshold_pairs (r11): a cell
 bigger than max_cell_rows is scored as deterministic hash-block PAIRS so
 no single task materializes the whole cell.  The split must be invisible
 in the output: same pairs, same bit-exact raw cosines as the unsplit
@@ -14,7 +14,7 @@ sys.path.insert(0, os.path.join(os.path.dirname(__file__), ".."))
 from pyspark.sql import functions as F
 
 from logistics_data_pipeline_project_spark.operators.similarity import (
-    _cell_threshold_pairs_pandas,
+    _cell_threshold_pairs,
     semantic_dedup,
 )
 
@@ -33,14 +33,14 @@ def test_split_path_bit_identical(spark):
     a = _assigned(spark)
     # unsplit: every cell (100 rows) under the cap
     base = sorted(
-        map(tuple, _cell_threshold_pairs_pandas(a, 0.35).collect())
+        map(tuple, _cell_threshold_pairs(a, 0.35).collect())
     )
     # forced split: cap far below the cell size -> every cell scored as
     # block pairs (s = ceil(100/8) = 13 blocks, 91 block-pair groups)
     split = sorted(
         map(
             tuple,
-            _cell_threshold_pairs_pandas(a, 0.35, max_cell_rows=8).collect(),
+            _cell_threshold_pairs(a, 0.35, max_cell_rows=8).collect(),
         )
     )
     assert base == split
@@ -54,11 +54,11 @@ def test_split_path_single_hot_cell(spark):
         v = [float(((i * 13 + d * 7) % 23) - 11) / 9.0 for d in range(6)]
         rows.append((i, v, 0 if i < 380 else 1 + i % 2))
     a = spark.createDataFrame(rows, "id long, v array<double>, cell int")
-    base = sorted(map(tuple, _cell_threshold_pairs_pandas(a, 0.5).collect()))
+    base = sorted(map(tuple, _cell_threshold_pairs(a, 0.5).collect()))
     split = sorted(
         map(
             tuple,
-            _cell_threshold_pairs_pandas(a, 0.5, max_cell_rows=64).collect(),
+            _cell_threshold_pairs(a, 0.5, max_cell_rows=64).collect(),
         )
     )
     assert base == split

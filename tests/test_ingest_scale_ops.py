@@ -123,31 +123,6 @@ def test_q33_sketches_bound_error(spark, sf_dir):
         assert abs(mid - median) <= max(1e-6, 0.05 * abs(median) + 1e-3)
 
 
-def test_block_cosine_pandas_agrees_with_jvm_exact(spark, sf_dir):
-    from logistics_data_pipeline_project_spark.operators.similarity import (
-        block_cosine_topk_pandas,
-    )
-
-    emb = load(spark, sf_dir, "embeddings")
-    fast = {
-        r["vec_id"]: (r["nn_id"], r["cosine"])
-        for r in block_cosine_topk_pandas(
-            emb, "vec_id", "embedding", "label", k=1
-        ).collect()
-    }
-    exact = {
-        r["vec_id"]: (r["nn_id"], r["cosine"])
-        for r in REGISTRY["q036_embedding_near_dup"].fn(spark, sf_dir).collect()
-    }
-    assert set(fast) == set(exact)
-    for vid, (nn, cos) in exact.items():
-        fnn, fcos = fast[vid]
-        # BLAS accumulation order can flip a rounded 4th decimal at exact
-        # ties; require same neighbor and near-identical score
-        assert fnn == nn, (vid, fnn, nn)
-        assert abs(fcos - cos) <= 1e-4, (vid, fcos, cos)
-
-
 def test_domain_cap_skewed_mega_domain(spark):
     """The two-phase per-domain cap must select EXACTLY the rows the
     single-window definition selects even when one domain is half the

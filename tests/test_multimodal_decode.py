@@ -451,6 +451,26 @@ def test_jpeg_decoder_honest_guards():
         decode_jpeg_pixels(bytes(arith))
 
 
+def test_jpeg_decoder_corrupt_input_raises_value_error():
+    # Every truncation prefix and one byte-XOR per position of a 16x16
+    # baseline and a progressive stream either decodes or raises
+    # ValueError (NotImplementedError for unsupported features) — never
+    # IndexError or struct.error from reading past a short segment.
+    raw = bytes((x * 7 + y * 13) % 256 for y in range(16) for x in range(16))
+    seen = set()
+    for progressive in (False, True):
+        p = encode_jpeg(16, 16, raw, quality=75, progressive=progressive)
+        cases = [p[:k] for k in range(len(p))]
+        cases += [p[:k] + bytes([p[k] ^ 0xFF]) + p[k + 1 :] for k in range(len(p))]
+        for c in cases:
+            try:
+                decode_jpeg_pixels(c)
+                seen.add("ok")
+            except (ValueError, NotImplementedError) as e:
+                seen.add(type(e).__name__)
+    assert {"ok", "ValueError"} <= seen
+
+
 def test_jpeg_probe_spark(spark):
     rows = []
     for i in range(6):

@@ -1360,6 +1360,103 @@ def test_pq_edge_cases_guarded(spark):
         pq_encode(six, "vec_id", "embedding", cb)
 
 
+def _bits(x):
+    import numpy as np
+
+    return np.ascontiguousarray(x, dtype=np.float64).view(np.int64)
+
+
+def test_seq_dot_chunks_budget_invariant():
+    """The dot blocks equal the ``np.add.accumulate`` fold bit-for-bit
+    whatever the budget: 1-row blocks, several blocks, one block."""
+    import numpy as np
+
+    from logistics_data_pipeline_project_spark.operators.similarity import (
+        _seq_dot_chunks,
+    )
+
+    rng = np.random.default_rng(7)
+    a, b = rng.standard_normal((23, 17)), rng.standard_normal((11, 17))
+    want = np.add.accumulate(a[:, None, :] * b[None, :, :], axis=2)[:, :, -1]
+    for budget, n_blocks in ((1, 23), (16 * 11 * 5, 5), (1 << 30, 1)):
+        blocks = list(_seq_dot_chunks(a, b, budget))
+        assert len(blocks) == n_blocks
+        assert [s for s, _ in blocks] == list(range(0, 23, -(-23 // n_blocks)))
+        got = np.concatenate([d for _, d in blocks])
+        assert np.array_equal(_bits(got), _bits(want)), budget
+
+
+def test_arrow_matrix_slices_and_rejects_ragged():
+    import numpy as np
+    import pyarrow as pa
+
+    from logistics_data_pipeline_project_spark.operators.similarity import (
+        _arrow_matrix,
+    )
+
+    rows = [[float(i * 3 + d) for d in range(3)] for i in range(6)]
+    for typ in (pa.float64(), pa.float32()):
+        arr = pa.array(rows, pa.list_(typ)).slice(2, 3)  # offsets[0] != 0
+        want = np.stack([np.asarray(r, dtype=np.float64) for r in rows[2:5]])
+        got = _arrow_matrix(arr)
+        assert got.dtype == np.float64 and np.array_equal(got, want)
+        chunked = pa.chunked_array([arr.slice(0, 1), arr.slice(1)])
+        assert np.array_equal(_arrow_matrix(chunked), want)
+    assert _arrow_matrix(pa.array([], pa.list_(pa.float64()))).shape == (0, 0)
+    for bad in ([[1.0, 2.0], [3.0]], [[1.0, 2.0], None]):
+        with pytest.raises(ValueError):
+            _arrow_matrix(pa.array(bad, pa.list_(pa.float64())))
+
+
+def test_nearest_matches_accumulate_form_and_ties_low():
+    import numpy as np
+
+    from logistics_data_pipeline_project_spark.operators.similarity import _nearest
+
+    rng = np.random.default_rng(11)
+    # small integer grids make exact distance ties common
+    x = rng.integers(-2, 3, (200, 5)).astype(np.float64)
+    C = rng.integers(-2, 3, (9, 5)).astype(np.float64)
+    C[4] = C[1]  # a duplicated code: always ties, the lower one must win
+    d = np.add.accumulate((x[:, None, :] - C[None, :, :]) ** 2, axis=2)[:, :, -1]
+    code, dist = _nearest(x, C)
+    assert np.array_equal(code, d.argmin(axis=1))
+    assert np.array_equal(_bits(dist), _bits(d.min(axis=1)))
+    assert not (code == 4).any()
+    ties = (d == d.min(axis=1, keepdims=True)).sum(axis=1) > 1
+    assert ties.sum() > 10
+    for i in np.nonzero(ties)[0]:
+        assert code[i] == np.nonzero(d[i] == d[i].min())[0][0]
+
+
+def test_grouped_vector_kernels_empty_groups(spark):
+    """A 1-row block and a cell whose pairs all fall below the threshold
+    give empty results carrying the declared schemas."""
+    from logistics_data_pipeline_project_spark.operators.similarity import (
+        _cell_threshold_pairs,
+        block_nn_pairs_pandas,
+    )
+
+    one = spark.createDataFrame(
+        [(1, [1.0, 0.0], 5)], "vec_id long, embedding array<float>, label int"
+    )
+    nn = block_nn_pairs_pandas(one, "vec_id", "embedding", "label")
+    assert nn.collect() == []
+    assert nn.schema.simpleString() == (
+        "struct<id:bigint,nn_id:bigint,block:int,cosine_raw:double>"
+    )
+    # pairwise orthogonal or opposite: every cosine is 0 or -1
+    far = spark.createDataFrame(
+        [(1, [1.0, 0.0], 0), (2, [0.0, 1.0], 0), (3, [-1.0, 0.0], 0)],
+        "id long, v array<double>, cell int",
+    )
+    pairs = _cell_threshold_pairs(far, 0.5)
+    assert pairs.collect() == []
+    assert pairs.schema.simpleString() == (
+        "struct<cell:int,id1:bigint,id2:bigint,cosine_raw:double>"
+    )
+
+
 def test_canonicalize_url_semantics(spark):
     from logistics_data_pipeline_project_spark.operators.text import (
         canonicalize_url,
