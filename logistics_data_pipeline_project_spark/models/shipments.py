@@ -12,9 +12,9 @@ Re-expresses dags/2_logistics-shipment-dag.py:89-209 Spark-first:
   max-aggregation (equivalent to ROW_NUMBER…rn=1 on a single column, but
   one hash agg instead of a sort — cheaper at scale).
 - TRY_TO_TIMESTAMP_NTZ → try_to_timestamp (NULL on garbage, never abort).
-- The 3-key window pre-dedup + MERGE is operators.merge
-  (dedup_latest + merge_upsert) — Snowflake errors on duplicate source
-  matches, which the pre-dedup guarantees can't happen (SURVEY §M3).
+- The 3-key window pre-dedup + MERGE is the engine's one upsert policy,
+  operators.merge (latest_rows + upsert) — Snowflake errors on duplicate
+  source matches, which the pre-dedup guarantees can't happen (SURVEY §M3).
 
 Scale: the explode fans out ~#status-events per shipment, aggregated
 straight back down — partial aggregation keeps the shuffle small. The
@@ -25,7 +25,7 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, functions as F
 
-from ..operators.merge import dedup_latest, merge_upsert
+from ..operators.merge import latest_rows, upsert
 
 MERGE_KEYS = ("order_id", "carrier_id", "seller_id")
 
@@ -102,17 +102,9 @@ def merge_fact_shipments(target: DataFrame | None, src: DataFrame) -> DataFrame:
     (order_id, carrier_id, seller_id) by created_at desc (shipment_id as
     deterministic tiebreaker — the reference leaves ties arbitrary), then
     upsert. ``target=None`` bootstraps the fact table."""
-    deduped = dedup_latest(
-        src, list(MERGE_KEYS), [F.desc("created_at"), F.desc("shipment_id")]
-    )
-    if target is None:
-        return deduped
-    update_set = {
-        c: F.col(f"s.{c}") for c in deduped.columns if c not in MERGE_KEYS
-    }
-    return merge_upsert(
-        target, deduped, keys=list(MERGE_KEYS), update_set=update_set, strict=True
-    )
+    keys = list(MERGE_KEYS)
+    latest = latest_rows(src, keys, [F.desc("created_at"), F.desc("shipment_id")])
+    return upsert(target, latest, keys)
 
 
 def ingest_shipment_batch(raw: DataFrame, target: DataFrame | None = None) -> DataFrame:

@@ -93,18 +93,7 @@ def merge_upsert(
     is engine surface beyond parity.
     """
     if strict:
-        dup = (
-            source.groupBy(*keys)
-            .agg(F.count(F.lit(1)).alias("__n"))
-            .filter(F.col("__n") > 1)
-            .limit(1)
-            .count()
-        )
-        if dup:
-            raise ValueError(
-                "merge_upsert: duplicate source rows for merge key "
-                f"{list(keys)}; dedup the source first (dedup_latest)"
-            )
+        _require_unique(source, keys)
 
     t = target.alias("t")
     s = source.alias("s")
@@ -132,6 +121,52 @@ def merge_upsert(
             F.when(matched, upd).when(t_only, F.col(f"t.{c}")).otherwise(ins).alias(c)
         )
     return joined.select(*out_cols)
+
+
+def _require_unique(source: DataFrame, keys: Sequence[str]) -> None:
+    """Snowflake MERGE's duplicate-source-match error (one job)."""
+    dup = (
+        source.groupBy(*keys)
+        .agg(F.count(F.lit(1)).alias("__n"))
+        .filter(F.col("__n") > 1)
+        .limit(1)
+        .count()
+    )
+    if dup:
+        raise ValueError(
+            "merge_upsert: duplicate source rows for merge key "
+            f"{list(keys)}; dedup the source first (dedup_latest)"
+        )
+
+
+def latest_rows(
+    source: DataFrame, keys: Sequence[str], order_by: Sequence[Column] = ()
+) -> DataFrame:
+    """Step 1 of ``upsert``: the latest row per key by ``order_by``; with
+    no order, the source must be unique per key (else the duplicate-match
+    error, checked now)."""
+    if order_by:
+        return dedup_latest(source, keys, order_by)
+    _require_unique(source, keys)
+    return source
+
+
+def upsert(target: DataFrame | None, latest: DataFrame, keys: Sequence[str]) -> DataFrame:
+    """The write path's one upsert policy (airbyte MERGE + dbt
+    ``incremental_strategy='merge'``, SURVEY §M1/§M3/§M5):
+
+    1. ``latest = latest_rows(source, keys, order_by)`` — one row per key
+       (a quality gate on the deduped rows runs between the steps);
+    2. matched target rows take every non-key column source and target share;
+    3. unmatched source rows are inserted, unmatched target rows kept.
+
+    ``target=None`` (no table yet) returns ``latest``."""
+    if target is None:
+        return latest
+    update_set = {
+        c: F.col(f"s.{c}") for c in target.columns if c in latest.columns and c not in keys
+    }
+    return merge_upsert(target, latest, list(keys), update_set=update_set)
 
 
 def scd2_apply(

@@ -24,7 +24,10 @@ metadata, zero data copy, and the previous snapshot stays intact.
 A write never touches the directory it may be reading from (the next
 version is always a fresh directory, and GC runs after the pointer swap),
 so a model may overwrite its own table with a plan over its current
-snapshot without checkpointing it first.
+snapshot without checkpointing it first. The rewrites of the current
+snapshot (``compact``, ``purge_keys``, ``optimize_zorder``, a drifting
+``append``) all commit through ``overwrite`` and keep the snapshot's
+``_META.json``.
 
 An incremental model can therefore safely read its own previous state
 while computing the next one, and a bad batch is undone in O(1). The API
@@ -44,7 +47,7 @@ import os
 import shutil
 import uuid
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.types import ArrayType, DataType, MapType, StructField, StructType
 
 _POINTER = "_LATEST"
@@ -171,6 +174,29 @@ class TableStore:
             if v not in keep:
                 shutil.rmtree(self._vdir(name, v), ignore_errors=True)
 
+    def _require(self, name: str) -> int:
+        """The current version of an existing table (KeyError otherwise)."""
+        cur = self.current_version(name)
+        if cur is None:
+            raise KeyError(f"no table {name!r}")
+        return cur
+
+    def _publish(self, name: str, version: int, schema: StructType, meta: dict | None) -> None:
+        """Every write's commit tail once its data files are in place:
+        schema and meta files, pointer swap, GC."""
+        vdir = self._vdir(name, version)
+        _dump_json(vdir, _SCHEMA, _nullable(schema).jsonValue())
+        if meta is not None:
+            _dump_json(vdir, _META, meta)
+        self._commit_pointer(name, version)
+        self._gc(name)
+
+    def _rewrite(self, name: str, df: DataFrame, meta: dict | None = None) -> None:
+        """Commit ``df``, a plan over the current snapshot, keeping the
+        snapshot's metadata (a stream's replay guard) unless ``meta``
+        replaces it — through ``overwrite``, which subclasses may wrap."""
+        self.overwrite(name, df, (self.meta(name) or None) if meta is None else meta)
+
     # -- public API -----------------------------------------------------
 
     def path(self, name: str, version: int | None = None) -> str:
@@ -210,18 +236,12 @@ class TableStore:
         if self._has_legacy_files(name):
             self._migrate_legacy(name)
         os.makedirs(self._table_dir(name), exist_ok=True)
-        vs = self.versions(name)
-        nxt = (vs[-1] + 1) if vs else 1
+        nxt = (self.versions(name) or [0])[-1] + 1
         # the version dir is invisible to readers until the pointer swap,
         # so Spark can write it in place; a crash leaves an uncommitted
         # orphan dir that the next write's numbering skips and GC removes
-        vdir = self._vdir(name, nxt)
-        df.write.mode("overwrite").parquet(vdir)
-        _dump_json(vdir, _SCHEMA, _nullable(df.schema).jsonValue())
-        if meta is not None:
-            _dump_json(vdir, _META, meta)
-        self._commit_pointer(name, nxt)
-        self._gc(name)
+        df.write.mode("overwrite").parquet(self._vdir(name, nxt))
+        self._publish(name, nxt, df.schema, meta)
 
     def meta(self, name: str, version: int | None = None) -> dict:
         """The snapshot's committed metadata dict ({} if none was given)."""
@@ -249,7 +269,7 @@ class TableStore:
             self._migrate_legacy(name)
         cur = self.current_version(name)
         if cur is None:
-            self.overwrite(name, df, meta=meta)
+            self.overwrite(name, df, meta)
             return
         if meta is None:
             meta = self.meta(name) or None
@@ -263,11 +283,9 @@ class TableStore:
             return [(f.name, _nullable(f.dataType)) for f in schema.fields]
 
         if _lax(current.schema) != _lax(df.schema):
-            evolved = current.unionByName(df, allowMissingColumns=True)
-            self.overwrite(name, evolved, meta=meta)
+            self._rewrite(name, current.unionByName(df, allowMissingColumns=True), meta)
             return
-        vs = self.versions(name)
-        nxt = vs[-1] + 1
+        nxt = self.versions(name)[-1] + 1
         src, dst = self._vdir(name, cur), self._vdir(name, nxt)
         os.makedirs(dst)
         carried = set()
@@ -276,10 +294,6 @@ class TableStore:
                 os.link(os.path.join(src, f), os.path.join(dst, f))
                 carried.add(f)
         df.write.mode("append").parquet(dst)
-        # the schema matched the current snapshot's, so it carries forward
-        _dump_json(dst, _SCHEMA, current.schema.jsonValue())
-        if meta is not None:
-            _dump_json(dst, _META, meta)
         # data-skipping stats maintain incrementally: hardlinked files keep
         # their names (their stats entries stay valid); only the NEW part
         # files get scanned — O(batch), never O(table)
@@ -302,8 +316,8 @@ class TableStore:
                     )
                 )
             _dump_json(dst, _STATS, merged)
-        self._commit_pointer(name, nxt)
-        self._gc(name)
+        # the schema matched the current snapshot's, so it carries forward
+        self._publish(name, nxt, current.schema, meta)
 
     def compact(self, name: str, target_file_mb: int = 128) -> int:
         """OPTIMIZE-style small-file compaction: rewrite the current
@@ -317,21 +331,14 @@ class TableStore:
         file count. Worth running when file count far exceeds
         bytes/target_file_mb — the same trigger heuristic lakehouse
         OPTIMIZE jobs use."""
-        cur = self.current_version(name)
-        if cur is None:
-            raise KeyError(f"no table {name!r}")
-        src = self._vdir(name, cur)
+        src = self._vdir(name, self._require(name))
         total_bytes = sum(
             os.path.getsize(os.path.join(src, f))
             for f in os.listdir(src)
             if f.endswith(".parquet")
         )
         n_files = max(1, round(total_bytes / (target_file_mb * 1024 * 1024)))
-        # the prior snapshot's metadata (e.g. stream replay guard) must
-        # survive a compaction unchanged
-        self.overwrite(
-            name, self.read(name).coalesce(n_files), meta=self.meta(name) or None
-        )
+        self._rewrite(name, self.read(name).coalesce(n_files))
         new = self._vdir(name, self.current_version(name))
         return sum(1 for f in os.listdir(new) if f.endswith(".parquet"))
 
@@ -369,8 +376,6 @@ class TableStore:
         side, emit |Δcount| inserts/deletes; order-insensitive and
         duplicate-correct, for tables with no natural key.
         """
-        from pyspark.sql import functions as F
-
         old = self.read(name, from_version)
         new = self.read(name, to_version)
         cols = new.columns
@@ -458,21 +463,18 @@ class TableStore:
         The deletion is ONE broadcast anti-join over the current snapshot
         (the key list is small by nature), so at 100 TB the purge costs a
         single scan+rewrite, and the atomic pointer swap means readers
-        never observe a half-purged table. NOTE: retained older snapshots
+        never observe a half-purged table; the snapshot's metadata carries
+        over, as in every rewrite. NOTE: retained older snapshots
         still contain the purged rows (that is what makes rollback safe);
         for a compliance-complete erasure, follow with retention GC by
         committing ``retain_versions`` new versions or lowering retention
         — the same two-phase contract Delta's VACUUM has."""
-        from pyspark.sql import functions as F
-
-        cur = self.current_version(name)
-        if cur is None:
-            raise KeyError(f"no table {name!r}")
+        self._require(name)
         df = self.read(name)
         klist = keys.select(F.col(keys.columns[0]).alias(key_col)).distinct()
         kept = df.join(F.broadcast(klist), key_col, "left_anti")
         before = df.count()
-        self.overwrite(name, kept)
+        self._rewrite(name, kept)
         after = self.read(name).count()
         return before - after, self.current_version(name)
 
@@ -491,12 +493,7 @@ class TableStore:
         (integers, floats, strings, dates/timestamps — the latter stored
         as ISO strings, whose lexicographic order IS chronological order).
         Returns the stats dict."""
-        from pyspark.sql import functions as F
-
-        cur = self.current_version(name)
-        if cur is None:
-            raise KeyError(f"no table {name!r}")
-        vdir = self._vdir(name, cur)
+        vdir = self._vdir(name, self._require(name))
         stats = {"columns": cols, "files": self._file_stats([vdir], cols)}
         _dump_json(vdir, _STATS, stats)
         return stats
@@ -504,8 +501,6 @@ class TableStore:
     def _file_stats(self, paths: list[str], cols: list[str]) -> dict:
         """Per-file stats entries for the parquet files under ``paths`` —
         one grouped aggregate, O(files) result."""
-        from pyspark.sql import functions as F
-
         df = self.spark.read.parquet(*paths)
         aggs = [F.count(F.lit(1)).alias("__n")]
         for c in cols:
@@ -550,12 +545,7 @@ class TableStore:
         this is the difference between scanning a table and scanning the
         handful of files a clustered/z-ordered layout confines the
         predicate to — the same skipping a lakehouse manifest gives."""
-        from pyspark.sql import functions as F
-
-        cur = self.current_version(name)
-        if cur is None:
-            raise KeyError(f"no table {name!r}")
-        vdir = self._vdir(name, cur)
+        vdir = self._vdir(name, self._require(name))
         all_files = sorted(f for f in os.listdir(vdir) if f.endswith(".parquet"))
         st = self.stats(name)
         v = _stats_encode(value)
@@ -639,10 +629,7 @@ def optimize_zorder(
     the Delta OPTIMIZE ZORDER pairing). Returns the new stats dict."""
     from ..operators.scale import zorder_key
 
-    cur = store.current_version(name)
-    if cur is None:
-        raise KeyError(f"no table {name!r}")
-    df = store.read(name)
-    clustered = df.repartitionByRange(n_files, zorder_key(cols, bits=bits))
-    store.overwrite(name, clustered, meta=store.meta(name) or None)
+    store._require(name)
+    clustered = store.read(name).repartitionByRange(n_files, zorder_key(cols, bits=bits))
+    store._rewrite(name, clustered)
     return store.analyze(name, cols)

@@ -7,7 +7,8 @@ run via `dbt test` before `dbt run`, dags/1_logistics-airbyte-dbt.py:37).
 This module is that surface as engine checks: each check compiles to ONE
 declarative DataFrame count (Catalyst pushes the predicates into the
 scan), returns a violation count, and `run_checks` aggregates a suite
-into a report usable as a pipeline gate.
+into a report; `gate` turns a suite's failures into `DataQualityError`
+(the model runner and the streaming upsert both stop on it).
 
 Scale notes: every check is a filter/agg over the table — no collects of
 row data; `unique` is a groupBy on the key (one shuffle); `relationships`
@@ -29,6 +30,25 @@ class CheckResult:
     table: str
     passed: bool
     violations: int
+
+
+class DataQualityError(Exception):
+    """A constraint suite failed; carries the failed CheckResults."""
+
+    def __init__(self, model: str, failed: Sequence[CheckResult]):
+        self.failed = list(failed)
+        detail = "; ".join(
+            f"{r.name}[{r.table}]={r.violations} violations" for r in self.failed
+        )
+        super().__init__(f"model {model!r} failed data-quality checks: {detail}")
+
+
+def gate(label: str, checks, df: DataFrame) -> None:
+    """Run ``checks(df)`` (None passes) and raise ``DataQualityError`` on
+    any failed CheckResult — the write path's one quality gate."""
+    failed = [r for r in checks(df) if not r.passed] if checks else []
+    if failed:
+        raise DataQualityError(label, failed)
 
 
 def not_null(df: DataFrame, cols: Sequence[str]) -> int:

@@ -20,7 +20,12 @@ Threading note: Spark sessions are thread-safe for job submission; running
 independent models concurrently lets the scheduler interleave their stages
 exactly like dbt's thread pool does against a warehouse. Pool threads
 inherit the caller's Spark local properties (job group, scheduler pool),
-so ``cancelJobGroup`` stops a whole run.
+so ``cancelJobGroup`` stops a whole run. Each submitted model makes its own
+``inheritable_thread_target(spark)`` call: the call clones the caller's
+properties once and installs that one JVM object in every thread running
+a function it wrapped, so a shared call lets concurrent models overwrite
+each other's ``spark.sql.execution.id`` (a job then starts under an
+execution that already ended).
 """
 
 from __future__ import annotations
@@ -36,13 +41,14 @@ from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame, Observation, Row, SparkSession, functions as F
 
 from ..operators.merge import (
-    dedup_latest,
     high_watermark,
     incremental_filter,
-    merge_upsert,
+    latest_rows,
     scd2_apply,
+    upsert,
 )
 from .materialize import TableStore
+from .quality import DataQualityError, gate  # noqa: F401 (DataQualityError: re-export)
 
 AUDIT_TABLE = "etl_audit_log"
 
@@ -69,17 +75,6 @@ class Model:
     #: untouched — stricter than dbt, which materializes first and tests
     #: after, leaving bad data committed when a test fails.
     checks: Callable[[DataFrame], Sequence] | None = None
-
-
-class DataQualityError(Exception):
-    """A model's constraint suite failed; carries the failed CheckResults."""
-
-    def __init__(self, model: str, failed: Sequence):
-        self.failed = list(failed)
-        detail = "; ".join(
-            f"{r.name}[{r.table}]={r.violations} violations" for r in self.failed
-        )
-        super().__init__(f"model {model!r} failed data-quality checks: {detail}")
 
 
 class ModelRunner:
@@ -166,7 +161,16 @@ class ModelRunner:
         if m.materialization == "view":
             df.createOrReplaceTempView(m.name)
             return df.count()
-        if m.materialization == "table" or not self.store.exists(m.name):
+        if m.materialization == "table":
+            return self._write_counted(m.name, df)
+        if not self.store.exists(m.name):
+            # first run: CTAS; a snapshot opens every row's history
+            if m.materialization == "snapshot":
+                df = (
+                    df.withColumn("valid_from", F.current_timestamp())
+                    .withColumn("valid_to", F.lit(None).cast("timestamp"))
+                    .withColumn("is_current", F.lit(True))
+                )
             return self._write_counted(m.name, df)
         if m.materialization == "incremental":
             target = self.store.read(m.name)
@@ -175,24 +179,8 @@ class ModelRunner:
                 source = incremental_filter(
                     source, m.watermark_col, high_watermark(target, m.watermark_col)
                 )
-            if m.dedup_order:
-                source = dedup_latest(
-                    source, [m.unique_key], [F.desc(c) for c in m.dedup_order]
-                )
-            # dbt merge semantics: matched rows take every source column.
-            update_set = {
-                c: F.col(f"s.{c}")
-                for c in target.columns
-                if c in source.columns and c != m.unique_key
-            }
-            merged = merge_upsert(
-                target,
-                source,
-                keys=[m.unique_key],
-                update_set=update_set,
-                strict=not m.dedup_order,
-            )
-            return self._write_counted(m.name, merged)
+            latest = latest_rows(source, [m.unique_key], [F.desc(c) for c in m.dedup_order])
+            return self._write_counted(m.name, upsert(target, latest, [m.unique_key]))
         if m.materialization == "snapshot":
             history = self.store.read(m.name)
             updated = scd2_apply(
@@ -205,24 +193,12 @@ class ModelRunner:
             return self._write_counted(m.name, updated)
         raise ValueError(f"unknown materialization {m.materialization!r}")
 
-    def _snapshot_bootstrap(self, m: Model, df: DataFrame) -> DataFrame:
-        return (
-            df.withColumn("valid_from", F.current_timestamp())
-            .withColumn("valid_to", F.lit(None).cast("timestamp"))
-            .withColumn("is_current", F.lit(True))
-        )
-
     def _run_one(self, name: str, run_id: str) -> None:
         m = self.models[name]
         started = dt.datetime.now(dt.timezone.utc).replace(tzinfo=None)
         try:
             df = m.fn(self.spark, self.ref)
-            if m.checks is not None:
-                failed = [r for r in m.checks(df) if not r.passed]
-                if failed:
-                    raise DataQualityError(name, failed)
-            if m.materialization == "snapshot" and not self.store.exists(m.name):
-                df = self._snapshot_bootstrap(m, df)
+            gate(name, m.checks, df)
             rows = self._materialize(m, df)
             self._audit(name, run_id, "SUCCESS", started, rows)
         except Exception as exc:
@@ -248,9 +224,11 @@ class ModelRunner:
                 if len(level) == 1:
                     self._run_one(level[0], run_id)
                 else:
-                    run_one = inheritable_thread_target(self.spark)(self._run_one)
                     with ThreadPoolExecutor(max_workers=self.threads) as pool:
-                        futures = [pool.submit(run_one, n, run_id) for n in level]
+                        futures = []
+                        for n in level:  # one properties clone per task: see the threading note
+                            run_one = inheritable_thread_target(self.spark)(self._run_one)
+                            futures.append(pool.submit(run_one, n, run_id))
                         for f in futures:
                             f.result()
         finally:

@@ -5,15 +5,18 @@ load, SURVEY §M1/§M4; dags/logistics-airbyte-sql.py:25-49).
 The batch pattern re-reads the target's MAX(cursor) and filters the
 source per run; streaming replaces that bookkeeping with the source
 checkpoint (exactly-once progress tracking) and applies each micro-batch
-through the same ``merge_upsert`` engine primitive inside
+through the engine's one upsert policy (``operators.merge.upsert``, the
+same one ``ModelRunner``'s incremental models use) inside
 ``foreachBatch`` — the standard lakehouse "CDC stream → merged silver
 table" sink. Each micro-batch:
 
-1. window-dedups the batch to latest-per-key (the reference's mandatory
-   pre-MERGE guard, §M3 — a batch may carry several versions of a key),
-2. merges it into the current target state (matched → update, not
-   matched → insert),
-3. atomically swaps the target (``TableStore.overwrite``).
+1. window-dedups the batch to latest-per-key (``latest_rows``, the
+   reference's mandatory pre-MERGE guard, §M3 — a batch may carry several
+   versions of a key),
+2. runs the optional ``checks`` on the deduped rows (``quality.gate``),
+3. upserts them into the current target state (``upsert``: matched rows
+   take every shared non-key column, unmatched rows are inserted),
+4. atomically swaps the target (``TableStore.overwrite``).
 
 Scale note: foreachBatch + full-rewrite merge is the Parquet-backed
 stand-in for a lakehouse ``MERGE INTO`` — swapping ``_apply_batch`` for
@@ -31,8 +34,9 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
-from ..operators.merge import dedup_latest, merge_upsert
+from ..operators.merge import latest_rows, upsert
 from ..plans.materialize import TableStore
+from ..plans.quality import gate
 
 
 def stream_merge_upsert(
@@ -74,30 +78,12 @@ def stream_merge_upsert(
         stream = stream.join(F.broadcast(enrich_dim), dim_key, "left")
 
     def _apply_batch(batch_df: DataFrame, epoch_id: int) -> None:
-        latest = dedup_latest(
-            batch_df, keys, [F.desc(cursor_col), F.desc(tiebreak_col)]
-        )
-        if checks is not None:
-            from ..plans.runner import DataQualityError
-
-            failed = [r for r in checks(latest) if not r.passed]
-            if failed:
-                raise DataQualityError(f"{table} micro-batch {epoch_id}", failed)
-        if store.exists(table):
-            target = store.read(table)
-            # WHEN MATCHED: the fresher source row wins on every non-key
-            # column (the airbyte-MERGE update rule).
-            update_set = {
-                c: F.col(f"s.{c}")
-                for c in latest.columns
-                if c not in keys and c in target.columns
-            }
-            merged = merge_upsert(target, latest, list(keys), update_set=update_set)
-        else:
-            merged = latest
+        latest = latest_rows(batch_df, keys, [F.desc(cursor_col), F.desc(tiebreak_col)])
+        gate(f"{table} micro-batch {epoch_id}", checks, latest)
+        target = store.read(table) if store.exists(table) else None
         # the new snapshot lands in a fresh version directory, so the
         # merge can read the target's current files while writing
-        store.overwrite(table, merged)
+        store.overwrite(table, upsert(target, latest, keys))
 
     writer = stream.writeStream.foreachBatch(_apply_batch).option(
         "checkpointLocation", checkpoint_dir

@@ -5,6 +5,8 @@ snapshot SCD2, audit logging, and idempotence."""
 from __future__ import annotations
 
 import datetime as dt
+import os
+import threading
 
 import pytest
 from pyspark.sql import Row, functions as F
@@ -175,6 +177,28 @@ def test_runner_pool_threads_keep_callers_job_group(spark, store, jobs_in_group)
     assert store.read("leaf_0").count() == 7 and store.read("leaf_1").count() == 7
 
 
+def test_runner_pool_threads_own_their_local_properties(spark, store):
+    """Concurrent models must not share one JVM ``Properties`` object: a
+    shared one lets a model overwrite another's ``spark.sql.execution.id``
+    and start a job under an execution that has already ended."""
+    runner = _fanout_runner(spark, store)
+    sc = spark.sparkContext
+    barrier = threading.Barrier(2, timeout=60)
+    seen = {}
+    for name in ("leaf_0", "leaf_1"):
+        m = runner.models[name]
+
+        def fn(sp, ref, name=name, inner=m.fn):
+            sc.setLocalProperty("test.model", name)
+            barrier.wait()  # both leaves have set their property
+            seen[name] = sc.getLocalProperty("test.model")
+            return inner(sp, ref)
+
+        m.fn = fn
+    runner.run()
+    assert seen == {"leaf_0": "leaf_0", "leaf_1": "leaf_1"}
+
+
 def test_runner_one_audit_append_per_run(spark, store):
     """Pool threads (more than cores, with frequent thread switches) all
     buffer their audit rows; the run commits them in ONE append."""
@@ -262,6 +286,64 @@ def test_table_store_append_compact_preserve_meta(spark, tmp_path):
     store.compact("t")
     assert store.meta("t") == {"last_batch_id": 8}
     assert store.read("t").count() == 4
+
+
+def test_table_store_rewrites_keep_meta(spark, tmp_path):
+    """purge_keys, compact and optimize_zorder rewrite the current
+    snapshot; each must keep its _META.json (a stream's replay guard)."""
+    from logistics_data_pipeline_project_spark.plans.materialize import optimize_zorder
+
+    store = TableStore(spark, str(tmp_path / "wh"))
+    df = spark.createDataFrame([(1, "a"), (2, "b"), (3, "c")], "id long, v string")
+    store.overwrite("t", df, meta={"last_batch_id": 7})
+    purged, _ = store.purge_keys("t", "id", spark.createDataFrame([(1,)], "id long"))
+    assert purged == 1
+    assert store.meta("t") == {"last_batch_id": 7}, "purge_keys dropped the meta"
+    store.compact("t")
+    assert store.meta("t") == {"last_batch_id": 7}, "compact dropped the meta"
+    optimize_zorder(store, "t", ["id"], n_files=2, bits=4)
+    assert store.meta("t") == {"last_batch_id": 7}, "optimize_zorder dropped the meta"
+    assert sorted(r["id"] for r in store.read("t").collect()) == [2, 3]
+
+
+def test_table_store_subclass_sees_every_commit(spark, tmp_path):
+    """A subclass that wraps the public writes, as the benchmark's traced
+    store does (its own ``_commit(kind, ...)`` around ``overwrite`` and
+    ``append``, reading ``current_version``/``_vdir``), sees every commit:
+    internal rewrites go through ``self.overwrite``/``self.append``, and
+    TableStore defines no ``_commit`` of its own to shadow."""
+    assert not hasattr(TableStore, "_commit")
+    seen = []
+
+    class Recording(TableStore):
+        def _commit(self, kind, name, df, meta):
+            before = self.current_version(name)
+            getattr(super(), kind)(name, df, meta)
+            after = self.current_version(name)
+            assert os.path.isdir(self._vdir(name, after))
+            seen.append((kind, before, after))
+
+        def overwrite(self, name, df, meta=None):
+            self._commit("overwrite", name, df, meta)
+
+        def append(self, name, df, meta=None):
+            self._commit("append", name, df, meta)
+
+    store = Recording(spark, str(tmp_path / "wh"), retain_versions=10)
+    store.overwrite("t", spark.createDataFrame([(1, "a")], "id long, v string"))
+    store.append("t", spark.createDataFrame([(2, "b")], "id long, v string"))
+    store.append("t", spark.createDataFrame([(3, "c", 1.5)], "id long, v string, w double"))
+    store.compact("t")
+    store.purge_keys("t", "id", spark.createDataFrame([(1,)], "id long"))
+    assert seen == [
+        ("overwrite", None, 1),
+        ("append", 1, 2),  # hardlink path
+        ("overwrite", 2, 3),  # schema drift: the rewrite, inside ...
+        ("append", 2, 3),  # ... the append that chose it
+        ("overwrite", 3, 4),  # compact
+        ("overwrite", 4, 5),  # purge_keys
+    ]
+    assert store.versions("t") == [1, 2, 3, 4, 5]
 
 
 def test_table_store_retention_gc(spark, tmp_path):
