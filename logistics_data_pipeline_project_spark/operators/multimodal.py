@@ -1458,6 +1458,23 @@ def _dct_matrix():
     return _dct_cache["C"]
 
 
+def _dct_sandwich(a, x):
+    """``a @ x @ a.T`` for an 8x8 ``a`` over a stack ``x`` of 8x8 blocks,
+    every 8-term dot summed left to right with separate multiplies and
+    adds. matmul would hand this to BLAS, whose per-CPU kernel may fuse
+    multiply-adds or reorder the sum and so flip a rounded sample between
+    hosts; numpy's elementwise ufuncs never fuse. (A ``.sum(axis=-2)``
+    reduce is deterministic too but pairs the terms differently.)"""
+
+    def left(y):
+        t = a[:, 0, None] * y[..., 0:1, :]
+        for n in range(1, 8):
+            t += a[:, n, None] * y[..., n : n + 1, :]
+        return t
+
+    return left(left(x).swapaxes(-1, -2)).swapaxes(-1, -2)
+
+
 def jpeg_qtable(quality: int) -> list[int]:
     """Scale the Annex K.1 luminance table by the libjpeg quality
     convention: scale = 5000/q below 50 else 200-2q, entries clamped to
@@ -1613,10 +1630,8 @@ def encode_jpeg(
         cbh, cbw = mcuy * fv, mcux * fh  # component block grid
         padded = padded - 128.0
         blocks = padded.reshape(cbh, 8, cbw, 8).transpose(0, 2, 1, 3)
-        # batched DCT: C @ B @ C.T per block via matmul (einsum's
-        # per-call overhead dominated at fixture block counts); golden
-        # byte-equality pins the output
-        coef = (c @ blocks) @ c.T
+        # batched DCT C @ B @ C.T; golden byte-equality pins the output
+        coef = _dct_sandwich(c, blocks)
         q = np.asarray(q_tab, dtype=np.float64).reshape(8, 8)
         ratio = coef / q
         quants.append(
@@ -2574,11 +2589,9 @@ def decode_jpeg_pixels(payload: bytes) -> tuple[int, int, int, bytes]:
         natural = np.zeros_like(zigzagged)
         natural[:, zzarr] = zigzagged  # de-zigzag all blocks at once
         coef = (natural.astype(np.float64) * q).reshape(nb, 8, 8)
-        # batched IDCT: (C.T @ X) @ C per block. matmul replaces the
-        # einsum formulation (identical contraction, far lower per-call
-        # overhead on small block counts); byte-equality over the golden
-        # corpus (noise/gradient/tiles, all modes) pins the output.
-        spatial = (c.T @ coef) @ c + 128.0
+        # batched IDCT C.T @ X @ C; byte-equality over the golden corpus
+        # (noise/gradient/tiles, all modes) pins the output
+        spatial = _dct_sandwich(c.T, coef) + 128.0
         # crop to the component's true dims (T.81 A.1.1: ceil(D*f/fmax)),
         # then replicate-upsample back to full resolution
         cw = (width * comp["h"] + hmax - 1) // hmax

@@ -14,9 +14,11 @@ those plan properties, not just results.
 
 from __future__ import annotations
 
-from collections.abc import Sequence
+from collections.abc import Mapping, Sequence
 
 from pyspark.sql import Column, DataFrame, SparkSession, functions as F
+
+from .sketch import fold_partials
 
 
 def fan_out(df: DataFrame, min_fraction: float = 0.5) -> DataFrame:
@@ -68,35 +70,30 @@ def write_bucketed(
 def salted_aggregate(
     df: DataFrame,
     keys: Sequence[str],
-    aggs: Sequence[Column],
+    aggs: Mapping[str, tuple[Column, str]],
     n_salts: int = 16,
 ) -> DataFrame:
     """Two-phase aggregation for skewed group keys.
 
     Phase 1 groups on (keys, salt) — the hot key's rows spread over
     ``n_salts`` reducers; phase 2 merges the partials on keys alone.
-    Only decomposable aggregates are valid here (sum/count/min/max —
-    the caller passes the *phase-1* expressions; phase 2 re-aggregates
-    with the matching merge function inferred from the alias).
+    ``aggs`` maps each output column to its phase-1 expression and its
+    kind (``sum | count | min | max | approx_distinct``); phase 2 merges
+    by that kind through `operators.sketch.fold_partials`, so a
+    ``F.min(...)`` declared ``"min"`` merges by min whatever its alias.
+    Each column keeps its phase-1 dtype.
 
-    Results are identical to a plain groupBy for decomposable aggregates;
-    deterministic because the salt is a hash of the whole row, not rand().
+    Results are identical to a plain groupBy because every kind is
+    decomposable; deterministic because the salt is a hash of the whole
+    row, not rand().
     """
     salt = F.pmod(F.xxhash64(*df.columns), F.lit(n_salts)).alias("__salt")
-    partial = df.withColumn("__salt", salt).groupBy(*keys, "__salt").agg(*aggs)
-    agg_cols = [c for c in partial.columns if c not in (*keys, "__salt")]
-
-    def merge_fn(col: str) -> Column:
-        lowered = col.lower()
-        if lowered.startswith(("n_", "count", "cnt")):
-            return F.sum(col).alias(col)
-        if lowered.startswith("min"):
-            return F.min(col).alias(col)
-        if lowered.startswith("max"):
-            return F.max(col).alias(col)
-        return F.sum(col).alias(col)
-
-    return partial.groupBy(*keys).agg(*[merge_fn(c) for c in agg_cols])
+    partial = df.withColumn("__salt", salt).groupBy(*keys, "__salt").agg(
+        *[col.alias(alias) for alias, (col, _) in aggs.items()]
+    )
+    return fold_partials(
+        [partial], keys, {alias: kind for alias, (_, kind) in aggs.items()}
+    )
 
 
 def salted_join(

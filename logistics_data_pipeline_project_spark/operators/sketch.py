@@ -10,8 +10,9 @@ O(distinct keys); both sketches here are O(depth × 16^hex_chars) — a few
 KB — and their state is *mergeable* (counters are sum-decomposable,
 Bloom bit-sets are union-decomposable), so partial sketches combine
 map-side exactly like any algebraic aggregate, and incremental refreshes
-merge new-batch sketches into stored ones without re-reading history
-(the same contract plans/incremental.py uses for HLL).
+merge new-batch sketches into stored ones without re-reading history.
+`fold_partials` is the one merge rule for such partials; the salted
+aggregate, plans/incremental.py and the streaming ledgers call it too.
 
 Buckets are hex-prefix strings rather than integers: ``substr(md5(
 "<row>:" || key), 1, hex_chars)`` is engine-portable (Spark and DuckDB
@@ -22,9 +23,50 @@ md5 agree bit-for-bit) and needs no hex→int conversion, giving
 from __future__ import annotations
 
 import math
-from collections.abc import Sequence
+from collections.abc import Mapping, Sequence
 
 from pyspark.sql import Column, DataFrame, SparkSession, Window, functions as F
+
+
+#: How each kind of partial merges. Counts merge by summing the partial
+#: counts; an HLL sketch (``hll_sketch_agg``) merges by register union.
+_FOLD = {
+    "sum": F.sum,
+    "count": F.sum,
+    "min": F.min,
+    "max": F.max,
+    "approx_distinct": F.hll_union_agg,
+}
+
+
+def fold_partials(
+    frames: Sequence[DataFrame], keys: Sequence[str], kinds: Mapping[str, str]
+) -> DataFrame:
+    """Merge partial aggregates into one: union ``frames``, group by
+    ``keys`` and merge each measure column by its kind in ``kinds``
+    (``sum | count | min | max | approx_distinct``). Every kind is
+    associative and commutative, so the fold equals a one-shot aggregate
+    of the concatenated input however it was split into partials. This
+    is the one merge rule of the salted two-phase aggregate, the sketch
+    merges, the incremental rollups and the streaming ledgers.
+
+    The output is the keys, then the measures in the given order. Each
+    measure is cast back to its input dtype, so a decimal sum folded
+    again and again keeps its type instead of widening by one digit per
+    fold. Other columns of ``frames`` are dropped."""
+    for col, kind in kinds.items():
+        if kind not in _FOLD:
+            raise ValueError(f"measure {col!r}: kind must be one of {sorted(_FOLD)}")
+    cols = [*keys, *kinds]
+    out = frames[0].select(cols)
+    for f in frames[1:]:
+        out = out.unionByName(f.select(cols))
+    return out.groupBy(*keys).agg(
+        *[
+            _FOLD[kind](col).cast(out.schema[col].dataType).alias(col)
+            for col, kind in kinds.items()
+        ]
+    )
 
 
 def _bucket(key: Column, row: int, hex_chars: int) -> Column:
@@ -194,15 +236,10 @@ def merge_histogram_sketches(*sketches: DataFrame) -> DataFrame:
     """Union partial sketches (same keys + edges) into one: counts per
     (keys…, bin) sum — associative/commutative, so the merged sketch is
     identical to sketching the concatenated input no matter how history
-    was sliced into batches."""
-    out = sketches[0]
-    for s in sketches[1:]:
-        out = out.unionByName(s)
-    group = [c for c in out.columns if c != "cnt"]
-    # preserve the measure dtype: long for count sketches, the exact
-    # decimal for weighted ones (Spark widens decimal sums otherwise)
-    dtype = dict(out.dtypes)["cnt"]
-    return out.groupBy(*group).agg(F.sum("cnt").cast(dtype).alias("cnt"))
+    was sliced into batches. The measure keeps its dtype: long for count
+    sketches, the exact decimal for weighted ones."""
+    keys = [c for c in sketches[0].columns if c != "cnt"]
+    return fold_partials(sketches, keys, {"cnt": "sum"})
 
 
 def histogram_edge_bounds(
@@ -362,11 +399,8 @@ def merge_hll_sketches(*sketches: DataFrame) -> DataFrame:
     per (keys…, idx) maxes — idempotent/associative/commutative, so the
     merged file is identical to sketching the concatenated input, and
     re-delivered batches change nothing (exactly-once not required)."""
-    out = sketches[0]
-    for s in sketches[1:]:
-        out = out.unionByName(s)
-    group = [c for c in out.columns if c != "reg"]
-    return out.groupBy(*group).agg(F.max("reg").alias("reg"))
+    keys = [c for c in sketches[0].columns if c != "reg"]
+    return fold_partials(sketches, keys, {"reg": "max"})
 
 
 def hll_estimate(

@@ -7,8 +7,10 @@ a daily gold mart over two years of facts re-reads 730 days to add one.
 
 ``incremental_rollup`` maintains the aggregate itself: only delta rows are
 scanned and partially aggregated, and the stored DECOMPOSABLE partials
-(sum / count / min / max) are merged by key — the same partial/final split
-Spark's own hash aggregate uses, persisted across runs. Incremental cost
+(sum / count / min / max / HLL sketch) are merged by key through
+`operators.sketch.fold_partials` — the same partial/final split Spark's
+own hash aggregate uses, persisted across runs, with each measure keeping
+its first-run dtype. Incremental cost
 is O(delta + |groups|), independent of history size. Non-decomposable
 metrics (avg, ratios) are derived from the partials at read time.
 
@@ -19,15 +21,19 @@ while the next one is computed.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, functions as F
+from pyspark.sql import DataFrame, functions as F
 
 from ..operators.merge import high_watermark, incremental_filter
+from ..operators.sketch import fold_partials
 from .materialize import TableStore
 
-#: Merge functions for decomposable partial aggregates.
-_MERGE = {
-    "sum": F.sum,
-    "count": lambda c: F.sum(c),  # counts merge by summing partial counts
+#: The delta-side partial of each measure kind; `fold_partials` merges
+#: them with the stored ones.
+_PARTIAL = {
+    "count": lambda col: F.count(col if col != "*" else F.lit(1)),
+    # exact decimal so the merged result is independent of how history
+    # was split into increments (float partials would drift per path)
+    "sum": lambda col: F.sum(F.col(col).cast("decimal(27,2)")),
     "min": F.min,
     "max": F.max,
     # COUNT DISTINCT has no decomposable exact partial, but its HLL sketch
@@ -36,20 +42,8 @@ _MERGE = {
     # full recompute no matter how history was sliced into increments.
     # The stored partial is the sketch binary; estimates are derived at
     # read time (`rollup_distinct_estimate`).
-    "approx_distinct": F.hll_union_agg,
+    "approx_distinct": F.hll_sketch_agg,
 }
-
-
-def _partial(kind: str, col: str) -> Column:
-    if kind == "count":
-        return F.count(col if col != "*" else F.lit(1))
-    if kind == "sum":
-        # exact decimal so the merged result is independent of how history
-        # was split into increments (float partials would drift per path)
-        return F.sum(F.col(col).cast("decimal(27,2)"))
-    if kind == "approx_distinct":
-        return F.hll_sketch_agg(F.col(col))
-    return _MERGE[kind](F.col(col))
 
 
 def incremental_rollup(
@@ -64,52 +58,38 @@ def incremental_rollup(
     materialized rollup ``name`` and return the updated rollup.
 
     ``measures`` maps output column → (input column, kind) with kind one
-    of ``sum | count | min | max`` (decomposable partials). The high
-    watermark rides in the rollup table itself (max of ``cursor_col``), so
-    rollup + watermark commit atomically in ONE snapshot — no separate
-    state table to drift out of sync.
+    of ``sum | count | min | max | approx_distinct`` (decomposable
+    partials). The high watermark rides in the rollup table itself (max
+    of ``cursor_col``), so rollup + watermark commit atomically in ONE
+    snapshot — no separate state table to drift out of sync.
     """
     for alias, (_, kind) in measures.items():
-        if kind not in _MERGE:
-            raise ValueError(f"measure {alias!r}: kind must be one of {set(_MERGE)}")
+        if kind not in _PARTIAL:
+            raise ValueError(f"measure {alias!r}: kind must be one of {set(_PARTIAL)}")
     wm_col = "__cursor_wm"
-    if store.exists(name):
-        prev = store.read(name)
-        # a NULL watermark means the stored rollup has processed no rows
-        # yet (e.g. the first increment was empty) — take everything;
-        # `cursor > NULL` would silently drop the whole source
-        delta = incremental_filter(source, cursor_col, high_watermark(prev, wm_col))
-    else:
-        prev = None
-        delta = source
+    prev = store.read(name) if store.exists(name) else None
+    # a NULL watermark means the stored rollup has processed no rows yet
+    # (e.g. the first increment was empty) — take everything; `cursor >
+    # NULL` would silently drop the whole source
+    prev_wm = None if prev is None else high_watermark(prev, wm_col)
+    delta = incremental_filter(source, cursor_col, prev_wm)
     part = delta.groupBy(*keys).agg(
-        *[_partial(kind, col).alias(a) for a, (col, kind) in measures.items()],
+        *[_PARTIAL[kind](col).alias(a) for a, (col, kind) in measures.items()],
         F.max(cursor_col).alias(wm_col),
     )
     if prev is not None:
-        merged = (
-            prev.unionByName(part)
-            .groupBy(*keys)
-            .agg(
-                *[
-                    _MERGE[kind](F.col(a)).alias(a)
-                    for a, (_, kind) in measures.items()
-                ],
-                # the watermark must survive groups untouched by the delta:
-                # merge it as a running max, then re-broadcast the global
-                # max so every row carries the table-level watermark
-                F.max(wm_col).alias(wm_col),
-            )
+        part = fold_partials(
+            [prev, part], keys, {a: kind for a, (_, kind) in measures.items()}
         )
-        gmax = high_watermark(merged, wm_col)
-    else:
-        merged = part
-        gmax = high_watermark(part, wm_col)
-    # re-broadcast the global watermark onto every row, keeping the column
-    # typed even when gmax is None (an untyped null would drift the schema
-    # and break the next run's unionByName)
-    merged = merged.withColumn(
-        wm_col, F.lit(gmax).cast(dict(merged.dtypes)[wm_col])
+    # every delta row is newer than the stored watermark, so the table's
+    # new watermark is the delta's max, or the stored one when the delta
+    # is empty. It is broadcast onto every row and stays typed even when
+    # it is None (an untyped null would drift the schema and break the
+    # next run's unionByName)
+    wm = high_watermark(delta, cursor_col)
+    wm = prev_wm if wm is None else wm
+    merged = part.withColumn(
+        wm_col, F.lit(wm).cast(delta.schema[cursor_col].dataType)
     )
     store.overwrite(name, merged)
     return store.read(name)
@@ -182,13 +162,7 @@ def incremental_join_rollup(
         parts.append(builder(a_prev, delta_b))
     if not parts:
         return store.read(name)
-    update = parts[0]
-    for p in parts[1:]:
-        update = update.unionByName(p)
     if store.exists(name):
-        update = update.unionByName(store.read(name))
-    merged = update.groupBy(*keys).agg(
-        *[_MERGE[kind](F.col(col)).alias(col) for col, kind in measures.items()]
-    )
-    store.overwrite(name, merged)
+        parts.append(store.read(name))
+    store.overwrite(name, fold_partials(parts, keys, measures))
     return store.read(name)

@@ -4677,12 +4677,12 @@ def q145_event_type_salted_profile(spark: SparkSession, sf_dir: str):
     prof = salted_aggregate(
         ev,
         keys=["event_type"],
-        aggs=[
-            F.count(F.lit(1)).alias("n_events"),
-            F.min("value").alias("min_value"),
-            F.max("value").alias("max_value"),
-            F.sum("fv").alias("sum_floor_value"),
-        ],
+        aggs={
+            "n_events": (F.count(F.lit(1)), "count"),
+            "min_value": (F.min("value"), "min"),
+            "max_value": (F.max("value"), "max"),
+            "sum_floor_value": (F.sum("fv"), "sum"),
+        },
         n_salts=16,
     )
     return prof.orderBy("event_type")

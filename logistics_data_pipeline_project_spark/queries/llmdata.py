@@ -1687,12 +1687,12 @@ def q063_salted_event_rollup(spark: SparkSession, sf_dir: str):
     base = salted_aggregate(
         ev,
         keys=["event_type"],
-        aggs=[
-            F.count(F.lit(1)).alias("n_events"),
-            F.sum(F.floor(F.col("value") * 100).cast("long")).alias("value_cents"),
-            F.min("event_id").alias("min_ev"),
-            F.max("event_id").alias("max_ev"),
-        ],
+        aggs={
+            "n_events": (F.count(F.lit(1)), "count"),
+            "value_cents": (F.sum(F.floor(F.col("value") * 100).cast("long")), "sum"),
+            "min_ev": (F.min("event_id"), "min"),
+            "max_ev": (F.max("event_id"), "max"),
+        },
     )
     # exact COUNT(DISTINCT user_id) under skew: dedup (type, user) pairs
     # first (salt-free — the pair key is already high-cardinality), then

@@ -1,23 +1,25 @@
-"""Streaming exact deduplication: keep a corpus-wide dedup ledger
-(content hash → keeper id + duplicate count) current over an unbounded
-document stream.
+"""Streaming ledgers over unbounded document and crawl streams: the
+exact and perceptual dedup ledgers, the codec triage, the WARC census and
+the WARC extraction lanes.
 
 Why not ``dropDuplicates`` on the stream: corpus dedup state is
 unbounded by design (every content hash ever seen), which in the state
 store means O(corpus) memory with no watermark to evict by — and a
 watermark would silently re-admit old duplicates. Here the state IS the
-ledger table: each micro-batch folds its own (hash, min id, count)
-aggregate into the committed ledger through ``stream_sketch_rollup``'s
-exactly-once machinery (the applied batch id commits atomically with
-the snapshot, so an at-least-once ``foreachBatch`` replay can never
-double-count — the same guard the sketch rollups rely on).
+ledger table.
 
-Because the fold (MIN for the keeper, SUM for the count) is associative
-and commutative, the maintained ledger is IDENTICAL to the batch
-``exact_dedup`` of the full history — under ANY arrival order or batch
+Exactly-once posture, shared by every ledger here: each micro-batch
+builds its own small per-key aggregate (decode, sniff or parse happen
+inside the batch), and ``stream_sketch_rollup`` folds it into the
+committed ledger with `operators.sketch.fold_partials` (MIN for keeper
+and first ids, SUM for counts and bytes). That fold is associative and
+commutative, so the maintained ledger is IDENTICAL to the batch
+aggregate of the full history — under ANY arrival order or batch
 slicing, not merely first-seen-wins — which is what the tests assert.
-The shuffle carries 32-byte hashes and counts, never text: the same
-100 TB posture as the batch operator (operators/dedup.py).
+The applied batch id commits atomically with each snapshot, so an
+at-least-once ``foreachBatch`` replay can never double-count. The
+shuffle carries hashes, lane keys and counts, never text or payloads:
+the same 100 TB posture as the batch operators (operators/dedup.py).
 """
 
 from __future__ import annotations
@@ -28,6 +30,7 @@ from pyspark.sql.streaming import StreamingQuery
 
 from ..operators.dedup import exact_dedup
 from ..operators.multimodal import dhash_images
+from ..operators.sketch import fold_partials
 from ..plans.materialize import TableStore
 from .sketch import stream_sketch_rollup
 
@@ -47,24 +50,13 @@ def stream_exact_dedup(
     raises ``dup_count`` and keeps the smallest id as keeper. Downstream
     consumers anti-join their batch against the ledger (or join and keep
     ``id == keeper``) to admit only first copies."""
-    keeper = f"keeper_{id_col}"
-
-    def merge(prev: DataFrame, new: DataFrame) -> DataFrame:
-        return (
-            prev.unionByName(new)
-            .groupBy("text_hash")
-            .agg(
-                F.min(keeper).alias(keeper),
-                F.sum("dup_count").alias("dup_count"),
-            )
-        )
-
+    kinds = {f"keeper_{id_col}": "min", "dup_count": "sum"}
     return stream_sketch_rollup(
         source_stream,
         store,
         table,
         build=lambda b: exact_dedup(b, text_col, id_col),
-        merge=merge,
+        merge=lambda prev, new: fold_partials([prev, new], ["text_hash"], kinds),
         checkpoint_dir=checkpoint_dir,
         available_now=available_now,
     )
@@ -90,12 +82,9 @@ def stream_perceptual_dedup(
     is what image-crawl dedup actually needs (the same photo arrives
     through dozens of thumbnailing proxies).
 
-    Same exactly-once posture as ``stream_exact_dedup``: the MIN/SUM
-    fold is associative+commutative (ledger == the batch dhash+groupBy
-    of full history under any slicing) and the committed batch id guards
-    foreachBatch replays. Decode happens inside the micro-batch's Arrow
-    stage; the ledger shuffle carries two 4-byte halves and counts —
-    pixels never shuffle, never persist.
+    Decode happens inside the micro-batch's Arrow stage; the ledger
+    shuffle carries two 4-byte halves and counts — pixels never shuffle,
+    never persist.
 
     ``on_error`` follows the batch quarantine contract (one truncated
     file in 10^9 must quarantine, not kill the streaming query) and so
@@ -105,24 +94,16 @@ def stream_perceptual_dedup(
     NULL hashes and are filtered before the fold so they can never form
     a NULL-key ledger row; ``'fail'`` restores strict-audit behavior."""
     keeper = f"keeper_{id_col}"
+    keys = ["dhash_hi", "dhash_lo"]
+    kinds = {keeper: "min", "dup_count": "sum"}
 
     def build(b: DataFrame) -> DataFrame:
         fp = dhash_images(b, id_col, payload_col, on_error=on_error)
         if on_error == "tag":
             fp = fp.filter(F.col("err").isNull())
-        return fp.groupBy("dhash_hi", "dhash_lo").agg(
+        return fp.groupBy(*keys).agg(
             F.min("id").alias(keeper),
             F.count(F.lit(1)).alias("dup_count"),
-        )
-
-    def merge(prev: DataFrame, new: DataFrame) -> DataFrame:
-        return (
-            prev.unionByName(new)
-            .groupBy("dhash_hi", "dhash_lo")
-            .agg(
-                F.min(keeper).alias(keeper),
-                F.sum("dup_count").alias("dup_count"),
-            )
         )
 
     return stream_sketch_rollup(
@@ -130,7 +111,7 @@ def stream_perceptual_dedup(
         store,
         table,
         build=build,
-        merge=merge,
+        merge=lambda prev, new: fold_partials([prev, new], keys, kinds),
         checkpoint_dir=checkpoint_dir,
         available_now=available_now,
     )
@@ -153,14 +134,9 @@ def stream_codec_triage(
     (a new proxy starts emitting WebP; an MP3 flood arrives) instead
     of discovering it in the nightly batch.
 
-    Same exactly-once posture as ``stream_exact_dedup``: sniffing is a
-    header-only map inside the micro-batch (``sniff_media`` never
-    raises — garbage is a lane, not an error, so no on_error knob is
-    needed), the fold (SUM of counts, MIN of first id) is associative
-    and commutative, and the committed batch id guards foreachBatch
-    replays — the ledger equals the batch triage of full history under
-    any slicing.  Scale shape: per batch the shuffle carries a handful
-    of 5-column lane rows, never payloads."""
+    Sniffing is a header-only map inside the micro-batch
+    (``sniff_media`` never raises — garbage is a lane, not an error, so
+    no on_error knob is needed)."""
     from ..operators.multimodal import sniff_media
 
     first = f"first_{id_col}"
@@ -176,22 +152,13 @@ def stream_codec_triage(
             )
         )
 
-    def merge(prev: DataFrame, new: DataFrame) -> DataFrame:
-        return (
-            prev.unionByName(new)
-            .groupBy(*keys)
-            .agg(
-                F.sum("n_payloads").alias("n_payloads"),
-                F.min(first).alias(first),
-            )
-        )
-
+    kinds = {"n_payloads": "sum", first: "min"}
     return stream_sketch_rollup(
         source_stream,
         store,
         table,
         build=build,
-        merge=merge,
+        merge=lambda prev, new: fold_partials([prev, new], keys, kinds),
         checkpoint_dir=checkpoint_dir,
         available_now=available_now,
     )
@@ -210,8 +177,8 @@ def stream_warc_html(
 ) -> StreamingQuery:
     """EXTRACTION-lane ledger over an unbounded crawl stream — the
     streaming twin of the q247 WARC-to-corpus composition (extraction →
-    html text → canonical URL → robots gate → dedup), maintained
-    exactly-once with per-lane decoded/quarantined counts so a 100 TB
+    html text → canonical URL → robots gate → dedup), with per-lane
+    decoded/quarantined counts so a 100 TB
     build run INCREMENTALLY watches its extraction health in flight
     instead of discovering a quarantine flood in the nightly batch
     (VERDICT r8 missing #2 / ask #3).
@@ -236,15 +203,10 @@ def stream_warc_html(
     (every decoded page lands in 'page').  It must be stable across
     restarts — it participates in every micro-batch's fold.
 
-    Exactly-once posture, same as ``stream_warc_census``: the per-batch
-    build is one Arrow map pass over the crawl bytes (O(header +
-    body_max) memory per record) plus codegen projections and ONE
-    broadcast rule join — the corpus never shuffles its raw bytes; the
-    fold (COUNT→SUM, MIN for keeper_url) is associative and commutative,
-    so the ledger equals the batch composition of full history under ANY
-    arrival order or batch slicing; the committed batch id guards
-    at-least-once foreachBatch replays.  The shuffle carries 32-byte
-    keys and counts, never page text."""
+    The per-batch build is one Arrow map pass over the crawl bytes
+    (O(header + body_max) memory per record) plus codegen projections
+    and ONE broadcast rule join — the corpus never shuffles its raw
+    bytes."""
     from ..operators.text import (
         canonicalize_url,
         extract_html_text,
@@ -311,22 +273,13 @@ def stream_warc_html(
             )
         )
 
-    def merge(prev: DataFrame, new: DataFrame) -> DataFrame:
-        return (
-            prev.unionByName(new)
-            .groupBy(*keys)
-            .agg(
-                F.min("keeper_url").alias("keeper_url"),
-                F.sum("n_pages").alias("n_pages"),
-            )
-        )
-
+    kinds = {"keeper_url": "min", "n_pages": "sum"}
     return stream_sketch_rollup(
         source_stream,
         store,
         table,
         build=build,
-        merge=merge,
+        merge=lambda prev, new: fold_partials([prev, new], keys, kinds),
         checkpoint_dir=checkpoint_dir,
         available_now=available_now,
     )
@@ -349,15 +302,9 @@ def stream_warc_census(
     (a domain starts 404ing; a PDF flood arrives) instead of
     discovering it in the nightly batch.
 
-    Same exactly-once posture as ``stream_codec_triage``: record
-    walking is a header-only map inside the micro-batch
+    Record walking is a header-only map inside the micro-batch
     (``warc_triage(on_error='tag')`` turns garbage into an 'invalid'
-    lane instead of an exception), the fold (SUM of counts/bytes, MIN
-    of first id) is associative and commutative, and the committed
-    batch id guards foreachBatch replays — the ledger equals the batch
-    census of full history under any slicing.  Scale shape: per batch
-    the shuffle carries a handful of 6-column lane rows, never
-    payloads."""
+    lane instead of an exception)."""
     from ..sources.warc import warc_triage
 
     first = f"first_{id_col}"
@@ -374,23 +321,13 @@ def stream_warc_census(
             )
         )
 
-    def merge(prev: DataFrame, new: DataFrame) -> DataFrame:
-        return (
-            prev.unionByName(new)
-            .groupBy(*keys)
-            .agg(
-                F.sum("n_records").alias("n_records"),
-                F.sum("total_bytes").alias("total_bytes"),
-                F.min(first).alias(first),
-            )
-        )
-
+    kinds = {"n_records": "sum", "total_bytes": "sum", first: "min"}
     return stream_sketch_rollup(
         source_stream,
         store,
         table,
         build=build,
-        merge=merge,
+        merge=lambda prev, new: fold_partials([prev, new], keys, kinds),
         checkpoint_dir=checkpoint_dir,
         available_now=available_now,
     )

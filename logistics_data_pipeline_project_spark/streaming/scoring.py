@@ -8,9 +8,9 @@ sum_margin): every component is an integer SUM, associative and
 commutative, so the folded table is IDENTICAL to scoring the full
 delivered history in one batch — under any arrival order, any batch
 slicing, and across checkpointed restarts. Replayed micro-batches
-cannot double-count: the fold goes through ``stream_sketch_rollup``'s
-committed-batch-id guard (same exactly-once machinery as the dedup
-ledger and sketch rollups).
+cannot double-count: the fold is `operators.sketch.fold_partials` behind
+``stream_sketch_rollup``'s committed-batch-id guard (the exactly-once
+posture of the ledgers in streaming/dedup.py).
 
 This is the deploy leg of the curation DAG's train-then-score loop
 (models/curation.py): train full-batch on the corpus, freeze the
@@ -27,6 +27,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
+from ..operators.sketch import fold_partials
 from ..plans.materialize import TableStore
 from .sketch import stream_sketch_rollup
 
@@ -77,24 +78,13 @@ def stream_quality_tally(
 ) -> StreamingQuery:
     """Maintain ``store[table]`` = ``quality_tally`` of everything the
     stream has delivered."""
-
-    def merge(prev: DataFrame, new: DataFrame) -> DataFrame:
-        return (
-            prev.unionByName(new)
-            .groupBy(group_col)
-            .agg(
-                F.sum("n_docs").alias("n_docs"),
-                F.sum("n_positive").alias("n_positive"),
-                F.sum("sum_margin").alias("sum_margin"),
-            )
-        )
-
+    kinds = {"n_docs": "sum", "n_positive": "sum", "sum_margin": "sum"}
     return stream_sketch_rollup(
         source_stream,
         store,
         table,
         build=lambda b: quality_tally(b, weights, feature_cols, group_col),
-        merge=merge,
+        merge=lambda prev, new: fold_partials([prev, new], [group_col], kinds),
         checkpoint_dir=checkpoint_dir,
         available_now=available_now,
     )

@@ -17,7 +17,9 @@ maintained sketch is IDENTICAL to the batch sketch of the full history
 
 The same ``build``/``merge`` pair works in batch backfills
 (plans/incremental.py) and here — one sketch definition, three
-refresh modes (batch, incremental, streaming)."""
+refresh modes (batch, incremental, streaming). Every group-by merge,
+here and there, is `operators.sketch.fold_partials`; ``merge`` stays a
+callable because KMV's bottom-k merge is not a group-by fold."""
 
 from __future__ import annotations
 
@@ -106,7 +108,7 @@ def stream_hll_distinct(
         build=lambda b: hll_registers(
             b, key_col, keys=keys, index_chars=index_chars, rank_chars=rank_chars
         ),
-        merge=lambda prev, new: merge_hll_sketches(prev, new),
+        merge=merge_hll_sketches,
         checkpoint_dir=checkpoint_dir,
         available_now=available_now,
     )

@@ -20,7 +20,10 @@ from __future__ import annotations
 import hashlib
 import json
 import os
+import subprocess
 import sys
+
+import pytest
 
 sys.path.insert(0, os.path.join(os.path.dirname(__file__), ".."))
 
@@ -261,6 +264,30 @@ def test_media_codec_goldens():
     )
     bad = [name for name in want if got[name] != want[name]]
     assert not bad, f"codec byte streams drifted for: {bad}"
+
+
+#: OpenBLAS kernels numpy may pick per host, and the cpuinfo flag each
+#: needs. The codecs must not depend on which one the host gets.
+_BLAS_KERNELS = {"": None, "Prescott": "pni", "Haswell": "avx2", "SkylakeX": "avx512f"}
+
+
+@pytest.mark.parametrize("coretype", list(_BLAS_KERNELS), ids=lambda c: c or "default")
+def test_media_goldens_under_every_blas_kernel(coretype):
+    flag = _BLAS_KERNELS[coretype]
+    if flag is not None:
+        with open("/proc/cpuinfo") as f:
+            flags = next(
+                (ln.split(":", 1)[1].split() for ln in f if ln.startswith("flags")),
+                [],
+            )
+        if flag not in flags:
+            pytest.skip(f"CPU lacks {flag}, which the {coretype} kernel needs")
+    env = {**os.environ, "OPENBLAS_CORETYPE": coretype}
+    run = subprocess.run(
+        [sys.executable, os.path.abspath(__file__)],
+        env=env, capture_output=True, text=True, timeout=300,
+    )
+    assert run.returncode == 0, run.stderr[-2000:]
 
 
 if __name__ == "__main__":

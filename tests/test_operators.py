@@ -1018,6 +1018,42 @@ def test_kmv_set_estimates_accuracy(spark):
     assert abs(r.inter_est - 2000) / 2000 < 0.40, r.inter_est
 
 
+@pytest.mark.parametrize("n_parts", [1, 2, 5])
+def test_fold_partials_matches_one_shot_aggregate(spark, n_parts):
+    """Partials of any split fold into the one-shot aggregate for every
+    kind, with long and decimal measures keeping their dtypes."""
+    from logistics_data_pipeline_project_spark.operators.sketch import fold_partials
+
+    df = spark.createDataFrame(
+        [(i, f"g{i % 3}", i * 7 % 11, f"{i * 13 % 17 - 8}.25", f"u{i % 9}") for i in range(60)],
+        "id long, g string, x long, d string, u string",
+    ).withColumn("d", F.col("d").cast("decimal(10,2)"))
+    aggs = {
+        "n": (F.count(F.lit(1)), "count"),
+        "sx": (F.sum("x"), "sum"),
+        "sd": (F.sum("d"), "sum"),
+        "lo": (F.min("d"), "min"),
+        "hi": (F.max("x"), "max"),
+        "users": (F.hll_sketch_agg("u"), "approx_distinct"),
+    }
+
+    def partial(frame):
+        return frame.groupBy("g").agg(*[c.alias(a) for a, (c, _) in aggs.items()])
+
+    one_shot = partial(df)
+    pieces = [partial(df.filter(F.col("id") % n_parts == p)) for p in range(n_parts)]
+    folded = fold_partials(pieces, ["g"], {a: kind for a, (_, kind) in aggs.items()})
+    assert folded.dtypes == one_shot.dtypes
+
+    def rows(frame):
+        est = frame.withColumn("users", F.hll_sketch_estimate("users"))
+        return sorted(tuple(r) for r in est.collect())
+
+    assert rows(folded) == rows(one_shot)
+    with pytest.raises(ValueError, match="kind must be one of"):
+        fold_partials(pieces, ["g"], {"sx": "avg"})
+
+
 def test_incremental_join_rollup_matches_full_rebuild(spark, tmp_path):
     """Delta-join IVM: folding (dA, dB) batches equals rebuilding the
     join-aggregate from the full history — including the dA x dB pairs

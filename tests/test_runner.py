@@ -427,6 +427,39 @@ def test_incremental_rollup_matches_full_recompute(spark, tmp_path):
     assert store.current_version("rollup") == before + 1
 
 
+def test_read_rollup_dtypes_stable_across_runs(spark, tmp_path):
+    """Folding a new increment keeps every stored measure's dtype: the
+    decimal sum is decimal(37,2) after run 1 and stays so, instead of
+    widening one digit per fold."""
+    from pyspark.sql import functions as F
+
+    from logistics_data_pipeline_project_spark.plans.incremental import (
+        incremental_rollup,
+        read_rollup,
+    )
+
+    store = TableStore(spark, str(tmp_path / "wh"))
+    full = spark.createDataFrame(
+        [(d, k, float(d * 3 + i)) for d in (1, 2, 3) for i, k in enumerate("abc")],
+        "day int, k string, v double",
+    )
+    measures = {
+        "n": ("*", "count"),
+        "total": ("v", "sum"),
+        "vmin": ("v", "min"),
+        "vmax": ("day", "max"),
+        "users": ("k", "approx_distinct"),
+    }
+    seen = []
+    for d in (1, 2, 3):
+        incremental_rollup(
+            store, "rollup", full.filter(F.col("day") <= d), ["k"], measures, "day"
+        )
+        seen.append(read_rollup(store, "rollup").dtypes)
+    assert dict(seen[0])["total"] == "decimal(37,2)"
+    assert seen[1] == seen[0] and seen[2] == seen[0], seen
+
+
 def test_table_store_append_schema_evolution(spark, tmp_path):
     store = TableStore(spark, str(tmp_path / "wh"), retain_versions=4)
     store.overwrite("t", spark.createDataFrame([(1, "x")], "id long, a string"))

@@ -66,14 +66,17 @@ def test_bucketed_join_has_no_exchange(spark, sf_dir, tmp_path, no_broadcast):
 
 def test_salted_aggregate_matches_plain(spark, sf_dir):
     ev = load(spark, sf_dir, "events")
-    aggs = [
-        F.count(F.lit(1)).alias("n_events"),
-        F.sum(F.col("value").cast("decimal(18,2)")).alias("sum_value"),
-        F.min("ts").alias("min_ts"),
-        F.max("ts").alias("max_ts"),
-    ]
+    aggs = {
+        "n_events": (F.count(F.lit(1)), "count"),
+        "sum_value": (F.sum(F.col("value").cast("decimal(18,2)")), "sum"),
+        "min_ts": (F.min("ts"), "min"),
+        "max_ts": (F.max("ts"), "max"),
+    }
     plain = {
-        r["event_type"]: r for r in ev.groupBy("event_type").agg(*aggs).collect()
+        r["event_type"]: r
+        for r in ev.groupBy("event_type")
+        .agg(*[c.alias(a) for a, (c, _) in aggs.items()])
+        .collect()
     }
     salted = {
         r["event_type"]: r
@@ -83,6 +86,23 @@ def test_salted_aggregate_matches_plain(spark, sf_dir):
     for k in plain:
         for c in ("n_events", "sum_value", "min_ts", "max_ts"):
             assert plain[k][c] == salted[k][c], (k, c)
+
+
+def test_salted_aggregate_merges_by_declared_kind(spark, sf_dir):
+    """Phase 2 merges each column by the kind it is declared with, not by
+    its alias: 'lowest'/'highest' are a min and a max, and over 8 salts
+    summing the salt minima would give a different answer."""
+    ev = load(spark, sf_dir, "events")
+    aggs = {
+        "lowest": (F.min("value"), "min"),
+        "highest": (F.max("value"), "max"),
+        "rows": (F.count(F.lit(1)), "count"),
+        "total": (F.sum(F.col("value").cast("decimal(18,2)")), "sum"),
+    }
+    plain = ev.groupBy("event_type").agg(*[c.alias(a) for a, (c, _) in aggs.items()])
+    salted = salted_aggregate(ev, ["event_type"], aggs, n_salts=8)
+    assert salted.dtypes == plain.dtypes
+    assert sorted(salted.collect()) == sorted(plain.collect())
 
 
 def test_salted_join_matches_plain(spark, sf_dir):
