@@ -187,49 +187,39 @@ def scd2_apply(
     A key is "changed" when any tracked column differs null-safely from its
     current row, or when the key is brand new. Changed keys get their
     current row closed (valid_to = effective_ts, is_current = false) and a
-    new open row appended.
+    new open row appended. NULL-key updates are dropped, and a key whose
+    rows are all closed is not reopened.
+
+    One full-outer join of all of ``history`` with ``updates`` on the key:
+    each joined row yields its history row (closed when it is the changed
+    current row) and, once per key, the update's new open row.
     """
-    cur = history.filter(F.col(current_col))
-    changed_expr = None
-    for c in tracked_cols:
-        ne = ~F.col(f"cur.{c}").eqNullSafe(F.col(f"upd.{c}"))
-        changed_expr = ne if changed_expr is None else (changed_expr | ne)
-
-    upd = updates.alias("upd")
-    pair = cur.alias("cur").join(upd, on=F.col(f"cur.{key}") == F.col(f"upd.{key}"), how="inner")
-    changed_keys = pair.filter(changed_expr).select(F.col(f"cur.{key}").alias(key)).distinct()
-    new_keys = upd.join(history.select(key).distinct(), on=key, how="left_anti").select(key).distinct()
-    affected = changed_keys.unionByName(new_keys)
-
     hist_cols = history.columns
+    types = {c: history.schema[c].dataType for c in hist_cols}
+    h = history.select(F.col(key).alias("__hk"), F.struct(*hist_cols).alias("__h"))
+    u = updates.select(F.col(key).alias("__uk"), F.struct(*updates.columns).alias("__u"))
+    j = h.join(u, F.col("__hk") == F.col("__uk"), "full_outer")
 
-    # 1. untouched history rows (non-current rows + current rows of unaffected keys)
-    untouched_current = cur.join(affected, on=key, how="left_anti")
-    closed_rows = (
-        cur.join(changed_keys, on=key, how="left_semi")
-        .withColumn(valid_to_col, effective_ts)
-        .withColumn(current_col, F.lit(False))
+    changed = F.lit(False)
+    for c in tracked_cols:
+        changed = changed | ~F.col(f"__h.{c}").eqNullSafe(F.col(f"__u.{c}"))
+    close = F.coalesce(F.col(f"__h.{current_col}"), F.lit(False)) & F.col("__uk").isNotNull() & changed
+    closed_at = F.when(close, effective_ts.cast(types[valid_to_col]))
+    old = (  # NULL when there is no history row: withField keeps a NULL struct NULL
+        F.col("__h")
+        .withField(valid_to_col, closed_at.otherwise(F.col(f"__h.{valid_to_col}")))
+        .withField(current_col, F.col(f"__h.{current_col}") & ~close)
     )
-    non_current = history.filter(~F.col(current_col))
-
-    # 2. new versions for affected keys
-    new_rows = updates.join(affected, on=key, how="left_semi")
-    for c in hist_cols:
-        if c not in new_rows.columns:
-            new_rows = new_rows.withColumn(c, F.lit(None).cast(history.schema[c].dataType))
-    new_rows = (
-        new_rows.withColumn(valid_from_col, effective_ts)
-        .withColumn(valid_to_col, F.lit(None).cast(history.schema[valid_to_col].dataType))
-        .withColumn(current_col, F.lit(True))
-        .select(*hist_cols)
+    opened = {valid_from_col: effective_ts, valid_to_col: F.lit(None), current_col: F.lit(True)}
+    new = F.when(
+        F.col("__uk").isNotNull() & (F.col("__h").isNull() | close),
+        F.struct(*[
+            opened.get(c, F.col(f"__u.{c}") if c in updates.columns else F.lit(None))
+            .cast(types[c]).alias(c)
+            for c in hist_cols
+        ]),
     )
-
-    return (
-        non_current.select(*hist_cols)
-        .unionByName(untouched_current.select(*hist_cols))
-        .unionByName(closed_rows.select(*hist_cols))
-        .unionByName(new_rows)
-    )
+    return j.select(F.inline(F.filter(F.array(old, new), lambda r: r.isNotNull())))
 
 
 def scd2_as_of(

@@ -27,7 +27,11 @@ so a model may overwrite its own table with a plan over its current
 snapshot without checkpointing it first. The rewrites of the current
 snapshot (``compact``, ``purge_keys``, ``optimize_zorder``, a drifting
 ``append``) all commit through ``overwrite`` and keep the snapshot's
-``_META.json``.
+``_META.json``. That file may carry an incremental model's watermark,
+observed during the write that produced the version (``plans.runner``);
+``compact`` keeps every row, so the watermark stays exact, and
+``purge_keys`` keeps it as it was, so the next incremental run does not
+merge the purged rows back from the source.
 
 An incremental model can therefore safely read its own previous state
 while computing the next one, and a bad batch is undone in O(1). The API
@@ -46,8 +50,9 @@ import json
 import os
 import shutil
 import uuid
+from collections.abc import Callable
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
 from pyspark.sql.types import ArrayType, DataType, MapType, StructField, StructType
 
 _POINTER = "_LATEST"
@@ -55,6 +60,9 @@ _VPREFIX = "v_"
 _META = "_META.json"
 _STATS = "_STATS.json"
 _SCHEMA = "_SCHEMA.json"
+
+#: a write's metadata: a JSON-able dict, or a callable run once the data lands
+Meta = dict | Callable[[], dict] | None
 
 
 def _dump_json(vdir: str, fname: str, obj) -> None:
@@ -181,11 +189,14 @@ class TableStore:
             raise KeyError(f"no table {name!r}")
         return cur
 
-    def _publish(self, name: str, version: int, schema: StructType, meta: dict | None) -> None:
+    def _publish(self, name: str, version: int, schema: StructType, meta: Meta) -> None:
         """Every write's commit tail once its data files are in place:
-        schema and meta files, pointer swap, GC."""
+        schema and meta files (a callable ``meta`` is evaluated now),
+        pointer swap, GC."""
         vdir = self._vdir(name, version)
         _dump_json(vdir, _SCHEMA, _nullable(schema).jsonValue())
+        if callable(meta):
+            meta = meta()
         if meta is not None:
             _dump_json(vdir, _META, meta)
         self._commit_pointer(name, version)
@@ -222,15 +233,16 @@ class TableStore:
         vdir = self._resolve(name, version)
         return self._reader(vdir).parquet(vdir)
 
-    def overwrite(
-        self, name: str, df: DataFrame, meta: dict | None = None
-    ) -> None:
+    def overwrite(self, name: str, df: DataFrame, meta: Meta = None) -> None:
         """Commit ``df`` as a new snapshot version (atomic pointer swap).
 
         ``meta`` (a small JSON-able dict, e.g. a stream's last applied
         batch id) is written INTO the version directory before the pointer
         swap, so it commits atomically with the data — readers can never
-        see a snapshot without its metadata or vice versa. The read schema
+        see a snapshot without its metadata or vice versa. ``meta`` may
+        also be a zero-argument callable returning that dict: it runs after
+        the data files land, so values observed during the write (an
+        incremental model's watermark) commit with it. The read schema
         commits the same way. Spark ignores ``_``-prefixed files, so the
         parquet scan is unaffected."""
         if self._has_legacy_files(name):
@@ -460,23 +472,24 @@ class TableStore:
         commit the result as a new snapshot — the right-to-be-forgotten
         primitive. Returns (rows_purged, new_version).
 
-        The deletion is ONE broadcast anti-join over the current snapshot
-        (the key list is small by nature), so at 100 TB the purge costs a
+        The deletion is ONE broadcast left join over the current snapshot
+        (the key list is small by nature) whose hits are counted by an
+        observation while the rewrite runs, so at 100 TB the purge costs a
         single scan+rewrite, and the atomic pointer swap means readers
-        never observe a half-purged table; the snapshot's metadata carries
-        over, as in every rewrite. NOTE: retained older snapshots
-        still contain the purged rows (that is what makes rollback safe);
-        for a compliance-complete erasure, follow with retention GC by
-        committing ``retain_versions`` new versions or lowering retention
-        — the same two-phase contract Delta's VACUUM has."""
+        never observe a half-purged table; rows with a NULL key are kept,
+        and the snapshot's metadata carries over, as in every rewrite.
+        NOTE: retained older snapshots still contain the purged rows
+        (that is what makes rollback safe); for a compliance-complete
+        erasure, follow with retention GC by committing
+        ``retain_versions`` new versions or lowering retention — the same two-phase contract Delta's VACUUM has."""
         self._require(name)
         df = self.read(name)
         klist = keys.select(F.col(keys.columns[0]).alias(key_col)).distinct()
-        kept = df.join(F.broadcast(klist), key_col, "left_anti")
-        before = df.count()
-        self._rewrite(name, kept)
-        after = self.read(name).count()
-        return before - after, self.current_version(name)
+        hits = Observation()
+        joined = df.join(F.broadcast(klist.withColumn("__hit", F.lit(True))), key_col, "left")
+        joined = joined.observe(hits, F.count("__hit").alias("purged"))
+        self._rewrite(name, joined.filter(F.col("__hit").isNull()).select(*df.columns))
+        return hits.get["purged"], self.current_version(name)
 
     # -- file-level data skipping ----------------------------------------
 

@@ -19,9 +19,11 @@ runs them all in one pass per table at most.
 from __future__ import annotations
 
 from collections.abc import Sequence
+from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark import inheritable_thread_target
+from pyspark.sql import DataFrame, SparkSession, functions as F
 
 
 @dataclass
@@ -114,13 +116,21 @@ def run_checks(
     checks: Sequence[tuple[str, str, "callable"]],
 ) -> list[CheckResult]:
     """Run a suite of (check_name, table_name, thunk → violation count);
-    returns per-check results. Callers gate the pipeline on
+    returns per-check results in input order. Callers gate the pipeline on
     ``all(r.passed for r in results)`` — the engine's `dbt test >> dbt
-    run` ordering."""
-    results = []
-    for name, table, thunk in checks:
-        violations = int(thunk())
-        results.append(
-            CheckResult(name=name, table=table, passed=violations == 0, violations=violations)
-        )
-    return results
+    run` ordering.
+
+    The thunks run concurrently on ``min(len(checks), defaultParallelism)``
+    threads, each wrapped by its own ``inheritable_thread_target`` call
+    (see the threading note in ``plans.runner``)."""
+    if not checks:
+        return []
+    spark = SparkSession.builder.getOrCreate()
+    threads = min(len(checks), spark.sparkContext.defaultParallelism)
+    with ThreadPoolExecutor(max_workers=threads) as pool:
+        futures = [pool.submit(inheritable_thread_target(spark)(thunk)) for _, _, thunk in checks]
+        counts = [int(f.result()) for f in futures]
+    return [
+        CheckResult(name=name, table=table, passed=violations == 0, violations=violations)
+        for (name, table, _), violations in zip(checks, counts)
+    ]

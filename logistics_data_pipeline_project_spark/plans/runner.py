@@ -7,7 +7,8 @@ dags/snowflake-EDW-ETL-dag.py:549-561), each materialized per its config:
 - ``view``         → temp view (dbt materialized='view')
 - ``table``        → atomic parquet overwrite (CTAS)
 - ``incremental``  → first run CTAS; then source-watermark + merge by
-                     unique_key (dbt incremental_strategy='merge', §M5)
+                     unique_key (dbt incremental_strategy='merge', §M5);
+                     the watermark commits in the version's ``_META.json``
 - ``snapshot``     → SCD2 history via operators.merge.scd2_apply (§M6)
 
 Every model run records a row for the ETL_AUDIT_LOG table (§M7,
@@ -16,7 +17,11 @@ finished timestamps, rows processed. The rows are buffered and committed
 as ONE append per ``run()`` (plus one per failing model, so a failure
 alert always finds its FAILED row committed).
 
-Threading note: Spark sessions are thread-safe for job submission; running
+Scheduling and threading note: one pool of ``threads`` threads serves a
+whole ``run()``; a model is submitted once its own dependencies have
+finished, so a slow model delays only what depends on it. After a failure
+nothing new is submitted: running models finish and the first failure is
+raised. Spark sessions are thread-safe for job submission; running
 independent models concurrently lets the scheduler interleave their stages
 exactly like dbt's thread pool does against a warehouse. Pool threads
 inherit the caller's Spark local properties (job group, scheduler pool),
@@ -34,8 +39,9 @@ import datetime as dt
 import threading
 import uuid
 from collections.abc import Callable, Sequence
-from concurrent.futures import ThreadPoolExecutor
+from concurrent.futures import FIRST_COMPLETED, ThreadPoolExecutor, wait
 from dataclasses import dataclass, field
+from graphlib import CycleError, TopologicalSorter
 
 from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame, Observation, Row, SparkSession, functions as F
@@ -51,6 +57,11 @@ from .materialize import TableStore
 from .quality import DataQualityError, gate  # noqa: F401 (DataQualityError: re-export)
 
 AUDIT_TABLE = "etl_audit_log"
+#: ``_META.json`` keys of an incremental model's committed watermarks
+#: ({column: max rendered as a string}) and the session time zone they
+#: were rendered in
+WATERMARKS = "watermarks"
+WATERMARK_TZ = "watermark_time_zone"
 
 #: model fn signature: (spark, resolve) -> DataFrame, where resolve(name)
 #: returns a dependency's DataFrame (ref()) — reading the *materialized*
@@ -114,22 +125,6 @@ class ModelRunner:
 
     # -- execution ----------------------------------------------------------
 
-    def _toposort(self, selected: set[str]) -> list[list[str]]:
-        """Kahn's algorithm returning *levels* (independent groups run
-        concurrently)."""
-        pending = {n: {d for d in self.models[n].deps if d in selected} for n in selected}
-        levels: list[list[str]] = []
-        while pending:
-            ready = sorted(n for n, ds in pending.items() if not ds)
-            if not ready:
-                raise ValueError(f"dependency cycle among {sorted(pending)}")
-            levels.append(ready)
-            for n in ready:
-                del pending[n]
-            for ds in pending.values():
-                ds.difference_update(ready)
-        return levels
-
     def _audit(self, model: str, run_id: str, status: str, started: dt.datetime, rows: int) -> None:
         """Buffer one audit row; ``_flush_audit`` commits the buffer."""
         row = Row(
@@ -149,13 +144,36 @@ class ModelRunner:
             if rows:
                 self.store.append(AUDIT_TABLE, self.spark.createDataFrame(rows))
 
-    def _write_counted(self, name: str, df: DataFrame) -> int:
+    def _write_counted(self, name: str, df: DataFrame, watermark_col: str | None = None) -> int:
         """Atomic overwrite + audit row count in ONE job: an Observation
         accumulates count(*) while the parquet write runs, replacing the
-        read-back-and-count second scan (2× the write-path I/O at scale)."""
+        read-back-and-count second scan (2× the write-path I/O at scale).
+        With ``watermark_col`` it also observes the column's max, cast to
+        a string in the session time zone so it casts back exactly, and
+        commits it and the zone in the new version's ``_META.json``."""
         obs = Observation()
-        self.store.overwrite(name, df.observe(obs, F.count(F.lit(1)).alias("rows")))
+        metrics = [F.count(F.lit(1)).alias("rows")]
+        meta = None
+        if watermark_col:
+            metrics.append(F.max(watermark_col).cast("string").alias("wm"))
+            tz = self.spark.conf.get("spark.sql.session.timeZone")
+            meta = lambda: {WATERMARKS: {watermark_col: obs.get["wm"]}, WATERMARK_TZ: tz}
+        self.store.overwrite(name, df.observe(obs, *metrics), meta)
         return obs.get["rows"]
+
+    def _watermark(self, m: Model, target: DataFrame):
+        """The committed watermark of ``m``'s current version as a literal
+        of the column's type (None on an empty table); a version without
+        one (written before watermarks were committed), or with one
+        rendered in another session time zone, is scanned. A DST-ambiguous
+        local time casts to its earlier instant: rows re-merge, none skip."""
+        meta = self.store.meta(m.name)
+        committed = meta.get(WATERMARKS, {})
+        tz = self.spark.conf.get("spark.sql.session.timeZone")
+        if m.watermark_col not in committed or meta.get(WATERMARK_TZ) != tz:
+            return high_watermark(target, m.watermark_col)
+        wm = committed[m.watermark_col]
+        return None if wm is None else F.lit(wm).cast(target.schema[m.watermark_col].dataType)
 
     def _materialize(self, m: Model, df: DataFrame) -> int:
         if m.materialization == "view":
@@ -163,6 +181,7 @@ class ModelRunner:
             return df.count()
         if m.materialization == "table":
             return self._write_counted(m.name, df)
+        wm_col = m.watermark_col if m.materialization == "incremental" else None
         if not self.store.exists(m.name):
             # first run: CTAS; a snapshot opens every row's history
             if m.materialization == "snapshot":
@@ -171,16 +190,14 @@ class ModelRunner:
                     .withColumn("valid_to", F.lit(None).cast("timestamp"))
                     .withColumn("is_current", F.lit(True))
                 )
-            return self._write_counted(m.name, df)
+            return self._write_counted(m.name, df, wm_col)
         if m.materialization == "incremental":
             target = self.store.read(m.name)
             source = df
-            if m.watermark_col:
-                source = incremental_filter(
-                    source, m.watermark_col, high_watermark(target, m.watermark_col)
-                )
+            if wm_col:
+                source = incremental_filter(source, wm_col, self._watermark(m, target))
             latest = latest_rows(source, [m.unique_key], [F.desc(c) for c in m.dedup_order])
-            return self._write_counted(m.name, upsert(target, latest, [m.unique_key]))
+            return self._write_counted(m.name, upsert(target, latest, [m.unique_key]), wm_col)
         if m.materialization == "snapshot":
             history = self.store.read(m.name)
             updated = scd2_apply(
@@ -213,24 +230,35 @@ class ModelRunner:
 
     def run(self, select: Sequence[str] | None = None) -> str:
         """Run selected models (default all) in dependency order; returns
-        the run id. Models within a level run concurrently."""
+        the run id. A model starts as soon as its dependencies finish."""
         selected = set(select) if select else set(self.models)
         for n in selected:
             if n not in self.models:
                 raise KeyError(f"unknown model {n!r}")
-        run_id = uuid.uuid4().hex[:12]
+        graph = TopologicalSorter({n: set(self.models[n].deps) & selected for n in selected})
         try:
-            for level in self._toposort(selected):
-                if len(level) == 1:
-                    self._run_one(level[0], run_id)
-                else:
-                    with ThreadPoolExecutor(max_workers=self.threads) as pool:
-                        futures = []
-                        for n in level:  # one properties clone per task: see the threading note
+            graph.prepare()
+        except CycleError as exc:
+            raise ValueError(f"dependency cycle among {sorted(set(exc.args[1]))}") from None
+        run_id = uuid.uuid4().hex[:12]
+        failure: BaseException | None = None
+        try:
+            with ThreadPoolExecutor(max_workers=self.threads) as pool:
+                running = {}
+                while graph.is_active():
+                    if failure is None:
+                        for n in sorted(graph.get_ready()):
+                            # one properties clone per task: see the threading note
                             run_one = inheritable_thread_target(self.spark)(self._run_one)
-                            futures.append(pool.submit(run_one, n, run_id))
-                        for f in futures:
-                            f.result()
+                            running[pool.submit(run_one, n, run_id)] = n
+                    if not running:
+                        break
+                    finished, _ = wait(running, return_when=FIRST_COMPLETED)
+                    for f in finished:
+                        failure = failure or f.exception()
+                        graph.done(running.pop(f))
+            if failure is not None:
+                raise failure
         finally:
             self._flush_audit()
         return run_id

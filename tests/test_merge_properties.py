@@ -9,6 +9,9 @@ Properties:
   == one merge of the deduped union
 - SCD2 invariants: exactly one current row per key, history only grows,
   closed rows carry the effective timestamp
+- SCD2 differential: the one-join ``scd2_apply`` equals the earlier
+  six-join form (kept below as the oracle) on histories with NULL keys,
+  closed-only keys, unchanged rows, new keys and NULL tracked values
 """
 
 from __future__ import annotations
@@ -17,7 +20,7 @@ import datetime as dt
 
 import pytest
 from hypothesis import HealthCheck, given, settings, strategies as st
-from pyspark.sql import functions as F
+from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.types import (
     BooleanType,
     IntegerType,
@@ -169,8 +172,106 @@ upd_rows = st.lists(
 )
 
 
+def _scd2_apply_oracle(
+    history: DataFrame,
+    updates: DataFrame,
+    key: str,
+    tracked_cols,
+    effective_ts,
+    valid_from_col: str = "valid_from",
+    valid_to_col: str = "valid_to",
+    current_col: str = "is_current",
+) -> DataFrame:
+    """The six-join, two-distinct SCD2 form ``scd2_apply`` replaced: the
+    changed and new keys are collected first, then every history row is
+    routed to untouched / closed, and the affected keys' updates are
+    opened."""
+    cur = history.filter(F.col(current_col))
+    changed_expr = None
+    for c in tracked_cols:
+        ne = ~F.col(f"cur.{c}").eqNullSafe(F.col(f"upd.{c}"))
+        changed_expr = ne if changed_expr is None else (changed_expr | ne)
+
+    upd = updates.alias("upd")
+    pair = cur.alias("cur").join(upd, on=F.col(f"cur.{key}") == F.col(f"upd.{key}"), how="inner")
+    changed_keys = pair.filter(changed_expr).select(F.col(f"cur.{key}").alias(key)).distinct()
+    new_keys = upd.join(history.select(key).distinct(), on=key, how="left_anti").select(key).distinct()
+    affected = changed_keys.unionByName(new_keys)
+
+    hist_cols = history.columns
+    untouched_current = cur.join(affected, on=key, how="left_anti")
+    closed_rows = (
+        cur.join(changed_keys, on=key, how="left_semi")
+        .withColumn(valid_to_col, effective_ts)
+        .withColumn(current_col, F.lit(False))
+    )
+    non_current = history.filter(~F.col(current_col))
+
+    new_rows = updates.join(affected, on=key, how="left_semi")
+    for c in hist_cols:
+        if c not in new_rows.columns:
+            new_rows = new_rows.withColumn(c, F.lit(None).cast(history.schema[c].dataType))
+    new_rows = (
+        new_rows.withColumn(valid_from_col, effective_ts)
+        .withColumn(valid_to_col, F.lit(None).cast(history.schema[valid_to_col].dataType))
+        .withColumn(current_col, F.lit(True))
+        .select(*hist_cols)
+    )
+    return (
+        non_current.select(*hist_cols)
+        .unionByName(untouched_current.select(*hist_cols))
+        .unionByName(closed_rows.select(*hist_cols))
+        .unionByName(new_rows)
+    )
+
+
+DIFF_HIST_SCHEMA = (
+    "k int, v string, w string, valid_from timestamp, valid_to timestamp, is_current boolean"
+)
+_maybe_key = st.one_of(st.none(), st.integers(min_value=0, max_value=5))
+_maybe_v = st.sampled_from([None, "a", "b"])
+diff_hist_rows = st.lists(
+    # (key, tracked v, untracked w, is_current)
+    st.tuples(_maybe_key, _maybe_v, st.sampled_from([None, "x"]), st.booleans()),
+    max_size=10,
+)
+diff_upd_rows = st.dictionaries(
+    # unique update keys, as scd2_apply requires; None is one of them
+    _maybe_key,
+    st.tuples(_maybe_v, st.sampled_from([None, "x", "y"])),
+    max_size=6,
+)
+
+
+def _diff_history(rows):
+    """At most one current row per non-NULL key (the SCD2 invariant);
+    closed rows end a day after they start."""
+    t0 = dt.datetime(2024, 1, 1)
+    seen, out = set(), []
+    for i, (k, v, w, current) in enumerate(rows):
+        current = current and (k is None or k not in seen)
+        if current:
+            seen.add(k)
+        start = t0 + dt.timedelta(days=i)
+        out.append((k, v, w, start, None if current else start + dt.timedelta(days=1), current))
+    return out
+
+
 @pytest.mark.usefixtures("spark")
 class TestScd2Properties:
+    @given(hist=diff_hist_rows, updates=diff_upd_rows)
+    @prop
+    def test_scd2_one_join_matches_oracle(self, spark, hist, updates):
+        history = spark.createDataFrame(_diff_history(hist), DIFF_HIST_SCHEMA)
+        upd = spark.createDataFrame(
+            [(k, v, w) for k, (v, w) in updates.items()], "k int, v string, w string"
+        )
+        ts = F.lit(dt.datetime(2024, 3, 1)).cast("timestamp")
+        got = scd2_apply(history, upd, "k", ["v"], ts)
+        want = _scd2_apply_oracle(history, upd, "k", ["v"], ts)
+        assert got.columns == want.columns
+        assert sorted(map(repr, got.collect())) == sorted(map(repr, want.collect()))
+
     @given(updates1=upd_rows, updates2=upd_rows)
     @prop
     def test_scd2_invariants(self, spark, updates1, updates2):

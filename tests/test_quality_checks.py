@@ -4,7 +4,10 @@ reference's schema.yml test shapes applied to the synthetic star schema
 
 from __future__ import annotations
 
-from pyspark.sql import Row
+import threading
+import time
+
+from pyspark.sql import Row, functions as F
 
 from logistics_data_pipeline_project_spark.io_utils import load
 from logistics_data_pipeline_project_spark.plans.quality import (
@@ -112,3 +115,36 @@ def test_star_schema_gate(spark, sf_dir):
         ]
     )
     assert not bad[0].passed and bad[0].violations > 0
+
+
+def test_run_checks_concurrent_results_keep_input_order(spark):
+    """Checks run concurrently (the first two wait for each other), later
+    ones finish first, and the results still come back in input order."""
+    barrier = threading.Barrier(min(2, spark.sparkContext.defaultParallelism), timeout=60)
+
+    def check(i):
+        def thunk():
+            if i < 2:
+                barrier.wait()
+            time.sleep(0.05 * (4 - i))
+            return spark.range(10).filter(F.col("id") < i).count()
+
+        return thunk
+
+    results = run_checks([(f"c{i}", "t", check(i)) for i in range(4)])
+    assert [(r.name, r.violations, r.passed) for r in results] == [
+        ("c0", 0, True),
+        ("c1", 1, False),
+        ("c2", 2, False),
+        ("c3", 3, False),
+    ]
+
+
+def test_run_checks_jobs_carry_callers_job_group(spark, jobs_in_group):
+    """Every check's jobs run under the caller's job group, so cancelling
+    the group stops the whole suite."""
+    df = spark.range(100)
+    checks = [(f"c{i}", "t", lambda i=i: not_null(df.filter(F.col("id") < i), ["id"])) for i in range(4)]
+    grouped, ungrouped = jobs_in_group(lambda: run_checks(checks))
+    assert len(grouped) >= 4
+    assert ungrouped == set(), f"jobs {sorted(ungrouped)} ran outside the caller's group"

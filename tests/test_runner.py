@@ -12,7 +12,9 @@ import pytest
 from pyspark.sql import Row, functions as F
 
 from logistics_data_pipeline_project_spark.models import silver
+from logistics_data_pipeline_project_spark.operators.merge import high_watermark
 from logistics_data_pipeline_project_spark.plans import Model, ModelRunner, TableStore
+from logistics_data_pipeline_project_spark.plans import runner as runner_mod
 
 
 def ts(s):
@@ -236,6 +238,181 @@ def test_on_failure_hook_sees_committed_failed_row(spark, store):
     with pytest.raises(RuntimeError, match="model exploded"):
         runner.run()
     assert seen == [[("bad", "FAILED")]]
+
+
+def _incremental_runner(spark, store):
+    """One incremental model merging the store's ``raw`` table by ``k``,
+    with ``ts`` as its watermark."""
+    runner = ModelRunner(spark, store)
+    runner.register(
+        Model(
+            name="inc",
+            fn=lambda sp, ref: store.read("raw"),
+            materialization="incremental",
+            unique_key="k",
+            watermark_col="ts",
+            dedup_order=("ts",),
+        )
+    )
+    return runner
+
+
+def _raw(spark, rows, dtype="timestamp"):
+    """(k, v, ts-string) rows with ``ts`` cast to ``dtype`` under the
+    session time zone."""
+    df = spark.createDataFrame(rows, "k int, v string, ts string")
+    return df.withColumn("ts", F.col("ts").cast(dtype))
+
+
+def _recorded_scans(monkeypatch) -> list[str]:
+    """Record the columns the runner scans with ``high_watermark``."""
+    scans = []
+
+    def recorded(target, col):
+        scans.append(col)
+        return high_watermark(target, col)
+
+    monkeypatch.setattr(runner_mod, "high_watermark", recorded)
+    return scans
+
+
+def test_incremental_watermark_commits_with_the_write(spark, store, monkeypatch):
+    """The watermark observed during the write lands in the version's
+    _META.json, and the next run filters by it without a max() scan."""
+    store.overwrite("raw", _raw(spark, [(1, "a", "2024-01-01 00:00:00"), (2, "b", "2024-01-02 00:00:00")]))
+    runner = _incremental_runner(spark, store)
+    runner.run()
+    assert store.meta("inc")["watermarks"] == {"ts": "2024-01-02 00:00:00"}
+    scans = _recorded_scans(monkeypatch)
+    # k=3 is older than the watermark, so the incremental filter drops it
+    store.append("raw", _raw(spark, [(1, "a2", "2024-01-03 00:00:00"), (3, "c", "2024-01-01 12:00:00")]))
+    runner.run()
+    assert scans == []
+    assert {r["k"]: r["v"] for r in store.read("inc").collect()} == {1: "a2", 2: "b"}
+    assert store.meta("inc")["watermarks"] == {"ts": "2024-01-03 00:00:00"}
+
+
+@pytest.mark.parametrize(
+    "dtype,wm,after",
+    [
+        ("timestamp", "2024-07-01 12:34:56.123456", "2024-07-01 12:34:56.123457"),
+        ("date", "2024-07-01", "2024-07-02"),
+    ],
+)
+def test_incremental_watermark_round_trips_exactly(spark, store, monkeypatch, dtype, wm, after):
+    """Under a non-UTC session time zone, the committed watermark casts
+    back to the exact max: a row AT it is filtered, a row one unit after
+    it (a microsecond, a day) is merged."""
+    tz = spark.conf.get("spark.sql.session.timeZone")
+    spark.conf.set("spark.sql.session.timeZone", "America/Los_Angeles")
+    try:
+        store.overwrite("raw", _raw(spark, [(1, "a", "2024-06-01"), (2, "b", wm)], dtype))
+        runner = _incremental_runner(spark, store)
+        runner.run()
+        assert store.meta("inc") == {
+            "watermarks": {"ts": wm},
+            "watermark_time_zone": "America/Los_Angeles",
+        }
+        scans = _recorded_scans(monkeypatch)
+        store.append("raw", _raw(spark, [(3, "at", wm), (4, "after", after)], dtype))
+        runner.run()
+        assert scans == []
+        assert sorted(r["k"] for r in store.read("inc").collect()) == [1, 2, 4]
+    finally:
+        spark.conf.set("spark.sql.session.timeZone", tz)
+
+
+def test_incremental_watermark_follows_rollback(spark, store, monkeypatch):
+    """Rolling a model back restores the watermark of that version, so
+    the next run re-merges what the rolled-back version had merged."""
+    store.overwrite("raw", _raw(spark, [(1, "a", "2024-01-01 00:00:00")]))
+    runner = _incremental_runner(spark, store)
+    runner.run()
+    v1 = store.current_version("inc")
+    store.append("raw", _raw(spark, [(2, "b", "2024-01-02 00:00:00")]))
+    runner.run()
+    store.rollback("inc", v1)
+    assert store.meta("inc")["watermarks"] == {"ts": "2024-01-01 00:00:00"}
+    scans = _recorded_scans(monkeypatch)
+    runner.run()
+    assert scans == []
+    assert sorted(r["k"] for r in store.read("inc").collect()) == [1, 2]
+
+
+def test_incremental_version_without_watermark_scans(spark, store, monkeypatch):
+    """A version written before watermarks were committed (no meta key)
+    falls back to the max() scan, once, and the run commits one."""
+    store.overwrite("inc", _raw(spark, [(1, "a", "2024-01-02 00:00:00")]))
+    store.overwrite("raw", _raw(spark, [(1, "old", "2024-01-01 00:00:00"), (2, "b", "2024-01-03 00:00:00")]))
+    scans = _recorded_scans(monkeypatch)
+    _incremental_runner(spark, store).run()
+    assert scans == ["ts"]
+    assert {r["k"]: r["v"] for r in store.read("inc").collect()} == {1: "a", 2: "b"}
+    assert store.meta("inc")["watermarks"] == {"ts": "2024-01-03 00:00:00"}
+
+
+def test_incremental_watermark_from_another_time_zone_scans(spark, store, monkeypatch):
+    """A watermark rendered under another session time zone would cast
+    back to another instant, so the next run scans for the max instead."""
+    tz = spark.conf.get("spark.sql.session.timeZone")
+    store.overwrite("raw", _raw(spark, [(1, "a", "2024-01-02 00:00:00")]))
+    runner = _incremental_runner(spark, store)
+    runner.run()
+    scans = _recorded_scans(monkeypatch)
+    spark.conf.set("spark.sql.session.timeZone", "Asia/Kolkata" if tz != "Asia/Kolkata" else "UTC")
+    try:
+        store.append("raw", _raw(spark, [(2, "b", "2024-01-01 12:00:00")]))
+        runner.run()
+    finally:
+        spark.conf.set("spark.sql.session.timeZone", tz)
+    assert scans == ["ts"]
+    assert sorted(r["k"] for r in store.read("inc").collect()) == [1]
+
+
+def test_runner_starts_a_model_when_its_own_deps_finish(spark, store):
+    """a -> b plus an independent c: b starts while c is still running
+    (level-by-level scheduling would hold b until c finished)."""
+    b_started = threading.Event()
+    seen = {}
+
+    def slow_c(sp, ref):
+        seen["b started while c ran"] = b_started.wait(timeout=60)
+        return sp.range(1)
+
+    def b(sp, ref):
+        b_started.set()
+        return ref("a")
+
+    runner = ModelRunner(spark, store, threads=2)
+    runner.register(Model(name="a", fn=lambda sp, ref: sp.range(3)))
+    runner.register(Model(name="b", fn=b, deps=("a",)))
+    runner.register(Model(name="c", fn=slow_c))
+    runner.run()
+    assert seen == {"b started while c ran": True}
+    assert store.read("b").count() == 3
+
+
+def test_runner_failure_stops_downstream_models(spark, store):
+    """A model downstream of a failing one never runs and leaves no audit
+    row; an independent model already running finishes."""
+    ran = []
+
+    def boom(sp, ref):
+        raise RuntimeError("model exploded")
+
+    def downstream(sp, ref):
+        ran.append("b")
+        return ref("a")
+
+    runner = ModelRunner(spark, store, threads=3)
+    runner.register(Model(name="a", fn=boom))
+    runner.register(Model(name="b", fn=downstream, deps=("a",)))
+    runner.register(Model(name="c", fn=lambda sp, ref: sp.range(2)))
+    with pytest.raises(RuntimeError, match="model exploded"):
+        runner.run()
+    assert ran == []
+    audit = {(r["job_name"], r["status"]) for r in runner.audit_log().collect()}
+    assert audit == {("a", "FAILED"), ("c", "SUCCESS")}
 
 
 def test_table_store_versioning_time_travel_and_rollback(spark, tmp_path):
